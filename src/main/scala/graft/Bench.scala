@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import Harness.{HZ, procCpu}
 import java.nio.file.{Files, Paths}
 
 /** Benchmark main: times every registered query at the given scale factor.
@@ -32,7 +32,7 @@ import java.nio.file.{Files, Paths}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Harness.cpus
     // Worker threads = max concurrent queries; actual co-running load is
     // governed by the demand budget below, so workers are cheap headroom
     // rather than the load control they were under the r12 band scheduler
@@ -41,84 +41,8 @@ object Bench {
     // also benches at lower core counts, where 8 fixed workers of
     // 1-core-minimum admission would oversubscribe a small box.
     val threads = sys.env.getOrElse("SPARK_GRAFT_BENCH_THREADS",
-      math.max(2, math.min(12, cpus.toInt * 3 / 8)).toString).toInt
-    // Shuffle width is its own knob (r12), and its default is DERIVED
-    // FROM INPUT SIZE (r15 — guide §2.2/§6: size partitions to the data,
-    // not the core count). With AQE off (below) nothing coalesces
-    // post-shuffle, so every reduce stage runs exactly this many tasks;
-    // at sf0.1 the r12 default of cpus=32 made ~2,600 near-empty 32-task
-    // stages whose per-task fixed cost (shuffle-file open/commit, ~11 ms
-    // sys each) was a quarter of the whole suite: measured same head,
-    // 12 workers — parts 32: wall 207 s / 3,841 CPU-s / 82k tasks;
-    // parts 16: 145 / 3,140 / 58k; parts 8: 145 / 2,909 / 45k. One
-    // 32 MB-of-input unit per partition (floor 8 so a single query still
-    // spreads, cap cpus) lands on 8 at sf0.1 and grows with the data —
-    // a real cluster runs AQE coalescing instead (the library leaves AQE
-    // ON; this is the same harness-only class as AQE-off below).
-    val shufParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", {
-      def sizeOf(f: java.io.File): Long =
-        if (f.isDirectory) { val cs = f.listFiles(); if (cs == null) 0L else cs.map(sizeOf).sum }
-        else f.length()
-      val dirBytes = try sizeOf(new java.io.File(sfDir)) catch { case _: Throwable => 0L }
-      math.max(8L, math.min(cpus.toLong, dirBytes >> 25)).toString
-    })
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Generated-class cache sized to the suite (r15): the default 100
-      // entries thrash across 475 queries' plan shapes, and every evicted
-      // re-generation pays Janino + fresh HotSpot JIT of the same source
-      // (profiled: the suite's process CPU ran ~1,000 s above its task
-      // CPU, and CompilationMXBean attributed it to the JIT compiling
-      // one-shot generated classes; a single cold query showed 61 s of
-      // JIT against 43 s of task CPU). A static conf, so set before the
-      // session exists.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-    // Shuffle/spill dirs on tmpfs when available (r13): /tmp is ext4 in
-    // this environment, and at sf0.1 the fixed cost of tiny stages is
-    // dominated by shuffle-FILE metadata ops (thread dumps during an
-    // iterative query: executor threads pinned in FileOutputStream.open)
-    // — /dev/shm makes those RAM-speed (measured ~20% CPU off the
-    // iterative micro-queries). Harness-only, like AQE-off: a real
-    // cluster sizes spark.local.dir to real disks.
-    val spark = {
-      val shm = Paths.get("/dev/shm")
-      (if (Files.isDirectory(shm) && Files.isWritable(shm))
-        builder0.config("spark.local.dir", "/dev/shm/graft-spark-local")
-      else builder0)
-      // FAIR across per-query pools (r7): under FIFO, an iterative query's
-      // many SMALL jobs (IRLS steps, label-propagation rounds, k-means++
-      // picks) queue behind whatever 32-task scan another worker just
-      // submitted, so loop queries' wall time is mostly queueing. Each
-      // worker below tags its jobs with its own pool; FAIR shares the
-      // cores across active pools (pools need no XML — unknown names get
-      // default weight), so a 1-task driver-loop step starts immediately.
-      .config("spark.scheduler.mode", "FAIR")
-      // AQE OFF in this harness only (r12 bench post-mortem): AQE
-      // materializes every shuffle stage as its own job submission, and
-      // each submission pays a single-threaded DAG-event-loop toll
-      // (thread dump: the loop pinned in Deflater.init inside
-      // SerializableConfiguration.writeObject while 1,024 shuffle-exchange
-      // + 356 ResultQueryStageExecution AQE threads sat parked and 20+
-      // cores idled). At sf0.1 every stage is milliseconds of real work,
-      // so the suite's wall was the event loop, not the engine. On a real
-      // cluster with minutes-long stages AQE's re-plan cost is amortized
-      // and its skew/coalesce wins matter — the library leaves it ON
-      // (no session default is set outside this main).
-      .config("spark.sql.adaptive.enabled", "false")
-      .getOrCreate()
-    }
-    spark.sparkContext.setLogLevel("WARN")
-    Log.quietBoundedWindowWarn()
-    Log.quietFairPoolWarn()
-    // Warm the session (codegen compiler, shuffle machinery, parquet
-    // footer cache) so the first timed query doesn't absorb ~5 s of JVM
-    // init that belongs to no operator.
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    try spark.read.parquet(s"$sfDir/lineitem.parquet").limit(10).collect()
-    catch { case _: Throwable => () }
+      math.max(2, math.min(12, cpus * 3 / 8)).toString).toInt
+    val spark = Harness.session(cpus, sfDir)
     // LPT scheduling (r8): with a fixed worker pool, wall time is set by
     // stragglers — an expensive query submitted LAST runs alone at the
     // end, extending the wall by its full duration (measured: alphabetical
@@ -198,33 +122,16 @@ object Bench {
     // (jiffies the guest lost) as external load, which for scheduling
     // purposes it is.
     def loadavg1(): Double =
-      try Files.readString(Paths.get("/proc/loadavg")).trim.split("\\s+")(0).toDouble
-      catch { case _: Throwable => 0.0 }
-    // (busy, total) jiffies across all cpus; busy includes steal, excludes
-    // idle+iowait
-    def statJiffies(): (Long, Long) =
-      try {
-        val f = Files.readAllLines(Paths.get("/proc/stat")).get(0)
-          .trim.split("\\s+").drop(1).map(_.toLong)
-        val total = f.sum
-        (total - f(3) - (if (f.length > 4) f(4) else 0L), total)
-      } catch { case _: Throwable => (-1L, -1L) }
-    // this process's own utime+stime jiffies (fields 14+15; parse past the
-    // ")" so an exotic comm can't shift fields)
-    def ownJiffies(): Long =
-      try {
-        val s = Files.readString(Paths.get("/proc/self/stat"))
-        val f = s.substring(s.lastIndexOf(')') + 2).split(" ")
-        f(11).toLong + f(12).toLong
-      } catch { case _: Throwable => -1L }
-    val HZ = 100.0 // USER_HZ; linux ABI default, diagnostics-grade
+      Harness.loadavg().headOption.flatMap(_.toDoubleOption).getOrElse(0.0)
+    def busy(): Long = Harness.boxJiffies()._1
+    def own(): Long = { val (u, s) = Harness.ownJiffies(); if (u < 0) -1L else u + s }
     /** External busy cores over a sampling window. Falls back to loadavg
       * (lagged, but better than nothing) where /proc is unreadable. */
     def extCores(windowMs: Long): Double = {
-      val (b0, _) = statJiffies(); val o0 = ownJiffies()
+      val b0 = busy(); val o0 = own()
       if (b0 < 0 || o0 < 0) return loadavg1()
       Thread.sleep(windowMs)
-      val (b1, _) = statJiffies(); val o1 = ownJiffies()
+      val b1 = busy(); val o1 = own()
       val dt = windowMs / 1000.0
       math.max(0.0, ((b1 - b0) - (o1 - o0)) / HZ / dt)
     }
@@ -237,8 +144,8 @@ object Bench {
     def demandOf(n: String): Double = {
       val w = histCost.getOrElse(n, 0.0)
       val c = histCpu.getOrElse(n, -1.0)
-      if (w > 0.05 && c >= 0.0) math.min(cpus.toInt.toDouble, math.max(1.0, c / w))
-      else cpus.toInt / 2.0
+      if (w > 0.05 && c >= 0.0) math.min(cpus.toDouble, math.max(1.0, c / w))
+      else cpus / 2.0
     }
     // Overlap factor: the seq-measured demands OVERESTIMATE concurrent
     // usage ~2.5× (a query's wall stretches under sharing while its CPU
@@ -253,11 +160,10 @@ object Bench {
     // purely as the CONTENTION governor: 8 external cores → budget 72,
     // 24 → 24, 30 → 6 — measured under 8 synthetic busy cores: 132 s
     // wall / 2,610 CPU-s (1.06× idle CPU), vs 217 s at factor 1.5.
-    val budgetFactor =
-      sys.env.get("SPARK_GRAFT_BENCH_BUDGET").map(_.toDouble).getOrElse(3.0)
+    val budgetFactor = 3.0
     @volatile var extEma = extStart
     def budget(): Double =
-      math.max(2.0, (cpus.toInt - extEma) * budgetFactor)
+      math.max(2.0, (cpus - extEma) * budgetFactor)
     if (extStart >= 1.0)
       System.err.println(
         f"[bench] external load ~$extStart%.1f cores at start — budget ${budget()}%.1f")
@@ -271,16 +177,7 @@ object Bench {
     // effective-parallelism. Per-query cpu deltas OVERLAP in pipelined mode
     // (concurrent queries share the JVM counter) — they bound, not
     // attribute; the run-level cpu/wall ratio is the honest verdict.
-    def loadavg(): String =
-      try Files.readString(Paths.get("/proc/loadavg")).trim
-        .split("\\s+").take(3).mkString(",")
-      catch { case _: Throwable => "" }
-    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
-      case b: com.sun.management.OperatingSystemMXBean => Some(b)
-      case _ => None
-    }
-    def procCpu(): Double = osBean.map(_.getProcessCpuTime / 1e9).getOrElse(-1.0)
-    val loadStart = loadavg()
+    val loadStart = Harness.loadavg().mkString(",")
     val cpu0all = procCpu()
     // Mechanism attribution (VERDICT r14 #1b): the r14 driver artifact
     // burned 4.2× the idle run's process CPU under external load and
@@ -292,35 +189,14 @@ object Bench {
     // GC or driver-side work (gc_wall_sec / plan+codegen); cpu_sys_sec up
     // = kernel time (memory reclaim, paging — co-tenants eating RAM
     // rather than cycles).
-    val aTasks = new java.util.concurrent.atomic.AtomicLong
-    val aRunMs = new java.util.concurrent.atomic.AtomicLong
-    val aCpuNs = new java.util.concurrent.atomic.AtomicLong
-    val aGcMs = new java.util.concurrent.atomic.AtomicLong
-    val aMemSpill = new java.util.concurrent.atomic.AtomicLong
-    val aDiskSpill = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = e.taskMetrics
-        if (m != null) {
-          aTasks.incrementAndGet(); aRunMs.addAndGet(m.executorRunTime)
-          aCpuNs.addAndGet(m.executorCpuTime); aGcMs.addAndGet(m.jvmGCTime)
-          aMemSpill.addAndGet(m.memoryBytesSpilled); aDiskSpill.addAndGet(m.diskBytesSpilled)
-        }
-      }
-    })
+    val tt = TaskTotals.attach(spark.sparkContext)
     def gcWallMs(): Long = {
       import scala.jdk.CollectionConverters._
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
         .map(b => math.max(0L, b.getCollectionTime)).sum
     }
-    def userSysJiffies(): (Long, Long) =
-      try {
-        val s = Files.readString(Paths.get("/proc/self/stat"))
-        val f = s.substring(s.lastIndexOf(')') + 2).split(" ")
-        (f(11).toLong, f(12).toLong)
-      } catch { case _: Throwable => (-1L, -1L) }
     val gcMs0 = gcWallMs()
-    val (uj0, sj0) = userSysJiffies()
+    val (uj0, sj0) = Harness.ownJiffies()
     // Whole-box steal jiffies across the run (r15): this environment's
     // hypervisor co-tenants produce MINUTES-long steal storms (measured:
     // identical back-to-back suite runs at 107 s / 2,769 proc-CPU-s in a
@@ -328,13 +204,7 @@ object Bench {
     // inflates with steal under tick accounting, so even "JVM's own CPU"
     // is not contention-proof). Recording the run's steal makes a slow
     // artifact self-attributing: high steal_sec = the box, not the engine.
-    def stealJiffies(): Long =
-      try {
-        val f = Files.readAllLines(Paths.get("/proc/stat")).get(0)
-          .trim.split("\\s+").drop(1).map(_.toLong)
-        if (f.length > 7) f(7) else 0L
-      } catch { case _: Throwable => -1L }
-    val steal0 = stealJiffies()
+    val steal0 = Harness.boxJiffies()._2
     // The admission queue: LPT order (most-expensive first, unknowns at
     // the head), each entry carrying its measured demand. Workers pull
     // FIRST-FIT under the budget; `runningDemand` tracks the admitted
@@ -403,11 +273,11 @@ object Bench {
     // admission decision instead of stepping a pool width, and a loaded
     // box admits less work until the EMA recedes.
     val loadWatcher = new Thread(() => {
-      var (lastBusy, _) = statJiffies(); var lastOwn = ownJiffies()
+      var lastBusy = busy(); var lastOwn = own()
       var lastNs = System.nanoTime(); var lastCpuSec = procCpu()
       while (true) {
         Thread.sleep(5000)
-        val (nowBusy, _) = statJiffies(); val nowOwn = ownJiffies()
+        val nowBusy = busy(); val nowOwn = own()
         val nowNs = System.nanoTime(); val nowCpuSec = procCpu()
         val dt = math.max((nowNs - lastNs) / 1e9, 1e-3)
         val ext =
@@ -433,7 +303,7 @@ object Bench {
     val results = resultsBuf.toArray(Array.empty[(String, Double, Boolean, Double)]).toSeq
     val wall = (System.nanoTime() - t0all) / 1e9
     val cpuAll = procCpu() - cpu0all
-    val loadEnd = loadavg()
+    val loadEnd = Harness.loadavg().mkString(",")
     // The driver records only the LAST ~2000 chars of stdout and parses the
     // JSON line out of that window (round-2 failure mode: a 4 KB line with
     // full-precision timings + a per-query ok map got truncated mid-line →
@@ -494,13 +364,13 @@ object Bench {
     // see the self-diagnosis note above) + run-level load/cpu truth
     val qcpu = results.map { case (k, _, _, c) => "\"" + k + "\":" + fmt(c, 2) }
       .mkString("{", ",", "}")
-    val (uj1, sj1) = userSysJiffies()
+    val (uj1, sj1) = Harness.ownJiffies()
     val diagPart = {
       val userSec = if (uj1 < 0 || uj0 < 0) -1.0 else (uj1 - uj0) / HZ
       val sysSec = if (sj1 < 0 || sj0 < 0) -1.0 else (sj1 - sj0) / HZ
-      val steal1 = stealJiffies()
+      val steal1 = Harness.boxJiffies()._2
       val stealSec = if (steal1 < 0 || steal0 < 0) -1.0 else (steal1 - steal0) / HZ
-      s""","steal_sec":${fmt(stealSec, 1)},"proc_cpu_sec":${fmt(cpuAll, 1)},"cpu_wall_ratio":${fmt(cpuAll / math.max(wall, 1e-9), 2)},"cpu_user_sec":${fmt(userSec, 1)},"cpu_sys_sec":${fmt(sysSec, 1)},"gc_wall_sec":${fmt((gcWallMs() - gcMs0) / 1e3, 1)},"tasks":${aTasks.get()},"task_run_sec":${fmt(aRunMs.get() / 1e3, 1)},"task_cpu_sec":${fmt(aCpuNs.get() / 1e9, 1)},"task_gc_sec":${fmt(aGcMs.get() / 1e3, 1)},"spill_mem_mb":${aMemSpill.get() >> 20},"spill_disk_mb":${aDiskSpill.get() >> 20},"ext_cores_start":${fmt(extStart, 1)},"ext_cores_end":${fmt(extEma, 1)},"budget_factor":${fmt(budgetFactor, 2)},"budget_min":${fmt(minBudgetSeen, 1)},"peak_demand":${fmt(peakDemand, 1)},"n_demand_unknown":${names.count { case (n, _) => !(histCost.contains(n) && histCpu.contains(n)) }},"loadavg_start":"$loadStart","loadavg_end":"$loadEnd","queries_cpu":$qcpu"""
+      s""","steal_sec":${fmt(stealSec, 1)},"proc_cpu_sec":${fmt(cpuAll, 1)},"cpu_wall_ratio":${fmt(cpuAll / math.max(wall, 1e-9), 2)},"cpu_user_sec":${fmt(userSec, 1)},"cpu_sys_sec":${fmt(sysSec, 1)},"gc_wall_sec":${fmt((gcWallMs() - gcMs0) / 1e3, 1)},"tasks":${tt.tasks.get()},"task_run_sec":${fmt(tt.runMs.get() / 1e3, 1)},"task_cpu_sec":${fmt(tt.cpuNs.get() / 1e9, 1)},"task_gc_sec":${fmt(tt.gcMs.get() / 1e3, 1)},"spill_mem_mb":${tt.memSpill.get() >> 20},"spill_disk_mb":${tt.diskSpill.get() >> 20},"ext_cores_start":${fmt(extStart, 1)},"ext_cores_end":${fmt(extEma, 1)},"budget_factor":${fmt(budgetFactor, 2)},"budget_min":${fmt(minBudgetSeen, 1)},"peak_demand":${fmt(peakDemand, 1)},"n_demand_unknown":${names.count { case (n, _) => !(histCost.contains(n) && histCpu.contains(n)) }},"loadavg_start":"$loadStart","loadavg_end":"$loadEnd","queries_cpu":$qcpu"""
     }
     // "threads" records the pool width (VERDICT r4 #10): with threads=1 the
     // per-query timings are uncontended sequential truth and sum ≈ value;

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,34 +11,7 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     def keep(name: String): Boolean = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // tmpfs local dirs when available — the Bench r13 rationale (shuffle
-    // FILE metadata ops dominate tiny stages; /tmp is ext4 here)
-    val builder = {
-      val shm = Paths.get("/dev/shm")
-      if (Files.isDirectory(shm) && Files.isWritable(shm))
-        builder0.config("spark.local.dir", "/dev/shm/graft-spark-local")
-      else builder0
-    }
-    val spark = builder
-      // FAIR across per-query pools — the Bench r7 lesson applies here
-      // too: an iterative query's many 1-task jobs would otherwise queue
-      // behind another worker's wide scan.
-      .config("spark.scheduler.mode", "FAIR")
-      // AQE off, as in Bench (r12): at sf0.01 every AQE stage
-      // materialization is a separate job submission serializing on the
-      // single DAG-scheduler event loop — pure overhead against the
-      // driver's verify time budget. Results are AQE-invariant.
-      .config("spark.sql.adaptive.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Log.quietBoundedWindowWarn()
-    Log.quietFairPoolWarn()
+    val spark = Harness.session(Harness.cpus, sfDir)
     new java.io.File(outDir).mkdirs()
     // Small worker pool (r11): 404 sequential queries spend most of their
     // wall on one-core driver work (analysis + codegen compile) while 31
@@ -47,8 +19,7 @@ object Verify {
     // ~3× faster without the contention distortion a wide pool adds (this
     // main is correctness-only; timings don't matter here). Results are
     // independent per query (distinct output dirs), so ordering is free.
-    val threads = sys.env.getOrElse("SPARK_GRAFT_VERIFY_THREADS", "4").toInt
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
     val futures = SparkEntry.queries.filter(q => keep(q._1)).toSeq.map {
       case (name, fn) =>
         pool.submit(new Runnable {

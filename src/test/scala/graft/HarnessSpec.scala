@@ -1,0 +1,78 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.{Seconds, Span}
+import scala.jdk.CollectionConverters._
+
+/** Pins the one harness session every main starts from, its task listener,
+  * and the structure that keeps it the only one: no other session builder,
+  * task listener or main in `src/main`, and no environment knob beyond the
+  * four the mains document. */
+class HarnessSpec extends SparkSpec {
+
+  test("conf: Bench's settings, key by key") {
+    val c = Harness.conf(4, sf)
+    assert((c - "spark.local.dir") === Map(
+      "spark.master" -> "local[4]",
+      "spark.sql.shuffle.partitions" -> "8",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.ui.enabled" -> "false",
+      "spark.sql.codegen.cache.maxEntries" -> "4096",
+      "spark.scheduler.mode" -> "FAIR",
+      "spark.sql.adaptive.enabled" -> "false"))
+    // tmpfs local dirs only where /dev/shm is a writable directory
+    val shm = Paths.get("/dev/shm")
+    assert(c.get("spark.local.dir") === (
+      if (Files.isDirectory(shm) && Files.isWritable(shm)) Some("/dev/shm/graft-spark-local")
+      else None))
+  }
+
+  test("width: one partition per 32 MiB of input, floor 8, cap cpus") {
+    assert(Harness.width(4, Harness.bytesUnder(sf)) === 8)
+    assert(Harness.width(32, 1L << 30) === 32)
+    assert(Harness.width(4, 1L << 30) === 8)
+    assert(Harness.bytesUnder(sf) > 0, "sf0.001 fixtures must be readable")
+  }
+
+  test("TaskTotals counts every task of a job") {
+    val tt = TaskTotals.attach(spark.sparkContext)
+    try {
+      spark.sparkContext.parallelize(1 to 700, 7).map(_ * 2).count()
+      // task-end events arrive on the asynchronous listener bus
+      eventually(timeout(Span(30, Seconds))) { assert(tt.tasks.get() === 7) }
+      assert(tt.runMs.get() >= 0 && tt.cpuNs.get() > 0)
+    } finally spark.sparkContext.removeSparkListener(tt)
+  }
+
+  /** Each `src/main/scala` file's code, comments stripped. */
+  private lazy val mainSources: Map[String, String] = {
+    val root = Paths.get("src/main/scala")
+    Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala"))
+      .map(p => root.relativize(p).toString ->
+        Files.readString(p).replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", ""))
+      .toMap
+  }
+
+  private def filesWith(needle: String): Set[String] =
+    mainSources.collect { case (f, code) if code.contains(needle) => f }.toSet
+
+  test("structure: Harness is the only session builder and task listener") {
+    assert(mainSources.size > 20, "scan must see the whole source tree")
+    assert(filesWith("SparkSession.builder") === Set("graft/Harness.scala"))
+    assert(filesWith("onTaskEnd") === Set("graft/Harness.scala"))
+  }
+
+  test("structure: mains only in Bench, Verify and Harness") {
+    assert(filesWith("def main(") ===
+      Set("graft/Bench.scala", "graft/Verify.scala", "graft/Harness.scala"))
+  }
+
+  test("structure: the mains read exactly four SPARK_GRAFT_ knobs") {
+    val knobs = mainSources.values
+      .flatMap("SPARK_GRAFT_[A-Z_]+".r.findAllIn(_)).toSet
+    assert(knobs === Set("SPARK_GRAFT_CPUS", "SPARK_GRAFT_SF_DIR",
+      "SPARK_GRAFT_BENCH_THREADS", "SPARK_GRAFT_BENCH_OUT"))
+  }
+}
