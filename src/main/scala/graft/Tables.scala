@@ -186,7 +186,8 @@ object Tables {
     * driver-held arrays/tuples (the cuML client-held `coef_` pattern —
     * nothing distributed, no cache blocks). Test fixtures use unique temp
     * dirs, so a dir can never be re-populated with different data inside
-    * one JVM. Races recompute harmlessly (putIfAbsent keeps the first). */
+    * one JVM. Concurrent callers never recompute: the first registers a
+    * CompletableFuture and computes, later callers block on it. */
   private val fitMemo = new java.util.concurrent.ConcurrentHashMap[
     (String, String), java.util.concurrent.CompletableFuture[AnyRef]]()
   def fitCache[A <: AnyRef](tag: String, dir: String)(compute: => A): A = {

@@ -1,0 +1,194 @@
+package graft
+
+import graft.{Tables => T}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.functions.{broadcast, expr, lit, count => countRows}
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+
+/** The shared-text discipline, written once. graft fits follow the
+  * dask-cuml execution model: one distributed aggregation produces a few
+  * sufficient statistics and a closed-form update runs on the client. Both
+  * engines must run that update as the SAME IEEE op sequence or the DuckDB
+  * oracle stops hash-matching, so every update is a list of named
+  * (name, SQL text) steps — each step may reference every earlier name —
+  * rendered twice from the one list: as a Spark `selectExpr` cascade
+  * ([[chain]]) and as a DuckDB CTE chain ([[ctes]]). The text is rendered
+  * verbatim on both sides (DuckDB's FLOAT is an alias of REAL, so a
+  * `CAST(… AS FLOAT)` collapse reads the same in both).
+  *
+  * [[gauss]] is the one unrolled elimination; [[Fit]] declares a
+  * driver-held iterative fit once, and [[fit]] / [[sqlFit]] run it in
+  * Spark and unroll it for the oracle.
+  */
+object Twin {
+
+  type Steps = Seq[(String, String)]
+
+  /** Apply `steps` as a sequential `selectExpr` cascade over `df`. */
+  def chain(df: DataFrame, steps: Steps): DataFrame =
+    steps.foldLeft(df) { case (d, (nm, ex)) => d.selectExpr("*", s"$ex AS $nm") }
+
+  /** The DuckDB twin of [[chain]]: one CTE per step, `prefix1` reading
+    * `from` and each later CTE reading the one before. Returns the CTE
+    * text (no leading or trailing comma) and the name of the final CTE. */
+  def ctes(steps: Steps, from: String, prefix: String): (String, String) = {
+    require(steps.nonEmpty, "ctes needs at least one step")
+    val out = steps.zipWithIndex.map { case ((nm, ex), i) =>
+      val src = if (i == 0) from else s"$prefix$i"
+      s"$prefix${i + 1} AS (SELECT *, $ex AS $nm FROM $src)"
+    }
+    (out.mkString(",\n  "), s"$prefix${steps.size}")
+  }
+
+  /** Unrolled n×n Gaussian elimination without pivoting (the callers'
+    * systems are positive definite: Gram matrices, ridge-shifted Grams,
+    * logistic Hessians) over named scalar steps. `a` holds the matrix
+    * entries' names (row-major), `b` the right-hand side's; every
+    * generated name carries `p`: `{p}f{i}{k}` elimination factors,
+    * `{p}a{i}{j}_{k}` / `{p}b{i}_{k}` reduced entries, `{p}x0..` the
+    * solution. */
+  def gauss(a: Seq[Seq[String]], b: Seq[String], p: String): Steps = {
+    val n = b.size
+    require(a.size == n && a.forall(_.size == n), s"gauss needs an $n×$n matrix")
+    val m = a.map(_.toArray).toArray
+    val r = b.toArray
+    val steps = Seq.newBuilder[(String, String)]
+    for (k <- 0 until n - 1; i <- k + 1 until n) {
+      val f = s"${p}f$i$k"
+      steps += f -> s"${m(i)(k)} / ${m(k)(k)}"
+      for (j <- k + 1 until n) {
+        val nm = s"${p}a$i${j}_$k"
+        steps += nm -> s"${m(i)(j)} - $f * ${m(k)(j)}"
+        m(i)(j) = nm
+      }
+      val nb = s"${p}b${i}_$k"
+      steps += nb -> s"${r(i)} - $f * ${r(k)}"
+      r(i) = nb
+    }
+    for (i <- n - 1 to 0 by -1) {
+      val rest = (i + 1 until n).map(j => s" - ${m(i)(j)} * ${p}x$j").mkString
+      steps += s"${p}x$i" ->
+        (if (rest.isEmpty) s"${r(i)} / ${m(i)(i)}" else s"(${r(i)}$rest) / ${m(i)(i)}")
+    }
+    steps.result()
+  }
+
+  /** The 2×2 Newton step by Cramer's rule: `d0`, `d1` solve
+    * [[h00 h01] [h01 h11]]·d = (g0, g1) over the determinant `den`. */
+  def newton2(h00: String, h01: String, h11: String, g0: String, g1: String): Steps = Seq(
+    "den" -> s"$h00 * $h11 - $h01 * $h01",
+    "d0" -> s"($h11 * $g0 - $h01 * $g1) / den",
+    "d1" -> s"($h00 * $g1 - $h01 * $g0) / den")
+
+  /** How a named sum crosses from the executors to the update. */
+  sealed trait Wire
+  /** Exact DECIMAL(30,12) sum widened to DOUBLE ([[Tables.xsum]]). */
+  case object XSum extends Wire
+  /** The bit-identical 12-dp integer wire ([[Tables.sumE12]]). */
+  case object E12 extends Wire
+  /** Its long-lane form for small addends ([[Tables.sumE12L]]). */
+  case object E12L extends Wire
+  /** The row count as DOUBLE (the sum's text is unused). */
+  case object Count extends Wire
+
+  final case class Sum(name: String, wire: Wire, text: String)
+  def xsum(name: String, text: String): Sum = Sum(name, XSum, text)
+  def e12(name: String, text: String): Sum = Sum(name, E12, text)
+  def e12l(name: String, text: String): Sum = Sum(name, E12L, text)
+  def count(name: String): Sum = Sum(name, Count, "")
+
+  /** A driver-held iterative fit, declared once for both engines.
+    *  - `params`: the driver-held parameters and their initial values.
+    *    A parameter whose `next` is its own name is a fixed fit input
+    *    that rides along (a penalty, another fit's coefficients).
+    *  - `rows`: per-row steps over the frame × the parameters.
+    *  - `where`: an optional row filter over the same columns.
+    *  - `sums`: the named sums over those rows, each with its wire.
+    *  - `update`: steps over the sums × the parameters.
+    *  - `next`: per parameter, the text of its value after the step.
+    *  - `iters`: the number of steps. */
+  final case class Fit(
+      params: Seq[(String, Double)],
+      rows: Steps,
+      sums: Seq[Sum],
+      update: Steps,
+      next: Seq[String],
+      iters: Int,
+      where: Option[String] = None) {
+    require(next.size == params.size, "one next-value text per parameter")
+    private[Twin] def names: Seq[String] = params.map(_._1)
+    private[Twin] def nextCols: Seq[String] =
+      next.zip(names).map { case (ex, nm) => s"$ex AS $nm" }
+  }
+
+  /** Run `f` over `frame` in Spark. Each step crosses the frame with the
+    * parameters as a broadcast one-row table (column references, not
+    * literals, so the generated code is the same every step and the
+    * codegen cache hits), aggregates the sums, applies the update through
+    * [[chain]] on the one-row result and collects once. Returns the
+    * parameters after each step. */
+  def fit(frame: DataFrame, f: Fit): Seq[Array[Double]] = {
+    val spark = frame.sparkSession
+    val schema = StructType(f.names.map(StructField(_, DoubleType, nullable = false)))
+    val aggs = f.sums.map(sparkSum)
+    val decoded = f.names ++ f.sums.map(s => decode(s, T.bitsE12))
+    (1 to f.iters).scanLeft(f.params.map(_._2).toArray) { (p, _) =>
+      val pt = broadcast(spark.createDataFrame(
+        java.util.Arrays.asList(Row.fromSeq(p.toSeq)), schema))
+      val crossed = frame.crossJoin(pt)
+      val rows = chain(f.where.fold(crossed)(w => crossed.where(expr(w))), f.rows)
+      val r = chain(rows.agg(aggs.head, aggs.tail: _*).crossJoin(pt)
+          .selectExpr(decoded: _*), f.update)
+        .selectExpr(f.nextCols: _*)
+        .collect()(0)
+      Array.tabulate(f.names.size)(r.getDouble)
+    }.tail
+  }
+
+  /** The oracle twin of [[fit]]: `${p}0` holds the initial parameters
+    * (`init`, a SELECT, when they come from another CTE) and block k
+    * unrolls step k over the rows CTE `rows`, ending in the parameter CTE
+    * `$p$k` — `$p${f.iters}` is the fitted model. Returns the CTE text. */
+  def sqlFit(f: Fit, rows: String, p: String, init: Option[String] = None): String = {
+    val p0 = init.getOrElse(
+      "SELECT " + f.params.map { case (nm, v) => s"CAST('$v' AS DOUBLE) AS $nm" }.mkString(", "))
+    val blocks = (1 to f.iters).map { k =>
+      val (prev, b) = (s"$p${k - 1}", s"$p$k")
+      val (rowCtes, rowFin) = ctes(f.rows, s"${b}x", s"${b}r")
+      val (updCtes, updFin) =
+        if (f.update.isEmpty) ("", s"${b}g") else ctes(f.update, s"${b}g", s"${b}u")
+      Seq(
+        s"${b}x AS (SELECT * FROM $rows, $prev${f.where.fold("")(w => s" WHERE $w")})",
+        rowCtes,
+        s"${b}s AS (SELECT ${f.sums.map(sqlSum).mkString(",\n    ")}\n  FROM $rowFin)",
+        s"${b}g AS (SELECT ${(f.names ++ f.sums.map(s => decode(s, T.sqlBitsE12))).mkString(", ")}" +
+          s" FROM ${b}s, $prev)",
+        updCtes,
+        s"$b AS (SELECT ${f.nextCols.mkString(", ")} FROM $updFin)")
+        .filter(_.nonEmpty).mkString(",\n  ")
+    }
+    (s"${p}0 AS ($p0)" +: blocks).mkString(",\n  ")
+  }
+
+  private def sparkSum(s: Sum): Column = s.wire match {
+    case XSum => T.xsum(expr(s.text)).as(s.name)
+    case E12 => T.sumE12(expr(s.text)).as(s"s_${s.name}")
+    case E12L => T.sumE12L(expr(s.text)).as(s"s_${s.name}")
+    case Count => countRows(lit(1)).cast(DoubleType).as(s.name)
+  }
+
+  private def sqlSum(s: Sum): String = s.wire match {
+    case XSum => s"${T.sqlXsum(s.text)} AS ${s.name}"
+    case E12 => s"${T.sqlSumE12(s.text)} AS s_${s.name}"
+    case E12L => s"${T.sqlSumE12L(s.text)} AS s_${s.name}"
+    case Count => s"CAST(count(*) AS DOUBLE) AS ${s.name}"
+  }
+
+  /** The sum as the update sees it: the integer wires decode to DOUBLE
+    * through the engine's bits splitter ([[Tables.bitsE12]] /
+    * [[Tables.sqlBitsE12]]). */
+  private def decode(s: Sum, bits: String => String): String = s.wire match {
+    case E12 | E12L => s"${bits(s"s_${s.name}")} AS ${s.name}"
+    case XSum | Count => s.name
+  }
+}

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{QueryDef, Tables => T}
+import graft.{QueryDef, Tables => T, Twin}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -136,27 +136,28 @@ object Curation {
                        FROM documents) b0
                  WHERE len(ts) >= 2) b) t GROUP BY doc_id, g)"""
 
-  /** Ordered 3×3 Newton-solve steps (no pivoting — the logistic Hessian
-    * is positive definite): ONE symbolic list feeds both the Scala
-    * driver arithmetic and the oracle's CTE chain, so both engines run
-    * the SAME IEEE op sequence (the gaussSteps discipline, one size
-    * down). Names: fK elimination factors, aIJ/zI reduced rows, d0..d2
-    * the Newton update. */
-  private val solve3: Seq[(String, String)] = Seq(
-    "f1" -> "h01 / h00",
-    "a11" -> "h11 - f1 * h01",
-    "a12" -> "h12 - f1 * h02",
-    "z1" -> "g1 - f1 * g0",
-    "f2" -> "h02 / h00",
-    "a21" -> "h12 - f2 * h01",
-    "a22" -> "h22 - f2 * h02",
-    "z2" -> "g2 - f2 * g0",
-    "f3" -> "a21 / a11",
-    "a22b" -> "a22 - f3 * a12",
-    "z2b" -> "z2 - f3 * z1",
-    "d2" -> "z2b / a22b",
-    "d1" -> "(z1 - a12 * d2) / a11",
-    "d0" -> "(g0 - h01 * d1 - h02 * d2) / h00")
+  /** ml_tweedie_glm's fit (power p = 1.5): score Σ(y−μ)·μ^(1−p)·(1,x)
+    * and information Σμ^(2−p)·(1,x)(1,x)ᵀ with μ^(1/2) spelled sqrt. */
+  private lazy val tweedieFit: Twin.Fit = ML.logLinkFit(
+    "g0" -> "(y - mu) / sqrt(mu)", "g1" -> "(y - mu) / sqrt(mu) * x",
+    "h00" -> "sqrt(mu)", "h01" -> "sqrt(mu) * x", "h11" -> "sqrt(mu) * x * x")
+
+  /** ml_quality_classifier's 3 Newton/IRLS steps of (a, b1, b2) over rows
+    * (x1, x2, y): the 9 exact-decimal gradient/Hessian sums over the
+    * REAL-collapsed sigmoid, then the 3×3 Newton solve by [[Twin.gauss]]
+    * (no pivoting — the logistic Hessian is positive definite). */
+  private lazy val qualityFit: Twin.Fit = Twin.Fit(
+    Seq("a" -> 0.0, "b1" -> 0.0, "b2" -> 0.0),
+    Seq("mu" -> ML.sigmoidR("a + b1 * x1 + b2 * x2")),
+    Seq(Twin.xsum("g0", "y - mu"), Twin.xsum("g1", "(y - mu) * x1"),
+      Twin.xsum("g2", "(y - mu) * x2"), Twin.xsum("h00", "mu * (1e0 - mu)"),
+      Twin.xsum("h01", "mu * (1e0 - mu) * x1"), Twin.xsum("h02", "mu * (1e0 - mu) * x2"),
+      Twin.xsum("h11", "mu * (1e0 - mu) * x1 * x1"),
+      Twin.xsum("h12", "mu * (1e0 - mu) * x1 * x2"),
+      Twin.xsum("h22", "mu * (1e0 - mu) * x2 * x2")),
+    Twin.gauss(Seq(Seq("h00", "h01", "h02"), Seq("h01", "h11", "h12"),
+      Seq("h02", "h12", "h22")), Seq("g0", "g1", "g2"), "n"),
+    Seq("a + nx0", "b1 + nx1", "b2 + nx2"), 3)
 
   /** Clipped-overlap sums for order n against the pair table `pr`:
     * (ca, re, num = Σ min(c_cand, c_ref), den_c = Σ c_cand). The join is
@@ -567,61 +568,21 @@ object Curation {
       // scoring steps; per step ONE distributed aggregation — score
       // U = Σ(y−μ)·μ^(1−p)·(1,x) = Σ(y−μ)/√μ·(1,x), information
       // I = Σμ^(2−p)·(1,x)(1,x)ᵀ = Σ√μ·(1,x)(1,x)ᵀ — on the exact
-      // decimal wire, 2×2 solve driver-side with re-literalized
-      // coefficients (the GLM-family discipline). μ = exp(η) is
+      // decimal wire, the 2×2 solve on the client (ML.logLinkFit, the
+      // GLM family's one Twin fit). μ = exp(η) is
       // REAL-collapsed; √ and / are IEEE-exact so every per-row term is
       // identical cross-engine.
       (s, dir) => {
         val spark = s
         import spark.implicits._
-        val d = T.lineitemFit(s, dir).select(
-          col("l_discount").cast("double").as("x"),
-          col("l_quantity").cast("double").as("y"))
-        var a = 0.0
-        var b = 0.0
-        for (_ <- 1 to 3) {
-          val ab = Seq((a, b)).toDF("ca", "cb")
-          val mu = exp(col("ca") + col("cb") * col("x"))
-            .cast("float").cast("double")
-          val r = d.crossJoin(broadcast(ab))
-            .select(col("x"), col("y"), mu.as("mu"))
-            .agg(
-              T.xsum(expr("(y - mu) / sqrt(mu)")).as("g0"),
-              T.xsum(expr("(y - mu) / sqrt(mu) * x")).as("g1"),
-              T.xsum(expr("sqrt(mu)")).as("h00"),
-              T.xsum(expr("sqrt(mu) * x")).as("h01"),
-              T.xsum(expr("sqrt(mu) * x * x")).as("h11"))
-            .collect()(0)
-          val g0 = r.getDouble(0); val g1 = r.getDouble(1)
-          val h00 = r.getDouble(2); val h01 = r.getDouble(3); val h11 = r.getDouble(4)
-          val den = h00 * h11 - h01 * h01
-          a = a + (h11 * g0 - h01 * g1) / den
-          b = b + (h00 * g1 - h01 * g0) / den
-        }
+        val Array(a, b) = Twin.fit(ML.glmRows(s, dir), tweedieFit).last
         Seq((a, b)).toDF("ia", "ib")
           .selectExpr("round(ia, 6) AS intercept", "round(ib, 6) AS slope",
             "round(CAST(CAST(exp(ia) AS REAL) AS DOUBLE), 6) AS mu_at_zero")
       },
       Some {
-        def step(src: String, out: String): String =
-          s"""${out}e AS (SELECT x, y,
-                 CAST(CAST(exp(a + b * x) AS REAL) AS DOUBLE) AS mu
-               FROM trows, $src),
-                 ${out}m AS (SELECT ${T.sqlXsum("(y - mu) / sqrt(mu)")} AS g0,
-                     ${T.sqlXsum("(y - mu) / sqrt(mu) * x")} AS g1,
-                     ${T.sqlXsum("sqrt(mu)")} AS h00,
-                     ${T.sqlXsum("sqrt(mu) * x")} AS h01,
-                     ${T.sqlXsum("sqrt(mu) * x * x")} AS h11 FROM ${out}e),
-                 $out AS (SELECT
-                     a + (h11 * g0 - h01 * g1) / (h00 * h11 - h01 * h01) AS a,
-                     b + (h00 * g1 - h01 * g0) / (h00 * h11 - h01 * h01) AS b
-                   FROM $src, ${out}m)"""
-        s"""WITH trows AS (SELECT CAST(l_discount AS DOUBLE) AS x,
-                   CAST(l_quantity AS DOUBLE) AS y FROM lineitem),
-                 tw0 AS (SELECT 0e0 AS a, 0e0 AS b),
-                 ${step("tw0", "tw1")},
-                 ${step("tw1", "tw2")},
-                 ${step("tw2", "tw3")}
+        s"""WITH ${ML.sqlGlmRows},
+                 ${Twin.sqlFit(tweedieFit, "prows", "tw")}
                SELECT round(a, 6) AS intercept, round(b, 6) AS slope,
                  round(CAST(CAST(exp(a) AS REAL) AS DOUBLE), 6) AS mu_at_zero
                FROM tw3"""
@@ -910,9 +871,8 @@ object Curation {
       // Newton/IRLS steps. Feature extraction fuses into the scan; per
       // step ONE distributed 9-sum aggregation (gradient + the 3×3
       // Hessian's unique entries) on the exact decimal wire; the 3×3
-      // solve runs driver-side through the SAME ordered [[solve3]] text
-      // the oracle's CTE chain uses, with coefficients re-literalized
-      // (the GLM-family discipline; sigmoid REAL-collapsed). Output: the
+      // solve is the shared [[qualityFit]] text both engines run
+      // (sigmoid REAL-collapsed). Output: the
       // fitted weights + training accuracy — the numbers a curation run
       // logs before applying the filter.
       (s, dir) => {
@@ -925,47 +885,7 @@ object Curation {
             "CAST(size(filter(ts, t -> array_contains(array('the','a','data','row','value'), t))) AS DOUBLE) / size(ts) AS x1",
             "CAST(n_chars AS DOUBLE) / size(ts) AS x2",
             "CASE WHEN lang = 'en' THEN 1e0 ELSE 0e0 END AS y")
-        var a = 0.0; var b1 = 0.0; var b2 = 0.0
-        for (_ <- 1 to 3) {
-          val co = Seq((a, b1, b2)).toDF("ca", "cb1", "cb2")
-          val mu = (lit(1.0) / (lit(1.0) +
-            exp(-(col("ca") + col("cb1") * col("x1") + col("cb2") * col("x2")))))
-            .cast("float").cast("double")
-          val r = d.crossJoin(broadcast(co))
-            .select(col("x1"), col("x2"), col("y"), mu.as("mu"),
-              (mu * (lit(1.0) - mu)).as("w"))
-            .agg(
-              T.xsum(col("y") - col("mu")).as("g0"),
-              T.xsum((col("y") - col("mu")) * col("x1")).as("g1"),
-              T.xsum((col("y") - col("mu")) * col("x2")).as("g2"),
-              T.xsum(col("w")).as("h00"),
-              T.xsum(col("w") * col("x1")).as("h01"),
-              T.xsum(col("w") * col("x2")).as("h02"),
-              T.xsum(col("w") * col("x1") * col("x1")).as("h11"),
-              T.xsum(col("w") * col("x1") * col("x2")).as("h12"),
-              T.xsum(col("w") * col("x2") * col("x2")).as("h22"))
-            .collect()(0)
-          val g0 = r.getDouble(0); val g1 = r.getDouble(1); val g2 = r.getDouble(2)
-          val h00 = r.getDouble(3); val h01 = r.getDouble(4); val h02 = r.getDouble(5)
-          val h11 = r.getDouble(6); val h12 = r.getDouble(7); val h22 = r.getDouble(8)
-          // the solve3 text, evaluated in the SAME order the oracle's CTE
-          // chain applies it
-          val f1 = h01 / h00
-          val a11 = h11 - f1 * h01
-          val a12 = h12 - f1 * h02
-          val z1 = g1 - f1 * g0
-          val f2 = h02 / h00
-          val a21 = h12 - f2 * h01
-          val a22 = h22 - f2 * h02
-          val z2 = g2 - f2 * g0
-          val f3 = a21 / a11
-          val a22b = a22 - f3 * a12
-          val z2b = z2 - f3 * z1
-          val d2 = z2b / a22b
-          val d1 = (z1 - a12 * d2) / a11
-          val d0 = (g0 - h01 * d1 - h02 * d2) / h00
-          a = a + d0; b1 = b1 + d1; b2 = b2 + d2
-        }
+        val Array(a, b1, b2) = Twin.fit(d, qualityFit).last
         val co = Seq((a, b1, b2)).toDF("ca", "cb1", "cb2")
         val mu = (lit(1.0) / (lit(1.0) +
           exp(-(col("ca") + col("cb1") * col("x1") + col("cb2") * col("x2")))))
@@ -981,37 +901,14 @@ object Curation {
             "round(CAST(nc AS DOUBLE) / n, 6) AS train_acc")
       },
       Some {
-        val sig = "CAST(CAST(1e0 / (1e0 + exp(-(a + b1 * x1 + b2 * x2))) AS REAL) AS DOUBLE)"
-        def step(k: Int): String = {
-          val prev = s"q${k - 1}"
-          val solveCtes = solve3.zipWithIndex.map { case ((nm, ex), i) =>
-            s"s${k}c${i + 1} AS (SELECT *, $ex AS $nm FROM s${k}c$i)"
-          }.mkString(",\n                 ")
-          s"""s${k}e AS (SELECT x1, x2, y, $sig AS mu FROM drows, $prev),
-                 s${k}c0 AS (SELECT ${T.sqlXsum("y - mu")} AS g0,
-                     ${T.sqlXsum("(y - mu) * x1")} AS g1,
-                     ${T.sqlXsum("(y - mu) * x2")} AS g2,
-                     ${T.sqlXsum("mu * (1e0 - mu)")} AS h00,
-                     ${T.sqlXsum("mu * (1e0 - mu) * x1")} AS h01,
-                     ${T.sqlXsum("mu * (1e0 - mu) * x2")} AS h02,
-                     ${T.sqlXsum("mu * (1e0 - mu) * x1 * x1")} AS h11,
-                     ${T.sqlXsum("mu * (1e0 - mu) * x1 * x2")} AS h12,
-                     ${T.sqlXsum("mu * (1e0 - mu) * x2 * x2")} AS h22
-                   FROM s${k}e),
-                 $solveCtes,
-                 q$k AS (SELECT a + d0 AS a, b1 + d1 AS b1, b2 + d2 AS b2
-                   FROM s${k}c${solve3.size}, $prev)"""
-        }
+        val sig = ML.sigmoidR("a + b1 * x1 + b2 * x2")
         s"""WITH drows AS (SELECT
                    CAST(len(list_filter(ts, t -> list_contains(['the','a','data','row','value'], t))) AS DOUBLE) / len(ts) AS x1,
                    CAST(n_chars AS DOUBLE) / len(ts) AS x2,
                    CASE WHEN lang = 'en' THEN 1e0 ELSE 0e0 END AS y
                  FROM (SELECT list_filter(string_split(text, ' '), t -> t <> '') AS ts,
                          n_chars, lang FROM documents) t0),
-                 q0 AS (SELECT 0e0 AS a, 0e0 AS b1, 0e0 AS b2),
-                 ${step(1)},
-                 ${step(2)},
-                 ${step(3)},
+                 ${Twin.sqlFit(qualityFit, "drows", "q")},
                  fin AS (SELECT y, $sig AS mu, a, b1, b2 FROM drows, q3)
                SELECT round(any_value(a), 6) AS intercept,
                  round(any_value(b1), 6) AS w_stop,

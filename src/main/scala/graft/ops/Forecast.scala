@@ -1,7 +1,6 @@
 package graft.ops
 
-import graft.{QueryDef, Tables => T}
-import org.apache.spark.sql.DataFrame
+import graft.{QueryDef, Tables => T, Twin}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -840,7 +839,7 @@ object Forecast {
             s"${cs("y2 IS NOT NULL", "dyl * dyl")} AS d_sllr",
             s"${cs("y2 IS NOT NULL", "dyl * dy")} AS d_sldr",
             s"${cs("y2 IS NOT NULL", "dy * dy")} AS d_sddr")
-        stepChainF(m, autoArimaSteps).selectExpr(
+        Twin.chain(m, autoArimaSteps).selectExpr(
           """stack(3,
                'ar1',       CAST(n1 AS BIGINT), 2, round(ssr1, 6), round(aic1, 6), aic1 = best,
                'ar2',       CAST(nd AS BIGINT), 3, round(ssr2, 6), round(aic2, 6), aic2 = best,
@@ -849,7 +848,7 @@ object Forecast {
           .orderBy("model")
       },
       Some {
-        val (ctes, fin) = sqlChainFromF(autoArimaSteps, "aa")
+        val (ctes, fin) = Twin.ctes(autoArimaSteps, "m", "aa")
         def cs(cond: String, e: String) = s"sum(CASE WHEN $cond THEN $e END)"
         s"""WITH daily AS (SELECT CAST(ts AS DATE) AS day, count(*) AS y
                            FROM events GROUP BY 1),
@@ -1760,19 +1759,4 @@ object Forecast {
     "aic2" -> "nd * CAST(CAST(ln(ssr2 / nd) AS FLOAT) AS DOUBLE) + 6e0",
     "aicd" -> "ndd * CAST(CAST(ln(ssrd / ndd) AS FLOAT) AS DOUBLE) + 4e0",
     "best" -> "least(aic1, aic2, aicd)")
-
-  /** Left-fold a (name, expr) cascade over a one-row frame — each step a
-    * new column referencing the prior ones (the ML.stepChain shape,
-    * local to Forecast). */
-  private def stepChainF(df: DataFrame, steps: Seq[(String, String)]): DataFrame =
-    steps.foldLeft(df) { case (d, (nm, ex)) => d.selectExpr("*", s"$ex AS $nm") }
-
-  /** Oracle twin of [[stepChainF]]: CTE per step, FLOAT→REAL swapped. */
-  private def sqlChainFromF(steps: Seq[(String, String)], pfx: String): (String, String) = {
-    val ctes = steps.zipWithIndex.map { case ((nm, ex), i) =>
-      val src = if (i == 0) "m" else s"$pfx${i - 1}"
-      s"$pfx$i AS (SELECT *, ${ex.replace("AS FLOAT", "AS REAL")} AS $nm FROM $src)"
-    }
-    (ctes.mkString(",\n              "), s"$pfx${steps.size - 1}")
-  }
 }

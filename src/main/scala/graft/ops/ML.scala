@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{QueryDef, Tables => T}
+import graft.{QueryDef, Tables => T, Twin}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -30,10 +30,8 @@ object ML {
   /** Exact first/second-moment sums for y = a + b*x on lineitem:
     * x = l_quantity, y = l_extendedprice. Emitted as one row of DECIMAL
     * sums; slope/intercept derive in closed form (normal equations — the
-    * same system cuML's `eig` solver factorizes [R]).
-    */
-  /** The 1-feature OLS moment row, SESSION-MEMOIZED like gram4Row (r7):
-    * four solver queries (linreg/ridge/lasso/enet 1-feature fits) start
+    * same system cuML's `eig` solver factorizes [R]). The row is
+    * SESSION-MEMOIZED like gram4Row (r7): four solver queries (linreg/ridge/lasso/enet 1-feature fits) start
     * from the same five exact sums over lineitem, and each re-paid the
     * ~1.3 s decimal aggregation sequentially. Deterministic statistic →
     * first consumer collects, the rest rebuild the one-row frame locally
@@ -248,10 +246,6 @@ object ML {
 
   // ---- multi-feature OLS internals (ml_linreg_normal_eq / ml_linreg_multi)
 
-  /** The 4-feature design X = (1, quantity, discount, tax), y =
-    * extendedprice: exact-decimal moment row (see ml_linreg_normal_eq for
-    * the wire-type rationale). Shared by the sufficient-statistics query
-    * and the full solve. */
   /** Plan-size bytes past which the e4 BIGINT wire is presumed unsafe and
     * gram4 routes to the exact-decimal fallback (VERDICT r6 #8). The e4
     * ceiling is ~sf150 ≈ 9·10⁸ lineitem rows ≈ 90 GB of parquet; 50 GB
@@ -259,6 +253,10 @@ object ML {
     * (the Tables.fanOut discipline). */
   private val E4_SAFE_BYTES = BigInt(50L * 1000 * 1000 * 1000)
 
+  /** The 4-feature design X = (1, quantity, discount, tax), y =
+    * extendedprice: exact moment row (see ml_linreg_normal_eq for the
+    * wire-type rationale). Shared by the sufficient-statistics query and
+    * the full solve. */
   private def gram4(s: SparkSession, dir: String): DataFrame = {
     val raw = T.lineitem(s, dir)
     val big = raw.queryExecution.optimizedPlan.stats.sizeInBytes > E4_SAFE_BYTES
@@ -412,39 +410,13 @@ object ML {
          CAST(l_extendedprice AS DECIMAL(19,6)) AS y
        FROM lineitem) l"""
 
-  /** Unrolled 4×4 Gaussian elimination (no pivoting — XᵀX is positive
-    * definite) over named scalar steps. ONE symbolic unrolling feeds BOTH
-    * engines: each (name, expression-string) is applied as a Spark
-    * `selectExpr` column AND as a DuckDB CTE column, so the two engines
-    * parse the SAME arithmetic text into the SAME IEEE double op sequence —
-    * the coefficient bits cannot diverge. `xk` are the solution entries.
-    */
-  private lazy val gaussSteps: Seq[(String, String)] = {
-    val a = Array(
-      Array("a00", "a01", "a02", "a03"),
-      Array("a01", "a11", "a12", "a13"),
-      Array("a02", "a12", "a22", "a23"),
-      Array("a03", "a13", "a23", "a33"))
-    val b = Array("b0", "b1", "b2", "b3")
-    val steps = scala.collection.mutable.ArrayBuffer[(String, String)]()
-    for (k <- 0 until 3; i <- k + 1 until 4) {
-      val f = s"f$i$k"
-      steps += f -> s"${a(i)(k)} / ${a(k)(k)}"
-      for (j <- k + 1 until 4) {
-        val nm = s"a$i${j}_$k"
-        steps += nm -> s"${a(i)(j)} - $f * ${a(k)(j)}"
-        a(i)(j) = nm
-      }
-      val nb = s"b${i}_$k"
-      steps += nb -> s"${b(i)} - $f * ${b(k)}"
-      b(i) = nb
-    }
-    steps += "x3" -> s"${b(3)} / ${a(3)(3)}"
-    steps += "x2" -> s"(${b(2)} - ${a(2)(3)} * x3) / ${a(2)(2)}"
-    steps += "x1" -> s"(${b(1)} - ${a(1)(2)} * x2 - ${a(1)(3)} * x3) / ${a(1)(1)}"
-    steps += "x0" -> s"(${b(0)} - ${a(0)(1)} * x1 - ${a(0)(2)} * x2 - ${a(0)(3)} * x3) / ${a(0)(0)}"
-    steps.toSeq
-  }
+  /** The 4×4 symmetric system over the named slots a00..a33 / b0..b3
+    * (XᵀX or a logistic Hessian, both positive definite) as the one
+    * unrolled [[Twin.gauss]] elimination; `x0..x3` are the solution. */
+  private lazy val gauss4: Twin.Steps = Twin.gauss(
+    Seq(Seq("a00", "a01", "a02", "a03"), Seq("a01", "a11", "a12", "a13"),
+      Seq("a02", "a12", "a22", "a23"), Seq("a03", "a13", "a23", "a33")),
+    Seq("b0", "b1", "b2", "b3"), "")
 
   /** The BIGINT moment row widened to the named double matrix/vector both
     * engines start elimination from (BIGINT→DOUBLE is IEEE-exact ≤ 2⁵³ and
@@ -459,42 +431,19 @@ object ML {
 
   /** One row holding the solved coefficients x0..x3 (plus elimination
     * intermediates) — shared by ml_linreg_multi and its predict twin. */
-  private[graft] def gaussSolved(s: SparkSession, dir: String): DataFrame = {
-    val base = gram4Row(s, dir).selectExpr(
-      gaussBase.map { case (nm, ex) => s"$ex AS $nm" }: _*)
-    gaussSteps.foldLeft(base) { case (df, (nm, ex)) =>
-      df.selectExpr("*", s"$ex AS $nm")
-    }
-  }
+  private[graft] def gaussSolved(s: SparkSession, dir: String): DataFrame =
+    Twin.chain(gram4Row(s, dir).selectExpr(
+      gaussBase.map { case (nm, ex) => s"$ex AS $nm" }: _*), gauss4)
 
-  /** The matching oracle CTE chain ending in `c{n}` with x0..x3. */
-  private[ops] lazy val sqlGaussChain: String = {
-    val ctes = gaussSteps.zipWithIndex.map { case ((nm, ex), i) =>
-      s"c${i + 1} AS (SELECT *, $ex AS $nm FROM c$i)"
-    }
-    s"""m AS ($sqlGram4),
+  /** The matching oracle CTE chain, ending in [[sqlGaussFinal]] with x0..x3. */
+  private[ops] lazy val (sqlGaussChain: String, sqlGaussFinal: String) = {
+    val (ctes, fin) = Twin.ctes(gauss4, "c0", "c")
+    (s"""m AS ($sqlGram4),
         c0 AS (SELECT ${gaussBase.map { case (nm, ex) => s"$ex AS $nm" }.mkString(", ")} FROM m),
-        ${ctes.mkString(",\n        ")}"""
+        $ctes""", fin)
   }
-  private[ops] lazy val sqlGaussFinal: String = s"c${gaussSteps.size}"
 
   // ---- multi-feature ridge / coordinate descent (r6, VERDICT r5 #3/#4) ---
-
-  /** Apply named (name, expression-text) steps as a sequential selectExpr
-    * cascade — the Spark half of the shared-text discipline (each step may
-    * reference every earlier name, exactly like the oracle's CTE chain). */
-  private def stepChain(base: DataFrame, steps: Seq[(String, String)]): DataFrame =
-    steps.foldLeft(base) { case (df, (nm, ex)) => df.selectExpr("*", s"$ex AS $nm") }
-
-  /** The matching DuckDB CTE chain from a CTE `m` (the gram4 moment row):
-    * returns (cteText, finalCteName). Prefix `p` keeps names unique. */
-  private def sqlChainFrom(steps: Seq[(String, String)], p: String): (String, String) = {
-    val ctes = steps.zipWithIndex.map { case ((nm, ex), i) =>
-      val src = if (i == 0) "m" else s"$p$i"
-      s"$p${i + 1} AS (SELECT *, $ex AS $nm FROM $src)"
-    }
-    (ctes.mkString(",\n                "), s"$p${steps.size}")
-  }
 
   /** Centered moments from the gram4 BIGINT wire, as shared expression
     * text: m* = Σ of each column, c_ab = Σab − Σa·Σb/n (absolute centered
@@ -513,32 +462,6 @@ object ML {
     "cqy" -> "s_qy_e4 / 1e4 - mq * my / nn",
     "cdy" -> "s_dy_e4 / 1e4 - md * my / nn",
     "cty" -> "s_ty_e4 / 1e4 - mt * my / nn")
-
-  /** Unrolled 3×3 Gaussian elimination over named scalar steps (same
-    * no-pivot discipline as gaussSteps — the centered Gram + αI is positive
-    * definite). `p` prefixes every generated name; solutions are
-    * `{p}x0..{p}x2`. */
-  private def symGauss3(a0: Array[Array[String]], b0: Array[String], p: String): Seq[(String, String)] = {
-    val a = a0.map(_.clone)
-    val b = b0.clone
-    val steps = scala.collection.mutable.ArrayBuffer[(String, String)]()
-    for (k <- 0 until 2; i <- k + 1 until 3) {
-      val f = s"${p}f$i$k"
-      steps += f -> s"${a(i)(k)} / ${a(k)(k)}"
-      for (j <- k + 1 until 3) {
-        val nm = s"${p}a$i${j}_$k"
-        steps += nm -> s"${a(i)(j)} - $f * ${a(k)(j)}"
-        a(i)(j) = nm
-      }
-      val nb = s"${p}b${i}_$k"
-      steps += nb -> s"${b(i)} - $f * ${b(k)}"
-      b(i) = nb
-    }
-    steps += s"${p}x2" -> s"${b(2)} / ${a(2)(2)}"
-    steps += s"${p}x1" -> s"(${b(1)} - ${a(1)(2)} * ${p}x2) / ${a(1)(1)}"
-    steps += s"${p}x0" -> s"(${b(0)} - ${a(0)(1)} * ${p}x1 - ${a(0)(2)} * ${p}x2) / ${a(0)(0)}"
-    steps.toSeq
-  }
 
   /** LARS (least-angle regression, Efron et al. 2004 — the reference ships
     * it as cuml.experimental.linear_model.Lars [R]) over the 3 standardized
@@ -605,10 +528,16 @@ object ML {
   private lazy val ridgeSteps: Seq[(String, String)] =
     centeredBase ++
     Seq("k11" -> "cqq + 1000.0", "k22" -> "cdd + 1000.0", "k33" -> "ctt + 1000.0") ++
-    symGauss3(
-      Array(Array("k11", "cqd", "cqt"), Array("cqd", "k22", "cdt"), Array("cqt", "cdt", "k33")),
-      Array("cqy", "cdy", "cty"), "rg") ++
+    Twin.gauss(
+      Seq(Seq("k11", "cqd", "cqt"), Seq("cqd", "k22", "cdt"), Seq("cqt", "cdt", "k33")),
+      Seq("cqy", "cdy", "cty"), "rg") ++
     Seq("rgb0" -> "(my - rgx0 * mq - rgx1 * md - rgx2 * mt) / nn")
+
+  /** ml_kernel_ridge's landmark system (K + λI)α = y: λ = 0.1 on the
+    * unit kernel diagonal, dual coefficients `krx0..krx2`. */
+  private lazy val kernelRidgeSteps: Twin.Steps = Twin.gauss(
+    Seq(Seq("1.1", "k01", "k02"), Seq("k01", "1.1", "k12"), Seq("k02", "k12", "1.1")),
+    Seq("y0", "y1", "y2"), "kr")
 
   /** Centered ridge normal equations over the SPARSE hashed-feature
     * moment row (ml_ridge_sparse): the same eig-contract elimination as
@@ -624,9 +553,9 @@ object ML {
       "cy0" -> "x0y - s0 * sy / nn", "cy1" -> "x1y - s1 * sy / nn",
       "cy2" -> "x2y - s2 * sy / nn",
       "k00" -> "c00 + 100.0", "k11" -> "c11 + 100.0", "k22" -> "c22 + 100.0") ++
-    symGauss3(
-      Array(Array("k00", "c01", "c02"), Array("c01", "k11", "c12"), Array("c02", "c12", "k22")),
-      Array("cy0", "cy1", "cy2"), "sr") ++
+    Twin.gauss(
+      Seq(Seq("k00", "c01", "c02"), Seq("c01", "k11", "c12"), Seq("c02", "c12", "k22")),
+      Seq("cy0", "cy1", "cy2"), "sr") ++
     Seq("srb0" -> "(sy - srx0 * s0 - srx1 * s1 - srx2 * s2) / nn")
 
   /** Penalized IRLS to CONVERGENCE for LOGISTIC regression over the SPARSE
@@ -638,16 +567,18 @@ object ML {
     * REAL-collapsed sigmoid (order-independent, so mu is bit-identical
     * cross-engine), (2) 14 weighted sums — the 4×4 Hessian XᵀWX over
     * (1, v₀, v₁, v₂) needs the per-doc self-join because a doc's present
-    * features cross-multiply — on the sumE12 wire, then the SHARED
-    * gaussSteps 4×4 elimination. λ = 10 ridge on the feature diagonal AND
+    * features cross-multiply — on the sumE12 wire, then the shared
+    * [[gauss4]] elimination. λ = 10 ridge on the feature diagonal AND
     * the gradient (∇ = Xᵀ(y−p) − λβ), intercept unpenalized. β accumulates
     * client-side (cuML's coef_), re-entering each step as a broadcast
-    * one-row table (codegen-stable, the irlsMultiBeta discipline); the
-    * oracle unrolls the identical 3 blocks as CTEs. */
+    * one-row table (codegen-stable, the [[Twin.fit]] discipline); the
+    * oracle unrolls the identical 3 blocks as CTEs. Its three
+    * aggregations over the self-joined COO frame do not fit one
+    * [[Twin.Fit]], so the loop stays hand-written around Twin's pieces. */
   private val sparseIrlsCt =
     "CAST(v * (CASE h WHEN 0 THEN e1 WHEN 1 THEN e2 ELSE e3 END) AS DECIMAL(30,12))"
-  private def sparseIrlsMu(ty: String): String =
-    s"CAST(CAST(1e0 / (1e0 + exp(-(e0 + coalesce(ct, 0e0)))) AS $ty) AS DOUBLE)"
+  private val sparseIrlsMu =
+    "CAST(CAST(1e0 / (1e0 + exp(-(e0 + coalesce(ct, 0e0)))) AS FLOAT) AS DOUBLE)"
   private def sparseIrlsPair(i: Int, j: Int): String =
     s"CASE WHEN ia = $i AND jb = $j THEN mu * (1e0 - mu) * va * vb END"
   private def sparseIrlsWv(i: Int): String =
@@ -695,7 +626,7 @@ object ML {
         .groupBy("doc_id").agg(sum(col("t")).cast("double").as("ct"))
       val sc = T.freeze(yd.join(ct, Seq("doc_id"), "left")
         .crossJoin(broadcast(bt))
-        .selectExpr("doc_id", "y", s"${sparseIrlsMu("FLOAT")} AS mu"))
+        .selectExpr("doc_id", "y", s"$sparseIrlsMu AS mu"))
       val wg = lf.select(col("doc_id"), col("h").as("ia"), col("v").as("va"))
         .join(lf.select(col("doc_id"), col("h").as("jb"), col("v").as("vb")),
           "doc_id")
@@ -712,7 +643,7 @@ object ML {
         T.sumE12(expr("y - mu")).as("s_r"))
       val sums = gr.crossJoin(xv).crossJoin(sm).crossJoin(broadcast(bt))
         .selectExpr(sparseIrlsMs(T.bitsE12): _*)
-      val x = stepChain(sums, gaussSteps)
+      val x = Twin.chain(sums, gauss4)
         .selectExpr("x0", "x1", "x2", "x3").collect()(0)
       e = Array(e(0) + x.getDouble(0), e(1) + x.getDouble(1),
         e(2) + x.getDouble(2), e(3) + x.getDouble(3))
@@ -726,15 +657,11 @@ object ML {
   private lazy val sqlSparseIrlsChain: String = {
     val pairs = for (i <- 0 to 2; j <- i to 2) yield (i, j)
     val blocks = (1 to 3).map { k =>
-      val gauss = gaussSteps.zipWithIndex.map { case ((nm, ex), i) =>
-        val src = if (i == 0) s"ms$k" else s"sg${k}_$i"
-        s"sg${k}_${i + 1} AS (SELECT *, $ex AS $nm FROM $src)"
-      }
-      val fin = s"sg${k}_${gaussSteps.size}"
+      val (gauss, fin) = Twin.ctes(gauss4, s"ms$k", s"sg${k}_")
       s"""ct$k AS (SELECT doc_id,
                CAST(sum($sparseIrlsCt) AS DOUBLE) AS ct
              FROM lf, bet${k - 1} GROUP BY doc_id),
-         sc$k AS (SELECT doc_id, y, ${sparseIrlsMu("REAL")} AS mu
+         sc$k AS (SELECT doc_id, y, $sparseIrlsMu AS mu
              FROM yd LEFT JOIN ct$k USING (doc_id), bet${k - 1}),
          wg$k AS (SELECT a.h AS ia, b.h AS jb, a.v AS va, b.v AS vb, s.mu
              FROM lf a JOIN lf b ON a.doc_id = b.doc_id
@@ -754,7 +681,7 @@ object ML {
              FROM sc$k),
          ms$k AS (SELECT ${sparseIrlsMs(T.sqlBitsE12).mkString(",\n             ")}
              FROM gr$k, xv$k, sm$k, bet${k - 1}),
-         ${gauss.mkString(",\n         ")},
+         $gauss,
          bet$k AS (SELECT e0 + x0 AS e0, e1 + x1 AS e1,
                e2 + x2 AS e2, e3 + x3 AS e3
              FROM bet${k - 1}, $fin)"""
@@ -808,7 +735,7 @@ object ML {
     * chain text and the residual text feed both engines verbatim. */
   private def regMultiPredict(s: SparkSession, dir: String,
       steps: Seq[(String, String)], b0: String, b1: String, b2: String, b3: String): DataFrame = {
-    val coefs = stepChain(gram4Row(s, dir), steps)
+    val coefs = Twin.chain(gram4Row(s, dir), steps)
       .selectExpr(s"$b0 AS c0", s"$b1 AS c1", s"$b2 AS c2", s"$b3 AS c3")
     val l = T.lineitem(s, dir).select(
       col("l_returnflag"),
@@ -830,7 +757,7 @@ object ML {
   /** Oracle twin of [[regMultiPredict]]. */
   private def sqlRegMultiPredict(steps: Seq[(String, String)], p: String,
       b0: String, b1: String, b2: String, b3: String): String = {
-    val (ctes, fin) = sqlChainFrom(steps, p)
+    val (ctes, fin) = Twin.ctes(steps, "m", p)
     s"""WITH m AS ($sqlGram4),
             $ctes,
             co AS (SELECT $b0 AS c0, $b1 AS c1, $b2 AS c2, $b3 AS c3 FROM $fin),
@@ -849,11 +776,63 @@ object ML {
 
   // ---- logistic-regression internals (ml_logreg_fit / ml_logreg_predict)
 
+  /** The REAL-collapsed sigmoid of the linear predictor `eta`: exp() is
+    * the one op the engines may round differently in the last ulp, and the
+    * FLOAT collapse absorbs it (DuckDB's FLOAT is REAL). The immediate
+    * DOUBLE re-widen keeps the downstream sums in double: a bare REAL mu
+    * dragged DuckDB's weight sums into FLOAT arithmetic while Spark
+    * promoted to double (measured: a00 off by 1024 in ml_logreg_multi). */
+  private[ops] def sigmoidR(eta: String): String =
+    s"CAST(CAST(1e0 / (1e0 + exp(-($eta))) AS FLOAT) AS DOUBLE)"
+
+  /** The 1-feature logistic fits' rows: x = quantity, y = (returnflag = R).
+    * The sf0.1 lineitem parquet plans only 3 scan tasks and each fit
+    * re-scans it once per step, so fan out once. */
+  private def logitRows(s: SparkSession, dir: String): DataFrame =
+    T.lineitem(s, dir).select(
+      col("l_quantity").cast("double").as("x"),
+      when(col("l_returnflag") === "R", 1.0).otherwise(0.0).as("y"))
+      .transform(T.fanOut(_))
+
+  private lazy val sqlLogitRows =
+    """d AS (SELECT CAST(l_quantity AS DOUBLE) AS x,
+           CASE WHEN l_returnflag = 'R' THEN 1.0 ELSE 0.0 END AS y
+         FROM lineitem)"""
+
+  /** One driver-held logistic Newton/IRLS fit of (a, b) over rows (x, y)
+    * from (0, 0): per step the 5 exact-decimal gradient/Hessian sums over
+    * the REAL-collapsed sigmoid, then `update` and `next`. `inputs` are
+    * fixed parameters the update reads (a penalty). */
+  private def logitFit(iters: Int, update: Twin.Steps, next: Seq[String],
+      inputs: Seq[(String, Double)] = Nil): Twin.Fit = Twin.Fit(
+    Seq("a" -> 0.0, "b" -> 0.0) ++ inputs,
+    Seq("mu" -> sigmoidR("a + b * x")),
+    Seq(Twin.xsum("g0", "y - mu"), Twin.xsum("g1", "(y - mu) * x"),
+      Twin.xsum("h00", "mu * (1e0 - mu)"), Twin.xsum("h01", "mu * (1e0 - mu) * x"),
+      Twin.xsum("h11", "mu * (1e0 - mu) * x * x")),
+    update, next ++ inputs.map(_._1), iters)
+
+  /** The unpenalized Newton step: (a, b) += H⁻¹g by Cramer's rule. */
+  private def newtonFit(iters: Int): Twin.Fit = logitFit(iters,
+    Twin.newton2("h00", "h01", "h11", "g0", "g1"), Seq("a + d0", "b + d1"))
+
+  /** The L2 ridge-Newton step (H + λ·diag(0,1))δ = g − λ·(0, b), λ = 10⁶. */
+  private lazy val ridgeNewton: Twin.Steps =
+    Seq("k11" -> "h11 + 1e6", "r1" -> "g1 - 1e6 * b") ++
+      Twin.newton2("h00", "h01", "k11", "g0", "r1")
+
   /** 3 Newton/IRLS steps with DRIVER-HELD (intercept, slope) — one exact
     * decimal gradient/Hessian aggregation per step (see ml_logreg_fit).
     * Returns the unrounded coefficients for predict-side reuse. */
   private def irlsBeta(s: SparkSession, dir: String): (Double, Double) =
-    T.fitCache("irlsBeta", dir) { irlsBetaCompute(s, dir) }
+    T.fitCache("irlsBeta", dir) { ab(Twin.fit(logitRows(s, dir), newtonFit(3)).last) }
+
+  private def ab(p: Array[Double]): (Double, Double) = (p(0), p(1))
+
+  /** The oracle twin of [[irlsBeta]] through `b3(a, b)`, with its rows CTE
+    * `d` — shared by the fit and predict oracles. */
+  private lazy val sqlIrlsChain: String =
+    s"$sqlLogitRows,\n  ${Twin.sqlFit(newtonFit(3), "d", "b")}"
 
   /** The causal-inference frame shared by ml_propensity_ipw /
     * ml_doubly_robust: confounder x = quantity, treatment tr = deep
@@ -866,80 +845,33 @@ object ML {
       .transform(T.fanOut(_))
 
   /** 2 driver-held IRLS steps for the PROPENSITY e(x) = P(tr = 1 | x) —
-    * the irlsBeta discipline on [[causalFrame]]'s treatment; fitCache'd
-    * so the IPW and AIPW rows share one fit. */
+    * the irlsBeta fit on [[causalFrame]]'s treatment; fitCache'd so the
+    * IPW, AIPW and strata rows share one fit. */
   private def propensityBeta(s: SparkSession, dir: String): (Double, Double) =
     T.fitCache[(Double, Double)]("propensityBeta", dir) {
-      val spark = s
-      import spark.implicits._
-      val d = causalFrame(s, dir)
-      var aa = 0.0; var bb = 0.0
-      for (_ <- 1 to 2) {
-        val ab = Seq((aa, bb)).toDF("ca", "cb")
-        val mu = (lit(1.0) / (lit(1.0) +
-          exp(-(col("ca") + col("cb") * col("x")))))
-          .cast("float").cast("double")
-        val r = d.crossJoin(broadcast(ab))
-          .select(col("x"), col("tr").as("y"), mu.as("mu"))
-          .select(col("x"), col("y"), col("mu"),
-            (col("mu") * (lit(1.0) - col("mu"))).as("w"))
-          .agg(
-            T.xsum(col("y") - col("mu")).as("g0"),
-            T.xsum((col("y") - col("mu")) * col("x")).as("g1"),
-            T.xsum(col("w")).as("h00"),
-            T.xsum(col("w") * col("x")).as("h01"),
-            T.xsum(col("w") * col("x") * col("x")).as("h11"))
-          .collect()(0)
-        val g0 = r.getDouble(0); val g1 = r.getDouble(1)
-        val h00 = r.getDouble(2); val h01 = r.getDouble(3)
-        val h11 = r.getDouble(4)
-        val den = h00 * h11 - h01 * h01
-        val na = aa + (h11 * g0 - h01 * g1) / den
-        val nb = bb + (h00 * g1 - h01 * g0) / den
-        aa = na; bb = nb
-      }
-      (aa, bb)
+      ab(Twin.fit(causalFrame(s, dir).selectExpr("x", "tr AS y"), newtonFit(2)).last)
     }
+
+  /** The oracle twin of [[propensityBeta]] through `b2(a, b)`, with its
+    * rows CTE `d(x, y = treatment, yv)`. */
+  private lazy val sqlPropensityChain: String =
+    s"""d AS (SELECT CAST(l_quantity AS DOUBLE) AS x,
+           CASE WHEN l_discount > 0.05 THEN 1.0 ELSE 0.0 END AS y,
+           CAST(l_extendedprice AS DOUBLE) AS yv
+         FROM lineitem),
+  ${Twin.sqlFit(newtonFit(2), "d", "b")}"""
 
   /** L2-penalized IRLS (LogisticRegression(penalty='l2') — the ridge
     * Newton step (H + λ·diag(0,1))δ = g − λ·(0, b): the SLOPE is
     * penalized, the intercept is not (the sklearn/cuml convention).
     * λ = 10⁶ — sized against the Σw·x² ≈ 1e7 Hessian scale so the
     * shrinkage is visible (λ = 100 measured shrinkage 0.99996 — noise).
-    * Same driver-held 3-step loop as [[irlsBetaCompute]]; update text
-    * mirrors [[sqlIrlsL2Chain]]. */
+    * Same driver-held 3-step fit as [[irlsBeta]]; the oracle's chain is
+    * [[sqlIrlsL2Chain]]. */
+  private lazy val l2Fit: Twin.Fit = logitFit(3, ridgeNewton, Seq("a + d0", "b + d1"))
+
   private def irlsBetaL2(s: SparkSession, dir: String): (Double, Double) =
-    T.fitCache("irlsBetaL2", dir) {
-      val spark = s
-      import spark.implicits._
-      val d = T.lineitem(s, dir).select(
-        col("l_quantity").cast("double").as("x"),
-        when(col("l_returnflag") === "R", 1.0).otherwise(0.0).as("y"))
-        .transform(T.fanOut(_))
-      var a = 0.0
-      var b = 0.0
-      for (_ <- 1 to 3) {
-        val ab = Seq((a, b)).toDF("ca", "cb")
-        val mu = (lit(1.0) / (lit(1.0) + exp(-(col("ca") + col("cb") * col("x")))))
-          .cast("float").cast("double")
-        val w = mu * (lit(1.0) - mu)
-        val r = d.crossJoin(broadcast(ab))
-          .select(col("x"), col("y"), mu.as("mu"), w.as("w"))
-          .agg(
-            T.xsum(col("y") - col("mu")).as("g0"),
-            T.xsum((col("y") - col("mu")) * col("x")).as("g1"),
-            T.xsum(col("w")).as("h00"),
-            T.xsum(col("w") * col("x")).as("h01"),
-            T.xsum(col("w") * col("x") * col("x")).as("h11"))
-          .collect()(0)
-        val g0 = r.getDouble(0); val g1 = r.getDouble(1)
-        val h00 = r.getDouble(2); val h01 = r.getDouble(3); val h11 = r.getDouble(4)
-        val den = h00 * (h11 + 1e6) - h01 * h01
-        a = a + ((h11 + 1e6) * g0 - h01 * (g1 - 1e6 * b)) / den
-        b = b + (h00 * (g1 - 1e6 * b) - h01 * g0) / den
-      }
-      (a, b)
-    }
+    T.fitCache("irlsBetaL2", dir) { ab(Twin.fit(logitRows(s, dir), l2Fit).last) }
 
   /** L1-penalized IRLS (LogisticRegression(penalty='l1') — the lasso
     * sibling of [[irlsBetaL2]], the cuML QN/OWL-QN surface): PROXIMAL
@@ -949,44 +881,18 @@ object ML {
     * against BOTH fixture scales (h11 ≈ 1.1e6 at sf0.001 / 1.1e7 at
     * sf0.01; MLE slope −7e-4 / −2.4e-4) so the shrinkage is visible
     * (≈0.87 / ≈0.96) without zeroing at either — the exact-zero branch
-    * is pinned separately in MicroSpec. `+ 0` canonicalizes the sign of a
-    * thresholded-to-zero slope (the cdSteps −0.0 lesson: L1 is the one
-    * family DESIGNED to produce exact zeros). Update text mirrors
-    * [[sqlIrlsL1Chain]]. */
+    * is pinned separately in MicroSpec. `+ 0e0` canonicalizes the sign of
+    * a thresholded-to-zero slope (the cdSteps −0.0 lesson: L1 is the one
+    * family DESIGNED to produce exact zeros). λ rides the fit as a fixed
+    * input parameter. */
+  private def l1Fit(lam: Double): Twin.Fit = logitFit(3,
+    Twin.newton2("h00", "h01", "h11", "g0", "g1") ++ Seq("braw" -> "b + d1"),
+    Seq("a + d0", "sign(braw) * greatest(abs(braw) - lam / h11, 0e0) + 0e0"),
+    Seq("lam" -> lam))
+
   private[graft] def irlsBetaL1(s: SparkSession, dir: String,
       lam: Double = 100.0): (Double, Double) =
-    T.fitCache(s"irlsBetaL1-$lam", dir) {
-      val spark = s
-      import spark.implicits._
-      val d = T.lineitem(s, dir).select(
-        col("l_quantity").cast("double").as("x"),
-        when(col("l_returnflag") === "R", 1.0).otherwise(0.0).as("y"))
-        .transform(T.fanOut(_))
-      var a = 0.0
-      var b = 0.0
-      for (_ <- 1 to 3) {
-        val ab = Seq((a, b)).toDF("ca", "cb")
-        val mu = (lit(1.0) / (lit(1.0) + exp(-(col("ca") + col("cb") * col("x")))))
-          .cast("float").cast("double")
-        val w = mu * (lit(1.0) - mu)
-        val r = d.crossJoin(broadcast(ab))
-          .select(col("x"), col("y"), mu.as("mu"), w.as("w"))
-          .agg(
-            T.xsum(col("y") - col("mu")).as("g0"),
-            T.xsum((col("y") - col("mu")) * col("x")).as("g1"),
-            T.xsum(col("w")).as("h00"),
-            T.xsum(col("w") * col("x")).as("h01"),
-            T.xsum(col("w") * col("x") * col("x")).as("h11"))
-          .collect()(0)
-        val g0 = r.getDouble(0); val g1 = r.getDouble(1)
-        val h00 = r.getDouble(2); val h01 = r.getDouble(3); val h11 = r.getDouble(4)
-        val den = h00 * h11 - h01 * h01
-        a = a + (h11 * g0 - h01 * g1) / den
-        val braw = b + (h00 * g1 - h01 * g0) / den
-        b = math.signum(braw) * math.max(math.abs(braw) - lam / h11, 0.0) + 0.0
-      }
-      (a, b)
-    }
+    T.fitCache(s"irlsBetaL1-$lam", dir) { ab(Twin.fit(logitRows(s, dir), l1Fit(lam)).last) }
 
   /** Elastic-net IRLS (LogisticRegression(penalty='elasticnet') —
     * completing the cuML penalty contract {none, l1, l2, elasticnet}):
@@ -995,312 +901,104 @@ object ML {
     * soft-threshold scaled by the PENALIZED curvature λ1/(h11+λ2) —
     * the standard prox-of-the-smooth-part composition. λ2 = 10⁶ /
     * λ1 = 100: the λ sizes already validated for the pure penalties. */
+  private lazy val enFit: Twin.Fit = logitFit(3,
+    ridgeNewton ++ Seq("braw" -> "b + d1"),
+    Seq("a + d0", "sign(braw) * greatest(abs(braw) - 1e2 / k11, 0e0) + 0e0"))
+
   private def irlsBetaEN(s: SparkSession, dir: String): (Double, Double) =
-    T.fitCache("irlsBetaEN", dir) {
-      val spark = s
-      import spark.implicits._
-      val d = T.lineitem(s, dir).select(
-        col("l_quantity").cast("double").as("x"),
-        when(col("l_returnflag") === "R", 1.0).otherwise(0.0).as("y"))
-        .transform(T.fanOut(_))
-      var a = 0.0
-      var b = 0.0
-      for (_ <- 1 to 3) {
-        val ab = Seq((a, b)).toDF("ca", "cb")
-        val mu = (lit(1.0) / (lit(1.0) + exp(-(col("ca") + col("cb") * col("x")))))
-          .cast("float").cast("double")
-        val w = mu * (lit(1.0) - mu)
-        val r = d.crossJoin(broadcast(ab))
-          .select(col("x"), col("y"), mu.as("mu"), w.as("w"))
-          .agg(
-            T.xsum(col("y") - col("mu")).as("g0"),
-            T.xsum((col("y") - col("mu")) * col("x")).as("g1"),
-            T.xsum(col("w")).as("h00"),
-            T.xsum(col("w") * col("x")).as("h01"),
-            T.xsum(col("w") * col("x") * col("x")).as("h11"))
-          .collect()(0)
-        val g0 = r.getDouble(0); val g1 = r.getDouble(1)
-        val h00 = r.getDouble(2); val h01 = r.getDouble(3); val h11 = r.getDouble(4)
-        val den = h00 * (h11 + 1e6) - h01 * h01
-        a = a + ((h11 + 1e6) * g0 - h01 * (g1 - 1e6 * b)) / den
-        val braw = b + (h00 * (g1 - 1e6 * b) - h01 * g0) / den
-        b = math.signum(braw) * math.max(math.abs(braw) - 100.0 / (h11 + 1e6), 0.0) + 0.0
-      }
-      (a, b)
-    }
+    T.fitCache("irlsBetaEN", dir) { ab(Twin.fit(logitRows(s, dir), enFit).last) }
 
-  /** Oracle twin of [[irlsBetaEN]]; CTEs prefixed en*. */
-  private lazy val sqlIrlsENChain: String = {
-    def mStep(src: String) =
-      s"""SELECT ${T.sqlXsum("y - mu")} AS g0,
-            ${T.sqlXsum("(y - mu) * x")} AS g1,
-            ${T.sqlXsum("mu * (1.0 - mu)")} AS h00,
-            ${T.sqlXsum("mu * (1.0 - mu) * x")} AS h01,
-            ${T.sqlXsum("mu * (1.0 - mu) * x * x")} AS h11
-          FROM $src"""
-    def beta(m: String, prevA: String, prevB: String) = {
-      val braw = s"$prevB + (h00 * (g1 - 1e6 * $prevB) - h01 * g0) / (h00 * (h11 + 1e6) - h01 * h01)"
-      s"""SELECT $prevA + ((h11 + 1e6) * g0 - h01 * (g1 - 1e6 * $prevB)) / (h00 * (h11 + 1e6) - h01 * h01) AS a,
-            sign($braw) * greatest(abs($braw) - 100.0 / (h11 + 1e6), 0.0) + 0 AS b
-          FROM $m"""
-    }
-    s"""ei1 AS (SELECT x, y, CAST(CAST(1.0 / (1.0 + exp(-(0.0 + 0.0 * x))) AS REAL) AS DOUBLE) AS mu FROM d),
-       em1 AS (${mStep("ei1")}),
-       eb1 AS (${beta("em1", "0.0", "0.0")}),
-       ei2 AS (SELECT x, y, CAST(CAST(1.0 / (1.0 + exp(-(a + b * x))) AS REAL) AS DOUBLE) AS mu FROM d, eb1),
-       em2 AS (${mStep("ei2")}),
-       eb2 AS (${beta("em2, eb1", "eb1.a", "eb1.b")}),
-       ei3 AS (SELECT x, y, CAST(CAST(1.0 / (1.0 + exp(-(a + b * x))) AS REAL) AS DOUBLE) AS mu FROM d, eb2),
-       em3 AS (${mStep("ei3")}),
-       eb3 AS (${beta("em3, eb2", "eb2.a", "eb2.b")})"""
-  }
-
-  /** Oracle twin of [[irlsBetaL1]] — sqlIrlsChain's structure with the
-    * proximal soft-threshold beta step; CTEs prefixed q* so all three
-    * logreg chains can share one `d` rows CTE. */
-  private lazy val sqlIrlsL1Chain: String = {
-    def mStep(src: String) =
-      s"""SELECT ${T.sqlXsum("y - mu")} AS g0,
-            ${T.sqlXsum("(y - mu) * x")} AS g1,
-            ${T.sqlXsum("mu * (1.0 - mu)")} AS h00,
-            ${T.sqlXsum("mu * (1.0 - mu) * x")} AS h01,
-            ${T.sqlXsum("mu * (1.0 - mu) * x * x")} AS h11
-          FROM $src"""
-    def beta(m: String, prevA: String, prevB: String) = {
-      val braw = s"$prevB + (h00 * g1 - h01 * g0) / (h00 * h11 - h01 * h01)"
-      s"""SELECT $prevA + (h11 * g0 - h01 * g1) / (h00 * h11 - h01 * h01) AS a,
-            sign($braw) * greatest(abs($braw) - 100.0 / h11, 0.0) + 0 AS b
-          FROM $m"""
-    }
-    s"""qi1 AS (SELECT x, y, CAST(CAST(1.0 / (1.0 + exp(-(0.0 + 0.0 * x))) AS REAL) AS DOUBLE) AS mu FROM d),
-       qm1 AS (${mStep("qi1")}),
-       qb1 AS (${beta("qm1", "0.0", "0.0")}),
-       qi2 AS (SELECT x, y, CAST(CAST(1.0 / (1.0 + exp(-(a + b * x))) AS REAL) AS DOUBLE) AS mu FROM d, qb1),
-       qm2 AS (${mStep("qi2")}),
-       qb2 AS (${beta("qm2, qb1", "qb1.a", "qb1.b")}),
-       qi3 AS (SELECT x, y, CAST(CAST(1.0 / (1.0 + exp(-(a + b * x))) AS REAL) AS DOUBLE) AS mu FROM d, qb2),
-       qm3 AS (${mStep("qi3")}),
-       qb3 AS (${beta("qm3, qb2", "qb2.a", "qb2.b")})"""
-  }
-
-  /** Oracle twin of [[irlsBetaL2]] — the sqlIrlsChain structure with the
-    * penalized Newton step; CTEs prefixed p* so both chains can share the
-    * `d` rows CTE in one oracle. */
-  private lazy val sqlIrlsL2Chain: String = {
-    def mStep(src: String) =
-      s"""SELECT ${T.sqlXsum("y - mu")} AS g0,
-            ${T.sqlXsum("(y - mu) * x")} AS g1,
-            ${T.sqlXsum("mu * (1.0 - mu)")} AS h00,
-            ${T.sqlXsum("mu * (1.0 - mu) * x")} AS h01,
-            ${T.sqlXsum("mu * (1.0 - mu) * x * x")} AS h11
-          FROM $src"""
-    def beta(m: String, prevA: String, prevB: String) =
-      s"""SELECT $prevA + ((h11 + 1e6) * g0 - h01 * (g1 - 1e6 * $prevB)) / (h00 * (h11 + 1e6) - h01 * h01) AS a,
-            $prevB + (h00 * (g1 - 1e6 * $prevB) - h01 * g0) / (h00 * (h11 + 1e6) - h01 * h01) AS b
-          FROM $m"""
-    s"""pi1 AS (SELECT x, y, CAST(CAST(1.0 / (1.0 + exp(-(0.0 + 0.0 * x))) AS REAL) AS DOUBLE) AS mu FROM d),
-       pm1 AS (${mStep("pi1")}),
-       pb1 AS (${beta("pm1", "0.0", "0.0")}),
-       pi2 AS (SELECT x, y, CAST(CAST(1.0 / (1.0 + exp(-(a + b * x))) AS REAL) AS DOUBLE) AS mu FROM d, pb1),
-       pm2 AS (${mStep("pi2")}),
-       pb2 AS (${beta("pm2, pb1", "pb1.a", "pb1.b")}),
-       pi3 AS (SELECT x, y, CAST(CAST(1.0 / (1.0 + exp(-(a + b * x))) AS REAL) AS DOUBLE) AS mu FROM d, pb2),
-       pm3 AS (${mStep("pi3")}),
-       pb3 AS (${beta("pm3, pb2", "pb2.a", "pb2.b")})"""
-  }
-
-  private def irlsBetaCompute(s: SparkSession, dir: String): (Double, Double) = {
-    val spark = s
-    import spark.implicits._
-    // repartition: the sf0.1 lineitem parquet plans only 3 scan tasks and
-    // this loop re-scans it 3× into decimal-heavy sums — fan out once
-    val d = T.lineitem(s, dir).select(
-      col("l_quantity").cast("double").as("x"),
-      when(col("l_returnflag") === "R", 1.0).otherwise(0.0).as("y"))
-      .transform(T.fanOut(_))
-    var a = 0.0
-    var b = 0.0
-    for (_ <- 1 to 3) {
-      // (a, b) enter as a broadcast one-row TABLE, not literals: literals
-      // change the generated code text every step, so Janino recompiled
-      // the identical plan 3× (~1.5 s/step of the old 5.4 s fit); as
-      // column refs the generated source is step-invariant and the
-      // codegen cache hits. Same IEEE expression tree per row either way.
-      val ab = Seq((a, b)).toDF("ca", "cb")
-      val mu = (lit(1.0) / (lit(1.0) + exp(-(col("ca") + col("cb") * col("x")))))
-        .cast("float")
-      val w = mu * (lit(1.0) - mu)
-      val r = d.crossJoin(broadcast(ab))
-        .select(col("x"), col("y"), mu.as("mu"), w.as("w"))
-        .agg(
-          T.xsum(col("y") - col("mu")).as("g0"),
-          T.xsum((col("y") - col("mu")) * col("x")).as("g1"),
-          T.xsum(col("w")).as("h00"),
-          T.xsum(col("w") * col("x")).as("h01"),
-          T.xsum(col("w") * col("x") * col("x")).as("h11"))
-        .collect()(0)
-      val g0 = r.getDouble(0); val g1 = r.getDouble(1)
-      val h00 = r.getDouble(2); val h01 = r.getDouble(3); val h11 = r.getDouble(4)
-      a = a + (h11 * g0 - h01 * g1) / (h00 * h11 - h01 * h01)
-      b = b + (h00 * g1 - h01 * g0) / (h00 * h11 - h01 * h01)
-    }
-    (a, b)
-  }
+  /** Oracle twins of the penalized fits over the shared rows CTE `d`,
+    * ending in pb3 (L2), qb3 (L1, λ = 100) and eb3 (elastic net). */
+  private lazy val sqlIrlsL2Chain: String = Twin.sqlFit(l2Fit, "d", "pb")
+  private lazy val sqlIrlsL1Chain: String = Twin.sqlFit(l1Fit(100.0), "d", "qb")
+  private lazy val sqlIrlsENChain: String = Twin.sqlFit(enFit, "d", "eb")
 
   /** Multi-feature IRLS (r6 second half — completes the solver matrix's
     * last cell: logreg at 3 features + intercept). Per step: ONE pass of
-    * 14 exact-decimal weighted sums (gradient 4 + Hessian 10 over the
-    * REAL-collapsed sigmoid), then the 4×4 Newton solve runs through the
-    * SAME gaussSteps text as ml_linreg_multi — as a selectExpr cascade
-    * here, as a CTE chain in the oracle — so the step's δ is bit-identical
-    * cross-engine; β accumulates on the driver (cuML's client-held coef_),
-    * re-entering each step as a broadcast one-row table (codegen-stable,
-    * as irlsBeta). */
+    * 14 weighted sums (gradient 4 + Hessian 10 over the REAL-collapsed
+    * sigmoid), named straight into the [[gauss4]] slots (H → a..,
+    * gradient → b..), then the 4×4 Newton solve — so the step's δ is
+    * bit-identical cross-engine; β accumulates on the driver (cuML's
+    * client-held coef_). The sums ride the 12-dp split wire, NOT xsum:
+    * DuckDB's decimal→double cast is off by ulps, and this solve
+    * amplifies input ulps ~1e8× through the ill-conditioned Hessian.
+    * r11: its long-lane form — the addends are bounded (w ≤ ¼, q ≤ 50,
+    * d/t ≤ 0.11), well inside the lane contract. */
+  private lazy val irlsMultiFit: Twin.Fit = Twin.Fit(
+    Seq("e0" -> 0.0, "e1" -> 0.0, "e2" -> 0.0, "e3" -> 0.0),
+    Seq("mu" -> sigmoidR("e0 + e1 * q + e2 * dd + e3 * tt"),
+      "r" -> "y - mu", "w" -> "mu * (1e0 - mu)"),
+    Seq("a00" -> "w", "a01" -> "w * q", "a02" -> "w * dd", "a03" -> "w * tt",
+      "a11" -> "w * q * q", "a12" -> "w * q * dd", "a13" -> "w * q * tt",
+      "a22" -> "w * dd * dd", "a23" -> "w * dd * tt", "a33" -> "w * tt * tt",
+      "b0" -> "r", "b1" -> "r * q", "b2" -> "r * dd", "b3" -> "r * tt")
+      .map { case (nm, ex) => Twin.e12l(nm, ex) },
+    gauss4, Seq("e0 + x0", "e1 + x1", "e2 + x2", "e3 + x3"), 3)
+
   private def irlsMultiBeta(s: SparkSession, dir: String): Array[Double] =
-    T.fitCache("irlsMultiBeta", dir) { irlsMultiBetaCompute(s, dir) }
+    T.fitCache("irlsMultiBeta", dir) {
+      // persist the projected corpus across the 3 IRLS passes (the
+      // ml_kmeans_converge discipline, r11): without it every round re-runs
+      // the scan + fanOut shuffle — measured 10.6 → ~6 s at sf0.1. The
+      // 4-column double frame is the smallest possible cache footprint;
+      // unpersisted before return so no blocks outlive the fit.
+      val d = T.lineitem(s, dir).select(
+        col("l_quantity").cast("double").as("q"),
+        col("l_discount").cast("double").as("dd"),
+        col("l_tax").cast("double").as("tt"),
+        when(col("l_returnflag") === "R", 1.0).otherwise(0.0).as("y"))
+        .transform(T.fanOut(_))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try Twin.fit(d, irlsMultiFit).last
+      finally d.unpersist(blocking = false)
+    }
 
-  private def irlsMultiBetaCompute(s: SparkSession, dir: String): Array[Double] = {
-    val spark = s
-    import spark.implicits._
-    // persist the projected corpus across the 3 IRLS passes (the
-    // ml_kmeans_converge discipline, r11): without it every round re-runs
-    // the scan + fanOut shuffle — measured 10.6 → ~6 s at sf0.1. The
-    // 4-column double frame is the smallest possible cache footprint;
-    // unpersisted before return so no blocks outlive the fit.
-    val d = T.lineitem(s, dir).select(
-      col("l_quantity").cast("double").as("q"),
-      col("l_discount").cast("double").as("dd"),
-      col("l_tax").cast("double").as("tt"),
-      when(col("l_returnflag") === "R", 1.0).otherwise(0.0).as("y"))
-      .transform(T.fanOut(_))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-    var e = Array(0.0, 0.0, 0.0, 0.0)
-    for (_ <- 1 to 3) {
-      val bt = Seq((e(0), e(1), e(2), e(3))).toDF("e0", "e1", "e2", "e3")
-      val mu = (lit(1.0) / (lit(1.0) + exp(-(col("e0") + col("e1") * col("q")
-        + col("e2") * col("dd") + col("e3") * col("tt"))))).cast("float")
-      val rw = d.crossJoin(broadcast(bt))
-        .select(col("q"), col("dd"), col("tt"), col("y"), mu.as("mu"))
-        .select(col("q"), col("dd"), col("tt"),
-          (col("y") - col("mu")).as("r"),
-          (col("mu") * (lit(1.0) - col("mu"))).as("w"))
-      // named straight into the gaussBase slots: H → a.., gradient → b..
-      // The 12-dp split wire (NOT xsum): DuckDB's decimal→double cast is
-      // off by ulps, and this solve amplifies input ulps ~1e8× through
-      // the ill-conditioned Hessian — the split wire is bit-identical.
-      // r11: sumE12L (long lanes) — the addends are bounded (w ≤ ¼,
-      // q ≤ 50, d/t ≤ 0.11), well inside the lane contract.
-      val slots = Seq(
-        "a00" -> col("w"), "a01" -> col("w") * col("q"),
-        "a02" -> col("w") * col("dd"), "a03" -> col("w") * col("tt"),
-        "a11" -> col("w") * col("q") * col("q"), "a12" -> col("w") * col("q") * col("dd"),
-        "a13" -> col("w") * col("q") * col("tt"), "a22" -> col("w") * col("dd") * col("dd"),
-        "a23" -> col("w") * col("dd") * col("tt"), "a33" -> col("w") * col("tt") * col("tt"),
-        "b0" -> col("r"), "b1" -> col("r") * col("q"),
-        "b2" -> col("r") * col("dd"), "b3" -> col("r") * col("tt"))
-      val aggs = slots.map { case (nm, c) => T.sumE12L(c).as(s"s_$nm") }
-      val sums = rw.agg(aggs.head, aggs.tail: _*)
-        .selectExpr(slots.map { case (nm, _) => s"${T.bitsE12(s"s_$nm")} AS $nm" }: _*)
-      val x = stepChain(sums, gaussSteps).selectExpr("x0", "x1", "x2", "x3").collect()(0)
-      e = Array(e(0) + x.getDouble(0), e(1) + x.getDouble(1),
-        e(2) + x.getDouble(2), e(3) + x.getDouble(3))
-    }
-    e
-    } finally d.unpersist(blocking = false)
-  }
-
-  /** Oracle twin of [[irlsMultiBeta]]: 3 unrolled (sigmoid → 14 sums →
-    * gauss chain → β update) blocks, ending in `bet3(e0..e3)`. */
-  private lazy val sqlIrlsMultiChain: String = {
-    // same slot expressions as irlsMultiBeta, on the same sumE12/bitsE12
-    // split wire (w, r spelled out: the oracle's i$k rows carry mu, not w/r)
-    val slots = Seq(
-      "a00" -> "mu * (1.0 - mu)", "a01" -> "mu * (1.0 - mu) * q",
-      "a02" -> "mu * (1.0 - mu) * dd", "a03" -> "mu * (1.0 - mu) * tt",
-      "a11" -> "mu * (1.0 - mu) * q * q", "a12" -> "mu * (1.0 - mu) * q * dd",
-      "a13" -> "mu * (1.0 - mu) * q * tt", "a22" -> "mu * (1.0 - mu) * dd * dd",
-      "a23" -> "mu * (1.0 - mu) * dd * tt", "a33" -> "mu * (1.0 - mu) * tt * tt",
-      "b0" -> "y - mu", "b1" -> "(y - mu) * q",
-      "b2" -> "(y - mu) * dd", "b3" -> "(y - mu) * tt")
-    def mStep(src: String) =
-      s"""SELECT ${slots.map { case (nm, e) => s"${T.sqlSumE12L(e)} AS s_$nm" }.mkString(",\n            ")}
-          FROM $src"""
-    def gaussCtes(k: Int): (String, String) = {
-      val base = s"s${k}_0 AS (SELECT ${slots.map { case (nm, _) =>
-        s"${T.sqlBitsE12(s"s_$nm")} AS $nm" }.mkString(", ")} FROM ms$k)"
-      val ctes = gaussSteps.zipWithIndex.map { case ((nm, ex), i) =>
-        s"s${k}_${i + 1} AS (SELECT *, $ex AS $nm FROM s${k}_$i)"
-      }
-      ((base +: ctes).mkString(",\n         "), s"s${k}_${gaussSteps.size}")
-    }
-    val blocks = (1 to 3).map { k =>
-      val (chain, fin) = gaussCtes(k)
-      s"""i$k AS (SELECT q, dd, tt, y,
-             -- REAL collapse absorbs cross-engine exp() ulp, immediate
-             -- DOUBLE re-widen (the ml_logreg_predict pattern) keeps the
-             -- downstream sums in double: bare REAL would drag DuckDB's
-             -- whole addend chain into FLOAT arithmetic (Spark promotes
-             -- float to double instead — measured: a00 off by 1024)
-             CAST(CAST(1.0 / (1.0 + exp(-(e0 + e1 * q + e2 * dd + e3 * tt))) AS REAL) AS DOUBLE) AS mu
-           FROM d, bet${k - 1}),
-         ms$k AS (${mStep(s"i$k")}),
-         $chain,
-         bet$k AS (SELECT e0 + x0 AS e0, e1 + x1 AS e1, e2 + x2 AS e2, e3 + x3 AS e3
-                   FROM bet${k - 1}, $fin)"""
-    }
+  /** Oracle twin of [[irlsMultiBeta]] with its rows CTE `d`, ending in
+    * `bet3(e0..e3)`. */
+  private lazy val sqlIrlsMultiChain: String =
     s"""d AS (SELECT CAST(l_quantity AS DOUBLE) AS q,
            CAST(l_discount AS DOUBLE) AS dd,
            CAST(l_tax AS DOUBLE) AS tt,
            CASE WHEN l_returnflag = 'R' THEN 1.0 ELSE 0.0 END AS y
          FROM lineitem),
-         bet0 AS (SELECT 0.0 AS e0, 0.0 AS e1, 0.0 AS e2, 0.0 AS e3),
-         ${blocks.mkString(",\n         ")}"""
-  }
+  ${Twin.sqlFit(irlsMultiFit, "d", "bet")}"""
 
-  /** The matching DuckDB CTE chain through `b3(a, b)` — shared by the fit
-    * oracle and the predict oracle so both verify against the same
-    * unrolled 3-step IRLS. */
+  /** The log-link GLM rows shared by ml_poisson_glm and ml_tweedie_glm:
+    * x = discount, y = quantity (a count), from the pinned fit frame. */
+  private[ops] def glmRows(s: SparkSession, dir: String): DataFrame =
+    T.lineitemFit(s, dir).select(
+      col("l_discount").cast("double").as("x"),
+      col("l_quantity").cast("double").as("y"))
+
+  private[ops] lazy val sqlGlmRows =
+    """prows AS (SELECT CAST(l_discount AS DOUBLE) AS x,
+                   CAST(l_quantity AS DOUBLE) AS y FROM lineitem)"""
+
+  /** A log-link GLM's driver-held Newton/Fisher fit of (a, b) from (0, 0)
+    * over the [[glmRows]]: μ = exp(η) REAL-collapsed per row (exp() is the
+    * one non-IEEE-pinned op), `sums` the named gradient/Hessian texts
+    * g0, g1, h00, h01, h11 over (x, y, mu) on the exact decimal wire, then
+    * the 2×2 Cramer step. */
+  private[ops] def logLinkFit(sums: (String, String)*): Twin.Fit = Twin.Fit(
+    Seq("a" -> 0.0, "b" -> 0.0),
+    Seq("mu" -> "CAST(CAST(exp(a + b * x) AS FLOAT) AS DOUBLE)"),
+    sums.map { case (nm, ex) => Twin.xsum(nm, ex) },
+    Twin.newton2("h00", "h01", "h11", "g0", "g1"), Seq("a + d0", "b + d1"), 3)
+
+  private lazy val poissonFit: Twin.Fit = logLinkFit(
+    "g0" -> "y - mu", "g1" -> "(y - mu) * x",
+    "h00" -> "mu", "h01" -> "mu * x", "h11" -> "mu * x * x")
+
   /** ml_mcfadden_r2's collapsed base-rate logs (DuckDB's FLOAT is an
     * alias of REAL, so one text serves both engines). */
   private lazy val lnR_p0 = "CAST(CAST(ln(p0) AS FLOAT) AS DOUBLE)"
   private lazy val lnR_1mp0 = "CAST(CAST(ln(1e0 - p0) AS FLOAT) AS DOUBLE)"
 
-  private lazy val sqlIrlsChain: String = {
-    def mStep(src: String) =
-      s"""SELECT ${T.sqlXsum("y - mu")} AS g0,
-            ${T.sqlXsum("(y - mu) * x")} AS g1,
-            ${T.sqlXsum("mu * (1.0 - mu)")} AS h00,
-            ${T.sqlXsum("mu * (1.0 - mu) * x")} AS h01,
-            ${T.sqlXsum("mu * (1.0 - mu) * x * x")} AS h11
-          FROM $src"""
-    def beta(m: String, prevA: String, prevB: String) =
-      s"""SELECT $prevA + (h11 * g0 - h01 * g1) / (h00 * h11 - h01 * h01) AS a,
-            $prevB + (h00 * g1 - h01 * g0) / (h00 * h11 - h01 * h01) AS b
-          FROM $m"""
-    // REAL collapse → immediate DOUBLE re-widen (r6 second half): a bare
-    // REAL mu dragged DuckDB's weight sums into FLOAT arithmetic while
-    // Spark promoted to double (the ml_logreg_multi find). The 1-feature
-    // chain survived the mismatch under round(…,6) for four rounds;
-    // widened now so both engines sum identical doubles.
-    s"""d AS (SELECT CAST(l_quantity AS DOUBLE) AS x,
-           CASE WHEN l_returnflag = 'R' THEN 1.0 ELSE 0.0 END AS y
-         FROM lineitem),
-         i1 AS (SELECT x, y, CAST(CAST(1.0 / (1.0 + exp(-(0.0 + 0.0 * x))) AS REAL) AS DOUBLE) AS mu FROM d),
-         m1 AS (${mStep("i1")}),
-         b1 AS (${beta("m1", "0.0", "0.0")}),
-         i2 AS (SELECT x, y, CAST(CAST(1.0 / (1.0 + exp(-(a + b * x))) AS REAL) AS DOUBLE) AS mu FROM d, b1),
-         m2 AS (${mStep("i2")}),
-         b2 AS (${beta("m2, b1", "b1.a", "b1.b")}),
-         i3 AS (SELECT x, y, CAST(CAST(1.0 / (1.0 + exp(-(a + b * x))) AS REAL) AS DOUBLE) AS mu FROM d, b2),
-         m3 AS (${mStep("i3")}),
-         b3 AS (${beta("m3, b2", "b2.a", "b2.b")})"""
-  }
-
   /** The oracle-side twin of gram64 + powerEig64, shared by ALL four PCA
     * oracles (power / deflate / variance / transform) so the 20-step
     * iterate and its fold order are written exactly once — the same
-    * shared-text discipline as sqlGaussChain/sqlIrlsChain. Chain:
+    * shared-text discipline as [[Twin]]. Chain:
     * e(vec_id, emb) → gram → gmat(G) → it/fin/nrm/unit(u) → ray(lam). */
   private val sqlPcaPowerCtes: String =
     """e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
@@ -1562,7 +1260,7 @@ object ML {
       // solve is a pure scalar expression cascade over the one moment row —
       // generated ONCE as text and fed verbatim to both Spark (selectExpr
       // chain) and DuckDB (CTE chain), so both engines execute the same
-      // IEEE double sequence (see gaussSteps). Cluster work stays ONE
+      // IEEE double sequence (see Twin.gauss). Cluster work stays ONE
       // aggregation; the solve is O(k³) on 14 scalars — cuML's client-held
       // coef_ shape without even a collect.
       (s, dir) => gaussSolved(s, dir).select(
@@ -2424,7 +2122,7 @@ object ML {
       // built on m=3 LANDMARK vectors (vec_id < 3, the model side — m is a
       // design constant, never corpus-sized), dual coefficients α =
       // (K + λI)⁻¹y solved by the same unrolled shared-text elimination as
-      // the ridge/CD family (symGauss3), and prediction is ONE broadcast
+      // the ridge/CD family (Twin.gauss), and prediction is ONE broadcast
       // pass: ŷ(x) = Σ_j α_j·k(x, x_j) over the m landmarks. Cross-engine:
       // every kernel entry is REAL-collapsed exp(−d²) (the k_rbf
       // discipline) BEFORE entering the elimination, so both engines run
@@ -2449,12 +2147,7 @@ object ML {
           max(when(col("vec_id") === 0, col("label"))).cast("double").as("y0"),
           max(when(col("vec_id") === 1, col("label"))).cast("double").as("y1"),
           max(when(col("vec_id") === 2, col("label"))).cast("double").as("y2"))
-        val steps = symGauss3(
-          Array(Array("1.1", "k01", "k02"),
-                Array("k01", "1.1", "k12"),
-                Array("k02", "k12", "1.1")),
-          Array("y0", "y1", "y2"), "kr")
-        val solved = stepChain(kv.crossJoin(yv), steps)
+        val solved = Twin.chain(kv.crossJoin(yv), kernelRidgeSteps)
           .select(col("krx0"), col("krx1"), col("krx2"))
         val qv = e.where(col("vec_id") >= 3 && col("vec_id") < 13)
           .select(col("vec_id"), col("label"), col("embedding").as("q_emb"))
@@ -2474,11 +2167,7 @@ object ML {
           .orderBy("vec_id")
       },
       Some {
-        val (chain, fin) = sqlChainFrom(symGauss3(
-          Array(Array("1.1", "k01", "k02"),
-                Array("k01", "1.1", "k12"),
-                Array("k02", "k12", "1.1")),
-          Array("y0", "y1", "y2"), "kr"), "krc")
+        val (chain, fin) = Twin.ctes(kernelRidgeSteps, "m", "krc")
         val krbf = "CAST(CAST(exp(-(kd * kd)) AS REAL) AS DOUBLE)"
         s"""WITH kp AS (SELECT ia, ib, $krbf AS k FROM (
                  SELECT a.vec_id AS ia, b.vec_id AS ib,
@@ -2526,7 +2215,7 @@ object ML {
       // ONE moment pass (the memoized gram4 wire); everything after is a
       // single-row scalar cascade.
       (s, dir) => {
-        val solved = stepChain(gram4Row(s, dir), centeredBase ++ larsSteps)
+        val solved = Twin.chain(gram4Row(s, dir), centeredBase ++ larsSteps)
         val r1 = solved.selectExpr("1 AS step", "fn1 AS feature",
           "round(bc1, 6) AS c_entry", "round(gam1, 6) AS gamma")
         val r2 = solved.selectExpr("2 AS step", "fn2 AS feature",
@@ -2536,7 +2225,7 @@ object ML {
         r1.union(r2).union(r3).orderBy("step")
       },
       Some {
-        val (chain, fin) = sqlChainFrom(centeredBase ++ larsSteps, "lrc")
+        val (chain, fin) = Twin.ctes(centeredBase ++ larsSteps, "m", "lrc")
         s"""WITH m AS ($sqlGram4),
                $chain
              SELECT * FROM (
@@ -3215,61 +2904,22 @@ object ML {
       // y = l_quantity (a count), x = l_discount. 3 Newton/IRLS steps —
       // per step ONE distributed aggregation (gradient g = Σ(y−μ)·(1,x),
       // Hessian H = Σμ·(1,x)(1,x)ᵀ on the exact decimal wire), the 2×2
-      // solve driver-side with coefficients re-literalized (the
-      // ml_logreg_fit discipline). μ = exp(η) is REAL-collapsed per row —
+      // solve on the client ([[logLinkFit]], the ml_logreg_fit
+      // discipline). μ = exp(η) is REAL-collapsed per row —
       // exp() is the one non-IEEE-pinned op, and the float cast absorbs
       // the engine ulp exactly as the sigmoid rows do. Output: the fitted
       // coefficients and the implied mean at x = 0.
       (s, dir) => {
         val spark = s
         import spark.implicits._
-        val d = T.lineitemFit(s, dir).select(
-          col("l_discount").cast("double").as("x"),
-          col("l_quantity").cast("double").as("y"))
-        var a = 0.0
-        var b = 0.0
-        for (_ <- 1 to 3) {
-          val ab = Seq((a, b)).toDF("ca", "cb")
-          val mu = exp(col("ca") + col("cb") * col("x"))
-            .cast("float").cast("double")
-          val r = d.crossJoin(broadcast(ab))
-            .select(col("x"), col("y"), mu.as("mu"))
-            .agg(
-              T.xsum(col("y") - col("mu")).as("g0"),
-              T.xsum((col("y") - col("mu")) * col("x")).as("g1"),
-              T.xsum(col("mu")).as("h00"),
-              T.xsum(col("mu") * col("x")).as("h01"),
-              T.xsum(col("mu") * col("x") * col("x")).as("h11"))
-            .collect()(0)
-          val g0 = r.getDouble(0); val g1 = r.getDouble(1)
-          val h00 = r.getDouble(2); val h01 = r.getDouble(3); val h11 = r.getDouble(4)
-          val den = h00 * h11 - h01 * h01
-          a = a + (h11 * g0 - h01 * g1) / den
-          b = b + (h00 * g1 - h01 * g0) / den
-        }
+        val Array(a, b) = Twin.fit(glmRows(s, dir), poissonFit).last
         Seq((a, b)).toDF("ia", "ib")
           .selectExpr("round(ia, 6) AS intercept", "round(ib, 6) AS slope",
             "round(CAST(CAST(exp(ia) AS REAL) AS DOUBLE), 6) AS mu_at_zero")
       },
       Some {
-        def step(src: String, out: String): String =
-          s"""${out}e AS (SELECT x, y,
-                 CAST(CAST(exp(a + b * x) AS REAL) AS DOUBLE) AS mu
-               FROM prows, $src),
-                 ${out}m AS (SELECT ${T.sqlXsum("y - mu")} AS g0,
-                     ${T.sqlXsum("(y - mu) * x")} AS g1,
-                     ${T.sqlXsum("mu")} AS h00, ${T.sqlXsum("mu * x")} AS h01,
-                     ${T.sqlXsum("mu * x * x")} AS h11 FROM ${out}e),
-                 $out AS (SELECT
-                     a + (h11 * g0 - h01 * g1) / (h00 * h11 - h01 * h01) AS a,
-                     b + (h00 * g1 - h01 * g0) / (h00 * h11 - h01 * h01) AS b
-                   FROM $src, ${out}m)"""
-        s"""WITH prows AS (SELECT CAST(l_discount AS DOUBLE) AS x,
-                   CAST(l_quantity AS DOUBLE) AS y FROM lineitem),
-                 pg0 AS (SELECT 0e0 AS a, 0e0 AS b),
-                 ${step("pg0", "pg1")},
-                 ${step("pg1", "pg2")},
-                 ${step("pg2", "pg3")}
+        s"""WITH $sqlGlmRows,
+                 ${Twin.sqlFit(poissonFit, "prows", "pg")}
                SELECT round(a, 6) AS intercept, round(b, 6) AS slope,
                  round(CAST(CAST(exp(a) AS REAL) AS DOUBLE), 6) AS mu_at_zero
                FROM pg3"""
@@ -3896,27 +3546,7 @@ object ML {
             "round(t1 / n - t0 / n, 6) AS ate_aipw")
       },
       Some {
-        def mStep(src: String) =
-          s"""SELECT ${T.sqlXsum("y - mu")} AS g0,
-                ${T.sqlXsum("(y - mu) * x")} AS g1,
-                ${T.sqlXsum("mu * (1.0 - mu)")} AS h00,
-                ${T.sqlXsum("mu * (1.0 - mu) * x")} AS h01,
-                ${T.sqlXsum("mu * (1.0 - mu) * x * x")} AS h11
-              FROM $src"""
-        def beta(m: String, prevA: String, prevB: String) =
-          s"""SELECT $prevA + (h11 * g0 - h01 * g1) / (h00 * h11 - h01 * h01) AS a,
-                $prevB + (h00 * g1 - h01 * g0) / (h00 * h11 - h01 * h01) AS b
-              FROM $m"""
-        s"""WITH d AS (SELECT CAST(l_quantity AS DOUBLE) AS x,
-                   CASE WHEN l_discount > 0.05 THEN 1.0 ELSE 0.0 END AS y,
-                   CAST(l_extendedprice AS DOUBLE) AS yv
-                 FROM lineitem),
-                 i1 AS (SELECT x, y, yv, CAST(CAST(1.0 / (1.0 + exp(-(0.0 + 0.0 * x))) AS REAL) AS DOUBLE) AS mu FROM d),
-                 m1s AS (${mStep("i1")}),
-                 b1 AS (${beta("m1s", "0.0", "0.0")}),
-                 i2 AS (SELECT x, y, yv, CAST(CAST(1.0 / (1.0 + exp(-(a + b * x))) AS REAL) AS DOUBLE) AS mu FROM d, b1),
-                 m2s AS (${mStep("i2")}),
-                 b2 AS (${beta("m2s, b1", "b1.a", "b1.b")}),
+        s"""WITH $sqlPropensityChain,
                  om AS (SELECT y AS tr,
                      (nn * sxy - sx * sy) / (nn * sxx - sx * sx) AS slope,
                      (sy - (nn * sxy - sx * sy) / (nn * sxx - sx * sx) * sx) / nn AS icept
@@ -3977,27 +3607,7 @@ object ML {
             "round(sn1 / n1 - sn0 / n0, 6) AS ate_naive")
       },
       Some {
-        def mStep(src: String) =
-          s"""SELECT ${T.sqlXsum("y - mu")} AS g0,
-                ${T.sqlXsum("(y - mu) * x")} AS g1,
-                ${T.sqlXsum("mu * (1.0 - mu)")} AS h00,
-                ${T.sqlXsum("mu * (1.0 - mu) * x")} AS h01,
-                ${T.sqlXsum("mu * (1.0 - mu) * x * x")} AS h11
-              FROM $src"""
-        def beta(m: String, prevA: String, prevB: String) =
-          s"""SELECT $prevA + (h11 * g0 - h01 * g1) / (h00 * h11 - h01 * h01) AS a,
-                $prevB + (h00 * g1 - h01 * g0) / (h00 * h11 - h01 * h01) AS b
-              FROM $m"""
-        s"""WITH d AS (SELECT CAST(l_quantity AS DOUBLE) AS x,
-                   CASE WHEN l_discount > 0.05 THEN 1.0 ELSE 0.0 END AS y,
-                   CAST(l_extendedprice AS DOUBLE) AS yv
-                 FROM lineitem),
-                 i1 AS (SELECT x, y, yv, CAST(CAST(1.0 / (1.0 + exp(-(0.0 + 0.0 * x))) AS REAL) AS DOUBLE) AS mu FROM d),
-                 m1 AS (${mStep("i1")}),
-                 b1 AS (${beta("m1", "0.0", "0.0")}),
-                 i2 AS (SELECT x, y, yv, CAST(CAST(1.0 / (1.0 + exp(-(a + b * x))) AS REAL) AS DOUBLE) AS mu FROM d, b1),
-                 m2 AS (${mStep("i2")}),
-                 b2 AS (${beta("m2, b1", "b1.a", "b1.b")}),
+        s"""WITH $sqlPropensityChain,
                  sc AS (SELECT y AS tr, yv,
                      greatest(1e-2, least(99e-2, CAST(CAST(1.0 / (1.0 + exp(-(a + b * x))) AS REAL) AS DOUBLE))) AS e
                    FROM d, b2),
@@ -4065,27 +3675,7 @@ object ML {
           .orderBy("stratum")
       },
       Some {
-        def mStep(src: String) =
-          s"""SELECT ${T.sqlXsum("y - mu")} AS g0,
-                ${T.sqlXsum("(y - mu) * x")} AS g1,
-                ${T.sqlXsum("mu * (1.0 - mu)")} AS h00,
-                ${T.sqlXsum("mu * (1.0 - mu) * x")} AS h01,
-                ${T.sqlXsum("mu * (1.0 - mu) * x * x")} AS h11
-              FROM $src"""
-        def beta(m: String, prevA: String, prevB: String) =
-          s"""SELECT $prevA + (h11 * g0 - h01 * g1) / (h00 * h11 - h01 * h01) AS a,
-                $prevB + (h00 * g1 - h01 * g0) / (h00 * h11 - h01 * h01) AS b
-              FROM $m"""
-        s"""WITH d AS (SELECT CAST(l_quantity AS DOUBLE) AS x,
-                   CASE WHEN l_discount > 0.05 THEN 1.0 ELSE 0.0 END AS y,
-                   CAST(l_extendedprice AS DOUBLE) AS yv
-                 FROM lineitem),
-                 i1 AS (SELECT x, y, yv, CAST(CAST(1.0 / (1.0 + exp(-(0.0 + 0.0 * x))) AS REAL) AS DOUBLE) AS mu FROM d),
-                 m1 AS (${mStep("i1")}),
-                 b1 AS (${beta("m1", "0.0", "0.0")}),
-                 i2 AS (SELECT x, y, yv, CAST(CAST(1.0 / (1.0 + exp(-(a + b * x))) AS REAL) AS DOUBLE) AS mu FROM d, b1),
-                 m2 AS (${mStep("i2")}),
-                 b2 AS (${beta("m2, b1", "b1.a", "b1.b")}),
+        s"""WITH $sqlPropensityChain,
                  sc0 AS (SELECT y AS tr, yv,
                      greatest(1e-2, least(99e-2,
                        CAST(CAST(1.0 / (1.0 + exp(-(a + b * x))) AS REAL) AS DOUBLE))) AS e
@@ -4560,7 +4150,7 @@ object ML {
           sum(col("s1d")).as("s1d"), sum(col("s2d")).as("s2d"),
           sum(col("s11d")).as("s11d"), sum(col("s12d")).as("s12d"),
           sum(col("s22d")).as("s22d"))
-        val mergedRow = stepChain(merged0, eigSteps)
+        val mergedRow = Twin.chain(merged0, eigSteps)
           .select(lit(-1).as("shard"), col("n"),
             round(col("s1d").cast("double"), 6).as("s1"),
             round(col("s2d").cast("double"), 6).as("s2"),
@@ -5023,15 +4613,15 @@ object ML {
       // the centered 3×3 system (C + αI)·b = c_y solved by the unrolled
       // symbolic elimination — cluster work stays ONE aggregation, the
       // solve is a scalar expression cascade whose text feeds both engines
-      // verbatim (the gaussSteps discipline). α = 1000 matches
+      // verbatim (the Twin.gauss discipline). α = 1000 matches
       // ml_ridge_fit's 1-feature closed form, which this generalizes.
-      (s, dir) => stepChain(gram4Row(s, dir), ridgeSteps).select(
+      (s, dir) => Twin.chain(gram4Row(s, dir), ridgeSteps).select(
         round(col("rgb0"), 6).as("intercept"),
         round(col("rgx0"), 6).as("b_quantity"),
         round(col("rgx1"), 6).as("b_discount"),
         round(col("rgx2"), 6).as("b_tax")),
       Some {
-        val (ctes, fin) = sqlChainFrom(ridgeSteps, "r")
+        val (ctes, fin) = Twin.ctes(ridgeSteps, "m", "r")
         s"""WITH m AS ($sqlGram4),
                 $ctes
               SELECT round(rgb0, 6) AS intercept, round(rgx0, 6) AS b_quantity,
@@ -5047,13 +4637,13 @@ object ML {
       // (see cdSteps) — pure scalar arithmetic on the one moment row, no
       // extra cluster pass, shared text in both engines. λ = 1000 as
       // ml_lasso_fit (which is the 1-feature fixed point of this loop).
-      (s, dir) => stepChain(gram4Row(s, dir), lassoMultiSteps).select(
+      (s, dir) => Twin.chain(gram4Row(s, dir), lassoMultiSteps).select(
         round(col("lsbint"), 6).as("intercept"),
         round(col("lsb3_0"), 6).as("b_quantity"),
         round(col("lsb3_1"), 6).as("b_discount"),
         round(col("lsb3_2"), 6).as("b_tax")),
       Some {
-        val (ctes, fin) = sqlChainFrom(lassoMultiSteps, "l")
+        val (ctes, fin) = Twin.ctes(lassoMultiSteps, "m", "l")
         s"""WITH m AS ($sqlGram4),
                 $ctes
               SELECT round(lsbint, 6) AS intercept, round(lsb3_0, 6) AS b_quantity,
@@ -5068,13 +4658,13 @@ object ML {
       // ml_elasticnet_fit's 1-feature closed form). Completes the
       // reference's solver matrix: eig (ridge/OLS) and cd (lasso/enet),
       // both 1- and multi-feature.
-      (s, dir) => stepChain(gram4Row(s, dir), enetMultiSteps).select(
+      (s, dir) => Twin.chain(gram4Row(s, dir), enetMultiSteps).select(
         round(col("enbint"), 6).as("intercept"),
         round(col("enb3_0"), 6).as("b_quantity"),
         round(col("enb3_1"), 6).as("b_discount"),
         round(col("enb3_2"), 6).as("b_tax")),
       Some {
-        val (ctes, fin) = sqlChainFrom(enetMultiSteps, "w")
+        val (ctes, fin) = Twin.ctes(enetMultiSteps, "m", "w")
         s"""WITH m AS ($sqlGram4),
                 $ctes
               SELECT round(enbint, 6) AS intercept, round(enb3_0, 6) AS b_quantity,
@@ -5130,7 +4720,7 @@ object ML {
             (0 to 2).map(i => s"${T.bitsE12(s"s_s$i")} AS s$i") ++
             (0 to 2).map(i => s"${T.bitsE12(s"s_x${i}y")} AS x${i}y") ++
             Seq(s"${T.bitsE12("s_sy")} AS sy"): _*)
-        val coefs = stepChain(m, sparseRidgeSteps)
+        val coefs = Twin.chain(m, sparseRidgeSteps)
           .selectExpr("srx0 AS c0", "srx1 AS c1", "srx2 AS c2", "srb0 AS b0")
         val contrib = lf.crossJoin(broadcast(coefs))
           .selectExpr("doc_id",
@@ -5151,7 +4741,7 @@ object ML {
       },
       Some {
         val pairs = for (i <- 0 to 2; j <- i to 2) yield (i, j)
-        val (ctes, fin) = sqlChainFrom(sparseRidgeSteps, "spr")
+        val (ctes, fin) = Twin.ctes(sparseRidgeSteps, "m", "spr")
         s"""WITH tk AS (SELECT doc_id,
                   unnest(list_filter(string_split(text, ' '), t -> t <> '')) AS term
                 FROM documents),
@@ -5489,7 +5079,7 @@ object ML {
           T.xsum(col("l_quantity") * col("l_quantity")).as("sxx"),
           T.xsum(col("l_quantity") * col("l_extendedprice")).as("sxy"),
           T.xsum(col("l_extendedprice") * col("l_extendedprice")).as("syy"))
-        stepChain(m, sgdSteps).selectExpr(
+        Twin.chain(m, sgdSteps).selectExpr(
           """stack(3,
                1, round(a1, 6), round(b1, 6), round(l1, 2),
                2, round(a2, 6), round(b2, 6), round(l2, 2),
@@ -5498,7 +5088,7 @@ object ML {
           .orderBy("step")
       },
       Some {
-        val (ctes, fin) = sqlChainFrom(sgdSteps, "sg")
+        val (ctes, fin) = Twin.ctes(sgdSteps, "m", "sg")
         s"""WITH m AS (SELECT CAST(count(*) AS DOUBLE) AS n,
                 ${T.sqlXsum("l_quantity")} AS sx,
                 ${T.sqlXsum("l_extendedprice")} AS sy,
@@ -5550,7 +5140,7 @@ object ML {
             s"${T.bitsE12(s"sxx${b}r")} AS sxx$b",
             s"${T.bitsE12(s"sxy${b}r")} AS sxy$b")) :+
             s"${T.bitsE12("syyr")} AS syy"): _*)
-        stepChain(m, mbsgdSteps).selectExpr(
+        Twin.chain(m, mbsgdSteps).selectExpr(
           """stack(3,
                1, 0, round(w1, 6), round(c1, 6), round(cr1, 6), round(ir1, 6),
                2, 1, round(w2, 6), round(c2, 6), round(cr2, 6), round(ir2, 6),
@@ -5559,7 +5149,7 @@ object ML {
           .orderBy("step")
       },
       Some {
-        val (ctes, fin) = sqlChainFrom(mbsgdSteps, "mg")
+        val (ctes, fin) = Twin.ctes(mbsgdSteps, "m", "mg")
         val shard = (0 to 2).map(b =>
           s"""CAST(sum(CASE WHEN b = $b THEN 1 END) AS DOUBLE) AS n$b,
               ${T.sqlSumE12(s"CASE WHEN b = $b THEN x END")} AS sx${b}r,
@@ -5701,7 +5291,7 @@ object ML {
             "vsxx4 / 1e4 AS vsxx", "vsxy4 / 1e4 AS vsxy",
             "(CAST(vsyyc div 100000000 AS DOUBLE) * 1e8 + CAST(vsyyc % 100000000 AS DOUBLE)) / 1e4 AS vsyy")
         val alphas = Seq(1.0, 100.0, 10000.0).toDF("alpha")
-        val scored = stepChain(m.crossJoin(broadcast(alphas)), ridgeCvSteps)
+        val scored = Twin.chain(m.crossJoin(broadcast(alphas)), ridgeCvSteps)
         scored.select(col("alpha"),
           round(col("cvb"), 6).as("slope"), round(col("cva"), 6).as("intercept"),
           round(col("cvrt"), 6).as("rmse_train"), round(col("cvrv"), 6).as("rmse_valid"),
@@ -5709,7 +5299,7 @@ object ML {
           .orderBy("alpha")
       },
       Some {
-        val (ctes, fin) = sqlChainFrom(ridgeCvSteps, "cv")
+        val (ctes, fin) = Twin.ctes(ridgeCvSteps, "m", "cv")
         s"""WITH l AS (SELECT
                 (48271 * (l_orderkey * 8 + l_linenumber) + 16807)
                   % 2147483647 % 100 < 80 AS tr,
@@ -5804,9 +5394,8 @@ object ML {
       // hinge loss, and the support count (margin < 1). x = quantity/50,
       // y = ±1 on returnflag R. Determinism: the margin indicator compares
       // doubles both engines computed identically; every sum runs on the
-      // exact-decimal wire; the driver's update arithmetic is written in
-      // the same structure as the oracle's CTE text, so each step's (a, b)
-      // is bit-identical cross-engine.
+      // exact-decimal wire; the update is one Twin.Fit text both engines
+      // run, so each step's (a, b) is bit-identical cross-engine.
       (s, dir) => {
         val spark = s
         import spark.implicits._
@@ -5846,8 +5435,8 @@ object ML {
       // /50, y = extendedprice/50000 (both unit-ish; the fixed 0.1 step
       // converges). Determinism: sign() compares doubles both engines
       // computed from the same text; every sum runs on the exact-decimal
-      // wire; the driver update mirrors the oracle CTE structure, so
-      // each step's (a, b) is bit-identical cross-engine.
+      // wire; the update is one Twin.Fit text both engines run, so each
+      // step's (a, b) is bit-identical cross-engine.
       (s, dir) => {
         val spark = s
         import spark.implicits._
@@ -6046,7 +5635,7 @@ object ML {
       // can't be precollected — each step is one conditional-sum pass
       // over its batch (a third of the data; at scale the batch predicate
       // prunes on the partition key). (a, b) driver-held between steps
-      // (fitCached); the update text mirrors the oracle CTE chain, so
+      // (fitCached); the update is one Twin.Fit text both engines run, so
       // every step's coefficients are bit-identical cross-engine. Output:
       // the per-step coefficient trail + the final model's training
       // accuracy from one full scoring pass.
@@ -6401,58 +5990,36 @@ object ML {
       when(col("l_returnflag") === "R", 1.0).otherwise(-1.0).as("cy"))
       .transform(T.fanOut(_))
 
+  /** The hinge subgradient step shared by the linear SVM fits over rows
+    * (x, y = ±1): with margin m = y·(a + b·x), g0 = Σ_{m<1} y and
+    * g1 = Σ_{m<1} y·x on the exact wire, then a ← a + lr·(g0/n),
+    * b ← b + lr·(g1/n − λ·b) at lr = 0.1, λ = 0.01. */
+  private lazy val hingeRows: Twin.Steps = Seq("m" -> "y * (a + b * x)")
+  private lazy val hingeSums: Seq[Twin.Sum] = Seq(Twin.count("n"),
+    Twin.xsum("g0", "CASE WHEN m < 1 THEN y END"),
+    Twin.xsum("g1", "CASE WHEN m < 1 THEN y * x END"))
+  private lazy val sgdNext = Seq("a + 1e-1 * (g0 / n)", "b + 1e-1 * (g1 / n - 1e-2 * b)")
+
   /** Driver-held minibatch-hinge trail: (a, b) after each of 3 steps,
-    * step k reading only batch k−1 (lr = 0.1, λ = 0.01) — the svmAB loop
-    * with the batch filter. fitCached. */
+    * step k reading only batch k−1 — the svmAB fit with the batch filter,
+    * the step counter `k` riding as a parameter. fitCached. */
+  private lazy val mbsgdClsFit: Twin.Fit = Twin.Fit(
+    Seq("a" -> 0.0, "b" -> 0.0, "k" -> 0.0), hingeRows, hingeSums, Nil,
+    sgdNext :+ "k + 1e0", 3, where = Some("b3 = k"))
+
   private def mbsgdClsTrail(s: SparkSession, dir: String): Seq[(Double, Double)] =
     T.fitCache("mbsgdClsTrail", dir) {
-      val spark = s
-      import spark.implicits._
-      val d = svmRows2(s, dir)
-      var a = 0.0
-      var b = 0.0
-      val out = scala.collection.mutable.ArrayBuffer[(Double, Double)]()
-      for (k <- 1 to 3) {
-        val ab = Seq((a, b)).toDF("ca", "cb")
-        val m = col("cy") * (col("ca") + col("cb") * col("cx"))
-        val r = d.where(col("cb3") === (k - 1)).crossJoin(broadcast(ab))
-          .select(col("cx"), col("cy"), m.as("m"))
-          .agg(
-            count(lit(1)).cast("double").as("n"),
-            T.xsum(when(col("m") < 1, col("cy"))).as("g0"),
-            T.xsum(when(col("m") < 1, col("cy") * col("cx"))).as("g1"))
-          .collect()(0)
-        val n = r.getDouble(0); val g0 = r.getDouble(1); val g1 = r.getDouble(2)
-        a = a + 0.1 * (g0 / n)
-        b = b + 0.1 * (g1 / n - 0.01 * b)
-        out += ((a, b))
-      }
-      out.toSeq
+      Twin.fit(svmRows2(s, dir).toDF("b3", "x", "y"), mbsgdClsFit).map(ab)
     }
 
-  /** Oracle twin of [[mbsgdClsTrail]] — 3 unrolled (batch-filtered pass →
-    * update) blocks ending in c3(a, b), with the batched rows CTE `db`. */
-  private lazy val sqlMbsgdClsChain: String = {
-    def mStep(k: Int, src: String, a: String, b: String) =
-      s"""SELECT CAST(count(*) AS DOUBLE) AS n,
-            ${T.sqlXsum(s"CASE WHEN y * ($a + $b * x) < 1 THEN y END")} AS g0,
-            ${T.sqlXsum(s"CASE WHEN y * ($a + $b * x) < 1 THEN y * x END")} AS g1
-          FROM $src WHERE b3 = ${k - 1}"""
-    def beta(m: String, prevA: String, prevB: String) =
-      s"""SELECT $prevA + 1e-1 * (g0 / n) AS a,
-            $prevB + 1e-1 * (g1 / n - 1e-2 * $prevB) AS b
-          FROM $m"""
+  /** Oracle twin of [[mbsgdClsTrail]] with the batched rows CTE `db`,
+    * ending in c1..c3(a, b, k). */
+  private lazy val sqlMbsgdClsChain: String =
     s"""db AS (SELECT l_orderkey % 3 AS b3,
            CAST(l_quantity AS DOUBLE) / 50 AS x,
            CASE WHEN l_returnflag = 'R' THEN 1.0 ELSE -1.0 END AS y
          FROM lineitem),
-         n1 AS (${mStep(1, "db", "0e0", "0e0")}),
-         c1 AS (${beta("n1", "0e0", "0e0")}),
-         n2 AS (${mStep(2, "db, c1", "c1.a", "c1.b")}),
-         c2 AS (${beta("n2, c1", "c1.a", "c1.b")}),
-         n3 AS (${mStep(3, "db, c2", "c2.a", "c2.b")}),
-         c3 AS (${beta("n3, c2", "c2.a", "c2.b")})"""
-  }
+  ${Twin.sqlFit(mbsgdClsFit, "db", "c")}"""
 
   /** SVR feature frame: x = quantity/50, y = extendedprice/50000 — both
     * O(1) scale so the shared fixed step size is stable. */
@@ -6463,55 +6030,24 @@ object ML {
       .transform(T.fanOut(_))
 
   /** 3 driver-held ε-insensitive subgradient steps (lr = 0.1, λ = 0.01,
-    * ε = 0.1), fitCached. Update text mirrors sqlSvrChain exactly:
-    *   a ← a + lr·(g0/n), b ← b + lr·(g1/n − λ·b),
-    * g0 = Σ_{|r|>ε} sign(r), g1 = Σ_{|r|>ε} sign(r)·x on the exact wire. */
-  private def svrAB(s: SparkSession, dir: String): (Double, Double) =
-    T.fitCache("svrAB", dir) {
-      val spark = s
-      import spark.implicits._
-      val d = svrRows(s, dir)
-      var a = 0.0
-      var b = 0.0
-      for (_ <- 1 to 3) {
-        val ab = Seq((a, b)).toDF("ca", "cb")
-        val r = col("cy") - (col("ca") + col("cb") * col("cx"))
-        val row = d.crossJoin(broadcast(ab))
-          .select(col("cx"), r.as("r"))
-          .agg(
-            count(lit(1)).cast("double").as("n"),
-            T.xsum(when(abs(col("r")) > 0.1, signum(col("r")))).as("g0"),
-            T.xsum(when(abs(col("r")) > 0.1, signum(col("r")) * col("cx"))).as("g1"))
-          .collect()(0)
-        val n = row.getDouble(0); val g0 = row.getDouble(1); val g1 = row.getDouble(2)
-        a = a + 0.1 * (g0 / n)
-        b = b + 0.1 * (g1 / n - 0.01 * b)
-      }
-      (a, b)
-    }
+    * ε = 0.1), fitCached: the hinge update with g0 = Σ_{|r|>ε} sign(r),
+    * g1 = Σ_{|r|>ε} sign(r)·x for the residual r = y − (a + b·x). */
+  private lazy val svrFit: Twin.Fit = Twin.Fit(
+    Seq("a" -> 0.0, "b" -> 0.0), Seq("r" -> "y - (a + b * x)"),
+    Seq(Twin.count("n"),
+      Twin.xsum("g0", "CASE WHEN abs(r) > 1e-1 THEN sign(r) END"),
+      Twin.xsum("g1", "CASE WHEN abs(r) > 1e-1 THEN sign(r) * x END")),
+    Nil, sgdNext, 3)
 
-  /** Oracle twin of [[svrAB]] — 3 unrolled blocks ending in b3(a, b),
-    * the sqlSvmChain structure with the ε-tube conditionals. */
-  private lazy val sqlSvrChain: String = {
-    def mStep(src: String, a: String, b: String) =
-      s"""SELECT CAST(count(*) AS DOUBLE) AS n,
-            ${T.sqlXsum(s"CASE WHEN abs(y - ($a + $b * x)) > 1e-1 THEN sign(y - ($a + $b * x)) END")} AS g0,
-            ${T.sqlXsum(s"CASE WHEN abs(y - ($a + $b * x)) > 1e-1 THEN sign(y - ($a + $b * x)) * x END")} AS g1
-          FROM $src"""
-    def beta(m: String, prevA: String, prevB: String) =
-      s"""SELECT $prevA + 1e-1 * (g0 / n) AS a,
-            $prevB + 1e-1 * (g1 / n - 1e-2 * $prevB) AS b
-          FROM $m"""
+  private def svrAB(s: SparkSession, dir: String): (Double, Double) =
+    T.fitCache("svrAB", dir) { ab(Twin.fit(svrRows(s, dir).toDF("x", "y"), svrFit).last) }
+
+  /** Oracle twin of [[svrAB]] with its rows CTE `d`, ending in b3(a, b). */
+  private lazy val sqlSvrChain: String =
     s"""d AS (SELECT CAST(l_quantity AS DOUBLE) / 50 AS x,
            CAST(l_extendedprice AS DOUBLE) / 50000 AS y
          FROM lineitem),
-         m1 AS (${mStep("d", "0e0", "0e0")}),
-         b1 AS (${beta("m1", "0e0", "0e0")}),
-         m2 AS (${mStep("d, b1", "b1.a", "b1.b")}),
-         b2 AS (${beta("m2, b1", "b1.a", "b1.b")}),
-         m3 AS (${mStep("d, b2", "b2.a", "b2.b")}),
-         b3 AS (${beta("m3, b2", "b2.a", "b2.b")})"""
-  }
+  ${Twin.sqlFit(svrFit, "d", "b")}"""
 
   /** SVM feature frame: x = quantity/50 (unit-ish scale keeps the fixed
     * step size stable), y = ±1 on returnflag R. */
@@ -6521,107 +6057,46 @@ object ML {
       when(col("l_returnflag") === "R", 1.0).otherwise(-1.0).as("cy"))
       .transform(T.fanOut(_))
 
-  /** 3 driver-held subgradient steps (lr = 0.1, λ = 0.01), fitCached. The
-    * update text mirrors sqlSvmChain exactly:
-    *   a ← a + lr·(g0/n), b ← b + lr·(g1/n − λ·b),
-    * with g0 = Σ_{margin<1} y, g1 = Σ_{margin<1} y·x on the exact wire. */
-  private def svmAB(s: SparkSession, dir: String): (Double, Double) =
-    T.fitCache("svmAB", dir) {
-      val spark = s
-      import spark.implicits._
-      val d = svmRows(s, dir)
-      var a = 0.0
-      var b = 0.0
-      for (_ <- 1 to 3) {
-        val ab = Seq((a, b)).toDF("ca", "cb") // codegen-stable, as irlsBeta
-        val m = col("cy") * (col("ca") + col("cb") * col("cx"))
-        val r = d.crossJoin(broadcast(ab))
-          .select(col("cx"), col("cy"), m.as("m"))
-          .agg(
-            count(lit(1)).cast("double").as("n"),
-            T.xsum(when(col("m") < 1, col("cy"))).as("g0"),
-            T.xsum(when(col("m") < 1, col("cy") * col("cx"))).as("g1"))
-          .collect()(0)
-        val n = r.getDouble(0); val g0 = r.getDouble(1); val g1 = r.getDouble(2)
-        a = a + 0.1 * (g0 / n)
-        b = b + 0.1 * (g1 / n - 0.01 * b)
-      }
-      (a, b)
-    }
+  /** 3 driver-held hinge subgradient steps, fitCached. */
+  private lazy val svmFit: Twin.Fit =
+    Twin.Fit(Seq("a" -> 0.0, "b" -> 0.0), hingeRows, hingeSums, Nil, sgdNext, 3)
 
-  /** Oracle twin of [[svmAB]] — 3 unrolled blocks ending in b3(a, b),
-    * with a `d` rows CTE in scope (the sqlIrlsChain structure). */
-  private lazy val sqlSvmChain: String = {
-    def mStep(src: String, a: String, b: String) =
-      s"""SELECT CAST(count(*) AS DOUBLE) AS n,
-            ${T.sqlXsum(s"CASE WHEN y * ($a + $b * x) < 1 THEN y END")} AS g0,
-            ${T.sqlXsum(s"CASE WHEN y * ($a + $b * x) < 1 THEN y * x END")} AS g1
-          FROM $src"""
-    def beta(m: String, prevA: String, prevB: String) =
-      s"""SELECT $prevA + 1e-1 * (g0 / n) AS a,
-            $prevB + 1e-1 * (g1 / n - 1e-2 * $prevB) AS b
-          FROM $m"""
+  private def svmAB(s: SparkSession, dir: String): (Double, Double) =
+    T.fitCache("svmAB", dir) { ab(Twin.fit(svmRows(s, dir).toDF("x", "y"), svmFit).last) }
+
+  /** Oracle twin of [[svmAB]] with its rows CTE `d`, ending in b3(a, b). */
+  private lazy val sqlSvmChain: String =
     s"""d AS (SELECT CAST(l_quantity AS DOUBLE) / 50 AS x,
            CASE WHEN l_returnflag = 'R' THEN 1.0 ELSE -1.0 END AS y
          FROM lineitem),
-         m1 AS (${mStep("d", "0e0", "0e0")}),
-         b1 AS (${beta("m1", "0e0", "0e0")}),
-         m2 AS (${mStep("d, b1", "b1.a", "b1.b")}),
-         b2 AS (${beta("m2, b1", "b1.a", "b1.b")}),
-         m3 AS (${mStep("d, b2", "b2.a", "b2.b")}),
-         b3 AS (${beta("m3, b2", "b2.a", "b2.b")})"""
-  }
+  ${Twin.sqlFit(svmFit, "d", "b")}"""
 
   /** 2 driver-held GD steps of Platt scaling on the svmAB decision values
-    * (lr = 1, start (0,0)): A ← A + (Σ(t − p))/n, B ← B + (Σ(t − p)·f)/n
-    * with t = (y+1)/2, f = a + b·x, p = σ(A + B·f) REAL-collapsed per
-    * row. fitCached; update text mirrors [[sqlPlattChain]]. */
+    * f = sa + sb·x (lr = 1, start (0,0)): A ← A + (Σ(t − p))/n,
+    * B ← B + (Σ(t − p)·f)/n with t = (y+1)/2, p = σ(A + B·f)
+    * REAL-collapsed per row. The SVM line (sa, sb) rides as a fixed
+    * input. fitCached. */
+  private lazy val plattFit: Twin.Fit = Twin.Fit(
+    Seq("sa" -> 0.0, "sb" -> 0.0, "pa" -> 0.0, "pb" -> 0.0),
+    Seq("t" -> "(y + 1e0) / 2", "f" -> "sa + sb * x", "p" -> sigmoidR("pa + pb * f")),
+    Seq(Twin.count("n"), Twin.xsum("g0", "t - p"), Twin.xsum("g1", "(t - p) * f")),
+    Nil, Seq("sa", "sb", "pa + 1e0 * (g0 / n)", "pb + 1e0 * (g1 / n)"), 2)
+
   private def plattAB(s: SparkSession, dir: String): (Double, Double) =
     T.fitCache("plattAB", dir) {
-      val spark = s
-      import spark.implicits._
       val (a, b) = svmAB(s, dir)
-      val d = svmRows(s, dir)
-      var pa = 0.0
-      var pb = 0.0
-      for (_ <- 1 to 2) {
-        val cf = Seq((a, b, pa, pb)).toDF("ca", "cb", "fa", "fb")
-        val r = d.crossJoin(broadcast(cf))
-          .selectExpr("(cy + 1e0) / 2 AS t", "ca + cb * cx AS f",
-            "CAST(CAST(1e0 / (1e0 + exp(-(fa + fb * (ca + cb * cx)))) AS FLOAT) AS DOUBLE) AS p")
-          .agg(
-            count(lit(1)).cast("double").as("n"),
-            T.xsum(col("t") - col("p")).as("g0"),
-            T.xsum((col("t") - col("p")) * col("f")).as("g1"))
-          .collect()(0)
-        val n = r.getDouble(0)
-        pa = pa + 1.0 * (r.getDouble(1) / n)
-        pb = pb + 1.0 * (r.getDouble(2) / n)
-      }
-      (pa, pb)
+      val p = Twin.fit(svmRows(s, dir).toDF("x", "y"),
+        plattFit.copy(params = Seq("sa" -> a, "sb" -> b, "pa" -> 0.0, "pb" -> 0.0))).last
+      (p(2), p(3))
     }
 
   /** Oracle twin of [[plattAB]] — extends [[sqlSvmChain]] (so the decision
-    * line b3(a, b) is bit-identical to the Spark session's svmAB) with 2
-    * unrolled calibration blocks ending in c2(pa, pb). */
-  private lazy val sqlPlattChain: String = {
-    def p(aTxt: String, bTxt: String) =
-      s"CAST(CAST(1e0 / (1e0 + exp(-($aTxt + $bTxt * (b3.a + b3.b * x)))) AS REAL) AS DOUBLE)"
-    def mStep(src: String, aTxt: String, bTxt: String) =
-      s"""SELECT CAST(count(*) AS DOUBLE) AS n,
-            ${T.sqlXsum(s"(y + 1e0) / 2 - ${p(aTxt, bTxt)}")} AS g0,
-            ${T.sqlXsum(s"((y + 1e0) / 2 - ${p(aTxt, bTxt)}) * (b3.a + b3.b * x)")} AS g1
-          FROM $src"""
-    def beta(m: String, prevA: String, prevB: String) =
-      s"""SELECT $prevA + 1e0 * (g0 / n) AS pa,
-            $prevB + 1e0 * (g1 / n) AS pb
-          FROM $m"""
+    * line b3(a, b) is bit-identical to the Spark session's svmAB), ending
+    * in c2(sa, sb, pa, pb). */
+  private lazy val sqlPlattChain: String =
     s"""$sqlSvmChain,
-       p1 AS (${mStep("d, b3", "0e0", "0e0")}),
-       c1 AS (${beta("p1", "0e0", "0e0")}),
-       p2 AS (${mStep("d, b3, c1", "c1.pa", "c1.pb")}),
-       c2 AS (${beta("p2, c1", "c1.pa", "c1.pb")})"""
-  }
+  ${Twin.sqlFit(plattFit, "d", "c",
+      Some("SELECT a AS sa, b AS sb, 0e0 AS pa, 0e0 AS pb FROM b3"))}"""
 
   /** SVC(kernel='rbf') feature frame in the LANDMARK (Nyström) shape the
     * reference's kernel machines scale by: f_j(x) = exp(−‖x − l_j‖²) for
@@ -6664,54 +6139,25 @@ object ML {
   }
 
   /** 3 driver-held subgradient steps on the landmark-feature hinge
-    * objective (lr = 2.0, λ = 0.01) — the svmAB loop lifted to 4
-    * parameters; fitCached, update text mirrors sqlSvcChain exactly. */
+    * objective (lr = 2.0, λ = 0.01) — the svmAB fit lifted to 4
+    * parameters; fitCached. */
+  private lazy val svcFit: Twin.Fit = Twin.Fit(
+    Seq("a" -> 0.0, "w1" -> 0.0, "w2" -> 0.0, "w3" -> 0.0),
+    Seq("m" -> "y * (a + w1 * f1 + w2 * f2 + w3 * f3)"),
+    Twin.count("n") +: Twin.xsum("g0", "CASE WHEN m < 1 THEN y END") +:
+      (1 to 3).map(j => Twin.xsum(s"g$j", s"CASE WHEN m < 1 THEN y * f$j END")),
+    Nil,
+    "a + 2e0 * (g0 / n)" +: (1 to 3).map(j => s"w$j + 2e0 * (g$j / n - 1e-2 * w$j)"), 3)
+
   private def svcParams(s: SparkSession, dir: String): (Double, Double, Double, Double) =
     T.fitCache("svcRbf", dir) {
-      val spark = s
-      import spark.implicits._
-      val d = svcRows(s, dir)
-      var (a, w1, w2, w3) = (0.0, 0.0, 0.0, 0.0)
-      for (_ <- 1 to 3) {
-        val ab = Seq((a, w1, w2, w3)).toDF("ca", "c1", "c2", "c3")
-        val m = col("y") * (col("ca") + col("c1") * col("f1") +
-          col("c2") * col("f2") + col("c3") * col("f3"))
-        val r = d.crossJoin(broadcast(ab))
-          .select(col("y"), col("f1"), col("f2"), col("f3"), m.as("m"))
-          .agg(
-            count(lit(1)).cast("double").as("n"),
-            T.xsum(when(col("m") < 1, col("y"))).as("g0"),
-            T.xsum(when(col("m") < 1, col("y") * col("f1"))).as("g1"),
-            T.xsum(when(col("m") < 1, col("y") * col("f2"))).as("g2"),
-            T.xsum(when(col("m") < 1, col("y") * col("f3"))).as("g3"))
-          .collect()(0)
-        val n = r.getDouble(0)
-        a = a + 2.0 * (r.getDouble(1) / n)
-        w1 = w1 + 2.0 * (r.getDouble(2) / n - 0.01 * w1)
-        w2 = w2 + 2.0 * (r.getDouble(3) / n - 0.01 * w2)
-        w3 = w3 + 2.0 * (r.getDouble(4) / n - 0.01 * w3)
-      }
+      val Array(a, w1, w2, w3) = Twin.fit(svcRows(s, dir), svcFit).last
       (a, w1, w2, w3)
     }
 
-  /** Oracle twin of [[svcParams]] — 3 unrolled blocks ending in b3(a, w1,
-    * w2, w3), with a `d(y, f1, f2, f3)` CTE in scope. */
+  /** Oracle twin of [[svcParams]] with its rows CTE `d(y, f1, f2, f3)`,
+    * ending in b3(a, w1, w2, w3). */
   private lazy val sqlSvcChain: String = {
-    def mg(src: String, a: String, w1: String, w2: String, w3: String) = {
-      val marg = s"y * ($a + $w1 * f1 + $w2 * f2 + $w3 * f3)"
-      s"""SELECT CAST(count(*) AS DOUBLE) AS n,
-            ${T.sqlXsum(s"CASE WHEN $marg < 1 THEN y END")} AS g0,
-            ${T.sqlXsum(s"CASE WHEN $marg < 1 THEN y * f1 END")} AS g1,
-            ${T.sqlXsum(s"CASE WHEN $marg < 1 THEN y * f2 END")} AS g2,
-            ${T.sqlXsum(s"CASE WHEN $marg < 1 THEN y * f3 END")} AS g3
-          FROM $src"""
-    }
-    def beta(m: String, a: String, w1: String, w2: String, w3: String) =
-      s"""SELECT $a + 2e0 * (g0 / n) AS a,
-            $w1 + 2e0 * (g1 / n - 1e-2 * $w1) AS w1,
-            $w2 + 2e0 * (g2 / n - 1e-2 * $w2) AS w2,
-            $w3 + 2e0 * (g3 / n - 1e-2 * $w3) AS w3
-          FROM $m"""
     val f = (j: Int) =>
       s"CAST(CAST(exp(-(list_distance(CAST(e.embedding AS DOUBLE[]), l$j.e$j) * " +
         s"list_distance(CAST(e.embedding AS DOUBLE[]), l$j.e$j))) AS REAL) AS DOUBLE)"
@@ -6734,12 +6180,7 @@ object ML {
              (f2 - s2 / n) / sqrt(q2 / n - (s2 / n) * (s2 / n)) AS f2,
              (f3 - s3 / n) / sqrt(q3 / n - (s3 / n) * (s3 / n)) AS f3
            FROM d0, m0),
-         m1 AS (${mg("d", "0e0", "0e0", "0e0", "0e0")}),
-         b1 AS (${beta("m1", "0e0", "0e0", "0e0", "0e0")}),
-         m2 AS (${mg("d, b1", "b1.a", "b1.w1", "b1.w2", "b1.w3")}),
-         b2 AS (${beta("m2, b1", "b1.a", "b1.w1", "b1.w2", "b1.w3")}),
-         m3 AS (${mg("d, b2", "b2.a", "b2.w1", "b2.w2", "b2.w3")}),
-         b3 AS (${beta("m3, b2", "b2.a", "b2.w1", "b2.w2", "b2.w3")})"""
+  ${Twin.sqlFit(svcFit, "d", "b")}"""
   }
 
   /** 3 unrolled full-batch GD steps for ml_sgd_linreg — shared
@@ -6795,79 +6236,30 @@ object ML {
 
   /** 3 softmax GD steps with DRIVER-HELD (a_N, b_N, a_R, b_R) — one
     * REAL-collapsed softmax pass + 4 sumE12 gradient sums per step (see
-    * ml_softmax_multi). The driver update `p − 5e-3 * g / cnt` is spelled
-    * with the oracle's exact left-associated op order. */
+    * ml_softmax_multi), then `p − 5e-3 * g / cnt`. Rows `d(q, yn, yr)`. */
+  private lazy val softmaxFit: Twin.Fit = Twin.Fit(
+    Seq("can" -> 0.0, "cbn" -> 0.0, "car" -> 0.0, "cbr" -> 0.0),
+    Seq("en" -> "CAST(CAST(exp(can + cbn * q) AS FLOAT) AS DOUBLE)",
+      "er" -> "CAST(CAST(exp(car + cbr * q) AS FLOAT) AS DOUBLE)",
+      "pn" -> "en / (1e0 + en + er)", "pr" -> "er / (1e0 + en + er)"),
+    Seq(Twin.count("cnt"), Twin.e12("gan", "pn - yn"), Twin.e12("gbn", "(pn - yn) * q"),
+      Twin.e12("gar", "pr - yr"), Twin.e12("gbr", "(pr - yr) * q")),
+    Nil,
+    Seq("can - 5e-3 * gan / cnt", "cbn - 5e-3 * gbn / cnt",
+      "car - 5e-3 * gar / cnt", "cbr - 5e-3 * gbr / cnt"), 3)
+
   private def softmaxBeta(s: SparkSession, dir: String): Array[Double] =
-    T.fitCache("softmaxBeta", dir) { softmaxBetaCompute(s, dir) }
-
-  private def softmaxBetaCompute(s: SparkSession, dir: String): Array[Double] = {
-    val spark = s
-    import spark.implicits._
-    val d = T.lineitem(s, dir).select(
-      col("l_quantity").cast("double").as("q"),
-      when(col("l_returnflag") === "N", 1.0).otherwise(0.0).as("yn"),
-      when(col("l_returnflag") === "R", 1.0).otherwise(0.0).as("yr"))
-      .transform(T.fanOut(_))
-    var p = Array(0.0, 0.0, 0.0, 0.0) // a_N, b_N, a_R, b_R
-    for (_ <- 1 to 3) {
-      val bt = Seq((p(0), p(1), p(2), p(3))).toDF("can", "cbn", "car", "cbr")
-      val rw = d.crossJoin(broadcast(bt))
-        .selectExpr("q", "yn", "yr",
-          "CAST(CAST(exp(can + cbn * q) AS FLOAT) AS DOUBLE) AS en",
-          "CAST(CAST(exp(car + cbr * q) AS FLOAT) AS DOUBLE) AS er")
-        .selectExpr("q", "yn", "yr",
-          "en / (1e0 + en + er) AS pn", "er / (1e0 + en + er) AS pr")
-      val r = rw.agg(
-        count(lit(1)).cast("double").as("cnt"),
-        T.sumE12(col("pn") - col("yn")).as("ganr"),
-        T.sumE12((col("pn") - col("yn")) * col("q")).as("gbnr"),
-        T.sumE12(col("pr") - col("yr")).as("garr"),
-        T.sumE12((col("pr") - col("yr")) * col("q")).as("gbrr"))
-        .selectExpr("cnt",
-          s"${T.bitsE12("ganr")} AS gan", s"${T.bitsE12("gbnr")} AS gbn",
-          s"${T.bitsE12("garr")} AS gar", s"${T.bitsE12("gbrr")} AS gbr")
-        .collect()(0)
-      val cnt = r.getDouble(0)
-      p = Array(
-        p(0) - 5e-3 * r.getDouble(1) / cnt,
-        p(1) - 5e-3 * r.getDouble(2) / cnt,
-        p(2) - 5e-3 * r.getDouble(3) / cnt,
-        p(3) - 5e-3 * r.getDouble(4) / cnt)
+    T.fitCache("softmaxBeta", dir) {
+      Twin.fit(T.lineitem(s, dir).select(
+        col("l_quantity").cast("double").as("q"),
+        when(col("l_returnflag") === "N", 1.0).otherwise(0.0).as("yn"),
+        when(col("l_returnflag") === "R", 1.0).otherwise(0.0).as("yr"))
+        .transform(T.fanOut(_)), softmaxFit).last
     }
-    p
-  }
 
-  /** Oracle twin of [[softmaxBeta]]: bet0 (zeros) then 3 unrolled
-    * (softmax pass → 4 gradient sums → update) blocks, ending in
-    * `bet3(can, cbn, car, cbr)`; expects a CTE `d(q, yn, yr, ...)`. */
-  private lazy val sqlSoftmaxChain: String = {
-    val blocks = (1 to 3).map { k =>
-      s"""i$k AS (SELECT q, yn, yr,
-              CAST(CAST(exp(can + cbn * q) AS REAL) AS DOUBLE) AS en,
-              CAST(CAST(exp(car + cbr * q) AS REAL) AS DOUBLE) AS er
-            FROM d CROSS JOIN bet${k - 1}),
-          p$k AS (SELECT q, yn, yr,
-              en / (1e0 + en + er) AS pn, er / (1e0 + en + er) AS pr
-            FROM i$k),
-          m$k AS (SELECT CAST(count(*) AS DOUBLE) AS cnt,
-              ${T.sqlSumE12("pn - yn")} AS ganr,
-              ${T.sqlSumE12("(pn - yn) * q")} AS gbnr,
-              ${T.sqlSumE12("pr - yr")} AS garr,
-              ${T.sqlSumE12("(pr - yr) * q")} AS gbrr
-            FROM p$k),
-          g$k AS (SELECT cnt,
-              ${T.sqlBitsE12("ganr")} AS gan, ${T.sqlBitsE12("gbnr")} AS gbn,
-              ${T.sqlBitsE12("garr")} AS gar, ${T.sqlBitsE12("gbrr")} AS gbr
-            FROM m$k),
-          bet$k AS (SELECT can - 5e-3 * gan / cnt AS can,
-              cbn - 5e-3 * gbn / cnt AS cbn,
-              car - 5e-3 * gar / cnt AS car,
-              cbr - 5e-3 * gbr / cnt AS cbr
-            FROM bet${k - 1} CROSS JOIN g$k)"""
-    }
-    ("bet0 AS (SELECT 0e0 AS can, 0e0 AS cbn, 0e0 AS car, 0e0 AS cbr)" +: blocks)
-      .mkString(",\n          ")
-  }
+  /** Oracle twin of [[softmaxBeta]] over a CTE `d(q, yn, yr, ...)`,
+    * ending in `bet3(can, cbn, car, cbr)`. */
+  private lazy val sqlSoftmaxChain: String = Twin.sqlFit(softmaxFit, "d", "bet")
 
   /** Per-alpha centered ridge solve + train/valid RMSE by residual
     * expansion — ml_ridge_cv's shared cascade (prefix cv). */

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{QueryDef, Tables => T}
+import graft.{QueryDef, Tables => T, Twin}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -480,23 +480,19 @@ object Pipeline {
           .where(col("tok").rlike("^[a-z]+$"))
           .groupBy("tok").agg(count(lit(1)).as("n"))
           .orderBy(col("n").desc, col("tok")).limit(40)
-        porterSteps(spark = true)
-          .foldLeft(top.toDF()) { case (df, (nm, ex)) =>
-            df.selectExpr("*", s"$ex AS $nm") }
+        Twin.chain(top.toDF(), porterSteps(spark = true))
           .select(col("tok"), col("stem"), col("n"))
           .orderBy(col("n").desc, col("tok"))
       },
       Some {
-        val ctes = porterSteps(spark = false).zipWithIndex.map {
-          case ((nm, ex), i) => s"c${i + 1} AS (SELECT *, $ex AS $nm FROM c$i)"
-        }
+        val (ctes, fin) = Twin.ctes(porterSteps(spark = false), "c0", "c")
         s"""WITH tk AS (SELECT lower(t) AS tok FROM (
                  SELECT unnest(string_split(text, ' ')) AS t FROM documents) u
                WHERE regexp_matches(lower(t), '^[a-z]+$$')),
              c0 AS (SELECT tok, count(*) AS n FROM tk GROUP BY tok
                     ORDER BY n DESC, tok LIMIT 40),
-             ${ctes.mkString(",\n             ")}
-           SELECT tok, stem, n FROM c${porterSteps(spark = false).size}
+             $ctes
+           SELECT tok, stem, n FROM $fin
            ORDER BY n DESC, tok"""
       }),
 

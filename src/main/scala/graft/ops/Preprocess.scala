@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{QueryDef, Tables => T}
+import graft.{QueryDef, Tables => T, Twin}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -411,11 +411,8 @@ object Preprocess {
           max(when(col("shard") === k, col("sx"))).as(s"s$k"),
           max(when(col("shard") === k, col("sxx"))).as(s"ss$k")))
         val piv = sh.agg(pivotAggs.head, pivotAggs.tail: _*)
-        mergeSteps.foldLeft(
-          piv.selectExpr(("*" +: (0 to 3).flatMap(k => Seq(
-            s"s$k / n$k AS m$k", s"ss$k - s$k * s$k / n$k AS q$k"))): _*)) {
-          case (df, (nm, ex)) => df.selectExpr("*", s"$ex AS $nm")
-        }
+        Twin.chain(piv.selectExpr(("*" +: (0 to 3).flatMap(k => Seq(
+            s"s$k / n$k AS m$k", s"ss$k - s$k * s$k / n$k AS q$k"))): _*), mergeSteps)
           .selectExpr(
             ((0 to 3).map(k => s"CAST(n$k AS BIGINT) AS n_shard$k") ++ Seq(
               "CAST(nc AS BIGINT) AS n_merged",
@@ -424,7 +421,9 @@ object Preprocess {
               "round((s0 + s1 + s2 + s3) / nc, 6) AS mean_direct",
               "round(((ss0 + ss1 + ss2 + ss3) - (s0 + s1 + s2 + s3) * (s0 + s1 + s2 + s3) / nc) / nc, 6) AS var_direct")): _*)
       },
-      Some(s"""WITH l AS (SELECT l_orderkey % 4 AS shard,
+      Some {
+        val (merge, fin) = Twin.ctes(mergeSteps, "st", "g")
+        s"""WITH l AS (SELECT l_orderkey % 4 AS shard,
                    CAST(l_extendedprice AS DOUBLE) AS x
                  FROM lineitem),
                  sh AS (SELECT shard, CAST(count(*) AS DOUBLE) AS cn,
@@ -442,16 +441,15 @@ object Preprocess {
                      ${(0 to 3).map(k =>
                        s"s$k / n$k AS m$k, ss$k - s$k * s$k / n$k AS q$k").mkString(",\n                     ")}
                    FROM piv),
-                 ${mergeSteps.zipWithIndex.map { case ((nm, ex), i) =>
-                   s"g${i + 1} AS (SELECT *, $ex AS $nm FROM g$i)"
-                 }.mkString(",\n                 ").replace("FROM g0", "FROM st")}
+                 $merge
                SELECT ${(0 to 3).map(k => s"CAST(n$k AS BIGINT) AS n_shard$k").mkString(", ")},
                  CAST(nc AS BIGINT) AS n_merged,
                  round(mc, 6) AS mean_merged,
                  round(qc / nc, 6) AS var_merged,
                  round((s0 + s1 + s2 + s3) / nc, 6) AS mean_direct,
                  round(((ss0 + ss1 + ss2 + ss3) - (s0 + s1 + s2 + s3) * (s0 + s1 + s2 + s3) / nc) / nc, 6) AS var_direct
-               FROM g${mergeSteps.size}""")),
+               FROM $fin"""
+      }),
 
     QueryDef(
       "ml_power_transform",

@@ -8,7 +8,8 @@ import scala.jdk.CollectionConverters._
 /** Pins the one harness session every main starts from, its task listener,
   * and the structure that keeps it the only one: no other session builder,
   * task listener or main in `src/main`, and no environment knob beyond the
-  * four the mains document. */
+  * four the mains document. Also pins [[Twin]] as the one renderer of the
+  * shared-text step lists. */
 class HarnessSpec extends SparkSpec {
 
   test("conf: Bench's settings, key by key") {
@@ -67,6 +68,13 @@ class HarnessSpec extends SparkSpec {
   test("structure: mains only in Bench, Verify and Harness") {
     assert(filesWith("def main(") ===
       Set("graft/Bench.scala", "graft/Verify.scala", "graft/Harness.scala"))
+  }
+
+  test("structure: the shared-text cascade and CTE renderer live only in Twin") {
+    assert(filesWith("selectExpr(\"*\", s\"$ex AS $nm\")") === Set("graft/Twin.scala"))
+    assert(filesWith("AS (SELECT *, $ex AS $nm FROM") === Set("graft/Twin.scala"))
+    for (gone <- Seq("stepChain", "sqlChainFrom", "gaussSteps", "symGauss3", "solve3", "mStep"))
+      assert(filesWith(gone) === Set.empty[String], s"$gone is back")
   }
 
   test("structure: the mains read exactly four SPARK_GRAFT_ knobs") {

@@ -1,0 +1,180 @@
+package graft
+
+import graft.{Tables => T}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test => SCTest}
+
+/** Pins [[Twin]], the one owner of the shared-text discipline: the unrolled
+  * elimination is bit-equal to the same op sequence in Scala, the CTE
+  * renderer chains each step from the previous one, and the driver-held
+  * fit loop reproduces the hand-written 2×2 logistic Newton loop it
+  * replaced bit for bit — including what happens on a singular Hessian. */
+class TwinSpec extends SparkSpec {
+
+  private def bits(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)
+
+  /** The elimination [[Twin.gauss]] unrolls, as plain Scala doubles in
+    * the same op order (left-associated back substitution). */
+  private def gaussRef(a: Array[Array[Double]], b: Array[Double]): Array[Double] = {
+    val n = b.length
+    val m = a.map(_.clone)
+    val r = b.clone
+    for (k <- 0 until n - 1; i <- k + 1 until n) {
+      val f = m(i)(k) / m(k)(k)
+      for (j <- k + 1 until n) m(i)(j) = m(i)(j) - f * m(k)(j)
+      r(i) = r(i) - f * r(k)
+    }
+    val x = new Array[Double](n)
+    for (i <- n - 1 to 0 by -1) {
+      var acc = r(i)
+      for (j <- i + 1 until n) acc = acc - m(i)(j) * x(j)
+      x(i) = acc / m(i)(i)
+    }
+    x
+  }
+
+  /** A random SPD system: A = M·Mᵀ + n·I, b uniform. */
+  private def spd(n: Int): Gen[(Array[Array[Double]], Array[Double])] = for {
+    m <- Gen.listOfN(n * n, Gen.choose(-10.0, 10.0))
+    b <- Gen.listOfN(n, Gen.choose(-100.0, 100.0))
+  } yield {
+    val mm = m.toArray.grouped(n).toArray
+    val a = Array.tabulate(n, n) { (i, j) =>
+      (0 until n).map(k => mm(i)(k) * mm(j)(k)).sum + (if (i == j) n.toDouble else 0.0)
+    }
+    (a, b.toArray)
+  }
+
+  test("gauss: n = 2..4 on random SPD systems, bit-equal to Scala in the same op order") {
+    val spark = this.spark
+    for (n <- 2 to 4) {
+      // symmetric entry names: the upper triangle names both halves
+      val names = Seq.tabulate(n, n)((i, j) => s"a${math.min(i, j)}${math.max(i, j)}")
+      val steps = Twin.gauss(names, Seq.tabulate(n)(i => s"b$i"), "g")
+      val prop = Prop.forAll(spd(n)) { case (a, b) =>
+        val cols = (for (i <- 0 until n; j <- i until n) yield lit(a(i)(j)).as(s"a$i$j")) ++
+          (0 until n).map(i => lit(b(i)).as(s"b$i"))
+        val row = Twin.chain(spark.range(1).select(cols: _*), steps)
+          .select((0 until n).map(i => col(s"gx$i")): _*).collect()(0)
+        val want = gaussRef(a, b)
+        (0 until n).forall(i => bits(row.getDouble(i)) == bits(want(i)))
+      }
+      val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(15), prop)
+      assert(res.passed, s"n = $n: $res")
+    }
+  }
+
+  test("gauss: the 4×4 and prefixed 3×3 texts are the ones the fits always ran") {
+    val a4 = Seq(Seq("a00", "a01", "a02", "a03"), Seq("a01", "a11", "a12", "a13"),
+      Seq("a02", "a12", "a22", "a23"), Seq("a03", "a13", "a23", "a33"))
+    val g4 = Twin.gauss(a4, Seq("b0", "b1", "b2", "b3"), "")
+    assert(g4.size === 30)
+    assert(g4.take(5) === Seq("f10" -> "a01 / a00", "a11_0" -> "a11 - f10 * a01",
+      "a12_0" -> "a12 - f10 * a02", "a13_0" -> "a13 - f10 * a03", "b1_0" -> "b1 - f10 * b0"))
+    assert(g4.takeRight(4) === Seq(
+      "x3" -> "b3_2 / a33_2",
+      "x2" -> "(b2_1 - a23_1 * x3) / a22_1",
+      "x1" -> "(b1_0 - a12_0 * x2 - a13_0 * x3) / a11_0",
+      "x0" -> "(b0 - a01 * x1 - a02 * x2 - a03 * x3) / a00"))
+    val g3 = Twin.gauss(Seq(Seq("k11", "cqd", "cqt"), Seq("cqd", "k22", "cdt"),
+      Seq("cqt", "cdt", "k33")), Seq("cqy", "cdy", "cty"), "rg")
+    assert(g3 === Seq(
+      "rgf10" -> "cqd / k11", "rga11_0" -> "k22 - rgf10 * cqd",
+      "rga12_0" -> "cdt - rgf10 * cqt", "rgb1_0" -> "cdy - rgf10 * cqy",
+      "rgf20" -> "cqt / k11", "rga21_0" -> "cdt - rgf20 * cqd",
+      "rga22_0" -> "k33 - rgf20 * cqt", "rgb2_0" -> "cty - rgf20 * cqy",
+      "rgf21" -> "rga21_0 / rga11_0", "rga22_1" -> "rga22_0 - rgf21 * rga12_0",
+      "rgb2_1" -> "rgb2_0 - rgf21 * rgb1_0",
+      "rgx2" -> "rgb2_1 / rga22_1",
+      "rgx1" -> "(rgb1_0 - rga12_0 * rgx2) / rga11_0",
+      "rgx0" -> "(cqy - cqd * rgx1 - cqt * rgx2) / k11"))
+  }
+
+  test("ctes: each CTE reads the previous one, starting at `from`") {
+    val (text, fin) = Twin.ctes(Seq("x" -> "1", "y" -> "x + 1", "z" -> "y * 2"), "src", "p")
+    assert(text ===
+      """p1 AS (SELECT *, 1 AS x FROM src),
+        |  p2 AS (SELECT *, x + 1 AS y FROM p1),
+        |  p3 AS (SELECT *, y * 2 AS z FROM p2)""".stripMargin)
+    assert(fin === "p3")
+  }
+
+  /** A small in-memory logistic frame (x, y). */
+  private def frame(xs: Seq[Double], ys: Seq[Double]): DataFrame = {
+    val spark = this.spark
+    import spark.implicits._
+    xs.zip(ys).toDF("x", "y").repartition(3)
+  }
+
+  /** The hand-written 2×2 logistic Newton loop the fits ran before
+    * [[Twin.fit]]: the update in Scala doubles on the collected sums. */
+  private def handLoop(d: DataFrame, iters: Int): (Double, Double) = {
+    val spark = this.spark
+    import spark.implicits._
+    var a = 0.0
+    var b = 0.0
+    for (_ <- 1 to iters) {
+      val ab = Seq((a, b)).toDF("ca", "cb")
+      val mu = (lit(1.0) / (lit(1.0) + exp(-(col("ca") + col("cb") * col("x")))))
+        .cast("float").cast("double")
+      val w = mu * (lit(1.0) - mu)
+      val r = d.crossJoin(broadcast(ab))
+        .select(col("x"), col("y"), mu.as("mu"), w.as("w"))
+        .agg(
+          T.xsum(col("y") - col("mu")).as("g0"),
+          T.xsum((col("y") - col("mu")) * col("x")).as("g1"),
+          T.xsum(col("w")).as("h00"),
+          T.xsum(col("w") * col("x")).as("h01"),
+          T.xsum(col("w") * col("x") * col("x")).as("h11"))
+        .collect()(0)
+      val g0 = r.getDouble(0); val g1 = r.getDouble(1)
+      val h00 = r.getDouble(2); val h01 = r.getDouble(3); val h11 = r.getDouble(4)
+      a = a + (h11 * g0 - h01 * g1) / (h00 * h11 - h01 * h01)
+      b = b + (h00 * g1 - h01 * g0) / (h00 * h11 - h01 * h01)
+    }
+    (a, b)
+  }
+
+  private val newton = Twin.Fit(
+    Seq("a" -> 0.0, "b" -> 0.0),
+    Seq("mu" -> "CAST(CAST(1e0 / (1e0 + exp(-(a + b * x))) AS FLOAT) AS DOUBLE)"),
+    Seq(Twin.xsum("g0", "y - mu"), Twin.xsum("g1", "(y - mu) * x"),
+      Twin.xsum("h00", "mu * (1e0 - mu)"), Twin.xsum("h01", "mu * (1e0 - mu) * x"),
+      Twin.xsum("h11", "mu * (1e0 - mu) * x * x")),
+    Twin.newton2("h00", "h01", "h11", "g0", "g1"), Seq("a + d0", "b + d1"), 3)
+
+  test("fit: reproduces the hand-written 2×2 logistic Newton loop bit for bit") {
+    val xs = (0 until 300).map(i => (i % 23) * 1.5 + 0.25)
+    val ys = (0 until 300).map(i => if ((i * 7) % 5 < 2 + (i % 23) / 12) 1.0 else 0.0)
+    val d = frame(xs, ys)
+    val trail = Twin.fit(d, newton)
+    assert(trail.size === 3)
+    val (a, b) = handLoop(d, 3)
+    assert(bits(trail.last(0)) === bits(a), s"a: ${trail.last(0)} vs $a")
+    assert(bits(trail.last(1)) === bits(b), s"b: ${trail.last(1)} vs $b")
+    assert(!a.isNaN && b != 0.0, "the fixture must fit a real slope")
+  }
+
+  test("sqlFit: block k reads the rows CTE and block k-1, ends in the parameter CTE") {
+    val text = Twin.sqlFit(newton, "d", "b")
+    assert(text.startsWith(
+      "b0 AS (SELECT CAST('0.0' AS DOUBLE) AS a, CAST('0.0' AS DOUBLE) AS b)"))
+    for (k <- 1 to 3) {
+      assert(text.contains(s"b${k}x AS (SELECT * FROM d, b${k - 1})"))
+      assert(text.contains(s"b${k}g AS (SELECT a, b, g0, g1, h00, h01, h11 FROM b${k}s, b${k - 1})"))
+      assert(text.contains(s"b$k AS (SELECT a + d0 AS a, b + d1 AS b FROM b${k}u3)"))
+    }
+    assert(!text.contains("b4"))
+  }
+
+  test("fit: a singular 2×2 Hessian fails loudly (the hand loop returned NaN)") {
+    // constant x makes H = Σw·[[1, x], [x, x²]] exactly singular
+    val d = frame(Seq.fill(8)(2.0), Seq(1.0, 0.0, 1.0, 1.0, 0.0, 0.0, 1.0, 0.0))
+    val (a, b) = handLoop(d, 1)
+    assert(a.isNaN && b.isNaN, s"hand loop: ($a, $b)")
+    val e = intercept[Exception](Twin.fit(d, newton.copy(iters = 1)))
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+    assert(msgs.exists(m => m != null && m.contains("DIVIDE_BY_ZERO")), e.toString)
+  }
+}
