@@ -77,15 +77,16 @@ object Harness {
   }
 
   /** The harness session: `conf`, quiet logs, and a warm-up (codegen
-    * compiler, shuffle machinery, parquet footer cache) so the first query
-    * does not absorb ~5 s of JVM start that belongs to no operator. */
+    * compiler, shuffle machinery, and a lineitem read through the same
+    * `Tables` loader the queries use) so the first query does not absorb
+    * ~5 s of JVM start that belongs to no operator. */
   def session(cpus: Int, sfDir: String): SparkSession = {
     val spark = SparkSession.builder().config(conf(cpus, sfDir)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Log.quietBoundedWindowWarn()
     Log.quietFairPoolWarn()
     spark.range(1000000).selectExpr("sum(id)").collect()
-    try spark.read.parquet(s"$sfDir/lineitem.parquet").limit(10).collect()
+    try Tables.lineitem(spark, sfDir).limit(10).collect()
     catch { case _: Throwable => () }
     spark
   }

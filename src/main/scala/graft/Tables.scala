@@ -1,8 +1,14 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.util.Try
 
 /** One named query of the engine: the Spark dataflow plus (optionally) the
   * equivalent ANSI SQL the driver's DuckDB oracle runs on the same parquet
@@ -41,13 +47,36 @@ object Log {
 /** Table loaders + cross-engine determinism helpers (SURVEY.md §1.2, §7.3).
   *
   * The fixture layout is one parquet file per table under the sf dir
-  * (TESTDATA.md). All loaders are plain `spark.read.parquet` — schema comes
-  * from the parquet footer, predicate pushdown / column pruning are left to
-  * Catalyst (SURVEY.md §4.2).
+  * (TESTDATA.md). Every loader goes through `t`, which reads that file's
+  * footer on the driver and hands the reader its schema: a bare
+  * `spark.read.parquet` infers the schema with a one-task Spark job
+  * (`mergeSchemasInParallel`), even for one file, so each table read cost a
+  * job. The footer is converted by the same function that job runs, with a
+  * converter built from the session's current conf (`events` relies on its
+  * `nanosAsLong`), and it is read again on every call, so a file rewritten
+  * in place is seen on the next read. A path that is a directory (the
+  * 100 TB layout, one table per directory of part files) falls back to
+  * `spark.read.parquet`: Spark picks which part file to infer from there.
+  * So does a path that cannot be stat'ed, which then fails with Spark's
+  * usual error.
+  * Predicate pushdown / column pruning are left to Catalyst (SURVEY.md
+  * §4.2).
   */
 object Tables {
-  def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+  def t(s: SparkSession, dir: String, name: String): DataFrame = {
+    val p = s"$dir/$name.parquet"
+    val hc = s.sessionState.newHadoopConf()
+    val path = new Path(p)
+    Try(path.getFileSystem(hc).getFileStatus(path)).toOption.filter(_.isFile) match {
+      case Some(st) =>
+        val footer = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(st, hc), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        val schema = ParquetFileFormat.readSchemaFromFooter(
+          new Footer(st.getPath, footer), new ParquetToSparkSchemaConverter(s.sessionState.conf))
+        s.read.schema(schema).parquet(p)
+      case None => s.read.parquet(p)
+    }
+  }
 
   def region(s: SparkSession, dir: String): DataFrame   = t(s, dir, "region")
   def nation(s: SparkSession, dir: String): DataFrame   = t(s, dir, "nation")

@@ -9,7 +9,8 @@ import scala.jdk.CollectionConverters._
   * and the structure that keeps it the only one: no other session builder,
   * task listener or main in `src/main`, and no environment knob beyond the
   * four the mains document. Also pins [[Twin]] as the one renderer of the
-  * shared-text step lists. */
+  * shared-text step lists, and [[Tables]] as the one reader of fixture
+  * paths. */
 class HarnessSpec extends SparkSpec {
 
   test("conf: Bench's settings, key by key") {
@@ -75,6 +76,13 @@ class HarnessSpec extends SparkSpec {
     assert(filesWith("AS (SELECT *, $ex AS $nm FROM") === Set("graft/Twin.scala"))
     for (gone <- Seq("stepChain", "sqlChainFrom", "gaussSteps", "symGauss3", "solve3", "mStep"))
       assert(filesWith(gone) === Set.empty[String], s"$gone is back")
+  }
+
+  test("structure: fixture tables are read only through the Tables loader") {
+    // a bare read of a fixture path would bypass the driver-side footer
+    // schema and pay a schema-inference Spark job per read
+    for (needle <- Seq("read.parquet(s\"$dir/", "read.parquet(s\"$sfDir/"))
+      assert(filesWith(needle) subsetOf Set("graft/Tables.scala"), s"$needle outside Tables")
   }
 
   test("structure: the mains read exactly four SPARK_GRAFT_ knobs") {

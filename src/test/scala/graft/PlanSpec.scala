@@ -152,44 +152,17 @@ class PlanSpec extends SparkSpec {
   }
 
   test("denseIds is lazy: construction + explain launch zero jobs (VERDICT r4 #8)") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.functions._
-    val watchGroup = s"denseids-lazy-${System.nanoTime()}"
-    val barrierGroup = s"$watchGroup-barrier"
-    val watched = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-    val barrierSeen = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        val g = if (j.properties == null) null
-                else j.properties.getProperty("spark.jobGroup.id")
-        if (watchGroup == g) watched.add(j.jobId)
-        if (barrierGroup == g) barrierSeen.set(true)
-      }
-    }
-    // terms df built BEFORE the watched window (spark.read may list files)
-    val terms = Tables.documents(spark, sf)
-      .select(explode(split(col("text"), " ")).as("term"))
-      .where(col("term") =!= "").distinct()
-    spark.sparkContext.addSparkListener(listener)
-    spark.sparkContext.setJobGroup(watchGroup, "denseIds laziness probe")
-    try {
+    // the table read is inside the window too: it launches no job either
+    val jobs = jobsLaunchedBy {
+      val terms = Tables.documents(spark, sf)
+        .select(explode(split(col("text"), " ")).as("term"))
+        .where(col("term") =!= "").distinct()
       val ids = Tables.denseIds(terms, "term", "tid")
       ids.queryExecution.explainString(ExplainMode.fromString("formatted"))
-      // barrier under its OWN group: the listener bus is FIFO, so once the
-      // barrier's event is seen, any construction/explain job event has
-      // already been delivered — waiting for the barrier SPECIFICALLY
-      // (not just any first event) is what makes the zero-count sound
-      spark.sparkContext.setJobGroup(barrierGroup, "laziness probe barrier")
-      spark.sparkContext.parallelize(Seq(1)).count()
-      var waited = 0
-      while (!barrierSeen.get() && waited < 100) { Thread.sleep(100); waited += 1 }
-      assert(barrierSeen.get(), "barrier job event never delivered")
-      assert(watched.isEmpty,
-        s"denseIds construction/explain launched ${watched.size} job(s)")
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(listener)
     }
+    assert(jobs.isEmpty,
+      s"table read, denseIds construction or explain launched ${jobs.size} job(s)")
   }
 
   test("no persisted blocks outlive a query (VERDICT r3 #3/#4)") {
