@@ -163,7 +163,7 @@ object Boost {
           col("l_extendedprice").cast("double").as("y"))
           .transform(T.fanOut(_))
         val (mu, mse0, rounds) =
-          T.fitCache[(java.lang.Double, java.lang.Double, Array[(String, Double, Double, Double, Double)])]("gbmFit", dir) {
+          T.memo[(java.lang.Double, java.lang.Double, Array[(String, Double, Double, Double, Double)])]("gbmFit", s, dir) {
             val base = l.agg(
               count(lit(1)).cast("double").as("nd"),
               T.xsum(col("y")).as("sy"), T.xsum(col("y") * col("y")).as("syy"))

@@ -633,10 +633,10 @@ object Cluster {
     * shared by the NN-descent rows (r13 factor-out). Pinned: the round
     * body references the graph 3×. */
   private def nnSeedEdges(s: SparkSession, dir: String): DataFrame =
-    // session-memoized (r14): ml_knn_nndescent, ml_nndescent_converge and
+    // T.memo'd (r14): ml_knn_nndescent, ml_nndescent_converge and
     // the graph-search/persistence rows all start from this seed — each
     // was re-pinning its own copy
-    T.frameCache("nnSeedPinned", s, dir) { nnSeedEdgesCompute(s, dir) }
+    T.memo("nnSeedPinned", s, dir) { nnSeedEdgesCompute(s, dir) }
 
   private def nnSeedEdgesCompute(s: SparkSession, dir: String): DataFrame = {
     val e = T.embeddings(s, dir)
@@ -678,7 +678,7 @@ object Cluster {
     * shapes are unchanged, so it composes with the same PlanSpec pins. */
   private def nnDescentRound(s: SparkSession, dir: String, g: DataFrame,
       undTag: Option[String] = None): DataFrame = {
-    // the undirected graph is session-memoized when the caller names a
+    // the undirected graph is T.memo'd when the caller names a
     // tag (r15): the round over the SEED is built by both nnG1Pinned and
     // the PlanSpec probe, and the round over G1 pins the same undirected
     // frame the search trail memoizes as nnUndPinned — each previously
@@ -686,7 +686,7 @@ object Cluster {
     def undOfG(): DataFrame = T.pin(g
       .unionAll(g.select(col("v").as("u"), col("u").as("v")))
       .distinct().coalesce(8))
-    val und = undTag.map(t => T.frameCache(t, s, dir)(undOfG())).getOrElse(undOfG())
+    val und = undTag.map(t => T.memo(t, s, dir)(undOfG())).getOrElse(undOfG())
     val cand = und
       .join(und.select(col("u").as("v"), col("v").as("w")), "v")
       .where(col("u") =!= col("w"))
@@ -703,14 +703,14 @@ object Cluster {
       .withColumn("rn", row_number().over(rw)).where(col("rn") <= 3)
   }
 
-  /** Session-memoized pinned round-1 NN-descent graph as the ranked
+  /** T.memo'd pinned round-1 NN-descent graph as the ranked
     * (u, rn, w, d) frame — THE graph artifact of the family (r14):
     * ml_knn_nndescent emits it, ml_nndescent_converge's round-2 starts
     * from it, ml_knn_graph_search traverses it and
     * ml_index_graph_save_load persists it; each previously re-derived
     * the seed + round chain. */
   private def nnG1Pinned(s: SparkSession, dir: String): DataFrame =
-    T.frameCache("nnG1Pinned", s, dir) {
+    T.memo("nnG1Pinned", s, dir) {
       T.pin(nnDescentRound(s, dir, nnSeedEdges(s, dir),
         undTag = Some("nnSeedUndPinned")))
     }
@@ -767,20 +767,20 @@ object Cluster {
     // this leaf against a broadcast probe side, so at fixture scale the
     // per-task fixed cost dominates a 32-way split (a real cluster's
     // scan partitioning flows through fanOut instead)
-    val ev = T.frameCache("embFanPinned", s, dir) {
+    val ev = T.memo("embFanPinned", s, dir) {
       T.pin(e.transform(T.fanOut(_, col("vec_id")))
         .select(col("vec_id").as("v"), col("embedding").as("n_emb"))
         .coalesce(8))
     }
     val qs = e.where(col("vec_id") < 20)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    // the undirected adjacency: session-memoized when the caller names a
+    // the undirected adjacency: T.memo'd when the caller names a
     // tag (the in-session graph row); the reload row rebuilds it from its
     // own artifact — searching through anything else would be dishonest
     def undOf(): DataFrame = T.pin(edges.select("u", "v")
       .unionAll(edges.select(col("v").as("u"), col("u").as("v")))
       .distinct().coalesce(8))
-    val und = undTag.map(t => T.frameCache(t, s, dir)(undOf())).getOrElse(undOf())
+    val und = undTag.map(t => T.memo(t, s, dir)(undOf())).getOrElse(undOf())
     val ew = Window.partitionBy(col("q_id")).orderBy(col("d"), col("v"))
     // ALL 10 coarse vectors enter the visited set (a k=3 undirected kNN
     // graph is typically MULTI-COMPONENT — one entry point strands every
@@ -838,11 +838,11 @@ object Cluster {
       undTag: Option[String] = None): DataFrame =
     searchTopK(graphSearchTrail(s, dir, edges, undTag).reduce(_ unionAll _))
 
-  /** Session-memoized search trail over the IN-SESSION graph — one
+  /** T.memo'd search trail over the IN-SESSION graph — one
     * search shared by ml_knn_graph_search (answers from the full visited
     * union) and ml_graph_search_hops_sweep (reads the per-hop pieces). */
   private def nnSearchTrail(s: SparkSession, dir: String): IndexedSeq[DataFrame] =
-    T.frameCache("nnSearchTrail", s, dir) {
+    T.memo("nnSearchTrail", s, dir) {
       graphSearchTrail(s, dir,
         nnG1Pinned(s, dir).select(col("u"), col("w").as("v")),
         undTag = Some("nnUndPinned"))
@@ -4363,7 +4363,7 @@ object Cluster {
       // to justify K=2 over a single Gaussian: both log-likelihoods from
       // ONE scoring pass (the single-Gaussian MLE has the closed form
       // −n/2·(ln(2πσ̂²)+1), σ̂² off the same moments; the mixture ll is
-      // the ml_gmm_em scoring expression on the fitCached parameters),
+      // the ml_gmm_em scoring expression on the T.memo'd parameters),
       // then BIC = k·ln n − 2·ll with k = 2 vs 5 parameters. Output: both
       // criteria + the preferred-model flag. lnR-collapsed logs, exact
       // wire sums.
@@ -4437,7 +4437,7 @@ object Cluster {
     * step for step; each pass is one weighted-moment aggregation on the
     * exact decimal wire. */
   private def gmmEm(s: SparkSession, dir: String): (Double, Double, Double, Double, Double) =
-    T.fitCache("gmmEm", dir) {
+    T.memo("gmmEm", s, dir) {
       val spark = s
       import spark.implicits._
       val d = T.lineitem(s, dir)

@@ -263,7 +263,7 @@ object Dedup {
          FROM edges e JOIN reach ON e.dst = reach.v),
        lbl AS (SELECT v, CAST(min(r) AS BIGINT) AS lbl FROM reach GROUP BY v)"""
 
-  /** Minhash-pair connected components, SESSION-MEMOIZED (VERDICT r6 #7):
+  /** Minhash-pair connected components, MEMOIZED in T.memo (VERDICT r6 #7):
     * dedup_cluster and dedup_pipeline run the identical candidate-pair +
     * propagation computation; the fixpoint is deterministic (the unique
     * component-min labeling) and the loop's T.freeze rounds have already
@@ -271,7 +271,7 @@ object Dedup {
     * frozen labels frame instead of re-running the whole loop — the same
     * shuffle-file reuse a checkpoint gives, held for the session. */
   private def minhashLabels(s: SparkSession, dir: String): DataFrame =
-    T.frameCache("minhashLabels", s, dir) {
+    T.memo("minhashLabels", s, dir) {
       minLabelComponents(TextSim.minhashPairs(s, dir))
     }
 

@@ -31,13 +31,13 @@ object ML {
     * x = l_quantity, y = l_extendedprice. Emitted as one row of DECIMAL
     * sums; slope/intercept derive in closed form (normal equations — the
     * same system cuML's `eig` solver factorizes [R]). The row is
-    * SESSION-MEMOIZED like gram4Row (r7): four solver queries (linreg/ridge/lasso/enet 1-feature fits) start
+    * MEMOIZED in T.memo like gram4Row (r7): four solver queries (linreg/ridge/lasso/enet 1-feature fits) start
     * from the same five exact sums over lineitem, and each re-paid the
     * ~1.3 s decimal aggregation sequentially. Deterministic statistic →
     * first consumer collects, the rest rebuild the one-row frame locally
     * (the cuML client-held sufficient-statistic pattern). */
   private def olsMoments(s: SparkSession, dir: String): DataFrame = {
-    val (rows, schema) = T.fitCache("olsMoments", dir) {
+    val (rows, schema) = T.memo("olsMoments", s, dir) {
       val df = T.lineitem(s, dir).agg(
         count(lit(1)).cast("double").as("n"),
         T.xsum(col("l_quantity")).as("sx"),
@@ -190,7 +190,7 @@ object ML {
     * ×10⁶-scaled exact-long discipline as the products, and the gram cells
     * are bit-for-bit what gram64 always produced. */
   private def gramStats64(s: SparkSession, dir: String): (Array[Array[Double]], Array[Double], Long) =
-    T.fitCache("gramStats64", dir) { gramStats64Compute(s, dir) }
+    T.memo("gramStats64", s, dir) { gramStats64Compute(s, dir) }
 
   private def gramStats64Compute(s: SparkSession, dir: String): (Array[Array[Double]], Array[Double], Long) = {
     val N = 64 * 64
@@ -263,7 +263,7 @@ object ML {
     if (big) gram4Decimal(raw) else gram4Long(raw)
   }
 
-  /** The gram4 moment row as SESSION-MEMOIZED driver state (VERDICT r6 #7):
+  /** The gram4 moment row as driver state MEMOIZED in T.memo (VERDICT r6 #7):
     * eight solver queries (normal_eq, linreg_multi ×3 consumers, ridge/
     * lasso/enet multi + their predicts) each start from the SAME one-row
     * sufficient statistic over lineitem, and under the stateless-query
@@ -273,7 +273,7 @@ object ML {
     * the identical one-row frame locally — the cuML client-held
     * sufficient-statistic pattern, result-invisible. */
   private def gram4Row(s: SparkSession, dir: String): DataFrame = {
-    val (rows, schema) = T.fitCache("gram4Row", dir) {
+    val (rows, schema) = T.memo("gram4Row", s, dir) {
       val df = gram4(s, dir)
       (df.collect(), df.schema)
     }
@@ -605,7 +605,7 @@ object ML {
     s"${bits("s_rv2")} - 1e1 * e3 AS b3")
 
   private def sparseIrlsBeta(s: SparkSession, dir: String): Array[Double] =
-    T.fitCache("sparseIrlsBeta", dir) { sparseIrlsBetaCompute(s, dir) }
+    T.memo("sparseIrlsBeta", s, dir) { sparseIrlsBetaCompute(s, dir) }
 
   private def sparseIrlsBetaCompute(s: SparkSession, dir: String): Array[Double] = {
     val spark = s
@@ -825,7 +825,7 @@ object ML {
     * decimal gradient/Hessian aggregation per step (see ml_logreg_fit).
     * Returns the unrounded coefficients for predict-side reuse. */
   private def irlsBeta(s: SparkSession, dir: String): (Double, Double) =
-    T.fitCache("irlsBeta", dir) { ab(Twin.fit(logitRows(s, dir), newtonFit(3)).last) }
+    T.memo("irlsBeta", s, dir) { ab(Twin.fit(logitRows(s, dir), newtonFit(3)).last) }
 
   private def ab(p: Array[Double]): (Double, Double) = (p(0), p(1))
 
@@ -845,10 +845,10 @@ object ML {
       .transform(T.fanOut(_))
 
   /** 2 driver-held IRLS steps for the PROPENSITY e(x) = P(tr = 1 | x) —
-    * the irlsBeta fit on [[causalFrame]]'s treatment; fitCache'd so the
+    * the irlsBeta fit on [[causalFrame]]'s treatment; T.memo'd so the
     * IPW, AIPW and strata rows share one fit. */
   private def propensityBeta(s: SparkSession, dir: String): (Double, Double) =
-    T.fitCache[(Double, Double)]("propensityBeta", dir) {
+    T.memo[(Double, Double)]("propensityBeta", s, dir) {
       ab(Twin.fit(causalFrame(s, dir).selectExpr("x", "tr AS y"), newtonFit(2)).last)
     }
 
@@ -871,7 +871,7 @@ object ML {
   private lazy val l2Fit: Twin.Fit = logitFit(3, ridgeNewton, Seq("a + d0", "b + d1"))
 
   private def irlsBetaL2(s: SparkSession, dir: String): (Double, Double) =
-    T.fitCache("irlsBetaL2", dir) { ab(Twin.fit(logitRows(s, dir), l2Fit).last) }
+    T.memo("irlsBetaL2", s, dir) { ab(Twin.fit(logitRows(s, dir), l2Fit).last) }
 
   /** L1-penalized IRLS (LogisticRegression(penalty='l1') — the lasso
     * sibling of [[irlsBetaL2]], the cuML QN/OWL-QN surface): PROXIMAL
@@ -892,7 +892,7 @@ object ML {
 
   private[graft] def irlsBetaL1(s: SparkSession, dir: String,
       lam: Double = 100.0): (Double, Double) =
-    T.fitCache(s"irlsBetaL1-$lam", dir) { ab(Twin.fit(logitRows(s, dir), l1Fit(lam)).last) }
+    T.memo(s"irlsBetaL1-$lam", s, dir) { ab(Twin.fit(logitRows(s, dir), l1Fit(lam)).last) }
 
   /** Elastic-net IRLS (LogisticRegression(penalty='elasticnet') —
     * completing the cuML penalty contract {none, l1, l2, elasticnet}):
@@ -906,7 +906,7 @@ object ML {
     Seq("a + d0", "sign(braw) * greatest(abs(braw) - 1e2 / k11, 0e0) + 0e0"))
 
   private def irlsBetaEN(s: SparkSession, dir: String): (Double, Double) =
-    T.fitCache("irlsBetaEN", dir) { ab(Twin.fit(logitRows(s, dir), enFit).last) }
+    T.memo("irlsBetaEN", s, dir) { ab(Twin.fit(logitRows(s, dir), enFit).last) }
 
   /** Oracle twins of the penalized fits over the shared rows CTE `d`,
     * ending in pb3 (L2), qb3 (L1, λ = 100) and eb3 (elastic net). */
@@ -937,7 +937,7 @@ object ML {
     gauss4, Seq("e0 + x0", "e1 + x1", "e2 + x2", "e3 + x3"), 3)
 
   private def irlsMultiBeta(s: SparkSession, dir: String): Array[Double] =
-    T.fitCache("irlsMultiBeta", dir) {
+    T.memo("irlsMultiBeta", s, dir) {
       // persist the projected corpus across the 3 IRLS passes (the
       // ml_kmeans_converge discipline, r11): without it every round re-runs
       // the scan + fanOut shuffle — measured 10.6 → ~6 s at sf0.1. The
@@ -1108,13 +1108,13 @@ object ML {
     * to the IVF probe join (ml_knn_graph's shape) remains the
     * approximate-classifier option when even one linear pass is too
     * much. */
-  /** SESSION-MEMOIZED (r7): three metric queries (confusion matrix,
+  /** MEMOIZED in T.memo (r7): three metric queries (confusion matrix,
     * accuracy, per-class F1) score the same deterministic ≤EVAL_N
     * prediction set; the n·EVAL_N distance pass runs once per session and
     * the ≤EVAL_N (q_id, pred_lang) rows are driver-held after that — the
     * same client-held-model discipline as gram4Row, result-invisible. */
   private[ops] def knnPredLang(s: SparkSession, dir: String): DataFrame = {
-    val (rows, schema) = T.fitCache("knnPredLang", dir) {
+    val (rows, schema) = T.memo("knnPredLang", s, dir) {
       val df = knnPredLangCompute(s, dir)
       (df.collect(), df.schema)
     }
@@ -2931,7 +2931,7 @@ object ML {
       // ml_logreg_fit: 3 ridge-Newton steps (H + λ·diag(0,1))δ =
       // g − λ·(0, b) with λ = 10⁶, slope penalized, intercept not (the
       // sklearn/cuml convention). Emitted NEXT TO the unpenalized fit
-      // (both fitCached — the session pays each 3-pass fit once) so the
+      // (both T.memo'd — the session pays each 3-pass fit once) so the
       // shrinkage is visible and pinnable: |slope_l2| < |slope_mle|.
       // Same REAL-collapsed sigmoid + exact-wire sums discipline; both
       // chains share one rows CTE in the oracle.
@@ -3512,7 +3512,7 @@ object ML {
       // within each arm (two moment rows from ONE grouped pass), then
       // ATE = mean[T·(Y−m₁)/e + m₁] − mean[(1−T)·(Y−m₀)/(1−e) + m₀] —
       // consistent if EITHER the propensity or the outcome model is
-      // right. Propensity coefficients shared (fitCache) with the IPW
+      // right. Propensity coefficients shared (T.memo) with the IPW
       // row; e clipped identically; every reduction exact-wire.
       (s, dir) => {
         val spark = s
@@ -4079,7 +4079,7 @@ object ML {
       // sufficient statistic, components via the shared deterministic
       // 20-step power iterate + Hotelling deflation, explained-variance
       // ratios off the ascending trace fold. Driver arithmetic only —
-      // zero extra cluster passes beyond the (session-memoized) Gram.
+      // zero extra cluster passes beyond the (T.memo'd) Gram.
       // IEEE sqrt is correctly rounded in both engines, so σ is
       // bit-identical given the λ bit-identity the power/deflate rows pin.
       (s, dir) => {
@@ -5345,7 +5345,7 @@ object ML {
       // kernelized classifier next to ml_svm_hinge's linear case: lift
       // every vector to m = 3 REAL-collapsed RBF landmark features
       // (svcRows), run the same 3-step driver-held hinge subgradient loop
-      // on (a, w1..w3) (svcParams, fitCached), score in one pass. At
+      // on (a, w1..w3) (svcParams, T.memo'd), score in one pass. At
       // scale the landmark count is the model size, the lift is a map
       // pass with a broadcast model — the kernel trick without the n²
       // kernel matrix. Output: the fitted dual-free weights, hinge loss,
@@ -5390,7 +5390,7 @@ object ML {
       // hinge objective λ/2·b² + (1/n)Σ max(0, 1 − y·(a + b·x))): 3 steps,
       // each ONE conditional-sum aggregation over the margin-violating
       // rows with (a, b) DRIVER-HELD between steps (the irlsBeta shape,
-      // fitCached), then one scoring pass emits the fitted line, the final
+      // T.memo'd), then one scoring pass emits the fitted line, the final
       // hinge loss, and the support count (margin < 1). x = quantity/50,
       // y = ±1 on returnflag R. Determinism: the margin indicator compares
       // doubles both engines computed identically; every sum runs on the
@@ -5430,7 +5430,7 @@ object ML {
       // ε = 0.1. Each step is ONE conditional-sum aggregation over the
       // tube-violating rows — g0 = Σ sign(r), g1 = Σ sign(r)·x for
       // residual r = y − (a+b·x), |r| > ε — with (a, b) DRIVER-HELD
-      // between steps (fitCached); the scoring pass emits the fitted
+      // between steps (T.memo'd); the scoring pass emits the fitted
       // line, the final ε-loss, and the out-of-tube count. x = quantity
       // /50, y = extendedprice/50000 (both unit-ish; the fixed 0.1 step
       // converges). Determinism: sign() compares doubles both engines
@@ -5472,7 +5472,7 @@ object ML {
       // label), accuracy, and the positive-class rates on each side of the
       // boundary. The decision comparison is f >= 0 on doubles both
       // engines computed from the same text; counts are exact integers.
-      // fitCached: within one session the three SVM queries pay the
+      // T.memo'd: within one session the three SVM queries pay the
       // subgradient passes once.
       (s, dir) => {
         val spark = s
@@ -5578,7 +5578,7 @@ object ML {
       // start (0,0), lr = 1). The sigmoid is REAL-collapsed (the k_rbf /
       // lnR discipline) so both engines train on bit-identical per-row
       // probabilities; gradient sums ride the exact-decimal wire; (A, B)
-      // are driver-held between steps (fitCached) with update text
+      // are driver-held between steps (T.memo'd) with update text
       // mirroring the oracle CTE chain. Output: the calibration line plus
       // the audit — mean calibrated probability on each true class and
       // the final log loss (ln REAL-collapsed). Scale: 2 extra bounded
@@ -5635,7 +5635,7 @@ object ML {
       // can't be precollected — each step is one conditional-sum pass
       // over its batch (a third of the data; at scale the batch predicate
       // prunes on the partition key). (a, b) driver-held between steps
-      // (fitCached); the update is one Twin.Fit text both engines run, so
+      // (T.memo'd); the update is one Twin.Fit text both engines run, so
       // every step's coefficients are bit-identical cross-engine. Output:
       // the per-step coefficient trail + the final model's training
       // accuracy from one full scoring pass.
@@ -6002,13 +6002,13 @@ object ML {
 
   /** Driver-held minibatch-hinge trail: (a, b) after each of 3 steps,
     * step k reading only batch k−1 — the svmAB fit with the batch filter,
-    * the step counter `k` riding as a parameter. fitCached. */
+    * the step counter `k` riding as a parameter. T.memo'd. */
   private lazy val mbsgdClsFit: Twin.Fit = Twin.Fit(
     Seq("a" -> 0.0, "b" -> 0.0, "k" -> 0.0), hingeRows, hingeSums, Nil,
     sgdNext :+ "k + 1e0", 3, where = Some("b3 = k"))
 
   private def mbsgdClsTrail(s: SparkSession, dir: String): Seq[(Double, Double)] =
-    T.fitCache("mbsgdClsTrail", dir) {
+    T.memo("mbsgdClsTrail", s, dir) {
       Twin.fit(svmRows2(s, dir).toDF("b3", "x", "y"), mbsgdClsFit).map(ab)
     }
 
@@ -6030,7 +6030,7 @@ object ML {
       .transform(T.fanOut(_))
 
   /** 3 driver-held ε-insensitive subgradient steps (lr = 0.1, λ = 0.01,
-    * ε = 0.1), fitCached: the hinge update with g0 = Σ_{|r|>ε} sign(r),
+    * ε = 0.1), T.memo'd: the hinge update with g0 = Σ_{|r|>ε} sign(r),
     * g1 = Σ_{|r|>ε} sign(r)·x for the residual r = y − (a + b·x). */
   private lazy val svrFit: Twin.Fit = Twin.Fit(
     Seq("a" -> 0.0, "b" -> 0.0), Seq("r" -> "y - (a + b * x)"),
@@ -6040,7 +6040,7 @@ object ML {
     Nil, sgdNext, 3)
 
   private def svrAB(s: SparkSession, dir: String): (Double, Double) =
-    T.fitCache("svrAB", dir) { ab(Twin.fit(svrRows(s, dir).toDF("x", "y"), svrFit).last) }
+    T.memo("svrAB", s, dir) { ab(Twin.fit(svrRows(s, dir).toDF("x", "y"), svrFit).last) }
 
   /** Oracle twin of [[svrAB]] with its rows CTE `d`, ending in b3(a, b). */
   private lazy val sqlSvrChain: String =
@@ -6057,12 +6057,12 @@ object ML {
       when(col("l_returnflag") === "R", 1.0).otherwise(-1.0).as("cy"))
       .transform(T.fanOut(_))
 
-  /** 3 driver-held hinge subgradient steps, fitCached. */
+  /** 3 driver-held hinge subgradient steps, T.memo'd. */
   private lazy val svmFit: Twin.Fit =
     Twin.Fit(Seq("a" -> 0.0, "b" -> 0.0), hingeRows, hingeSums, Nil, sgdNext, 3)
 
   private def svmAB(s: SparkSession, dir: String): (Double, Double) =
-    T.fitCache("svmAB", dir) { ab(Twin.fit(svmRows(s, dir).toDF("x", "y"), svmFit).last) }
+    T.memo("svmAB", s, dir) { ab(Twin.fit(svmRows(s, dir).toDF("x", "y"), svmFit).last) }
 
   /** Oracle twin of [[svmAB]] with its rows CTE `d`, ending in b3(a, b). */
   private lazy val sqlSvmChain: String =
@@ -6075,7 +6075,7 @@ object ML {
     * f = sa + sb·x (lr = 1, start (0,0)): A ← A + (Σ(t − p))/n,
     * B ← B + (Σ(t − p)·f)/n with t = (y+1)/2, p = σ(A + B·f)
     * REAL-collapsed per row. The SVM line (sa, sb) rides as a fixed
-    * input. fitCached. */
+    * input. T.memo'd. */
   private lazy val plattFit: Twin.Fit = Twin.Fit(
     Seq("sa" -> 0.0, "sb" -> 0.0, "pa" -> 0.0, "pb" -> 0.0),
     Seq("t" -> "(y + 1e0) / 2", "f" -> "sa + sb * x", "p" -> sigmoidR("pa + pb * f")),
@@ -6083,7 +6083,7 @@ object ML {
     Nil, Seq("sa", "sb", "pa + 1e0 * (g0 / n)", "pb + 1e0 * (g1 / n)"), 2)
 
   private def plattAB(s: SparkSession, dir: String): (Double, Double) =
-    T.fitCache("plattAB", dir) {
+    T.memo("plattAB", s, dir) {
       val (a, b) = svmAB(s, dir)
       val p = Twin.fit(svmRows(s, dir).toDF("x", "y"),
         plattFit.copy(params = Seq("sa" -> a, "sb" -> b, "pa" -> 0.0, "pb" -> 0.0))).last
@@ -6140,7 +6140,7 @@ object ML {
 
   /** 3 driver-held subgradient steps on the landmark-feature hinge
     * objective (lr = 2.0, λ = 0.01) — the svmAB fit lifted to 4
-    * parameters; fitCached. */
+    * parameters; T.memo'd. */
   private lazy val svcFit: Twin.Fit = Twin.Fit(
     Seq("a" -> 0.0, "w1" -> 0.0, "w2" -> 0.0, "w3" -> 0.0),
     Seq("m" -> "y * (a + w1 * f1 + w2 * f2 + w3 * f3)"),
@@ -6150,7 +6150,7 @@ object ML {
     "a + 2e0 * (g0 / n)" +: (1 to 3).map(j => s"w$j + 2e0 * (g$j / n - 1e-2 * w$j)"), 3)
 
   private def svcParams(s: SparkSession, dir: String): (Double, Double, Double, Double) =
-    T.fitCache("svcRbf", dir) {
+    T.memo("svcRbf", s, dir) {
       val Array(a, w1, w2, w3) = Twin.fit(svcRows(s, dir), svcFit).last
       (a, w1, w2, w3)
     }
@@ -6249,7 +6249,7 @@ object ML {
       "car - 5e-3 * gar / cnt", "cbr - 5e-3 * gbr / cnt"), 3)
 
   private def softmaxBeta(s: SparkSession, dir: String): Array[Double] =
-    T.fitCache("softmaxBeta", dir) {
+    T.memo("softmaxBeta", s, dir) {
       Twin.fit(T.lineitem(s, dir).select(
         col("l_quantity").cast("double").as("q"),
         when(col("l_returnflag") === "N", 1.0).otherwise(0.0).as("yn"),

@@ -197,9 +197,9 @@ object Pipeline {
     * so ml_index_pq_save_load can roundtrip the SAME artifacts through
     * parquet. cb1: (m, code, j, c); codes: (n_id, m, code). */
   private[graft] def pqTrain(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    // session-memoized pinned (the r13 shared-frame discipline): both PQ
+    // T.memo'd pinned (the r13 shared-frame discipline): both PQ
     // rows train the same codebooks; the second consumer pays nothing
-    T.frameCache("pqTrainPinned", s, dir) {
+    T.memo("pqTrainPinned", s, dir) {
       val (cb, cd) = pqTrainCompute(s, dir)
       (T.pin(cb), T.pin(cd))
     }

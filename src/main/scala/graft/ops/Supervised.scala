@@ -231,7 +231,7 @@ object Supervised {
     * per-family (their node tagging depends on each family's own
     * level-1 winners). */
   private def rfL1Moments(s: SparkSession, dir: String): DataFrame =
-    T.frameCache("rfL1Moments", s, dir) {
+    T.memo("rfL1Moments", s, dir) {
       val spark = s
       import spark.implicits._
       val cands = grid.toDF("feature", "thrs")
@@ -267,7 +267,7 @@ object Supervised {
     * winners re-enter the level-2 pass as exact literals (the collect
     * feeds the memo anyway), so neither pass executes twice. */
   private[ops] def rfStats(s: SparkSession, dir: String): Array[Split] =
-    T.fitCache("rfStats", dir) {
+    T.memo("rfStats", s, dir) {
       val spark = s
       import spark.implicits._
       val cands = grid.toDF("feature", "thrs")
@@ -340,7 +340,7 @@ object Supervised {
     * integer sums, so their values are bit-identical to the raw-row
     * scans they replace. */
   private[ops] def rfScoreHist(s: SparkSession, dir: String): DataFrame =
-    T.frameCache("rfScoreHist", s, dir) {
+    T.memo("rfScoreHist", s, dir) {
       val code = rfTrees(s, dir).map {
         case (sh, f1, t1, f2l, t2l, _, _, f2r, t2r, _, _) =>
           s"""(CASE WHEN ${xOf(f1)} <= $t1
@@ -362,7 +362,7 @@ object Supervised {
     * tree, which each re-ran the same recursion before r14. Same
     * exact-values-only contract as [[rfStats]]. */
   private[ops] def treeStats(s: SparkSession, dir: String): Array[Split] =
-    T.fitCache("treeD2Stats", dir) {
+    T.memo("treeD2Stats", s, dir) {
       val spark = s
       import spark.implicits._
       val cands = grid.toDF("feature", "thrs")
@@ -1087,7 +1087,7 @@ object Supervised {
         val spark = s
         import spark.implicits._
         val trees: Array[(Int, String, String, String, String, String, String, String, String, String, String)] =
-          T.fitCache("rfRegTrees2", dir) {
+          T.memo("rfRegTrees2", s, dir) {
             val cands = grid.toDF("feature", "thrs")
               .select(col("feature"), col("thrs").cast("double").as("thr"))
             val sharded = featsR(s, dir).withColumn("shard", expr(shardExpr))

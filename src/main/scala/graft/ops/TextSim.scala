@@ -38,7 +38,7 @@ object TextSim {
     * rows, different partitioning: every consumer aggregates on exact
     * wires, so values are unchanged. */
   private[ops] def docTermsPinned(s: SparkSession, dir: String): DataFrame =
-    T.frameCache("docTermsPinned", s, dir) {
+    T.memo("docTermsPinned", s, dir) {
       T.pin(T.documents(s, dir).transform(T.fanOut(_, col("doc_id")))
         .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
         .where(col("term") =!= ""))
@@ -54,12 +54,12 @@ object TextSim {
     * = 0; per-term addends are shared-text doubles from exact integers and
     * the per-pair sum rides the DECIMAL(30,12) wire (see text_bm25_rank's
     * docstring for the scoring contract). */
-  /** Session-memoized pinned word-trigram stream (doc_id, term) — the
+  /** T.memo'd pinned word-trigram stream (doc_id, term) — the
     * shared index base of the retrieval trio (text_sparse_search /
     * text_bm25_rank / text_rrf_fusion); each was re-exploding the corpus
     * per run (r13, the tidsDistinctPinned discipline). */
   private[ops] def wordTrigramsPinned(s: SparkSession, dir: String): DataFrame =
-    T.frameCache("wordTrigramsPinned", s, dir) {
+    T.memo("wordTrigramsPinned", s, dir) {
       T.pin(T.documents(s, dir)
         .transform(T.fanOut(_, col("doc_id")))
         .select(col("doc_id"),
@@ -72,7 +72,7 @@ object TextSim {
     }
 
   private[ops] def bm25Scored(s: SparkSession, dir: String): DataFrame =
-    T.frameCache("bm25ScoredPinned", s, dir) { T.pin(bm25ScoredCompute(s, dir)) }
+    T.memo("bm25ScoredPinned", s, dir) { T.pin(bm25ScoredCompute(s, dir)) }
 
   private def bm25ScoredCompute(s: SparkSession, dir: String): DataFrame = {
     val grams = wordTrigramsPinned(s, dir)
@@ -164,7 +164,7 @@ object TextSim {
   private[ops] def sigTable(s: SparkSession, dir: String): DataFrame =
     sigTableOf(shingleTids(s, dir))
 
-  /** Session-memoized PINNED distinct shingle table (r13): the 20M-row
+  /** T.memo'd PINNED distinct shingle table (r13): the 20M-row
     * explode + distinct is the single most expensive shared pass in the
     * dedup family — dedup_lsh_band_sweep, dedup_minhash_accuracy, and
     * (via [[minhashPairs]]) every dedup-graph row were each paying it.
@@ -172,13 +172,13 @@ object TextSim {
     * invariant, so signatures from the distinct table are bit-identical
     * to signatures from the raw stream. */
   private[ops] def tidsDistinctPinned(s: SparkSession, dir: String): DataFrame =
-    T.frameCache("tidsDistinctPinned", s, dir) {
+    T.memo("tidsDistinctPinned", s, dir) {
       T.pin(shingleTids(s, dir).distinct())
     }
 
-  /** Session-memoized pinned signature table over [[tidsDistinctPinned]]. */
+  /** T.memo'd pinned signature table over [[tidsDistinctPinned]]. */
   private[ops] def sigTablePinned(s: SparkSession, dir: String): DataFrame =
-    T.frameCache("sigTablePinned", s, dir) {
+    T.memo("sigTablePinned", s, dir) {
       T.pin(sigTableOf(tidsDistinctPinned(s, dir)))
     }
 
@@ -219,7 +219,7 @@ object TextSim {
     * the chain is the cost. localCheckpoint blocks hold it for the
     * session. */
   private[ops] def minhashPairs(s: SparkSession, dir: String): DataFrame =
-    T.frameCache("minhashPairsPinned", s, dir) {
+    T.memo("minhashPairsPinned", s, dir) {
       T.pin(minhashPairsOf(sigTablePinned(s, dir)))
     }
 

@@ -10,7 +10,7 @@ import scala.jdk.CollectionConverters._
   * task listener or main in `src/main`, and no environment knob beyond the
   * four the mains document. Also pins [[Twin]] as the one renderer of the
   * shared-text step lists, and [[Tables]] as the one reader of fixture
-  * paths. */
+  * paths and the owner of the one session memo. */
 class HarnessSpec extends SparkSpec {
 
   test("conf: Bench's settings, key by key") {
@@ -83,6 +83,13 @@ class HarnessSpec extends SparkSpec {
     // schema and pay a schema-inference Spark job per read
     for (needle <- Seq("read.parquet(s\"$dir/", "read.parquet(s\"$sfDir/"))
       assert(filesWith(needle) subsetOf Set("graft/Tables.scala"), s"$needle outside Tables")
+  }
+
+  test("structure: one session memo, and Tables owns its future and the pin") {
+    for (gone <- Seq("fitCache", "frameCache", "sessionIds", "fitCacheClear"))
+      assert(filesWith(gone) === Set.empty[String], s"$gone is back")
+    for (needle <- Seq("CompletableFuture", ".localCheckpoint("))
+      assert(filesWith(needle) === Set("graft/Tables.scala"), s"$needle outside Tables")
   }
 
   test("structure: the mains read exactly four SPARK_GRAFT_ knobs") {
