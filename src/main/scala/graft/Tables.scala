@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import graft.functions.Fixed
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
@@ -290,13 +291,28 @@ object Tables {
 
   // --- determinism helpers (SURVEY.md §7.3) -------------------------------
   // Raw sum(DOUBLE) is summation-order-dependent and can't hash-match across
-  // engines/partitionings. Per-row cast to DECIMAL(18,4) → exact decimal sum
-  // → DOUBLE is order-proof and identical in Spark and DuckDB.
+  // engines/partitionings. Per-row cast to DECIMAL(p, s) → exact decimal sum
+  // is order-proof and identical in Spark and DuckDB. Every Spark-side exact
+  // sum goes through these helpers, which run it on the fixed-point kernel
+  // (graft.functions.Fixed): for a DOUBLE input its result type, value and
+  // error conditions are those of `sum(CAST(x AS DECIMAL(p, s)))`, without
+  // per-row BigDecimal work. Its loud bounds, raised as the cast-and-sum
+  // raises them:
+  //  - per row: |x| ≥ 10^(p−s) raises the cast's NUMERIC_VALUE_OUT_OF_RANGE
+  //    (10¹⁸ for xsum, 10¹⁴ for dsum, 10²⁶ for sumE12);
+  //  - per sum: a running sum that reaches ±10^(P−s) of the DECIMAL(P, s)
+  //    result (10²⁶ for xsum, 10²⁴ for dsum, 10²⁶ for sumE12) raises
+  //    ARITHMETIC_OVERFLOW in every shape, as a grouped sum does;
+  //  - NaN and ±∞ cast to null and are skipped, as by the cast-and-sum.
+  // There is no row-count bound: the buffer is a checked 128-bit integer.
 
   val money: DecimalType = DecimalType(18, 4)
 
   /** Exact cross-engine sum of a double column. */
-  def dsum(c: Column): Column = sum(c.cast(money)).cast(DoubleType)
+  def dsum(c: Column): Column = dsumD(c).cast(DoubleType)
+
+  /** [[dsum]] kept as its DECIMAL(28,4). */
+  def dsumD(c: Column): Column = Fixed.sum(c, money)
 
   /** Deterministic mean to 6 dp (exact decimal sum / count). */
   def davg(c: Column): Column = round(dsum(c) / count(lit(1)), 6)
@@ -306,20 +322,17 @@ object Tables {
   def sqlDavg(e: String): String = s"round(${sqlDsum(e)} / count(*), 6)"
 
   /** High-precision exact sum for ML normal-equation cross-products, where
-    * values like discount*tax (~1e-3) would vanish at 4 dp. DECIMAL(30,12)
-    * leaves 18 integer digits — ample for sums of per-row products at any
-    * tested SF (and the 100 TB layout would shard these sums per partition
-    * key anyway).
-    */
+    * values like discount*tax (~1e-3) would vanish at 4 dp: 12 decimals,
+    * per-row |x| < 10¹⁸, sum |Σ| < 10²⁶ (the bounds above). */
   val exact: DecimalType = DecimalType(30, 12)
-  def xsum(c: Column): Column = sum(c.cast(exact)).cast(DoubleType)
+  def xsum(c: Column): Column = xsumD(c).cast(DoubleType)
   def sqlXsum(e: String): String = s"CAST(sum(CAST(($e) AS DECIMAL(30,12))) AS DOUBLE)"
 
   /** Exact sum kept as DECIMAL (no double cast): for outputs compared
     * directly, DuckDB's int128-decimal→double conversion is off by ulps on
     * large magnitudes, so the decimal itself is the only safe wire type.
     * Both engines widen sum(DECIMAL(30,12)) to DECIMAL(38,12). */
-  def xsumD(c: Column): Column = sum(c.cast(exact))
+  def xsumD(c: Column): Column = Fixed.sum(c, exact)
   def sqlXsumD(e: String): String = s"sum(CAST(($e) AS DECIMAL(30,12)))"
 
   /** BIT-IDENTICAL exact-sum wire for doubles at 12 dp (r6 second half,
@@ -334,8 +347,7 @@ object Tables {
     * split — the SAME IEEE op sequence in both engines, so the result
     * bits cannot differ. Addends below 10⁻¹² truncate identically on
     * both sides. */
-  def sumE12(c: Column): Column =
-    sum((c * lit(1.0e12)).cast(DecimalType(38, 0)))
+  def sumE12(c: Column): Column = Fixed.sum(c * lit(1.0e12), DecimalType(38, 0))
 
   /** selectExpr fragment converting a [[sumE12]] column to DOUBLE (Spark
     * spelling: `div` on DECIMAL(38,0) is integral division). */
@@ -345,40 +357,6 @@ object Tables {
   /** DuckDB twin of [[sumE12]]. */
   def sqlSumE12(e: String): String =
     s"sum(CAST(($e) * 1000000000000.0 AS DECIMAL(38,0)))"
-
-  /** Long-lane [[sumE12]] for SMALL-MAGNITUDE addends (r11 — found by the
-    * 28 s ml_logreg_multi fit): the decimal wire's per-row
-    * double→DECIMAL(38,0) cast + BigDecimal add is the whole cost of a
-    * 14-sum IRLS pass (measured 4.7 s vs 0.9 s for raw double sums at
-    * sf0.1). Same 12-dp fixed-point contract and the same DECIMAL(38,0)
-    * output (drop-in ahead of [[bitsE12]]), but the per-row work is two
-    * LONG lanes: v = round(c·10¹²) as BIGINT, lo = v % 10⁸ (dividend
-    * sign), hi = (v − lo)/10⁸ (an exact multiple of 10⁸ ≤ 2⁵³, so the
-    * double division is exact) — all codegen'd primitive ops; the single
-    * decimal reconstruction hi·10⁸ + lo runs once per GROUP. Tie-rounding
-    * (round = ties away from zero in both engines) can differ from the
-    * decimal cast's by 1 ulp at exact .5 addends — legal inside the
-    * shared-text contract because BOTH engines run this identical text.
-    * EXACTNESS BOUNDS (the price of the speed): |addend| < ~9·10³ (so
-    * |v| < 2⁵³) and < ~9·10¹⁰ rows per aggregation group (lane-sum
-    * headroom). Fit passes over bounded features (logistic weights
-    * w ≤ ¼, q ≤ 50, d/t ≤ 0.11) sit far inside both; larger magnitudes
-    * (price cross-products) or unbounded groups stay on [[sumE12]]. */
-  def sumE12L(c: Column): Column = {
-    val v = round(c * lit(1.0e12), 0).cast(LongType)
-    val lo = v % lit(100000000L)
-    val hi = ((v - lo) / lit(100000000L)).cast(LongType)
-    (sum(hi).cast(DecimalType(38, 0)) * lit(100000000L)
-      + sum(lo).cast(DecimalType(38, 0))).cast(DecimalType(38, 0))
-  }
-
-  /** DuckDB twin of [[sumE12L]] — shared structure (sum(BIGINT) is
-    * HUGEINT in DuckDB; the DECIMAL(38,0) casts meet at the same type). */
-  def sqlSumE12L(e: String): String = {
-    val v = s"CAST(round(($e) * 1000000000000.0) AS BIGINT)"
-    s"CAST(CAST(sum(CAST(($v - ($v % 100000000)) / 100000000 AS BIGINT)) AS DECIMAL(38,0)) * 100000000" +
-      s" + CAST(sum($v % 100000000) AS DECIMAL(38,0)) AS DECIMAL(38,0))"
-  }
 
   /** DuckDB twin of [[bitsE12]] — `//` on DECIMAL is TRUE division in
     * DuckDB (the r6 holdout gotcha), so route through HUGEINT; both

@@ -86,15 +86,12 @@ object Twin {
   case object XSum extends Wire
   /** The bit-identical 12-dp integer wire ([[Tables.sumE12]]). */
   case object E12 extends Wire
-  /** Its long-lane form for small addends ([[Tables.sumE12L]]). */
-  case object E12L extends Wire
   /** The row count as DOUBLE (the sum's text is unused). */
   case object Count extends Wire
 
   final case class Sum(name: String, wire: Wire, text: String)
   def xsum(name: String, text: String): Sum = Sum(name, XSum, text)
   def e12(name: String, text: String): Sum = Sum(name, E12, text)
-  def e12l(name: String, text: String): Sum = Sum(name, E12L, text)
   def count(name: String): Sum = Sum(name, Count, "")
 
   /** A driver-held iterative fit, declared once for both engines.
@@ -173,14 +170,12 @@ object Twin {
   private def sparkSum(s: Sum): Column = s.wire match {
     case XSum => T.xsum(expr(s.text)).as(s.name)
     case E12 => T.sumE12(expr(s.text)).as(s"s_${s.name}")
-    case E12L => T.sumE12L(expr(s.text)).as(s"s_${s.name}")
     case Count => countRows(lit(1)).cast(DoubleType).as(s.name)
   }
 
   private def sqlSum(s: Sum): String = s.wire match {
     case XSum => s"${T.sqlXsum(s.text)} AS ${s.name}"
     case E12 => s"${T.sqlSumE12(s.text)} AS s_${s.name}"
-    case E12L => s"${T.sqlSumE12L(s.text)} AS s_${s.name}"
     case Count => s"CAST(count(*) AS DOUBLE) AS ${s.name}"
   }
 
@@ -188,7 +183,7 @@ object Twin {
     * through the engine's bits splitter ([[Tables.bitsE12]] /
     * [[Tables.sqlBitsE12]]). */
   private def decode(s: Sum, bits: String => String): String = s.wire match {
-    case E12 | E12L => s"${bits(s"s_${s.name}")} AS ${s.name}"
+    case E12 => s"${bits(s"s_${s.name}")} AS ${s.name}"
     case XSum | Count => s.name
   }
 }

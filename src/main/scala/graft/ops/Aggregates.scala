@@ -473,9 +473,9 @@ object Aggregates {
         binned
           .select(col("bin"), col("n"), col("brev"),
             sum(col("n")).over(wc).as("cumn"),
-            sum(col("brev").cast(T.money)).over(wc).cast("double").as("cumr"),
+            T.dsumD(col("brev")).over(wc).cast("double").as("cumr"),
             sum(col("n")).over(wg).as("tn"),
-            sum(col("brev").cast(T.money)).over(wg).cast("double").as("tr"))
+            T.dsumD(col("brev")).over(wg).cast("double").as("tr"))
           .selectExpr("bin", "n",
             "CAST(cumn AS DOUBLE) / tn AS pop_share",
             "cumr / tr AS rev_share",
@@ -483,7 +483,7 @@ object Aggregates {
           .select(col("bin"), col("n"),
             round(col("pop_share"), 6).as("pop_share"),
             round(col("rev_share"), 6).as("rev_share"),
-            sum(col("trap").cast(T.exact)).over(Window.partitionBy())
+            T.xsumD(col("trap")).over(Window.partitionBy())
               .cast("double").as("_s"))
           .selectExpr("bin", "n", "pop_share", "rev_share",
             "round(1e0 - _s, 6) AS gini")
@@ -540,7 +540,7 @@ object Aggregates {
           .rangeBetween(-3600L * 1000000L, 0)
         e.select(col("user_id"), col("event_id"),
             count(lit(1)).over(w).as("n_trailing_1h"),
-            sum(col("value").cast(T.money)).over(w).cast("double").as("sum_trailing_1h"))
+            T.dsumD(col("value")).over(w).cast("double").as("sum_trailing_1h"))
           .orderBy("user_id", "event_id")
       },
       Some("""SELECT user_id, event_id,
@@ -563,7 +563,7 @@ object Aggregates {
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         T.orders(s, dir)
           .select(col("o_custkey"), col("o_orderkey"),
-            sum(col("o_totalprice").cast(T.money)).over(w).cast("double").as("running_rev"))
+            T.dsumD(col("o_totalprice")).over(w).cast("double").as("running_rev"))
           .orderBy("o_custkey", "o_orderkey")
       },
       Some("""SELECT o_custkey, o_orderkey,

@@ -534,11 +534,11 @@ object Behavior {
         val wc = Window.partitionBy("w", "b").orderBy("t")
           .rowsBetween(Window.unboundedPreceding, 0)
         val rs = blk
-          .withColumn("mb", sum(col("y").cast(T.exact)).over(wb).cast("double") / col("w"))
-          .withColumn("z", sum((col("y") - col("mb")).cast(T.exact)).over(wc).cast("double"))
+          .withColumn("mb", T.xsumD(col("y")).over(wb).cast("double") / col("w"))
+          .withColumn("z", T.xsumD(col("y") - col("mb")).over(wc).cast("double"))
           .withColumn("r", max(col("z")).over(wb) - min(col("z")).over(wb))
           .withColumn("s2",
-            sum(((col("y") - col("mb")) * (col("y") - col("mb"))).cast(T.exact))
+            T.xsumD((col("y") - col("mb")) * (col("y") - col("mb")))
               .over(wb).cast("double") / col("w"))
           .where(col("t") % col("w") === 0 && col("s2") > 0)
           .selectExpr("w", "r / sqrt(s2) AS rs")
@@ -820,8 +820,8 @@ object Behavior {
         val wCum = Window.orderBy("day")
           .rowsBetween(Window.unboundedPreceding, 0)
         daily.crossJoin(broadcast(m))
-          .withColumn("ph", sum(expr("CAST(y AS DOUBLE) - mu - sig / 1e1")
-            .cast(T.exact)).over(wCum).cast("double"))
+          .withColumn("ph", T.xsumD(expr("CAST(y AS DOUBLE) - mu - sig / 1e1"))
+            .over(wCum).cast("double"))
           .withColumn("phmin", min(col("ph")).over(wCum))
           .selectExpr("day", "ph - phmin AS exc", "3e0 * sig AS lambda")
           .agg(count(lit(1)).as("n_days"),

@@ -472,16 +472,14 @@ object Boost {
             "CAST(poslR AS DOUBLE) / nlR AS prl",
             "CAST(posR - poslR AS DOUBLE) / (nR - nlR) AS prr")
         // r14 wire swap (the PQ-train precedent): the 22 coalition sums
-        // add leaf PROBABILITIES ∈ [0,1] over corpus-sized groups — far
-        // inside sumE12L's |addend| < 9e3 / 9e10-rows bounds — and the
-        // per-row DECIMAL(30,12) cast × 22 columns was most of this
-        // scan's cost. Both engines swap to the identical long-lane text.
+        // add leaf PROBABILITIES ∈ [0,1] on the 12-dp integer wire
+        // (sumE12); both engines run the identical text.
         val vAggs = Seq(count(lit(1)).cast("double").as("nd"),
-          T.sumE12L(expr(treeVal("q", "d", "t"))).as("vs_0")) ++
+          T.sumE12(expr(treeVal("q", "d", "t"))).as("vs_0")) ++
           shapPoints.flatMap { p =>
             (1 to 7).map { m =>
               val (qa, da, ta) = shapArgs(p, m)
-              T.sumE12L(expr(treeVal(qa, da, ta))).as(s"vs_${p._1}_$m")
+              T.sumE12(expr(treeVal(qa, da, ta))).as(s"vs_${p._1}_$m")
             }
           }
         val mom = fr.crossJoin(broadcast(tree)).agg(vAggs.head, vAggs.tail: _*)
@@ -507,11 +505,11 @@ object Boost {
       Some {
         val vCtes =
           s"""mom AS (SELECT CAST(count(*) AS DOUBLE) AS nd,
-               ${T.sqlSumE12L(treeVal("q", "d", "t"))} AS vs_0,
+               ${T.sqlSumE12(treeVal("q", "d", "t"))} AS vs_0,
                ${shapPoints.flatMap { p =>
                  (1 to 7).map { m =>
                    val (qa, da, ta) = shapArgs(p, m)
-                   s"${T.sqlSumE12L(treeVal(qa, da, ta))} AS vs_${p._1}_$m"
+                   s"${T.sqlSumE12(treeVal(qa, da, ta))} AS vs_${p._1}_$m"
                  }
                }.mkString(",\n               ")}
              FROM l CROSS JOIN tree)"""

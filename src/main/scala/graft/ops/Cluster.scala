@@ -108,7 +108,7 @@ object Cluster {
     val w = knn
       .withColumn("rho", min(col("d")).over(rw))
       .withColumn("sig", greatest(
-        sum((col("d") - col("rho")).cast(T.exact)).over(rw)
+        T.xsumD(col("d") - col("rho")).over(rw)
           .cast("double") / lit(3.0), lit(1e-9)))
       .select(col("id"), col("jid"),
         expr("CAST(CAST(exp(-(d - rho) / sig) AS FLOAT) AS DOUBLE)").as("w"))
@@ -134,7 +134,7 @@ object Cluster {
     val b = e.select(col("id").as("jid"), col("emb").as("jemb"))
     val wi = Window.partitionBy(col("id"))
     def xs(c: org.apache.spark.sql.Column) =
-      sum(c.cast(T.exact)).over(wi).cast("double")
+      T.xsumD(c).over(wi).cast("double")
     val base = e.crossJoin(broadcast(b)).where(col("id") =!= col("jid"))
       .select(col("id"), col("jid"),
         graft.functions.Vec.l2(s, "emb", "jemb").as("dd"))
@@ -1738,7 +1738,7 @@ object Cluster {
         val w = knn
           .withColumn("rho", min(col("d")).over(rw))
           .withColumn("sig", greatest(
-            sum((col("d") - col("rho")).cast(T.exact)).over(rw)
+            T.xsumD(col("d") - col("rho")).over(rw)
               .cast("double") / lit(3.0), lit(1e-9)))
           .select(col("id"), col("xj"), col("yj"),
             expr("CAST(CAST(exp(-(d - rho) / sig) AS FLOAT) AS DOUBLE)").as("w"))
@@ -2646,7 +2646,7 @@ object Cluster {
           .selectExpr("i", "p", "xi", "yi", "xj", "yj",
             "1e0 / (1e0 + (xi - xj) * (xi - xj) + (yi - yj) * (yi - yj)) AS w")
           .withColumn("bigw",
-            sum(col("w").cast(T.exact)).over(wt).cast("double"))
+            T.xsumD(col("w")).over(wt).cast("double"))
           .selectExpr("i",
             "4e0 * (p - w / bigw) * w * (xi - xj) AS gx",
             "4e0 * (p - w / bigw) * w * (yi - yj) AS gy")
@@ -2712,7 +2712,7 @@ object Cluster {
           .selectExpr("p",
             "1e0 / (1e0 + (xi - xj) * (xi - xj) + (yi - yj) * (yi - yj)) AS w")
           .withColumn("bigw",
-            sum(col("w").cast(T.exact)).over(wt).cast("double"))
+            T.xsumD(col("w")).over(wt).cast("double"))
           .selectExpr("p",
             "p * CAST(CAST(ln(p / (w / bigw)) AS FLOAT) AS DOUBLE) AS klt")
           .agg(count(lit(1)).as("n_pairs"),
@@ -2898,7 +2898,7 @@ object Cluster {
             .selectExpr("i", "p", "xi", "yi", "xj", "yj",
               "1e0 / (1e0 + (xi - xj) * (xi - xj) + (yi - yj) * (yi - yj)) AS w")
             .withColumn("bigw",
-              sum(col("w").cast(T.exact)).over(wt).cast("double"))
+              T.xsumD(col("w")).over(wt).cast("double"))
           val g = jd
             .selectExpr("i",
               "4e0 * (p - w / bigw) * w * (xi - xj) AS gx",
@@ -3321,13 +3321,13 @@ object Cluster {
             "1e0 / (1e-6 + (x - cx) * (x - cx) + (y - cy) * (y - cy)) AS wgt")
         val wv = Window.partitionBy(col("v"))
         val mm = mem
-          .withColumn("wsum", sum(col("wgt").cast(T.exact)).over(wv).cast("double"))
+          .withColumn("wsum", T.xsumD(col("wgt")).over(wv).cast("double"))
           .selectExpr("v", "flat", "c", "wgt / wsum AS m")
         val ow = Window.partitionBy(col("v")).orderBy(col("m").desc, col("c"))
         mm.withColumn("rn", row_number().over(ow))
           .withColumn("ent", sum(
-            expr("CAST(-m * CAST(CAST(ln(m) AS FLOAT) AS DOUBLE) AS DECIMAL(30,12))")
-          ).over(wv).cast("double"))
+            expr("CAST(-m * CAST(CAST(ln(m) AS FLOAT) AS DOUBLE) AS DECIMAL(30,12))"))
+          .over(wv).cast("double"))
           .where(col("rn") === 1)
           .selectExpr("v", "flat", "c AS top_cluster",
             "round(m, 6) AS m_top", "round(ent, 6) AS entropy")

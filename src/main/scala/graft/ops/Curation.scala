@@ -664,7 +664,7 @@ object Curation {
         val seeds = edges.select(col("src").as("v")).distinct()
           .where(col("v") % BFS_SEED_MOD === 0)
           .orderBy("v").limit(3)
-        var lab = T.freeze(broadcast(seeds)
+        var lab = T.freeze(seeds
           .select(col("v"), col("v").as("seed"), lit(0).as("dist")))
         for (k <- 1 to 3) {
           val frontier = lab.where(col("dist") === k - 1)

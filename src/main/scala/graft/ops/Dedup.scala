@@ -1312,7 +1312,7 @@ object Dedup {
             "CAST(ss AS DOUBLE) / CAST(nn AS DOUBLE) AS mean_all", "nn")
           .withColumn("gg", count(lit(1)).over(w).cast("double"))
           .withColumn("loobar",
-            (sum(col("loo").cast(T.exact)).over(w).cast("double") / col("gg")))
+            (T.xsumD(col("loo")).over(w).cast("double") / col("gg")))
           .agg(first(col("nn")).as("n"),
             first(col("gg")).cast("int").as("g_buckets"),
             round(first(col("mean_all")), 6).as("mean"),

@@ -368,11 +368,11 @@ object Diagnostics {
             T.xsum(col("y") * col("y")).as("syy"))
         val w = Window.partitionBy()
         m.withColumn("tn", sum(col("n")).over(w))
-          .withColumn("tsx", sum(col("sx").cast(T.exact)).over(w).cast("double"))
-          .withColumn("tsy", sum(col("sy").cast(T.exact)).over(w).cast("double"))
-          .withColumn("tsxx", sum(col("sxx").cast(T.exact)).over(w).cast("double"))
-          .withColumn("tsxy", sum(col("sxy").cast(T.exact)).over(w).cast("double"))
-          .withColumn("tsyy", sum(col("syy").cast(T.exact)).over(w).cast("double"))
+          .withColumn("tsx", T.xsumD(col("sx")).over(w).cast("double"))
+          .withColumn("tsy", T.xsumD(col("sy")).over(w).cast("double"))
+          .withColumn("tsxx", T.xsumD(col("sxx")).over(w).cast("double"))
+          .withColumn("tsxy", T.xsumD(col("sxy")).over(w).cast("double"))
+          .withColumn("tsyy", T.xsumD(col("syy")).over(w).cast("double"))
           .selectExpr("h", "n", "tn",
             s"${ssrTxt("n", "sx", "sy", "sxx", "sxy", "syy")} AS ssr_h",
             s"${ssrTxt("tn", "tsx", "tsy", "tsxx", "tsxy", "tsyy")} AS ssr_p")
@@ -644,8 +644,8 @@ object Diagnostics {
             T.xsum(col("y")).as("sy"), T.xsum(col("y") * col("y")).as("syy"))
           .selectExpr("g", "ng", "sy / ng AS m", "syy - sy * sy / ng AS ssw_g")
         val msw = g.agg(count(lit(1)).cast("double").as("k"),
-            sum(col("ng").cast(T.exact)).cast("double").as("nn"),
-            sum(col("ssw_g").cast(T.exact)).cast("double").as("ssw"))
+            T.xsumD(col("ng")).cast("double").as("nn"),
+            T.xsumD(col("ssw_g")).cast("double").as("ssw"))
           .selectExpr("ssw / (nn - k) AS msw")
         g.select(col("g").as("g1"), col("ng").as("n1"), col("m").as("m1"))
           .join(g.select(col("g").as("g2"), col("ng").as("n2"), col("m").as("m2")),

@@ -160,9 +160,9 @@ object Forecast {
           .withColumn("u1", sum(when(col("t") === 1, col("u"))).over(wAll))
           .withColumn("y1", sum(when(col("t") === 1, col("y"))).over(wAll))
           .withColumn("n", count(lit(1)).over(wAll))
-          .withColumn("sy", sum(col("y").cast(T.exact)).over(wAll).cast("double"))
+          .withColumn("sy", T.xsumD(col("y")).over(wAll).cast("double"))
           .withColumn("syy",
-            sum((col("y") * col("y")).cast(T.exact)).over(wAll).cast("double"))
+            T.xsumD(col("y") * col("y")).over(wAll).cast("double"))
           .selectExpr("day", "y", "t",
             "pow(0.5, t + 1) * CAST(cu - u1 AS DOUBLE) + pow(0.5, t - 1) * CAST(y1 AS DOUBLE) AS z",
             "sy / n AS mu0",
@@ -689,7 +689,7 @@ object Forecast {
             when(col("c7") === 7, expr("CAST(s7 AS DOUBLE) / 7")))
           .withColumn("det", col("y") - col("trend"))
           .withColumn("seasonal",
-            sum(col("det").cast(T.exact)).over(ws).cast("double") /
+            T.xsumD(col("det")).over(ws).cast("double") /
               count(col("det")).over(ws))
           .select(col("day"), col("y"), col("dow"),
             round(col("trend"), 6).as("trend"),
@@ -743,7 +743,7 @@ object Forecast {
             when(col("c7") === 7, expr("CAST(s7 AS DOUBLE) / 7")))
           .withColumn("det", col("y") - col("trend"))
           .withColumn("seasonal",
-            sum(col("det").cast(T.exact)).over(ws).cast("double") /
+            T.xsumD(col("det")).over(ws).cast("double") /
               count(col("det")).over(ws))
           .where(col("trend").isNotNull)
           .selectExpr("y - trend - seasonal AS r",
@@ -1262,7 +1262,7 @@ object Forecast {
           .withColumn("lnf", expr(
             "CASE WHEN ev < at_risk THEN CAST(CAST(ln(1e0 - CAST(ev AS DOUBLE) / at_risk) AS FLOAT) AS DOUBLE) ELSE 0e0 END"))
           .withColumn("dead", max((col("ev") === col("at_risk")).cast("int")).over(wAsc))
-          .withColumn("cln", sum(col("lnf").cast(T.exact)).over(wAsc).cast("double"))
+          .withColumn("cln", T.xsumD(col("lnf")).over(wAsc).cast("double"))
           .selectExpr("d AS duration_days", "c AS n_users", "ev AS n_events",
             "at_risk",
             "CASE WHEN dead = 1 THEN 0e0 " +
@@ -1327,7 +1327,7 @@ object Forecast {
           .withColumn("at_risk",
             col("n_total") - coalesce(sum(col("c")).over(wPrev), lit(0L)))
           .withColumn("h",
-            sum(expr("CAST(ev AS DOUBLE) / at_risk").cast(T.exact))
+            T.xsumD(expr("CAST(ev AS DOUBLE) / at_risk"))
               .over(wAsc).cast("double"))
           .selectExpr("d AS duration_days", "ev AS n_events", "at_risk",
             "round(h, 6) AS cum_hazard",

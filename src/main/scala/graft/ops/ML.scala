@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{QueryDef, Tables => T, Twin}
+import graft.functions.Fixed
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -176,10 +177,12 @@ object ML {
     * The arithmetic is bit-identical to the old plan AND the DuckDB
     * oracle: per cell, each float is widened to double, multiplied in
     * double, rounded HALF_UP at 6 dp (exactly Spark's double→DECIMAL(18,6)
-    * cast via BigDecimal.valueOf = the shortest decimal repr), and summed
-    * as an exact integer — long addition is associative, so partitioning/
-    * merge order cannot change the sum. addExact guards the (far-off) ×10⁶
-    * overflow loudly. Final cell = DECIMAL(·,6)→double, correctly rounded.
+    * cast: `Fixed.scaled`, which decides from the double's bits and falls
+    * back to BigDecimal.valueOf only near a rounding tie), and summed as an
+    * exact integer — long addition is associative, so partitioning/merge
+    * order cannot change the sum. addExact (and longValueExact on the
+    * fallback) guards the (far-off) ×10⁶ overflow loudly. Final cell =
+    * DECIMAL(·,6)→double, correctly rounded.
     */
   private def gram64(s: SparkSession, dir: String): Array[Array[Double]] =
     gramStats64(s, dir)._1
@@ -207,16 +210,12 @@ object ML {
           while (i < 64) {
             var j = i
             while (j < 64) {
-              val p = java.math.BigDecimal.valueOf(v(i) * v(j))
-                .setScale(6, java.math.RoundingMode.HALF_UP)
-                .unscaledValue().longValueExact()
+              val p = Fixed.scaled(v(i) * v(j), 6)
               acc(i * 64 + j) = Math.addExact(acc(i * 64 + j), p)
               if (j != i) acc(j * 64 + i) = acc(i * 64 + j)
               j += 1
             }
-            val m = java.math.BigDecimal.valueOf(v(i))
-              .setScale(6, java.math.RoundingMode.HALF_UP)
-              .unscaledValue().longValueExact()
+            val m = Fixed.scaled(v(i), 6)
             acc(N + i) = Math.addExact(acc(N + i), m)
             i += 1
           }
@@ -922,9 +921,7 @@ object ML {
     * bit-identical cross-engine; β accumulates on the driver (cuML's
     * client-held coef_). The sums ride the 12-dp split wire, NOT xsum:
     * DuckDB's decimal→double cast is off by ulps, and this solve
-    * amplifies input ulps ~1e8× through the ill-conditioned Hessian.
-    * r11: its long-lane form — the addends are bounded (w ≤ ¼, q ≤ 50,
-    * d/t ≤ 0.11), well inside the lane contract. */
+    * amplifies input ulps ~1e8× through the ill-conditioned Hessian. */
   private lazy val irlsMultiFit: Twin.Fit = Twin.Fit(
     Seq("e0" -> 0.0, "e1" -> 0.0, "e2" -> 0.0, "e3" -> 0.0),
     Seq("mu" -> sigmoidR("e0 + e1 * q + e2 * dd + e3 * tt"),
@@ -933,7 +930,7 @@ object ML {
       "a11" -> "w * q * q", "a12" -> "w * q * dd", "a13" -> "w * q * tt",
       "a22" -> "w * dd * dd", "a23" -> "w * dd * tt", "a33" -> "w * tt * tt",
       "b0" -> "r", "b1" -> "r * q", "b2" -> "r * dd", "b3" -> "r * tt")
-      .map { case (nm, ex) => Twin.e12l(nm, ex) },
+      .map { case (nm, ex) => Twin.e12(nm, ex) },
     gauss4, Seq("e0 + x0", "e1 + x1", "e2 + x2", "e3 + x3"), 3)
 
   private def irlsMultiBeta(s: SparkSession, dir: String): Array[Double] =
@@ -3662,12 +3659,12 @@ object ML {
             T.xsum(expr("1e0 - tr")).as("n0"),
             T.xsum(expr("tr * yv")).as("s1"),
             T.xsum(expr("(1e0 - tr) * yv")).as("s0"))
-          .withColumn("attn", sum(expr(
-            "CASE WHEN n1 > 0e0 AND n0 > 0e0 THEN n1 * (s1 / n1 - s0 / n0) ELSE 0e0 END")
-            .cast(T.exact)).over(w).cast("double"))
-          .withColumn("attd", sum(expr(
-            "CASE WHEN n1 > 0e0 AND n0 > 0e0 THEN n1 ELSE 0e0 END")
-            .cast(T.exact)).over(w).cast("double"))
+          .withColumn("attn", T.xsumD(expr(
+            "CASE WHEN n1 > 0e0 AND n0 > 0e0 THEN n1 * (s1 / n1 - s0 / n0) ELSE 0e0 END"))
+            .over(w).cast("double"))
+          .withColumn("attd", T.xsumD(expr(
+            "CASE WHEN n1 > 0e0 AND n0 > 0e0 THEN n1 ELSE 0e0 END"))
+            .over(w).cast("double"))
           .selectExpr("stratum",
             "CAST(n1 AS BIGINT) AS n_treated", "CAST(n0 AS BIGINT) AS n_control",
             "round(CASE WHEN n1 > 0e0 AND n0 > 0e0 THEN s1 / n1 - s0 / n0 END, 6) AS diff",

@@ -217,25 +217,23 @@ object Pipeline {
     // single most expensive memo at 124 cpu-s): the encode join amplifies
     // the per-dim frame 16× (one candidate distance per code), and the
     // per-row DECIMAL(30,12) cast was the whole cost of that pass. The
-    // long-lane sumE12L wire (see Tables) is a drop-in here: addends
-    // (x−c)² of unit-scale embedding floats sit far inside its
-    // |addend| < 9e3 bound and groups are 32 rows. d2 values move in the
-    // last ulps, but BOTH engines run the identical new text (the oracle
-    // below swaps with it), so the (d2, code) rank — the only consumer —
-    // stays cross-engine agreed.
+    // 12-dp integer wire (sumE12, see Tables) sums the distances instead.
+    // d2 values move in the last ulps against xsum, but BOTH engines run
+    // the identical text (the oracle below swaps with it), so the
+    // (d2, code) rank — the only consumer — stays cross-engine agreed.
     def encode(cb: DataFrame): DataFrame = {
       val aw = Window.partitionBy(col("vec_id"), col("m"))
         .orderBy(col("d2"), col("code"))
       vd.join(broadcast(cb), Seq("m", "j"))
         .groupBy("vec_id", "m", "code")
-        .agg(T.sumE12L((col("x") - col("c")) * (col("x") - col("c"))).as("d2e"))
+        .agg(T.sumE12((col("x") - col("c")) * (col("x") - col("c"))).as("d2e"))
         .selectExpr("vec_id", "m", "code", s"${T.bitsE12("d2e")} AS d2")
         .withColumn("rn", row_number().over(aw)).where(col("rn") === 1)
         .select(col("vec_id"), col("m"), col("code"))
     }
     val cb1 = T.freeze(vd.join(encode(cb0), Seq("vec_id", "m"))
       .groupBy("m", "code", "j")
-      .agg(T.sumE12L(col("x")).as("sxe"), count(lit(1)).as("nx"))
+      .agg(T.sumE12(col("x")).as("sxe"), count(lit(1)).as("nx"))
       .selectExpr("m", "code", "j", s"${T.bitsE12("sxe")} / nx AS c"))
     (cb1, encode(cb1).withColumnRenamed("vec_id", "n_id"))
   }
@@ -254,9 +252,9 @@ object Pipeline {
       .selectExpr("vec_id AS q_id", "m", "j", "x")
       .join(broadcast(cb1), Seq("m", "j"))
       .groupBy("q_id", "m", "code")
-      // same long-lane wire as the train's encode — the oracle's distCte
+      // same 12-dp wire as the train's encode — the oracle's distCte
       // text is shared by both, so the swap must be too
-      .agg(T.sumE12L((col("x") - col("c")) * (col("x") - col("c"))).as("d2e"))
+      .agg(T.sumE12((col("x") - col("c")) * (col("x") - col("c"))).as("d2e"))
       .selectExpr("q_id", "m", "code", s"${T.bitsE12("d2e")} AS d2m")
     val kw = Window.partitionBy(col("q_id")).orderBy(col("dhat"), col("n_id"))
     codes.join(broadcast(lut), Seq("m", "code"))
@@ -278,7 +276,7 @@ object Pipeline {
     def distCte(name: String, cb: String, filter: String): String =
       s"""$name AS (SELECT vec_id, m, code, ${T.sqlBitsE12("d2e")} AS d2
             FROM (SELECT v.vec_id, v.m, c.code,
-                ${T.sqlSumE12L("(v.x - c.c) * (v.x - c.c)")} AS d2e
+                ${T.sqlSumE12("(v.x - c.c) * (v.x - c.c)")} AS d2e
               FROM vd v JOIN $cb c ON c.m = v.m AND c.j = v.j$filter
               GROUP BY v.vec_id, v.m, c.code) de)"""
     def encCte(name: String, dist: String): String =
@@ -298,7 +296,7 @@ object Pipeline {
              ${encCte("enc0", "dd0")},
              cb1 AS (SELECT m, code, j, ${T.sqlBitsE12("sxe")} / nx AS c
                FROM (SELECT a.m, a.code, v.j,
-                   ${T.sqlSumE12L("v.x")} AS sxe, count(*) AS nx
+                   ${T.sqlSumE12("v.x")} AS sxe, count(*) AS nx
                  FROM vd v JOIN enc0 a ON a.vec_id = v.vec_id AND a.m = v.m
                  GROUP BY a.m, a.code, v.j) cbx),
              ${distCte("dd1", "cb1", "")},
@@ -1467,7 +1465,7 @@ object Pipeline {
           .selectExpr("lang", "n_tokens",
             "CAST(n_tokens AS DOUBLE) / nn AS p")
           .selectExpr("lang", "n_tokens", "p", s"$tempPowTxt AS pw")
-          .withColumn("z", sum(col("pw").cast(T.exact)).over(w).cast("double"))
+          .withColumn("z", T.xsumD(col("pw")).over(w).cast("double"))
           .selectExpr("lang", "n_tokens", "round(p, 6) AS share",
             "round(pw / z, 6) AS weight",
             "round((pw / z) / p, 4) AS upsample_factor")
@@ -1624,7 +1622,7 @@ object Pipeline {
             s"$woeTxt AS woe",
             s"(CAST(n_good AS DOUBLE) / gt - CAST(n_bad AS DOUBLE) / bt) * ($woeTxt) AS iv_term")
           .withColumn("iv_total",
-            sum(col("iv_term").cast(T.exact)).over(Window.partitionBy())
+            T.xsumD(col("iv_term")).over(Window.partitionBy())
               .cast("double"))
           .selectExpr("bin", "n_good", "n_bad", "round(woe, 6) AS woe",
             "round(iv_term, 6) AS iv_term", "round(iv_total, 6) AS iv_total")

@@ -1009,7 +1009,7 @@ object Preprocess {
             "CAST(n_categories AS DOUBLE) - CAST(tc AS DOUBLE) / 64e0 AS dev",
             "CAST(tc AS DOUBLE) / 64e0 AS e")
           .withColumn("chi2",
-            sum(expr("dev * dev / e").cast(T.exact)).over(w).cast("double"))
+            T.xsumD(expr("dev * dev / e")).over(w).cast("double"))
           .selectExpr("bucket", "n_categories", "n_rows",
             "round(chi2, 4) AS chi2_uniformity")
           .orderBy("bucket")

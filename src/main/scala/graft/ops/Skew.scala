@@ -27,7 +27,7 @@ object Skew {
         val e = T.events(s, dir)
         val partial = e
           .groupBy(col("event_type"), (col("event_id") % SALT).as("salt"))
-          .agg(sum(col("value").cast(T.money)).as("psum"), count(lit(1)).as("pn"))
+          .agg(T.dsumD(col("value")).as("psum"), count(lit(1)).as("pn"))
         partial.groupBy("event_type")
           .agg(sum(col("psum")).cast("double").as("sum_value"), sum(col("pn")).as("n"))
           .orderBy("event_type")

@@ -1,6 +1,8 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.SparkStrategy
 
@@ -8,9 +10,10 @@ import org.apache.spark.sql.execution.SparkStrategy
   * Spark-ecosystem libraries place one small object under
   * `org.apache.spark.sql.*` to construct a Dataset from a custom
   * LogicalPlan, which has no public constructor path). Nothing here adds
-  * behavior: three one-line delegations to Spark's own internals, used
-  * only by graft.plans.ColumnarResize to wire its custom node into a
-  * vanilla session. Everything else in this repo lives under `graft.*`.
+  * behavior: one-line delegations to Spark's own internals, used by
+  * graft.plans.ColumnarResize to wire its custom node into a vanilla
+  * session and by graft.functions.Fixed to wrap its aggregate as a Column.
+  * Everything else in this repo lives under `graft.*`.
   */
 object GraftBridge {
 
@@ -22,6 +25,12 @@ object GraftBridge {
   def ofRows(s: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       s.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** A Column over a Catalyst expression. */
+  def column(e: Expression): Column = ExpressionUtils.column(e)
+
+  /** The Catalyst expression of a Column. */
+  def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
   /** Idempotently attach a planner strategy to THIS session (the public
     * experimental hook — no extension rebuild needed on the driver's

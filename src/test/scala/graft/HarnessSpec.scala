@@ -10,7 +10,8 @@ import scala.jdk.CollectionConverters._
   * task listener or main in `src/main`, and no environment knob beyond the
   * four the mains document. Also pins [[Twin]] as the one renderer of the
   * shared-text step lists, and [[Tables]] as the one reader of fixture
-  * paths and the owner of the one session memo. */
+  * paths, the owner of the one session memo and the one place an exact
+  * sum is spelled. */
 class HarnessSpec extends SparkSpec {
 
   test("conf: Bench's settings, key by key") {
@@ -90,6 +91,32 @@ class HarnessSpec extends SparkSpec {
       assert(filesWith(gone) === Set.empty[String], s"$gone is back")
     for (needle <- Seq("CompletableFuture", ".localCheckpoint("))
       assert(filesWith(needle) === Set("graft/Tables.scala"), s"$needle outside Tables")
+  }
+
+  /** Whether `code` sums a cast to an exact-sum type inline: a `sum(`
+    * whose argument ends in `.cast(T.exact)`, `.cast(T.money)`,
+    * `.cast(exact)` or `.cast(money)`. */
+  private def sumsExactCastInline(code: String): Boolean =
+    Seq(".cast(T.exact))", ".cast(T.money))", ".cast(exact))", ".cast(money))").exists { needle =>
+      Iterator.iterate(code.indexOf(needle))(i => code.indexOf(needle, i + 1)).takeWhile(_ >= 0)
+        .exists { i =>
+          // walk back to the unmatched `(` that the needle's last `)` closes
+          var depth = 0
+          var j = i - 1
+          while (j >= 0 && !(code(j) == '(' && depth == 0)) {
+            if (code(j) == ')') depth += 1 else if (code(j) == '(') depth -= 1
+            j -= 1
+          }
+          j >= 3 && code.substring(j - 3, j) == "sum"
+        }
+    }
+
+  test("structure: every Spark-side exact sum goes through a Tables helper") {
+    assert(sumsExactCastInline("""sum((col("d") - col("rho")).cast(T.exact)).over(rw)"""))
+    assert(sumsExactCastInline("sum(c.cast(money)).cast(DoubleType)"))
+    assert(!sumsExactCastInline("""col("c_acctbal").cast(T.money).cast("double")"""))
+    assert(mainSources.collect { case (f, code) if sumsExactCastInline(code) => f }.toSet
+      subsetOf Set("graft/Tables.scala"))
   }
 
   test("structure: the mains read exactly four SPARK_GRAFT_ knobs") {
