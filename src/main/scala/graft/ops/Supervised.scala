@@ -17,11 +17,13 @@ import org.apache.spark.sql.functions._
   * - NB fit/predict: token-count aggregates (shuffle key = term), class
   *   state is a 5-row broadcast; predict is one equi-join on (term, class)
   *   over the token table — inverted-index shape, never n².
-  * - tree/forest: candidate-split evaluation is ONE aggregation pass over
-  *   a ×|grid| map-side row amplification that partial-aggregation
-  *   collapses to |grid| groups per partition before any shuffle; the
-  *   fitted stumps are driver-held literals (the cuML client-held-model
-  *   pattern), so scoring is a pure map pass.
+  * - tree/forest: candidate-split evaluation is ONE aggregation pass that
+  *   bins each row once into a joint (quantity, discount, tax) histogram
+  *   ([[splitHist]], the LightGBM/cuML histogram split search): the map
+  *   output is at most 800·|extra| cells per task, and every candidate's
+  *   counts are derived from that bounded histogram; the fitted stumps are
+  *   driver-held literals (the cuML client-held-model pattern), so scoring
+  *   is a pure map pass.
   *
   * Cross-engine determinism: every ln() is collapsed to REAL before
   * summation (the ml_logreg sigmoid discipline — absorbs last-ulp libm
@@ -65,8 +67,9 @@ object Supervised {
   /** Candidate split grid over the three lineitem features (the values
     * are exact decimal literals — both engines parse them to the same
     * doubles). Fixed and data-independent: at any scale the split search
-    * is ONE pass of |grid| map-side-combined conditional counts. */
-  private[ops] val grid: Seq[(String, String)] =
+    * is ONE pass into a histogram of Π(k_f + 1) = 800 bins per group (k_f
+    * = the feature's threshold count), see [[splitHist]]. */
+  private[graft] val grid: Seq[(String, String)] =
     (5 to 45 by 5).map(v => ("quantity", s"$v.0")) ++
       (1 to 9).map(v => ("discount", s"0.0$v")) ++
       (1 to 7).map(v => ("tax", s"0.0$v"))
@@ -107,10 +110,10 @@ object Supervised {
     * (the ml_rf_regress frame). `yc` is the target in exact integer CENTS
     * (the ml_linreg_holdout discipline: double → DECIMAL(18,2) rounds
     * identically in both engines, ×100 is then integral), so the forest's
-    * ×|grid|-amplified moment passes sum primitive BIGINTs instead of
-    * decimals — measured 3× on the fit at sf0.1. Cents sums stay < 2⁶³ up
-    * to ~9e16 cents per aggregation group — ample headroom; the sumE12
-    * decimal wire remains the fallback past that. */
+    * histogram moment passes sum primitive BIGINTs instead of decimals.
+    * Cents sums stay < 2⁶³ up to ~9e16 cents per aggregation group —
+    * ample headroom; the sumE12 decimal wire remains the fallback past
+    * that. */
   private def featsR(s: SparkSession, dir: String): DataFrame =
     T.lineitemFit(s, dir).select(
       col("l_orderkey"), col("l_linenumber"),
@@ -138,18 +141,62 @@ object Supervised {
     """CASE WHEN nl = 0 OR n - nl = 0 THEN -1e0
        ELSE syl * syl / nl + (sy - syl) * (sy - syl) / (n - nl) END"""
 
-  /** Candidate-split counts: one aggregation over the ×|grid| amplified
-    * rows (map-side combine collapses each partition to |grid| groups
-    * before the shuffle). `extra` prepends grouping columns (the forest's
-    * shard id). */
-  private[ops] def splitCounts(rows: DataFrame, cands: DataFrame, extra: Seq[String]): DataFrame =
-    rows.crossJoin(broadcast(cands))
-      .withColumn("x", expr(
-        "CASE feature WHEN 'quantity' THEN q WHEN 'discount' THEN d ELSE t END"))
+  /** A row column that [[splitHist]] sums per candidate split: `total` is
+    * its sum over the group, `left` its sum over the rows that go left —
+    * 0 when none does if `zeroLeft` (the gini counts' `posl`), null
+    * otherwise (the regression cents' `sylc`). */
+  private[graft] final case class Moment(col: String, total: String, left: String, zeroLeft: Boolean)
+
+  /** Every [[grid]] candidate's split statistics from one histogram pass —
+    * the brute-force aggregation over `rows` × grid, computed without the
+    * ×|grid| row amplification. Columns: `extra`, feature, thr, n, each
+    * moment's total, nl, each moment's left sum; n = rows in the group,
+    * nl = rows with x_f <= thr. Types, nullability and null semantics are
+    * those of the brute-force aggregation, which the oracle texts keep.
+    *
+    * The row stage bins each row once per feature — b_f is the index of
+    * the first of f's ascending thresholds t with x_f <= t, or k_f when
+    * there is none (NaN and null go right, as they do against every
+    * threshold) — and aggregates a count and each moment's sum per
+    * (`extra`, b_q, b_d, b_t) cell: at most Π(k_f + 1) = 800 cells per
+    * `extra` key, at any scale. The histogram moves to one partition
+    * after its final aggregate (a repartition, so the final merge stays
+    * distributed) and crosses the |grid| (feature, thr, rank) rows: a row
+    * goes left of a feature's rank-th threshold exactly when b_f < rank. */
+  private[graft] def splitHist(rows: DataFrame, extra: Seq[String], sums: Seq[Moment]): DataFrame = {
+    val spark = rows.sparkSession
+    import spark.implicits._
+    val cuts = grid.map(_._1).distinct.map(f =>
+      f -> grid.collect { case (`f`, t) => t }.sortBy(_.toDouble))
+    val bins = cuts.map { case (f, ts) =>
+      expr(ts.zipWithIndex.map { case (t, i) => s"WHEN ${xOf(f)} <= CAST('$t' AS DOUBLE) THEN $i" }
+        .mkString("CASE ", " ", s" ELSE ${ts.size} END")).as("b" + xOf(f))
+    }
+    val cells = rows.groupBy(extra.map(col) ++ bins: _*)
+      .agg(count(lit(1)).as("c"), sums.map(m => sum(col(m.col)).as(m.total)): _*)
+      .repartition(1)
+    val ranks = cuts.flatMap { case (f, ts) => ts.zipWithIndex.map { case (t, i) => (f, t, i + 1) } }
+      .toDF("feature", "thrs", "rank")
+      .select(col("feature"), col("thrs").cast("double").as("thr"), col("rank"))
+    val left = expr(cuts.map { case (f, _) => s"WHEN '$f' THEN b${xOf(f)}" }
+      .mkString("CASE feature ", " ", " END")) < col("rank")
+    cells.crossJoin(broadcast(ranks))
       .groupBy((extra ++ Seq("feature", "thr")).map(col): _*)
-      .agg(count(lit(1)).as("n"), sum(col("y")).as("pos"),
-        sum(when(col("x") <= col("thr"), 1L).otherwise(0L)).as("nl"),
-        sum(when(col("x") <= col("thr"), col("y")).otherwise(0L)).as("posl"))
+      // the coalesce only keeps count(*)'s non-nullable type
+      .agg(coalesce(sum(col("c")), lit(0L)).as("n"),
+        sums.map(m => sum(col(m.total)).as(m.total)) ++
+          Seq(sum(when(left, col("c")).otherwise(0L)).as("nl")) ++
+          sums.map { m =>
+            val l = when(left, col(m.total))
+            sum(if (m.zeroLeft) l.otherwise(0L) else l).as(m.left)
+          }: _*)
+  }
+
+  /** The gini family's candidate-split counts (n, pos, nl, posl) over a
+    * [[feats]]-shaped frame. `extra` prepends grouping columns (the
+    * forest's shard id, a tree node). */
+  private[ops] def splitCounts(rows: DataFrame, extra: Seq[String]): DataFrame =
+    splitHist(rows, extra, Seq(Moment("y", "pos", "posl", zeroLeft = true)))
 
   /** The oracle's candidate grid as a VALUES CTE (same literal text; thr
     * cast to DOUBLE — a bare VALUES decimal literal is DECIMAL(3,2) in
@@ -216,27 +263,21 @@ object Supervised {
         r.getLong(nxt), r.getLong(nxt), r.getLong(nxt), r.getLong(nxt))
     }
 
-  /** ONE shared grid-amplified LEVEL-1 moments pass for BOTH forest
-    * families (r15, VERDICT r14 #3 — ml_rf_regress was the last forest
-    * row fitting alone): per (shard, feature, thr), the gini family's
-    * four exact counts (n, pos, nl, posl) AND the regression family's
-    * exact integer-cents sums (syc, sylc) from a single pass over the
-    * combined projection — the two families' level-1 searches differ
-    * only in which of these exact columns their score reads, so
-    * computing all six in one ×|grid| amplified aggregate replaces two
-    * corpus passes with one. ~|grid|·8 ≈ 600 exact rows, pinned
-    * (KB-sized at any scale); winner arithmetic downstream uses the
-    * SAME expression texts as before, so every derived double — and
-    * every oracle value — is bit-unchanged. Level-2 passes stay
-    * per-family (their node tagging depends on each family's own
-    * level-1 winners). */
+  /** ONE shared LEVEL-1 moments pass for BOTH forest families (r15,
+    * VERDICT r14 #3 — ml_rf_regress was the last forest row fitting
+    * alone): per (shard, feature, thr), the gini family's four exact
+    * counts (n, pos, nl, posl) AND the regression family's exact
+    * integer-cents sums (syc, sylc) from a single [[splitHist]] pass over
+    * the combined projection of the pinned [[T.lineitemFit]] frame — the
+    * two families' level-1 searches differ only in which of these exact
+    * columns their score reads. ~|grid|·8 ≈ 200 exact rows, pinned
+    * (KB-sized at any scale); winner arithmetic downstream uses the SAME
+    * expression texts as before, so every derived double — and every
+    * oracle value — is bit-unchanged. Level-2 passes stay per-family
+    * (their node tagging depends on each family's own level-1 winners). */
   private def rfL1Moments(s: SparkSession, dir: String): DataFrame =
     T.memo("rfL1Moments", s, dir) {
-      val spark = s
-      import spark.implicits._
-      val cands = grid.toDF("feature", "thrs")
-        .select(col("feature"), col("thrs").cast("double").as("thr"))
-      val both = T.lineitem(s, dir).select(
+      val both = T.lineitemFit(s, dir).select(
         col("l_orderkey"), col("l_linenumber"),
         col("l_quantity").cast("double").as("q"),
         col("l_discount").cast("double").as("d"),
@@ -244,21 +285,14 @@ object Supervised {
         when(col("l_returnflag") === "R", 1L).otherwise(0L).as("y"),
         (col("l_extendedprice").cast(org.apache.spark.sql.types.DecimalType(18, 2)) * lit(100))
           .cast("long").as("yc"))
-        .transform(T.fanOut(_))
         .withColumn("shard", expr(shardExpr))
-      T.pin(both.crossJoin(broadcast(cands))
-        .withColumn("x", expr(
-          "CASE feature WHEN 'quantity' THEN q WHEN 'discount' THEN d ELSE t END"))
-        .groupBy(col("shard"), col("feature"), col("thr"))
-        .agg(count(lit(1)).as("n"), sum(col("y")).as("pos"),
-          sum(when(col("x") <= col("thr"), 1L).otherwise(0L)).as("nl"),
-          sum(when(col("x") <= col("thr"), col("y")).otherwise(0L)).as("posl"),
-          sum(col("yc")).as("syc"),
-          sum(when(col("x") <= col("thr"), col("yc"))).as("sylc")))
+      T.pin(splitHist(both, Seq("shard"), Seq(
+        Moment("y", "pos", "posl", zeroLeft = true),
+        Moment("yc", "syc", "sylc", zeroLeft = false))))
     }
 
   /** ONE memoized fit of the sharded depth-2 gini forest — the shared
-    * level-1 moments plus one grid-amplified level-2 pass for the whole
+    * level-1 moments plus one histogram level-2 pass for the whole
     * family (r14, VERDICT r13 #1a: ml_rf_proba re-ran its own 2-pass fit
     * and ml_rf_importance re-ran another in-plan; the forest family
     * totalled 578 cpu-s, most of it repeated fitting). [[rfTrees]] (hard
@@ -268,10 +302,6 @@ object Supervised {
     * feeds the memo anyway), so neither pass executes twice. */
   private[ops] def rfStats(s: SparkSession, dir: String): Array[Split] =
     T.memo("rfStats", s, dir) {
-      val spark = s
-      import spark.implicits._
-      val cands = grid.toDF("feature", "thrs")
-        .select(col("feature"), col("thrs").cast("double").as("thr"))
       val sharded = feats(s, dir).withColumn("shard", expr(shardExpr))
       val w1 = Window.partitionBy(col("shard"))
         .orderBy(col("gini").asc, col("feature").asc, col("thr").asc)
@@ -295,7 +325,7 @@ object Supervised {
         .where(col("node").isNotNull) // shards with no level-1 winner drop out
       val w2 = Window.partitionBy(col("shard"), col("node"))
         .orderBy(col("gini").asc, col("feature").asc, col("thr").asc)
-      val b2 = splitCounts(l2, cands, Seq("shard", "node"))
+      val b2 = splitCounts(l2, Seq("shard", "node"))
         .withColumn("gini", expr(giniExpr))
         .where(expr(mtryExpr))
         .withColumn("rn", row_number().over(w2)).where(col("rn") === 1)
@@ -357,19 +387,15 @@ object Supervised {
     s"(CASE (code div ${1L << (2 * sh)}L) % 4 WHEN 0 THEN $ll WHEN 1 THEN $lr WHEN 2 THEN $rl ELSE $rr END)"
 
   /** Unsharded depth-2 winner statistics — ONE memoized fit (two
-    * grid-amplified passes) serving ml_tree_depth2's output rows,
+    * [[splitHist]] passes) serving ml_tree_depth2's output rows,
     * ml_tree_depth3's first two levels and ml_shap_kernel's explained
     * tree, which each re-ran the same recursion before r14. Same
     * exact-values-only contract as [[rfStats]]. */
   private[ops] def treeStats(s: SparkSession, dir: String): Array[Split] =
     T.memo("treeD2Stats", s, dir) {
-      val spark = s
-      import spark.implicits._
-      val cands = grid.toDF("feature", "thrs")
-        .select(col("feature"), col("thrs").cast("double").as("thr"))
       val fr = feats(s, dir)
       val w1 = Window.orderBy(col("gini").asc, col("feature").asc, col("thr").asc)
-      val b1 = splitCounts(fr, cands, Seq.empty)
+      val b1 = splitCounts(fr, Seq.empty)
         .withColumn("gini", expr(giniExpr))
         .withColumn("rn", row_number().over(w1)).where(col("rn") === 1)
         .select(col("feature"), col("thr"),
@@ -379,7 +405,7 @@ object Supervised {
         s"CASE WHEN ${xOf(root.feature)} <= ${D(root.thr)} THEN 'L' ELSE 'R' END"))
       val w2 = Window.partitionBy(col("node"))
         .orderBy(col("gini").asc, col("feature").asc, col("thr").asc)
-      val b2 = splitCounts(l2, cands, Seq("node"))
+      val b2 = splitCounts(l2, Seq("node"))
         .withColumn("gini", expr(giniExpr))
         .withColumn("rn", row_number().over(w2)).where(col("rn") === 1)
         .select(col("node"), col("feature"), col("thr"),
@@ -622,17 +648,14 @@ object Supervised {
       // DecisionTree split search (the per-node step of cuml.dask.ensemble
       // RandomForest [R]): exhaustive candidate grid over (feature,
       // threshold), weighted gini impurity from one pass of conditional
-      // counts, best split per feature. The ×25 amplification happens
-      // map-side and partial aggregation collapses it to 25 groups per
-      // partition — the shuffle carries 25 rows regardless of corpus size.
+      // counts, best split per feature. Each row is binned once into the
+      // [[splitHist]] histogram — at most 800 cells per task reach the
+      // shuffle regardless of corpus size — and the 25 candidates' counts
+      // are summed from it on one partition.
       (s, dir) => {
-        val spark = s
-        import spark.implicits._
-        val cands = grid.toDF("feature", "thrs")
-          .select(col("feature"), col("thrs").cast("double").as("thr"))
         val best = Window.partitionBy(col("feature"))
           .orderBy(col("gini").asc, col("thr").asc)
-        splitCounts(feats(s, dir), cands, Seq.empty)
+        splitCounts(feats(s, dir), Seq.empty)
           .withColumn("gini", expr(giniExpr))
           .withColumn("rn", row_number().over(best)).where(col("rn") === 1)
           .select(col("feature"), col("thr").as("threshold"),
@@ -662,8 +685,8 @@ object Supervised {
       // the 1-row winner BROADCASTS back (no driver round trip) to tag
       // every row with its child node, and level 2 re-runs the same grid
       // search per node in ONE more pass — per-level cost is one
-      // map-side-combined aggregation whose shuffle carries
-      // |nodes|×|grid| rows regardless of corpus size, exactly the
+      // [[splitHist]] histogram pass whose map output is at most
+      // 800·|nodes| cells per task regardless of corpus size, exactly the
       // recursion a deeper tree repeats. Output: the fitted tree as
       // (node, split, gini, leaf counts) rows; depth-3+ iterates the same
       // broadcast-tag-and-search step. The fit itself is the memoized
@@ -717,14 +740,15 @@ object Supervised {
       // row with its depth-2 node (root branch ++ level-2 branch, via the
       // 2-row broadcast of the level-2 winners) and runs the SAME grid
       // search per node in ONE more pass. Per-level cost stays one
-      // map-side-combined aggregation whose shuffle carries |nodes|×|grid|
-      // rows (4×25 here) regardless of corpus size — the distributed-
-      // histogram recursion cuML RandomForest [R] runs to max_depth.
+      // [[splitHist]] histogram pass whose map output is at most
+      // 800·|nodes| cells per task (4 nodes here) regardless of corpus
+      // size — the distributed-histogram recursion cuML RandomForest [R]
+      // runs to max_depth.
       // Output: the full 7-node fitted tree. Levels 1–2 come from the
       // memoized [[treeStats]] fit (shared with ml_tree_depth2 /
       // ml_shap_kernel since r14) and re-enter as exact literals to tag
       // each row's depth-2 node, so only the level-3 grid search still
-      // touches the corpus — ONE amplified pass instead of three.
+      // touches the corpus — ONE histogram pass instead of three.
       (s, dir) => {
         val spark = s
         import spark.implicits._
@@ -732,8 +756,6 @@ object Supervised {
         val root = st.find(_.node.isEmpty).get
         val lw = st.find(_.node == "L").get
         val rw = st.find(_.node == "R").get
-        val cands = grid.toDF("feature", "thrs")
-          .select(col("feature"), col("thrs").cast("double").as("thr"))
         val l3 = feats(s, dir)
           .withColumn("node", expr(
             s"CASE WHEN ${xOf(root.feature)} <= ${D(root.thr)} THEN 'L' ELSE 'R' END"))
@@ -743,7 +765,7 @@ object Supervised {
                 ELSE (CASE WHEN ${xOf(rw.feature)} <= ${D(rw.thr)} THEN 'L' ELSE 'R' END) END)"""))
         val w3 = Window.partitionBy(col("node2"))
           .orderBy(col("gini").asc, col("feature").asc, col("thr").asc)
-        val b3 = splitCounts(l3, cands, Seq("node2"))
+        val b3 = splitCounts(l3, Seq("node2"))
           .withColumn("gini", expr(giniExpr))
           .withColumn("rn", row_number().over(w3)).where(col("rn") === 1)
         val upper = Seq(root, lw, rw)
@@ -805,8 +827,8 @@ object Supervised {
       // data and predicts by merged vote. Here (r8, rebased from depth-1
       // stumps per VERDICT r7 #3): 8 affine-hash shards each fit a
       // DEPTH-2 gini tree by the ml_tree_depth2 recursion — level 1 is
-      // one aggregation (8×|grid| shuffle rows), the 8 winners broadcast
-      // back to tag nodes, level 2 is one more aggregation (16×|grid|) —
+      // one histogram pass (at most 8·800 cells per task), the 8 winners
+      // tag nodes, level 2 is one more (16·800) —
       // so the whole forest fit is TWO passes at any corpus size. The 8
       // fitted trees become DRIVER-HELD literals (client-held model
       // state); each tree routes a row to one of its 4 leaves and votes R
@@ -1088,36 +1110,19 @@ object Supervised {
         import spark.implicits._
         val trees: Array[(Int, String, String, String, String, String, String, String, String, String, String)] =
           T.memo("rfRegTrees2", s, dir) {
-            val cands = grid.toDF("feature", "thrs")
-              .select(col("feature"), col("thrs").cast("double").as("thr"))
             val sharded = featsR(s, dir).withColumn("shard", expr(shardExpr))
-            // integer-cents moment pass (see featsR): primitive BIGINT
-            // sums keep the ×|grid| amplification inside whole-stage
-            // codegen — the decimal wire here measured 3× slower
-            def regCounts(rows: DataFrame, extra: Seq[String]): DataFrame =
-              rows.crossJoin(broadcast(cands))
-                .withColumn("x", expr(
-                  "CASE feature WHEN 'quantity' THEN q WHEN 'discount' THEN d ELSE t END"))
-                .groupBy((extra ++ Seq("feature", "thr")).map(col): _*)
-                .agg(count(lit(1)).as("n"),
-                  sum(when(col("x") <= col("thr"), 1L).otherwise(0L)).as("nl"),
-                  sum(col("yc")).as("syc"),
-                  sum(when(col("x") <= col("thr"), col("yc"))).as("sylc"))
-                .selectExpr(extra ++ Seq("feature", "thr", "n", "nl",
+            // the split score from a level's integer-cents moments (see
+            // featsR): the cents sums convert to sy/syl through one shared
+            // CAST/1e2 text, so level 1 reading the SHARED moments pass
+            // (r15 — see rfL1Moments) scores bit-identically to its own pass
+            def regScore(moments: DataFrame, extra: Seq[String]): DataFrame =
+              moments.selectExpr(extra ++ Seq("feature", "thr", "n", "nl",
                   "CAST(syc AS DOUBLE) / 1e2 AS sy",
                   "CAST(sylc AS DOUBLE) / 1e2 AS syl"): _*)
                 .withColumn("score", expr(scoreTextR))
             val w1 = Window.partitionBy(col("shard"))
               .orderBy(col("score").desc, col("feature").asc, col("thr").asc)
-            // level 1 reads the SHARED moments pass (r15 — see
-            // rfL1Moments): the cents sums convert to sy/syl through the
-            // identical CAST/1e2 text regCounts used, so the score — and
-            // the winner — is bit-unchanged.
-            val b1 = rfL1Moments(s, dir)
-              .selectExpr("shard", "feature", "thr", "n", "nl",
-                "CAST(syc AS DOUBLE) / 1e2 AS sy",
-                "CAST(sylc AS DOUBLE) / 1e2 AS syl")
-              .withColumn("score", expr(scoreTextR))
+            val b1 = regScore(rfL1Moments(s, dir), Seq("shard"))
               // same empty-child guard as the gini forest (ml_gbm_round
               // discipline): an all-one-way winner would NPE the pivot.
               .where("nl > 0 AND n - nl > 0").where(expr(mtryExpr))
@@ -1128,7 +1133,8 @@ object Supervised {
                 "CASE WHEN (CASE f1 WHEN 'quantity' THEN q WHEN 'discount' THEN d ELSE t END) <= t1 THEN 'L' ELSE 'R' END"))
             val w2 = Window.partitionBy(col("shard"), col("node"))
               .orderBy(col("score").desc, col("feature").asc, col("thr").asc)
-            val b2 = regCounts(l2, Seq("shard", "node"))
+            val b2 = regScore(splitHist(l2, Seq("shard", "node"),
+                Seq(Moment("yc", "syc", "sylc", zeroLeft = false))), Seq("shard", "node"))
               .where(expr(mtryExpr))
               .withColumn("rn", row_number().over(w2)).where(col("rn") === 1)
               .selectExpr("shard", "node", "feature AS f2", "thr AS t2",
@@ -1153,8 +1159,6 @@ object Supervised {
                 java.lang.Double.toString(r.getDouble(10))))
               .sortBy(_._1)
           }
-        def xOf(f: String) =
-          f match { case "quantity" => "q"; case "discount" => "d"; case _ => "t" }
         val pattern = trees.map { case (sh, f1, t1, _, _, _, _, _, _, _, _) =>
           s"(CASE WHEN ${xOf(f1)} <= $t1 THEN ${1 << sh} ELSE 0 END)"
         }.mkString(" + ")

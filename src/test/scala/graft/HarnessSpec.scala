@@ -119,6 +119,12 @@ class HarnessSpec extends SparkSpec {
       subsetOf Set("graft/Tables.scala"))
   }
 
+  test("structure: no split search crosses its rows with the candidate grid") {
+    // split searches go through Supervised.splitHist, which bins each row
+    // once; only the oracle texts keep the brute-force ×grid definition
+    assert(filesWith("crossJoin(broadcast(cands))") === Set.empty[String])
+  }
+
   test("structure: the mains read exactly four SPARK_GRAFT_ knobs") {
     val knobs = mainSources.values
       .flatMap("SPARK_GRAFT_[A-Z_]+".r.findAllIn(_)).toSet

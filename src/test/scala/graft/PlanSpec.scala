@@ -350,6 +350,27 @@ class PlanSpec extends SparkSpec {
     assert(bnlj <= 1, s"doc-pair scan leaked into the retrieval plan:\n$p")
   }
 
+  test("ml_tree_gini: rows bin into a histogram with no join; its expansion runs on one partition") {
+    import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+    import org.apache.spark.sql.execution.CoalesceExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val p = SparkEntry.queries("ml_tree_gini")(spark, sf).queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case other => other
+    }
+    val single = p.collect { case e: ShuffleExchangeExec if e.outputPartitioning == SinglePartition => e }
+    assert(single.size === 1, s"expected one single-partition exchange:\n$p")
+    // everything below that exchange is the row-level stage
+    assert(single.head.collect { case j: BaseJoinExec => j }.isEmpty,
+      s"a join in the row-level stage:\n$p")
+    val joins = p.collect { case j: BaseJoinExec => j }
+    assert(joins.nonEmpty && joins.forall(_.exists(_ eq single.head)),
+      s"the grid expansion does not consume the single-partition histogram:\n$p")
+    assert(p.collect { case c: CoalesceExec => c }.isEmpty, s"coalesce in the plan:\n$p")
+  }
+
   test("whole-stage codegen covers the hot path of filter_pred") {
     // pre-execution the AQE wrapper hides codegen spans — run the query,
     // then inspect the final adaptive plan
