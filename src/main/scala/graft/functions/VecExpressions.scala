@@ -1,11 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession, functions => F}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, KnownNullable}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.expr
+import org.apache.spark.sql.graftbridge.GraftBridge
 import org.apache.spark.sql.types._
 
 /** Codegen'd vector kernels (SURVEY §4.2 "custom extension points").
@@ -262,12 +263,52 @@ object Vec {
   def l2(s: SparkSession, a: String, b: String): Column = {
     register(s); expr(s"graft_vec_l2($a, $b)")
   }
-  /** Column-form l2 — for callers whose operand is not a named column
-    * (e.g. a literal centroid array in the map-only kmeans assignment). */
-  def l2Cols(s: SparkSession, a: Column, b: Column): Column = {
-    register(s)
-    org.apache.spark.sql.functions.call_function("graft_vec_l2", a, b)
+  /** Each point's `k` nearest of a driver-held centroid set (`(cid,
+    * embedding)`, K rows): `points`' columns plus `cid`, `d` (the
+    * graft_vec_l2 distance) and `rn` (1 = nearest). Ties go to the lower
+    * cid, and a null `d` ranks first — the rows of `row_number() OVER
+    * (PARTITION BY id ORDER BY d, cid) <= k` over points × centroids.
+    * Map-only: each point sorts its K literal (d, cid) structs in place,
+    * so no exchange on the point id and no nested-loop join. Fits a small
+    * client-held model; a centroid set that grows with the data does not
+    * belong in K literal terms. */
+  def nearest(points: DataFrame, emb: String, cents: Seq[(Long, Array[Float])],
+      k: Int): DataFrame = {
+    require(cents.nonEmpty, "nearest needs at least one centroid")
+    register(points.sparkSession)
+    val ranked = F.sort_array(F.array(cents.map { case (cid, c) =>
+      F.struct(F.call_function("graft_vec_l2", F.col(emb), F.typedLit(c)).as("d"),
+        F.lit(cid).as("cid"))
+    }: _*))
+    // cid is nullable, as a centroid id read from a table is, so a
+    // result's schema does not depend on where its centroids came from
+    val cid = GraftBridge.column(KnownNullable(GraftBridge.expression(F.col("nc.cid"))))
+    points.select(F.col("*"), F.posexplode(F.slice(ranked, 1, k)).as(Seq("pos", "nc")))
+      .select(points.columns.toSeq.map(c => F.col(s"`$c`")) ++ Seq(cid.as("cid"),
+        F.col("nc.d").as("d"), (F.col("pos") + 1).as("rn")): _*)
   }
+
+  /** A `(cid, c_emb)` centroid frame, collected in cid order — the K-row
+    * driver-held form [[nearest]] takes. */
+  def centroids(cent: DataFrame): Seq[(Long, Array[Float])] =
+    cent.select("cid", "c_emb").collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq.sortBy(_._1)
+
+  /** DuckDB oracle twin of [[nearest]], kept brute-force so the
+    * hash-match checks the helper independently: every `points` row
+    * (aliased `p`, keyed `id`) crossed with the `cents(cid, c_emb)`
+    * relation, ranked by `row_number() OVER (PARTITION BY id ORDER BY
+    * list_distance, cid)`; `p.*` plus cid, d and rn for rn ≤ k. */
+  def sqlNearest(points: String, id: String, emb: String, k: Int,
+      cents: String = "cent"): String = {
+    val d = s"list_distance(CAST(p.$emb AS DOUBLE[]), CAST(c.c_emb AS DOUBLE[]))"
+    s"""SELECT * FROM (
+          SELECT p.*, c.cid, $d AS d,
+            row_number() OVER (PARTITION BY p.$id ORDER BY $d, c.cid) AS rn
+          FROM $points p CROSS JOIN $cents c) t
+        WHERE rn <= $k"""
+  }
+
   def l1(s: SparkSession, a: String, b: String): Column = {
     register(s); expr(s"graft_vec_l1($a, $b)")
   }

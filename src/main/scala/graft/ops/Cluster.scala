@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{QueryDef, Tables => T}
+import graft.functions.Vec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -638,28 +639,43 @@ object Cluster {
     // was re-pinning its own copy
     T.memo("nnSeedPinned", s, dir) { nnSeedEdgesCompute(s, dir) }
 
-  private def nnSeedEdgesCompute(s: SparkSession, dir: String): DataFrame = {
-    val e = T.embeddings(s, dir)
-    val cent = e.where(col("vec_id") < 10)
-      .select(col("vec_id").as("cid"), col("embedding").as("c_emb"))
-    val aw = Window.partitionBy(col("vec_id")).orderBy(col("d"), col("cid"))
-    val assigned = e.transform(T.fanOut(_, col("vec_id")))
-      .crossJoin(broadcast(cent))
-      .select(col("vec_id"), col("embedding"), col("cid"),
-        graft.functions.Vec.l2(s, "embedding", "c_emb").as("d"))
-      .withColumn("rn", row_number().over(aw))
-    val homes = assigned.where(col("rn") === 1)
+  private def nnSeedEdgesCompute(s: SparkSession, dir: String): DataFrame =
+    T.pin(ivfKnn3(s, dir).select(col("q_id").as("u"), col("n_id").as("v")))
+
+  /** The IVF-probed k=3 directed kNN edges over ALL vectors, (q_id, n_id,
+    * d, rn): each vector's 3 nearest model cells (`Vec.nearest`, map-only)
+    * are its probes, rn = 1 its home, and it ranks the vectors homed in
+    * its probes by (d, id). [[sqlIvfKnn3]] is its oracle twin. */
+  private def ivfKnn3(s: SparkSession, dir: String): DataFrame = {
+    val ranked = Vec.nearest(T.embeddings(s, dir).transform(T.fanOut(_, col("vec_id")))
+      .select(col("vec_id"), col("embedding")), "embedding", ML.kmCents(s, dir), 3)
+    val homes = ranked.where(col("rn") === 1)
       .select(col("vec_id").as("n_id"), col("embedding").as("n_emb"), col("cid"))
-    val probes = assigned.where(col("rn") <= 3)
+    val probes = ranked
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"), col("cid"))
     val kw = Window.partitionBy(col("q_id")).orderBy(col("d"), col("n_id"))
-    T.pin(probes.join(homes, "cid")
+    probes.join(homes, "cid")
       .where(col("q_id") =!= col("n_id"))
-      .select(col("q_id"), col("n_id"),
-        graft.functions.Vec.l2(s, "q_emb", "n_emb").as("d"))
+      .select(col("q_id"), col("n_id"), Vec.l2(s, "q_emb", "n_emb").as("d"))
       .withColumn("rn", row_number().over(kw)).where(col("rn") <= 3)
-      .select(col("q_id").as("u"), col("n_id").as("v")))
   }
+
+  /** Oracle twin of [[ivfKnn3]]: the CTEs through `knn3(q_id, n_id, d, rn)`. */
+  private lazy val sqlIvfKnn3: String =
+    s"""${ML.sqlKmCent()},
+         ranked AS (${Vec.sqlNearest("embeddings", "vec_id", "embedding", 3)}),
+         homes AS (SELECT vec_id AS n_id, embedding AS n_emb, cid
+                   FROM ranked WHERE rn = 1),
+         probes AS (SELECT vec_id AS q_id, embedding AS q_emb, cid FROM ranked),
+         knn3 AS (SELECT q_id, n_id, d, rn FROM (
+             SELECT p.q_id, h.n_id,
+               list_distance(CAST(p.q_emb AS DOUBLE[]), CAST(h.n_emb AS DOUBLE[])) AS d,
+               row_number() OVER (PARTITION BY p.q_id
+                 ORDER BY list_distance(CAST(p.q_emb AS DOUBLE[]),
+                                        CAST(h.n_emb AS DOUBLE[])), h.n_id) AS rn
+             FROM probes p JOIN homes h ON p.cid = h.cid
+             WHERE p.q_id <> h.n_id) t
+           WHERE rn <= 3)"""
 
   /** One deterministic NN-descent round (Dong 2011) over a (u, v) k=3
     * graph: neighbor-of-neighbor candidates over the undirected graph ∪
@@ -887,26 +903,8 @@ object Cluster {
                 ORDER BY d, v) AS rn FROM nw$h) t
             WHERE rn <= 4)"""
     }
-    s"""cent AS (SELECT vec_id AS cid, embedding AS c_emb
-                      FROM embeddings WHERE vec_id < 10),
-         ranked AS (
-           SELECT e.vec_id, e.embedding, c.cid,
-             row_number() OVER (PARTITION BY e.vec_id
-               ORDER BY list_distance(CAST(e.embedding AS DOUBLE[]),
-                                      CAST(c.c_emb AS DOUBLE[])), c.cid) AS rn
-           FROM embeddings e CROSS JOIN cent c),
-         homes AS (SELECT vec_id AS n_id, embedding AS n_emb, cid
-                   FROM ranked WHERE rn = 1),
-         probes AS (SELECT vec_id AS q_id, embedding AS q_emb, cid
-                    FROM ranked WHERE rn <= 3),
-         g0 AS (SELECT q_id AS u, n_id AS v FROM (
-             SELECT p.q_id, h.n_id,
-               row_number() OVER (PARTITION BY p.q_id
-                 ORDER BY list_distance(CAST(p.q_emb AS DOUBLE[]),
-                                        CAST(h.n_emb AS DOUBLE[])), h.n_id) AS rn
-             FROM probes p JOIN homes h ON p.cid = h.cid
-             WHERE p.q_id <> h.n_id) t
-           WHERE rn <= 3),
+    s"""$sqlIvfKnn3,
+         g0 AS (SELECT q_id AS u, n_id AS v FROM knn3),
          ed AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
                 FROM embeddings),
          und0 AS (SELECT DISTINCT u, v FROM (
@@ -1120,54 +1118,14 @@ object Cluster {
       // corpus here and shrink as K grows with n; the approximation itself
       // is oracle-checked because both engines run the same deterministic
       // IVF arithmetic. Output: (vec_id, rn, n_id, dist) edges.
-      (s, dir) => {
-        val e = T.embeddings(s, dir)
-        val cent = e.where(col("vec_id") < 10)
-          .select(col("vec_id").as("cid"), col("embedding").as("c_emb"))
-        val aw = Window.partitionBy(col("vec_id")).orderBy(col("d"), col("cid"))
-        val assigned = e.transform(T.fanOut(_, col("vec_id")))
-          .crossJoin(broadcast(cent))
-          .select(col("vec_id"), col("embedding"), col("cid"),
-            graft.functions.Vec.l2(s, "embedding", "c_emb").as("d"))
-          .withColumn("rn", row_number().over(aw))
-        // one crossJoin feeds both roles: rn = 1 is the home cell
-        // (membership), rn ≤ 3 are the probe targets
-        val homes = assigned.where(col("rn") === 1)
-          .select(col("vec_id").as("n_id"), col("embedding").as("n_emb"), col("cid"))
-        val probes = assigned.where(col("rn") <= 3)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"), col("cid"))
-        val kw = Window.partitionBy(col("q_id")).orderBy(col("d"), col("n_id"))
-        probes.join(homes, "cid")
-          .where(col("q_id") =!= col("n_id"))
-          .select(col("q_id"), col("n_id"),
-            graft.functions.Vec.l2(s, "q_emb", "n_emb").as("d"))
-          .withColumn("rn", row_number().over(kw)).where(col("rn") <= 3)
+      (s, dir) =>
+        ivfKnn3(s, dir)
           .select(col("q_id").as("vec_id"), col("rn"), col("n_id"),
             round(col("d"), 6).as("dist"))
-          .orderBy("vec_id", "rn")
-      },
-      Some("""WITH cent AS (SELECT vec_id AS cid, embedding AS c_emb
-                            FROM embeddings WHERE vec_id < 10),
-               ranked AS (
-                 SELECT e.vec_id, e.embedding, c.cid,
-                   row_number() OVER (PARTITION BY e.vec_id
-                     ORDER BY list_distance(CAST(e.embedding AS DOUBLE[]),
-                                            CAST(c.c_emb AS DOUBLE[])), c.cid) AS rn
-                 FROM embeddings e CROSS JOIN cent c),
-               homes AS (SELECT vec_id AS n_id, embedding AS n_emb, cid
-                         FROM ranked WHERE rn = 1),
-               probes AS (SELECT vec_id AS q_id, embedding AS q_emb, cid
-                          FROM ranked WHERE rn <= 3)
-              SELECT vec_id, rn, n_id, dist FROM (
-                SELECT p.q_id AS vec_id, h.n_id,
-                  round(list_distance(CAST(p.q_emb AS DOUBLE[]),
-                                      CAST(h.n_emb AS DOUBLE[])), 6) AS dist,
-                  row_number() OVER (PARTITION BY p.q_id
-                    ORDER BY list_distance(CAST(p.q_emb AS DOUBLE[]),
-                                           CAST(h.n_emb AS DOUBLE[])), h.n_id) AS rn
-                FROM probes p JOIN homes h ON p.cid = h.cid
-                WHERE p.q_id <> h.n_id) t
-              WHERE rn <= 3 ORDER BY vec_id, rn""")),
+          .orderBy("vec_id", "rn"),
+      Some(s"""WITH $sqlIvfKnn3
+              SELECT q_id AS vec_id, rn, n_id, round(d, 6) AS dist
+              FROM knn3 ORDER BY vec_id, rn""")),
 
     QueryDef(
       "ml_knn_nndescent",
@@ -1192,26 +1150,8 @@ object Cluster {
         .select(col("u").as("vec_id"), col("rn"), col("w").as("n_id"),
           round(col("d"), 6).as("dist"))
         .orderBy("vec_id", "rn"),
-      Some("""WITH cent AS (SELECT vec_id AS cid, embedding AS c_emb
-                            FROM embeddings WHERE vec_id < 10),
-               ranked AS (
-                 SELECT e.vec_id, e.embedding, c.cid,
-                   row_number() OVER (PARTITION BY e.vec_id
-                     ORDER BY list_distance(CAST(e.embedding AS DOUBLE[]),
-                                            CAST(c.c_emb AS DOUBLE[])), c.cid) AS rn
-                 FROM embeddings e CROSS JOIN cent c),
-               homes AS (SELECT vec_id AS n_id, embedding AS n_emb, cid
-                         FROM ranked WHERE rn = 1),
-               probes AS (SELECT vec_id AS q_id, embedding AS q_emb, cid
-                          FROM ranked WHERE rn <= 3),
-               seed AS (SELECT q_id AS u, n_id AS v FROM (
-                   SELECT p.q_id, h.n_id,
-                     row_number() OVER (PARTITION BY p.q_id
-                       ORDER BY list_distance(CAST(p.q_emb AS DOUBLE[]),
-                                              CAST(h.n_emb AS DOUBLE[])), h.n_id) AS rn
-                   FROM probes p JOIN homes h ON p.cid = h.cid
-                   WHERE p.q_id <> h.n_id) t
-                 WHERE rn <= 3),
+      Some(s"""WITH $sqlIvfKnn3,
+               seed AS (SELECT q_id AS u, n_id AS v FROM knn3),
                und AS (SELECT DISTINCT u, v FROM (
                    SELECT u, v FROM seed UNION ALL SELECT v, u FROM seed) x),
                cand AS (SELECT DISTINCT u, w FROM (
@@ -1290,26 +1230,8 @@ object Cluster {
                 JOIN ed eu ON eu.vec_id = c.u
                 JOIN ed ew ON ew.vec_id = c.w) t
               WHERE rn <= 3)"""
-        s"""WITH cent AS (SELECT vec_id AS cid, embedding AS c_emb
-                          FROM embeddings WHERE vec_id < 10),
-               ranked AS (
-                 SELECT e.vec_id, e.embedding, c.cid,
-                   row_number() OVER (PARTITION BY e.vec_id
-                     ORDER BY list_distance(CAST(e.embedding AS DOUBLE[]),
-                                            CAST(c.c_emb AS DOUBLE[])), c.cid) AS rn
-                 FROM embeddings e CROSS JOIN cent c),
-               homes AS (SELECT vec_id AS n_id, embedding AS n_emb, cid
-                         FROM ranked WHERE rn = 1),
-               probes AS (SELECT vec_id AS q_id, embedding AS q_emb, cid
-                          FROM ranked WHERE rn <= 3),
-               g0 AS (SELECT q_id AS u, n_id AS v FROM (
-                   SELECT p.q_id, h.n_id,
-                     row_number() OVER (PARTITION BY p.q_id
-                       ORDER BY list_distance(CAST(p.q_emb AS DOUBLE[]),
-                                              CAST(h.n_emb AS DOUBLE[])), h.n_id) AS rn
-                   FROM probes p JOIN homes h ON p.cid = h.cid
-                   WHERE p.q_id <> h.n_id) t
-                 WHERE rn <= 3),
+        s"""WITH $sqlIvfKnn3,
+               g0 AS (SELECT q_id AS u, n_id AS v FROM knn3),
                ed AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
                       FROM embeddings),
                ${roundCtes("g0", 1)},
@@ -1343,8 +1265,9 @@ object Cluster {
       // completed PQ. Queries vec_id < 20 (the ml_knn_ivf sample, so the
       // MicroSpec recall pin compares like with like); k = 5. Every hop
       // is an id equi-join on the edge table + an id equi-join rescore —
-      // PlanSpec pins no corpus scan per hop (≤1 BNLJ = the entry-point
-      // centroid fan-out). Output: (q_id, rn, n_id, dist).
+      // PlanSpec pins no corpus scan and no nested loop per hop (the
+      // entry-point fan-out is a pinned leaf). Output: (q_id, rn, n_id,
+      // dist).
       (s, dir) => searchTopK(nnSearchTrail(s, dir).reduce(_ unionAll _)),
       Some(sqlGraphSearchOracle)),
 

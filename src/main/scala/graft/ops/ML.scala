@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.{QueryDef, Tables => T, Twin}
-import graft.functions.Fixed
+import graft.functions.{Fixed, Vec}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1089,6 +1089,49 @@ object ML {
     * ~1/√EVAL_N) at cost n·EVAL_N instead of the r6 all-pairs n². */
   private[ops] val EVAL_N = 200
 
+  /** The fixed k-means model every K=10 row scores against (cuML's
+    * client-held `cluster_centers_`): corpus `e`'s first ten vectors as
+    * centroids `(cid, c_emb)`. */
+  private[ops] def kmCentFrame(e: DataFrame): DataFrame =
+    e.where(col("vec_id") < 10)
+      .select(col("vec_id").as("cid"), col("embedding").as("c_emb"))
+
+  /** [[kmCentFrame]] of the corpus, driver-held — the form
+    * `Vec.nearest` ranks against — and collected once per session. */
+  private[ops] def kmCents(s: SparkSession, dir: String): Seq[(Long, Array[Float])] =
+    T.memo("kmCents", s, dir) { Vec.centroids(kmCentFrame(T.embeddings(s, dir))) }
+
+  /** Oracle twin of [[kmCentFrame]] over the relation `from`: the
+    * `cent(cid, c_emb)` CTE that `Vec.sqlNearest` ranks against. */
+  private[ops] def sqlKmCent(from: String = "embeddings"): String =
+    s"""cent AS (SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS c_emb
+                 FROM $from WHERE vec_id < 10)"""
+
+  /** One Lloyd step of a driver-held model over the corpus `e(vec_id,
+    * embedding)`: each point to its nearest centroid, then each cluster's
+    * elementwise mean of the 64 dims, float-rounded (so both engines agree
+    * bit-exactly) and collected as the next model. */
+  private def lloydStep(e: DataFrame, cent: Seq[(Long, Array[Float])])
+      : Seq[(Long, Array[Float])] =
+    Vec.centroids(Vec.nearest(e, "embedding", cent, 1)
+      .groupBy("cid")
+      .agg(array((1 to 64).map(i =>
+        avg(element_at(col("embedding"), i).cast("double")).cast("float")): _*).as("c_emb")))
+
+  /** The oracle corpus `e(vec_id, emb)` and model `c0` of [[sqlLloydStep]]. */
+  private lazy val sqlLloydCorpus =
+    s"""e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
+        ${sqlKmCent()}, c0 AS (SELECT cid, c_emb FROM cent)"""
+
+  /** Oracle twin of the i-th [[lloydStep]]: `a$i`, the assignment against
+    * `c${i-1}`, and `c$i(cid, c_emb)`, its float-rounded means. */
+  private def sqlLloydStep(i: Int): String = {
+    val means = (1 to 64).map(j =>
+      s"CAST(CAST(avg(emb[$j]) AS REAL) AS DOUBLE)").mkString("list_value(", ", ", ")")
+    s"""a$i AS (${Vec.sqlNearest("e", "vec_id", "emb", 1, s"c${i - 1}")}),
+        c$i AS (SELECT cid, $means AS c_emb FROM a$i GROUP BY cid)"""
+  }
+
   /** Leave-one-out kNN language prediction over a BOUNDED deterministic
     * evaluation sample (VERDICT r6 #4 — shared by ml_confusion_matrix /
     * ml_accuracy_score): the EVAL_N labeled vectors with the smallest
@@ -1712,37 +1755,21 @@ object ML {
 
     QueryDef(
       "ml_kmeans_assign",
-      // Lloyd assignment step against fixed centroids (vec_id < 10):
-      // broadcast(centroids) × points, argmin via min-by-(dist, cid)
-      // row_number — cuml.dask KMeans labels_ analog. Output: cluster sizes
-      // + mean distance (bounded).
-      (s, dir) => {
-        val e = T.embeddings(s, dir)
-        val cent = e.where(col("vec_id") < 10)
-          .select(col("vec_id").as("cid"), col("embedding").as("c_emb"))
-        val dist = graft.functions.Vec.l2(s, "embedding", "c_emb")
-        val w = Window.partitionBy(col("vec_id")).orderBy(col("d"), col("cid"))
-        e.transform(T.fanOut(_, col("vec_id")))
-          .crossJoin(broadcast(cent))
-          .select(col("vec_id"), col("cid"), dist.as("d"))
-          .withColumn("rn", row_number().over(w))
-          .where(col("rn") === 1)
+      // Lloyd assignment step against the fixed model (kmCents): each
+      // point's nearest centroid by (d, cid), map-only (Vec.nearest) —
+      // cuml.dask KMeans labels_ analog. Output: cluster sizes + mean
+      // distance (bounded).
+      (s, dir) =>
+        Vec.nearest(T.embeddings(s, dir).transform(T.fanOut(_, col("vec_id"))),
+            "embedding", kmCents(s, dir), 1)
           .groupBy("cid")
           .agg(count(lit(1)).as("n_points"),
             round(T.xsum(col("d")) / count(lit(1)), 6).as("avg_dist"))
-          .orderBy("cid")
-      },
+          .orderBy("cid"),
       // ADVICE r3: arg_min has unspecified tie-breaking in DuckDB; the
       // row_number (d, cid) form mirrors Spark's deterministic tiebreak.
-      Some(s"""WITH a AS (
-                 SELECT vec_id, cid, d FROM (
-                   SELECT e.vec_id, c.vec_id AS cid,
-                     list_distance(CAST(e.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])) AS d,
-                     row_number() OVER (PARTITION BY e.vec_id
-                       ORDER BY list_distance(CAST(e.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])), c.vec_id) AS rn
-                   FROM embeddings e CROSS JOIN embeddings c
-                   WHERE c.vec_id < 10) t
-                 WHERE rn = 1)
+      Some(s"""WITH ${sqlKmCent()},
+                 a AS (${Vec.sqlNearest("embeddings", "vec_id", "embedding", 1)})
                SELECT cid, count(*) AS n_points,
                  round(${T.sqlXsum("d")} / count(*), 6) AS avg_dist
                FROM a GROUP BY cid ORDER BY cid""")),
@@ -1752,17 +1779,9 @@ object ML {
       // Lloyd update step: per-cluster mean of the first 4 embedding dims.
       // Mean of a few thousand floats in double accumulates ~1e-12 noise —
       // round(,6) absorbs it (same discipline as agg_stats_moments).
-      (s, dir) => {
-        val e = T.embeddings(s, dir)
-        val cent = e.where(col("vec_id") < 10)
-          .select(col("vec_id").as("cid"), col("embedding").as("c_emb"))
-        val dist = graft.functions.Vec.l2(s, "embedding", "c_emb")
-        val w = Window.partitionBy(col("vec_id")).orderBy(col("d"), col("cid"))
-        e.transform(T.fanOut(_, col("vec_id")))
-          .crossJoin(broadcast(cent))
-          .select(col("vec_id"), col("embedding"), col("cid"), dist.as("d"))
-          .withColumn("rn", row_number().over(w))
-          .where(col("rn") === 1)
+      (s, dir) =>
+        Vec.nearest(T.embeddings(s, dir).transform(T.fanOut(_, col("vec_id"))),
+            "embedding", kmCents(s, dir), 1)
           .groupBy("cid")
           .agg(
             count(lit(1)).as("n"),
@@ -1770,17 +1789,10 @@ object ML {
             round(avg(element_at(col("embedding"), 2).cast("double")), 6).as("m2"),
             round(avg(element_at(col("embedding"), 3).cast("double")), 6).as("m3"),
             round(avg(element_at(col("embedding"), 4).cast("double")), 6).as("m4"))
-          .orderBy("cid")
-      },
+          .orderBy("cid"),
       // row_number tie-break form — see ml_kmeans_assign oracle note
-      Some("""WITH a AS (
-                SELECT vec_id, embedding, cid FROM (
-                  SELECT e.vec_id, e.embedding, c.vec_id AS cid,
-                    row_number() OVER (PARTITION BY e.vec_id
-                      ORDER BY list_distance(CAST(e.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])), c.vec_id) AS rn
-                  FROM embeddings e CROSS JOIN embeddings c
-                  WHERE c.vec_id < 10) t
-                WHERE rn = 1)
+      Some(s"""WITH ${sqlKmCent()},
+                a AS (${Vec.sqlNearest("embeddings", "vec_id", "embedding", 1)})
               SELECT cid, count(*) AS n,
                 round(avg(CAST(embedding[1] AS DOUBLE)), 6) AS m1,
                 round(avg(CAST(embedding[2] AS DOUBLE)), 6) AS m2,
@@ -1799,18 +1811,10 @@ object ML {
       // representable, so the decimal sums are bit-deterministic); the
       // assignment step is the unweighted argmin (weights bias the
       // UPDATE, not the metric — the sklearn/cuML contract). Same scale
-      // shape as ml_kmeans_update: broadcast centroids, one groupBy.
-      (s, dir) => {
-        val e = T.embeddings(s, dir)
-        val cent = e.where(col("vec_id") < 10)
-          .select(col("vec_id").as("cid"), col("embedding").as("c_emb"))
-        val dist = graft.functions.Vec.l2(s, "embedding", "c_emb")
-        val w = Window.partitionBy(col("vec_id")).orderBy(col("d"), col("cid"))
-        e.transform(T.fanOut(_, col("vec_id")))
-          .crossJoin(broadcast(cent))
-          .select(col("vec_id"), col("embedding"), col("cid"), dist.as("d"))
-          .withColumn("rn", row_number().over(w))
-          .where(col("rn") === 1)
+      // shape as ml_kmeans_update: map-only assignment, one groupBy.
+      (s, dir) =>
+        Vec.nearest(T.embeddings(s, dir).transform(T.fanOut(_, col("vec_id"))),
+            "embedding", kmCents(s, dir), 1)
           .selectExpr("cid", "embedding",
             "CAST(1 + vec_id % 5 AS DOUBLE) AS sw")
           .groupBy("cid")
@@ -1825,18 +1829,12 @@ object ML {
               T.xsum(col("sw")), 6).as("m3"),
             round(T.xsum(col("sw") * element_at(col("embedding"), 4).cast("double")) /
               T.xsum(col("sw")), 6).as("m4"))
-          .orderBy("cid")
-      },
+          .orderBy("cid"),
       // row_number tie-break form — see ml_kmeans_assign oracle note
-      Some(s"""WITH a AS (
-                SELECT vec_id, embedding, cid,
+      Some(s"""WITH ${sqlKmCent()},
+                a AS (SELECT vec_id, embedding, cid,
                   CAST(1 + vec_id % 5 AS DOUBLE) AS sw FROM (
-                  SELECT e.vec_id, e.embedding, c.vec_id AS cid,
-                    row_number() OVER (PARTITION BY e.vec_id
-                      ORDER BY list_distance(CAST(e.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])), c.vec_id) AS rn
-                  FROM embeddings e CROSS JOIN embeddings c
-                  WHERE c.vec_id < 10) t
-                WHERE rn = 1)
+                  ${Vec.sqlNearest("embeddings", "vec_id", "embedding", 1)}) t)
               SELECT cid, count(*) AS n, ${T.sqlXsum("sw")} AS wsum,
                 round(${T.sqlXsum("sw * CAST(embedding[1] AS DOUBLE)")} / ${T.sqlXsum("sw")}, 6) AS m1,
                 round(${T.sqlXsum("sw * CAST(embedding[2] AS DOUBLE)")} / ${T.sqlXsum("sw")}, 6) AS m2,
@@ -1853,28 +1851,21 @@ object ML {
       // N0 = 100 (the streaming-counts schedule with a warm prior), new
       // center c′ = c + η·(batch_mean − c). The at-scale point: the
       // corpus pass touches ONLY the batch (the hash predicate prunes
-      // before the distance crossJoin), so a round costs 10% of a full
+      // before the nearest-centroid ranking), so a round costs 10% of a full
       // Lloyd round — the reason mini-batch exists. Weighted means ride
       // the exact-decimal wire; η and the convex update are shared text.
       (s, dir) => {
         val e = T.embeddings(s, dir)
-        val cent = e.where(col("vec_id") < 10)
-          .select(col("vec_id").as("cid"), col("embedding").as("c_emb"))
         val batch = e.where((col("vec_id") * 48271L + 11L) % T.HASH_P % 10 === 0)
-        val dist = graft.functions.Vec.l2(s, "embedding", "c_emb")
-        val w = Window.partitionBy(col("vec_id")).orderBy(col("d"), col("cid"))
-        val bm = batch.transform(T.fanOut(_, col("vec_id")))
-          .crossJoin(broadcast(cent))
-          .select(col("vec_id"), col("embedding"), col("cid"), dist.as("d"))
-          .withColumn("rn", row_number().over(w))
-          .where(col("rn") === 1)
+        val bm = Vec.nearest(batch.transform(T.fanOut(_, col("vec_id"))),
+            "embedding", kmCents(s, dir), 1)
           .groupBy("cid")
           .agg(count(lit(1)).as("nb"),
             (T.xsum(element_at(col("embedding"), 1).cast("double")) / count(lit(1))).as("b1"),
             (T.xsum(element_at(col("embedding"), 2).cast("double")) / count(lit(1))).as("b2"),
             (T.xsum(element_at(col("embedding"), 3).cast("double")) / count(lit(1))).as("b3"),
             (T.xsum(element_at(col("embedding"), 4).cast("double")) / count(lit(1))).as("b4"))
-        cent.join(bm, "cid")
+        kmCentFrame(e).join(bm, "cid")
           .selectExpr("cid", "nb",
             "CAST(nb AS DOUBLE) / (nb + 100e0) AS eta0",
             // element_at is 1-based in Spark; bare [k] would be 0-based
@@ -1891,16 +1882,10 @@ object ML {
             "round(c4 + eta0 * (b4 - c4), 6) AS m4")
           .orderBy("cid")
       },
-      Some(s"""WITH cent AS (SELECT vec_id AS cid, embedding AS c_emb
-                   FROM embeddings WHERE vec_id < 10),
+      Some(s"""WITH ${sqlKmCent()},
                  batch AS (SELECT vec_id, embedding FROM embeddings
                    WHERE (vec_id * 48271 + 11) % ${T.HASH_P} % 10 = 0),
-                 a AS (SELECT vec_id, embedding, cid FROM (
-                   SELECT b.vec_id, b.embedding, c.cid,
-                     row_number() OVER (PARTITION BY b.vec_id
-                       ORDER BY list_distance(CAST(b.embedding AS DOUBLE[]), CAST(c.c_emb AS DOUBLE[])), c.cid) AS rn
-                   FROM batch b CROSS JOIN cent c) t
-                 WHERE rn = 1),
+                 a AS (${Vec.sqlNearest("batch", "vec_id", "embedding", 1)}),
                  bm AS (SELECT cid, count(*) AS nb,
                      ${T.sqlXsum("CAST(embedding[1] AS DOUBLE)")} / count(*) AS b1,
                      ${T.sqlXsum("CAST(embedding[2] AS DOUBLE)")} / count(*) AS b2,
@@ -1925,8 +1910,8 @@ object ML {
       // 3 full Lloyd iterations — the driver-side loop is the idiomatic
       // Spark replacement for dask's dynamic task graph. The centroids are
       // DRIVER-HELD state (K×64 floats, cuML's client-held cluster_centers_):
-      // after each update step they are collect()ed and re-literalized, so
-      // iteration i+1's broadcast is built from 10 local rows instead of a
+      // after each update step (lloydStep) they are collect()ed and become
+      // iteration i+1's K literal terms in Vec.nearest, instead of a
       // plan that re-executes iterations 1..i (the r3 nested-plan shape —
       // each broadcast build recomputed every earlier Lloyd pass, the bulk
       // of its 31 s bench cost), and no cache() is needed at all
@@ -1942,30 +1927,9 @@ object ML {
         val e = T.embeddings(s, dir)
           .select(col("vec_id"), col("embedding"))
           .transform(T.fanOut(_, col("vec_id")))
-        var cent: DataFrame = e.where(col("vec_id") < 10)
-          .select(col("vec_id").as("cid"), col("embedding").as("c_emb"))
-        for (_ <- 1 to 3) {
-          val dist = graft.functions.Vec.l2(s, "embedding", "c_emb")
-          val w = Window.partitionBy(col("vec_id")).orderBy(col("d"), col("cid"))
-          val assigned = e.crossJoin(broadcast(cent))
-            .select(col("vec_id"), col("embedding"), col("cid"), dist.as("d"))
-            .withColumn("rn", row_number().over(w))
-            .where(col("rn") === 1)
-          // new centroids: per-cluster elementwise mean of all 64 dims,
-          // computed as array-of-avg via posexplode-free zip of aggregates
-          val next = assigned
-            .groupBy("cid")
-            .agg(array((1 to 64).map(i =>
-              avg(element_at(col("embedding"), i).cast("double")).cast("float")): _*).as("c_emb"))
-          val centRows = next.collect() // K×64 floats — the client-held state
-          cent = s.createDataFrame(java.util.Arrays.asList(centRows: _*), next.schema)
-        }
-        val dist = graft.functions.Vec.l2(s, "embedding", "c_emb")
-        val w = Window.partitionBy(col("vec_id")).orderBy(col("d"), col("cid"))
-        e.crossJoin(broadcast(cent))
-          .select(col("vec_id"), col("cid"), dist.as("d"))
-          .withColumn("rn", row_number().over(w))
-          .where(col("rn") === 1)
+        var cent = kmCents(s, dir)
+        for (_ <- 1 to 3) cent = lloydStep(e, cent)
+        Vec.nearest(e, "embedding", cent, 1)
           .groupBy("cid")
           .agg(count(lit(1)).as("n_points"),
             round(T.xsum(col("d")) / count(lit(1)), 6).as("avg_dist"),
@@ -1975,35 +1939,13 @@ object ML {
             round(T.xsum(col("d") * col("d")), 6).as("inertia"))
           .orderBy("cid")
       },
-      Some {
-        // elementwise centroid mean, float-rounded like the Spark side;
-        // assignment via row_number (d, cid) — deterministic tie-break
-        // mirroring Spark's window (ADVICE r3: arg_min ties are unspecified)
-        val meanList = (1 to 64).map(i =>
-          s"CAST(CAST(avg(emb[$i]) AS REAL) AS DOUBLE)").mkString("list_value(", ", ", ")")
-        def assign(prev: String) =
-          s"""SELECT vec_id, emb, cid FROM (
-                SELECT e.vec_id, e.emb, c.cid,
-                  row_number() OVER (PARTITION BY e.vec_id
-                    ORDER BY list_distance(e.emb, c.c), c.cid) AS rn
-                FROM e CROSS JOIN $prev c) t WHERE rn = 1"""
-        def update(prev: String) =
-          s"SELECT cid, $meanList AS c FROM $prev GROUP BY cid"
-        s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-              c0 AS (SELECT vec_id AS cid, emb AS c FROM e WHERE vec_id < 10),
-              a1 AS (${assign("c0")}), c1 AS (${update("a1")}),
-              a2 AS (${assign("c1")}), c2 AS (${update("a2")}),
-              a3 AS (${assign("c2")}), c3 AS (${update("a3")}),
-              af AS (SELECT vec_id, cid, d FROM (
-                       SELECT e.vec_id, c.cid, list_distance(e.emb, c.c) AS d,
-                         row_number() OVER (PARTITION BY e.vec_id
-                           ORDER BY list_distance(e.emb, c.c), c.cid) AS rn
-                       FROM e CROSS JOIN c3 c) t WHERE rn = 1)
+      Some(s"""WITH $sqlLloydCorpus,
+              ${(1 to 3).map(sqlLloydStep).mkString(",\n              ")},
+              af AS (${Vec.sqlNearest("e", "vec_id", "emb", 1, "c3")})
             SELECT cid, count(*) AS n_points,
               round(${T.sqlXsum("d")} / count(*), 6) AS avg_dist,
               round(${T.sqlXsum("d * d")}, 6) AS inertia
-            FROM af GROUP BY cid ORDER BY cid"""
-      }),
+            FROM af GROUP BY cid ORDER BY cid""")),
 
     QueryDef(
       "ml_kmeans_converge",
@@ -2020,17 +1962,11 @@ object ML {
       // with the convergence verdict. The sequence is deterministic, so
       // the DuckDB oracle unrolls all 10 candidate iterations as CTEs and
       // truncates at the same stopping index the driver loop used.
-      // r10 perf rewrite: assignment was crossJoin(broadcast(cent)) +
-      // Window.partitionBy(vec_id) — a shuffle of K× the corpus PER
-      // ITERATION just to pick the row_number()=1 row. The centroids are
-      // driver-held model state anyway (collected every round for the
-      // shift check), so assignment is now MAP-ONLY: `least()` over K
-      // literal (d, cid) structs — struct comparison is lexicographic, so
-      // the (d, cid) tie-break is bit-identical to the old window order
-      // and to the oracle's row_number ORDER BY d, cid. Per iteration the
-      // only shuffle left is the K-group partial-aggregated mean (the
-      // Lloyd shape MLlib itself uses). The shift check moved driver-side
-      // (same widen-then-accumulate IEEE sequence as graft_vec_l2).
+      // Assignment is map-only (lloydStep → Vec.nearest over the K
+      // driver-held centroids), so per iteration the only shuffle is the
+      // K-group partial-aggregated mean (the Lloyd shape MLlib itself
+      // uses). The shift check is driver-side (same widen-then-accumulate
+      // IEEE sequence as graft_vec_l2).
       (s, dir) => {
         val spark = s
         import spark.implicits._
@@ -2041,12 +1977,6 @@ object ML {
           .select(col("vec_id"), col("embedding"))
           .transform(T.fanOut(_, col("vec_id")))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // client-held model state (the cuML coef_ pattern): K=10 rows
-        var cent: Seq[(Long, Array[Float])] = e.where(col("vec_id") < 10)
-          .select(col("vec_id"), col("embedding"))
-          .collect()
-          .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-          .toSeq.sortBy(_._1)
         def l2Local(a: Array[Float], b: Array[Float]): Double = {
           var acc = 0.0; var i = 0
           while (i < a.length) {
@@ -2055,56 +1985,32 @@ object ML {
           math.sqrt(acc)
         }
         val trail = scala.collection.mutable.ArrayBuffer[(Int, Double)]()
-        var shift = Double.MaxValue
-        var it = 0
-        while (it < 10 && shift > 1e-4) {
-          it += 1
-          val best = least(cent.map { case (cid, emb) =>
-            struct(
-              graft.functions.Vec.l2Cols(s, col("embedding"), typedLit(emb)).as("d"),
-              lit(cid).as("cid"))
-          }: _*)
-          val next = e
-            .select(col("embedding"), best.getField("cid").as("cid"))
-            .groupBy("cid")
-            .agg(array((1 to 64).map(i =>
-              avg(element_at(col("embedding"), i).cast("double")).cast("float")): _*).as("c_emb"))
-          val nextCent = next.collect()
-            .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-            .toSeq.sortBy(_._1)
-          val old = cent.toMap
-          shift = nextCent.flatMap { case (cid, emb) =>
-            old.get(cid).map(l2Local(_, emb))
-          }.max
-          trail += ((it, shift))
-          cent = nextCent
-        }
-        e.unpersist(blocking = false)
+        try {
+          // client-held model state (the cuML coef_ pattern): K=10 rows
+          var cent = kmCents(s, dir)
+          var shift = Double.MaxValue
+          while (trail.size < 10 && shift > 1e-4) {
+            val nextCent = lloydStep(e, cent)
+            val old = cent.toMap
+            shift = nextCent.flatMap { case (cid, emb) =>
+              old.get(cid).map(l2Local(_, emb))
+            }.max
+            trail += ((trail.size + 1, shift))
+            cent = nextCent
+          }
+        } finally e.unpersist(blocking = false)
         trail.toSeq.toDF("iter", "s")
           .selectExpr("iter", "round(s, 6) AS shift", "s <= 1e-4 AS converged")
           .orderBy("iter")
       },
       Some {
-        val meanList = (1 to 64).map(i =>
-          s"CAST(CAST(avg(emb[$i]) AS REAL) AS DOUBLE)").mkString("list_value(", ", ", ")")
-        def assign(prev: String) =
-          s"""SELECT vec_id, emb, cid FROM (
-                SELECT e.vec_id, e.emb, c.cid,
-                  row_number() OVER (PARTITION BY e.vec_id
-                    ORDER BY list_distance(e.emb, c.c), c.cid) AS rn
-                FROM e CROSS JOIN $prev c) t WHERE rn = 1"""
-        def update(prev: String) =
-          s"SELECT cid, $meanList AS c FROM $prev GROUP BY cid"
-        def shiftCte(o: String, n: String) =
-          s"SELECT max(list_distance(o.c, n.c)) AS s FROM $o o JOIN $n n ON o.cid = n.cid"
-        val iters = (1 to 10).map { i =>
-          s"a$i AS (${assign(s"c${i - 1}")}), c$i AS (${update(s"a$i")}), s$i AS (${shiftCte(s"c${i - 1}", s"c$i")})"
-        }.mkString(",\n              ")
+        val shifts = (1 to 10).map(i => s"""s$i AS (SELECT max(list_distance(o.c_emb, n.c_emb)) AS s
+                FROM c${i - 1} o JOIN c$i n ON o.cid = n.cid)""")
         val shRows = (1 to 10).map(i => s"SELECT $i AS iter, (SELECT s FROM s$i) AS s")
           .mkString("\n                UNION ALL ")
-        s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-              c0 AS (SELECT vec_id AS cid, emb AS c FROM e WHERE vec_id < 10),
-              $iters,
+        s"""WITH $sqlLloydCorpus,
+              ${(1 to 10).map(sqlLloydStep).mkString(",\n              ")},
+              ${shifts.mkString(",\n              ")},
               sh AS ($shRows),
               stop AS (SELECT coalesce(min(iter) FILTER (WHERE s <= 1e-4), 10) AS last
                 FROM sh)
@@ -2241,32 +2147,16 @@ object ML {
       // score(X) = −Σ‖x − c_nearest(x)‖² for the fitted model, as ONE
       // global row (the estimator-method companion to ml_kmeans_assign's
       // per-cluster breakdown, against the same fixed vec_id < 10
-      // centroids = the model). One broadcast(K centroids) × points pass,
-      // map-side-combined; d² sums on the exact decimal wire.
-      (s, dir) => {
-        val e = T.embeddings(s, dir)
-        val cent = e.where(col("vec_id") < 10)
-          .select(col("vec_id").as("cid"), col("embedding").as("c_emb"))
-        val dist = graft.functions.Vec.l2(s, "embedding", "c_emb")
-        val w = Window.partitionBy(col("vec_id")).orderBy(col("d"), col("cid"))
-        e.transform(T.fanOut(_, col("vec_id")))
-          .crossJoin(broadcast(cent))
-          .select(col("vec_id"), col("cid"), dist.as("d"))
-          .withColumn("rn", row_number().over(w))
-          .where(col("rn") === 1)
+      // centroids = the model). One map-only nearest-centroid pass
+      // (Vec.nearest), map-side-combined; d² sums on the exact decimal wire.
+      (s, dir) =>
+        Vec.nearest(T.embeddings(s, dir).transform(T.fanOut(_, col("vec_id"))),
+            "embedding", kmCents(s, dir), 1)
           .agg(count(lit(1)).as("n_points"),
             round(T.xsum(col("d") * col("d")), 6).as("inertia"),
-            round(-T.xsum(col("d") * col("d")), 6).as("score"))
-      },
-      Some(s"""WITH a AS (
-                 SELECT vec_id, cid, d FROM (
-                   SELECT e.vec_id, c.vec_id AS cid,
-                     list_distance(CAST(e.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])) AS d,
-                     row_number() OVER (PARTITION BY e.vec_id
-                       ORDER BY list_distance(CAST(e.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])), c.vec_id) AS rn
-                   FROM embeddings e CROSS JOIN embeddings c
-                   WHERE c.vec_id < 10) t
-                 WHERE rn = 1)
+            round(-T.xsum(col("d") * col("d")), 6).as("score")),
+      Some(s"""WITH ${sqlKmCent()},
+                 a AS (${Vec.sqlNearest("embeddings", "vec_id", "embedding", 1)})
                SELECT count(*) AS n_points,
                  round(${T.sqlXsum("d * d")}, 6) AS inertia,
                  round(-${T.sqlXsum("d * d")}, 6) AS score
@@ -2285,8 +2175,7 @@ object ML {
       // to the previous k (the elbow signal; NULL on the first row).
       (s, dir) => {
         val e = T.embeddings(s, dir)
-        val cent = e.where(col("vec_id") < 10)
-          .select(col("vec_id").as("cid"), col("embedding").as("c_emb"))
+        val cent = kmCentFrame(e)
         val dist = graft.functions.Vec.l2(s, "embedding", "c_emb")
         val wp = Window.partitionBy(col("vec_id")).orderBy(col("cid"))
           .rowsBetween(Window.unboundedPreceding, 0)
@@ -2333,8 +2222,7 @@ object ML {
       // the smaller k (row_number).
       (s, dir) => {
         val e = T.embeddings(s, dir)
-        val cent = e.where(col("vec_id") < 10)
-          .select(col("vec_id").as("cid"), col("embedding").as("c_emb"))
+        val cent = kmCentFrame(e)
         val dist = graft.functions.Vec.l2(s, "embedding", "c_emb")
         val wp = Window.partitionBy(col("vec_id")).orderBy(col("cid"))
           .rowsBetween(Window.unboundedPreceding, 0)
@@ -2399,8 +2287,7 @@ object ML {
       // pass over the full table with the K×64 model broadcast.
       (s, dir) => {
         val e = T.embeddings(s, dir)
-        val cent = e.where(col("vec_id") < 10)
-          .select(col("vec_id").as("cid"), col("embedding").as("c_emb"))
+        val cent = kmCentFrame(e)
         val dist = graft.functions.Vec.l2(s, "embedding", "c_emb")
         e.where(col("vec_id") >= 10 && col("vec_id") < 30)
           .crossJoin(broadcast(cent))
@@ -2587,18 +2474,13 @@ object ML {
       // standard scalable variant: a = distance to own centroid, b =
       // distance to the nearest OTHER centroid, s = (b−a)/max(a,b);
       // full silhouette is all-pairs by definition and lives in the
-      // same n² bucket as the recall references). One points×K
-      // broadcast crossJoin, top-2 centroid distances per point by
-      // window, per-cluster mean s through the exact wire.
+      // same n² bucket as the recall references). The top-2 centroid
+      // distances per point in one map-only pass (Vec.nearest),
+      // per-cluster mean s through the exact wire.
       (s, dir) => {
         val e = T.embeddings(s, dir).transform(T.fanOut(_, col("vec_id")))
-        val cent = e.where(col("vec_id") < 10)
-          .select(col("vec_id").as("cid"), col("embedding").as("c_emb"))
-        val w = Window.partitionBy(col("vec_id")).orderBy(col("d"), col("cid"))
-        val ranked = e.crossJoin(broadcast(cent))
-          .select(col("vec_id"), col("cid"),
-            graft.functions.Vec.l2(s, "embedding", "c_emb").as("d"))
-          .withColumn("rn", row_number().over(w)).where(col("rn") <= 2)
+        val ranked = Vec.nearest(e.select(col("vec_id"), col("embedding")),
+          "embedding", kmCents(s, dir), 2)
         val own = ranked.where(col("rn") === 1)
           .select(col("vec_id"), col("cid"), col("d").as("a"))
         val nxt = ranked.where(col("rn") === 2)
@@ -2611,17 +2493,8 @@ object ML {
             round(T.xsum(col("sil")) / count(lit(1)), 6).as("mean_sil"))
           .orderBy("cid")
       },
-      Some(s"""WITH cent AS (SELECT vec_id AS cid, embedding AS c_emb
-                             FROM embeddings WHERE vec_id < 10),
-                 ranked AS (SELECT vec_id, cid, d, rn FROM (
-                     SELECT e.vec_id, c.cid,
-                       list_distance(CAST(e.embedding AS DOUBLE[]),
-                                     CAST(c.c_emb AS DOUBLE[])) AS d,
-                       row_number() OVER (PARTITION BY e.vec_id
-                         ORDER BY list_distance(CAST(e.embedding AS DOUBLE[]),
-                                                CAST(c.c_emb AS DOUBLE[])), c.cid) AS rn
-                     FROM embeddings e CROSS JOIN cent c) t
-                   WHERE rn <= 2),
+      Some(s"""WITH ${sqlKmCent()},
+                 ranked AS (${Vec.sqlNearest("embeddings", "vec_id", "embedding", 2)}),
                  pairs2 AS (SELECT o.cid, (n.d - o.d) / greatest(o.d, n.d) AS sil
                             FROM (SELECT vec_id, cid, d FROM ranked WHERE rn = 1) o
                             JOIN (SELECT vec_id, d FROM ranked WHERE rn = 2) n
@@ -2651,13 +2524,7 @@ object ML {
         val samp = e.select(col("vec_id"), col("embedding"))
           .orderBy((lit(28657L) * col("vec_id") + lit(9949L)) % lit(2147483647L), col("vec_id"))
           .limit(SIL_N)
-        val cent = T.embeddings(s, dir).where(col("vec_id") < 10)
-          .select(col("vec_id").as("cid"), col("embedding").as("c_emb"))
-        val wA = Window.partitionBy(col("vec_id")).orderBy(col("dc"), col("cid"))
-        val assigned = samp.crossJoin(broadcast(cent))
-          .select(col("vec_id"), col("embedding"), col("cid"),
-            graft.functions.Vec.l2(s, "embedding", "c_emb").as("dc"))
-          .withColumn("rn", row_number().over(wA)).where(col("rn") === 1)
+        val assigned = Vec.nearest(samp, "embedding", kmCents(s, dir), 1)
           .select(col("vec_id"), col("embedding"), col("cid"))
         val right = assigned.select(col("vec_id").as("j_id"),
           col("embedding").as("j_emb"), col("cid").as("j_cid"))
@@ -2682,14 +2549,8 @@ object ML {
       Some(s"""WITH samp AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
                    FROM embeddings
                    ORDER BY (28657 * vec_id + 9949) % 2147483647, vec_id LIMIT 1000),
-                 cent AS (SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS c_emb
-                          FROM embeddings WHERE vec_id < 10),
-                 assigned AS (SELECT vec_id, emb, cid FROM (
-                     SELECT s.vec_id, s.emb, c.cid,
-                       row_number() OVER (PARTITION BY s.vec_id
-                         ORDER BY list_distance(s.emb, c.c_emb), c.cid) AS rn
-                     FROM samp s CROSS JOIN cent c) t
-                   WHERE rn = 1),
+                 ${sqlKmCent()},
+                 assigned AS (${Vec.sqlNearest("samp", "vec_id", "emb", 1)}),
                  md AS (SELECT i.vec_id, i.cid, j.cid AS j_cid,
                      ${T.sqlXsum("list_distance(i.emb, j.emb)")} / count(*) AS md
                    FROM assigned i JOIN assigned j ON i.vec_id <> j.vec_id

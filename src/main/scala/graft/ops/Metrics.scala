@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{QueryDef, Tables => T}
+import graft.functions.Vec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -17,9 +18,9 @@ import org.apache.spark.sql.functions._
   * - f1: the prediction set is the bounded EVAL_N sample (n·EVAL_N
   *   distances — ML.knnPredLang's contract); the per-class pivot is a
   *   ≤|langs| broadcast against ≤EVAL_N rows.
-  * - ARI/NMI: one points×K broadcast assignment pass (the ml_kmeans_assign
-  *   shape); every sum after the (K×|labels|)-row contingency table is
-  *   bounded. Pair counts stay in BIGINT (exact); only the final ratios
+  * - ARI/NMI: one map-only assignment pass (`Vec.nearest`, the
+  *   ml_kmeans_assign shape); every sum after the (K×|labels|)-row
+  *   contingency table is bounded. Pair counts stay in BIGINT (exact); only the final ratios
   *   are doubles.
   * - mse/mae: one scoring pass over lineitem on the exact-decimal wire.
   *
@@ -32,39 +33,28 @@ object Metrics {
 
   // ---- shared k-means-vs-truth contingency --------------------------------
 
-  /** Lloyd assignment against the fixed vec_id<10 centroids carrying the
-    * ground-truth label: (vec_id, label, cid). Broadcast(10 centroids) ×
-    * points — one pass. Shared with the clustering-metric family here and
+  /** Lloyd assignment against the fixed model (`ML.kmCents`) carrying the
+    * ground-truth label: (vec_id, label, cid, d, rn = 1). One map-only pass
+    * (`Vec.nearest`). Shared with the clustering-metric family here and
     * the SemDeDup row (Curation.scala), so the whole family runs one
     * assignment shape. */
-  private[ops] def lloydAssign(s: SparkSession, dir: String): DataFrame = {
-    val e = T.embeddings(s, dir)
-    val cent = e.where(col("vec_id") < 10)
-      .select(col("vec_id").as("cid"), col("embedding").as("c_emb"))
-    val dist = graft.functions.Vec.l2(s, "embedding", "c_emb")
-    val w = Window.partitionBy(col("vec_id")).orderBy(col("d"), col("cid"))
-    e.transform(T.fanOut(_, col("vec_id")))
-      .crossJoin(broadcast(cent))
-      .select(col("vec_id"), col("label"), col("cid"), dist.as("d"))
-      .withColumn("rn", row_number().over(w)).where(col("rn") === 1)
-  }
+  private[ops] def lloydAssign(s: SparkSession, dir: String): DataFrame =
+    Vec.nearest(T.embeddings(s, dir).transform(T.fanOut(_, col("vec_id")))
+      .select(col("vec_id"), col("label"), col("embedding")),
+      "embedding", ML.kmCents(s, dir), 1).drop("embedding")
 
   /** [[lloydAssign]] reduced to the (cid, label) contingency counts —
     * bounded output. */
   private def contingency(s: SparkSession, dir: String): DataFrame =
     lloydAssign(s, dir).groupBy("cid", "label").agg(count(lit(1)).as("nij"))
 
-  /** Oracle twin of [[lloydAssign]] ending in `a(vec_id, label, cid)` —
-    * the row_number (d, cid) argmin form mirrors Spark's deterministic
-    * tiebreak (the ml_kmeans_assign oracle note). */
+  /** Oracle twin of [[lloydAssign]]: the `cent` model and
+    * `a(vec_id, label, cid)` — the row_number (d, cid) argmin form mirrors
+    * Spark's deterministic tiebreak (the ml_kmeans_assign oracle note). */
   private[ops] val sqlLloydAssign =
-    """a AS (SELECT vec_id, label, cid FROM (
-         SELECT e.vec_id, e.label, c.vec_id AS cid,
-           row_number() OVER (PARTITION BY e.vec_id
-             ORDER BY list_distance(CAST(e.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])), c.vec_id) AS rn
-         FROM embeddings e CROSS JOIN embeddings c
-         WHERE c.vec_id < 10) t
-       WHERE rn = 1)"""
+    s"""${ML.sqlKmCent()},
+       a AS (SELECT vec_id, label, cid FROM (
+         ${Vec.sqlNearest("embeddings", "vec_id", "embedding", 1)}) t)"""
 
   /** Oracle twin ending in `ct(cid, label, nij)`. */
   private[ops] val sqlContingency =

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{QueryDef, Tables => T, Twin}
+import graft.functions.Vec
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -325,57 +326,48 @@ object Pipeline {
     * id attached so a probe join partition-prunes it at scale. */
   private[graft] def ivfSq8IndexFrames(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) =
-    ivfSq8IndexFramesOn(s, T.embeddings(s, dir))
+    ivfSq8IndexFramesOn(T.embeddings(s, dir))
 
   /** [[ivfSq8IndexFrames]] over an explicit corpus frame — the TRAIN
     * corpus and the indexed corpus coincide for the full-corpus rows, but
     * ml_index_incremental trains on the base partition only (the faiss
     * add() contract: new batches are encoded by the frozen quantizer,
     * never retrained into it). */
-  private[graft] def ivfSq8IndexFramesOn(s: SparkSession, e: DataFrame)
+  private[graft] def ivfSq8IndexFramesOn(e: DataFrame)
       : (DataFrame, DataFrame, DataFrame) = {
-    val cent = e.where(col("vec_id") < 10)
-      .select(col("vec_id").as("cid"), col("embedding").as("c_emb"))
-    // pinned: the exploded per-dim frame feeds the codebook aggregate AND
-    // the code table (r13 — one explode, two consumers)
-    val ex = T.pin(e.transform(T.fanOut(_, col("vec_id")))
-      .select(col("vec_id"), posexplode(col("embedding")))
-      .selectExpr("vec_id", "pos + 1 AS i", "CAST(col AS DOUBLE) AS x"))
+    val cent = ML.kmCentFrame(e)
+    // pinned: the exploded per-dim frame, cell attached, feeds the
+    // codebook aggregate AND the code table (r13 — one explode, two
+    // consumers)
+    val ex = T.pin(cellDims(e.transform(T.fanOut(_, col("vec_id"))), Vec.centroids(cent)))
     val codebook = ex.groupBy("i").agg(min(col("x")).as("mn"), max(col("x")).as("mx"))
-    val aw = Window.partitionBy(col("vec_id")).orderBy(col("d"), col("cid"))
-    val cells = e.transform(T.fanOut(_, col("vec_id")))
-      .crossJoin(broadcast(cent))
-      .select(col("vec_id"), col("cid"),
-        graft.functions.Vec.l2(s, "embedding", "c_emb").as("d"))
-      .withColumn("rn", row_number().over(aw)).where(col("rn") === 1)
-      .select(col("vec_id"), col("cid"))
-    val codes = ex.join(broadcast(codebook), "i").join(cells, "vec_id")
+    (cent, codebook, sq8Codes(ex, codebook))
+  }
+
+  /** Each vector's nearest cell (map-only, `Vec.nearest`) and its dims
+    * widened to double: `(vec_id, cid, i, x)`, one row per dim. */
+  private def cellDims(vecs: DataFrame, cents: Seq[(Long, Array[Float])]): DataFrame =
+    Vec.nearest(vecs.select(col("vec_id"), col("embedding")), "embedding", cents, 1)
+      .select(col("vec_id"), col("cid"), posexplode(col("embedding")))
+      .selectExpr("vec_id", "cid", "pos + 1 AS i", "CAST(col AS DOUBLE) AS x")
+
+  /** SQ8 codes of [[cellDims]] rows against the per-dim (mn, mx) codebook. */
+  private def sq8Codes(dims: DataFrame, codebook: DataFrame): DataFrame =
+    dims.join(broadcast(codebook), "i")
       .selectExpr("vec_id", "cid", "i",
         "CASE WHEN mx > mn THEN CAST(floor((x - mn) / (mx - mn) * 255) AS BIGINT) ELSE 0L END AS code")
-    (cent, codebook, codes)
-  }
 
   /** Encode a vector batch against a FROZEN quantizer (the faiss add()
     * primitive, shared by ml_index_incremental and its MicroSpec twin):
     * assign each vector to its nearest centroid, quantize each dim with
     * the per-dim (mn, mx) codebook — the identical expressions
     * [[ivfSq8IndexFramesOn]] uses at build time, so codes never depend on
-    * which batch a vector arrived in. Map-shaped at scale: both index
-    * sides are broadcast, the batch is never shuffled. */
-  private[graft] def ivfSq8Encode(s: SparkSession, batch: DataFrame,
-      cent: DataFrame, codebook: DataFrame): DataFrame = {
-    val aw = Window.partitionBy(col("vec_id")).orderBy(col("d"), col("cid"))
-    val cells = batch.crossJoin(broadcast(cent))
-      .select(col("vec_id"), col("cid"),
-        graft.functions.Vec.l2(s, "embedding", "c_emb").as("d"))
-      .withColumn("rn", row_number().over(aw)).where(col("rn") === 1)
-      .select(col("vec_id"), col("cid"))
-    batch.select(col("vec_id"), posexplode(col("embedding")))
-      .selectExpr("vec_id", "pos + 1 AS i", "CAST(col AS DOUBLE) AS x")
-      .join(broadcast(codebook), "i").join(cells, "vec_id")
-      .selectExpr("vec_id", "cid", "i",
-        "CASE WHEN mx > mn THEN CAST(floor((x - mn) / (mx - mn) * 255) AS BIGINT) ELSE 0L END AS code")
-  }
+    * which batch a vector arrived in. Map-only whatever the batch's
+    * partitioning: the centroids are collected to the driver and the
+    * codebook is broadcast, so the batch is never shuffled. */
+  private[graft] def ivfSq8Encode(batch: DataFrame, cent: DataFrame,
+      codebook: DataFrame): DataFrame =
+    sq8Codes(cellDims(batch, Vec.centroids(cent)), codebook)
 
   /** IVF-probed SQ8 search THROUGH the index artifacts only: the database
     * side touches nothing but (centroids, codebook, codes) — exactly what
@@ -386,14 +378,9 @@ object Pipeline {
     * in-session bit-for-bit), rank by the exact-decimal-wire d². */
   private[graft] def ivfSq8Search(s: SparkSession, dir: String,
       cent: DataFrame, codebook: DataFrame, codes: DataFrame): DataFrame = {
-    val e = T.embeddings(s, dir)
-    val qw = Window.partitionBy(col("q_id")).orderBy(col("qd"), col("cid"))
-    val probes = e.where(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      .crossJoin(broadcast(cent))
-      .select(col("q_id"), col("cid"),
-        graft.functions.Vec.l2(s, "q_emb", "c_emb").as("qd"))
-      .withColumn("prb", row_number().over(qw)).where(col("prb") <= 3)
+    val probes = Vec.nearest(T.embeddings(s, dir).where(col("vec_id") < 10)
+        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb")),
+        "q_emb", Vec.centroids(cent), 3)
       .select(col("q_id"), col("cid"))
     val recon = codes.join(broadcast(codebook), "i")
       .selectExpr("vec_id", "cid", "i",
@@ -769,24 +756,16 @@ object Pipeline {
       // the approximate result itself is oracle-checked.
       (s, dir) => {
         val e = T.embeddings(s, dir)
-        val cent = e.where(col("vec_id") < 10)
-          .select(col("vec_id").as("cid"), col("embedding").as("c_emb"))
-        val dist = graft.functions.Vec.l2(s, "embedding", "c_emb")
+        val cents = ML.kmCents(s, dir)
         // assignment: nearest cell per vector
-        val aw = Window.partitionBy(col("vec_id")).orderBy(col("d"), col("cid"))
-        val assigned = e.transform(T.fanOut(_, col("vec_id")))
-          .crossJoin(broadcast(cent))
-          .select(col("vec_id"), col("embedding"), col("cid"), dist.as("d"))
-          .withColumn("rn", row_number().over(aw)).where(col("rn") === 1)
-          .select(col("vec_id").as("n_id"), col("embedding").as("n_emb"), col("cid"))
+        val assigned = Vec.nearest(e.transform(T.fanOut(_, col("vec_id")))
+            .select(col("vec_id").as("n_id"), col("embedding").as("n_emb")),
+            "n_emb", cents, 1)
+          .select(col("n_id"), col("n_emb"), col("cid"))
         // probes: 3 nearest cells per query
-        val qw = Window.partitionBy(col("q_id")).orderBy(col("qd"), col("cid"))
-        val probes = e.where(col("vec_id") < 20)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-          .crossJoin(broadcast(cent))
-          .select(col("q_id"), col("q_emb"), col("cid"),
-            graft.functions.Vec.l2(s, "q_emb", "c_emb").as("qd"))
-          .withColumn("prb", row_number().over(qw)).where(col("prb") <= 3)
+        val probes = Vec.nearest(e.where(col("vec_id") < 20)
+            .select(col("vec_id").as("q_id"), col("embedding").as("q_emb")),
+            "q_emb", cents, 3)
           .select(col("q_id"), col("q_emb"), col("cid"))
         // rank candidates within probed cells only
         val kw = Window.partitionBy(col("q_id")).orderBy(col("d"), col("n_id"))
@@ -798,24 +777,15 @@ object Pipeline {
           .select(col("q_id"), col("rn"), col("n_id"), round(col("d"), 6).as("dist"))
           .orderBy("q_id", "rn")
       },
-      Some("""WITH cent AS (SELECT vec_id AS cid, embedding AS c_emb FROM embeddings WHERE vec_id < 10),
+      Some(s"""WITH ${ML.sqlKmCent()},
                assigned AS (
-                 -- row_number (d, cid) tie-break mirrors Spark's window
+                 -- row_number (d, cid) tie-break mirrors Spark's ranking
                  -- (ADVICE r3: arg_min ties are unspecified in DuckDB)
-                 SELECT n_id, n_emb, cid FROM (
-                   SELECT e.vec_id AS n_id, e.embedding AS n_emb, c.cid,
-                     row_number() OVER (PARTITION BY e.vec_id
-                       ORDER BY list_distance(CAST(e.embedding AS DOUBLE[]), CAST(c.c_emb AS DOUBLE[])), c.cid) AS rn
-                   FROM embeddings e CROSS JOIN cent c) t
-                 WHERE rn = 1),
-               probes AS (
-                 SELECT q_id, q_emb, cid FROM (
-                   SELECT e.vec_id AS q_id, e.embedding AS q_emb, c.cid,
-                     row_number() OVER (PARTITION BY e.vec_id
-                       ORDER BY list_distance(CAST(e.embedding AS DOUBLE[]), CAST(c.c_emb AS DOUBLE[])), c.cid) AS prb
-                   FROM embeddings e CROSS JOIN cent c
-                   WHERE e.vec_id < 20) t
-                 WHERE prb <= 3)
+                 SELECT vec_id AS n_id, embedding AS n_emb, cid FROM (
+                 ${Vec.sqlNearest("embeddings", "vec_id", "embedding", 1)}) t),
+               q AS (SELECT vec_id AS q_id, embedding AS q_emb
+                     FROM embeddings WHERE vec_id < 20),
+               probes AS (${Vec.sqlNearest("q", "q_id", "q_emb", 3)})
               SELECT q_id, rn, n_id, dist FROM (
                 SELECT p.q_id, a.n_id,
                   round(list_distance(CAST(p.q_emb AS DOUBLE[]), CAST(a.n_emb AS DOUBLE[])), 6) AS dist,
@@ -841,22 +811,15 @@ object Pipeline {
       (s, dir) => {
         val e = T.embeddings(s, dir)
         val n = e.agg(count(lit(1)).as("n_corpus"))
-        val cent = e.where(col("vec_id") < 10)
-          .select(col("vec_id").as("cid"), col("embedding").as("c_emb"))
-        val aw = Window.partitionBy(col("vec_id")).orderBy(col("d"), col("cid"))
-        val assigned = T.freeze(e.transform(T.fanOut(_, col("vec_id")))
-          .crossJoin(broadcast(cent))
-          .select(col("vec_id"), col("embedding"), col("cid"),
-            graft.functions.Vec.l2(s, "embedding", "c_emb").as("d"))
-          .withColumn("rn", row_number().over(aw)).where(col("rn") === 1)
-          .select(col("vec_id").as("n_id"), col("embedding").as("n_emb"), col("cid")))
+        val cents = ML.kmCents(s, dir)
+        val assigned = T.freeze(Vec.nearest(e.transform(T.fanOut(_, col("vec_id")))
+            .select(col("vec_id").as("n_id"), col("embedding").as("n_emb")),
+            "n_emb", cents, 1)
+          .select(col("n_id"), col("n_emb"), col("cid")))
         val queries = e.where(col("vec_id") < 20)
           .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-        val qw = Window.partitionBy(col("q_id")).orderBy(col("qd"), col("cid"))
-        val probed = queries.crossJoin(broadcast(cent))
-          .select(col("q_id"), col("q_emb"), col("cid"),
-            graft.functions.Vec.l2(s, "q_emb", "c_emb").as("qd"))
-          .withColumn("prb", row_number().over(qw)).where(col("prb") <= 3)
+        val probed = Vec.nearest(queries, "q_emb", cents, 3)
+          .select(col("q_id"), col("q_emb"), col("cid"), col("rn").as("prb"))
         val nps = s.sql("SELECT * FROM VALUES (1), (2), (3) AS t(np)")
         val cand = probed.crossJoin(broadcast(nps)).where(col("prb") <= col("np"))
           .join(assigned, "cid").where(col("q_id") =!= col("n_id"))
@@ -890,23 +853,14 @@ object Pipeline {
             "scan_frac")
           .orderBy("nprobe")
       },
-      Some("""WITH n AS (SELECT count(*) AS n_corpus FROM embeddings),
-               cent AS (SELECT vec_id AS cid, embedding AS c_emb
-                        FROM embeddings WHERE vec_id < 10),
-               assigned AS (SELECT n_id, n_emb, cid FROM (
-                   SELECT e.vec_id AS n_id, e.embedding AS n_emb, c.cid,
-                     row_number() OVER (PARTITION BY e.vec_id
-                       ORDER BY list_distance(CAST(e.embedding AS DOUBLE[]), CAST(c.c_emb AS DOUBLE[])), c.cid) AS rn
-                   FROM embeddings e CROSS JOIN cent c) t
-                 WHERE rn = 1),
+      Some(s"""WITH n AS (SELECT count(*) AS n_corpus FROM embeddings),
+               ${ML.sqlKmCent()},
+               assigned AS (SELECT vec_id AS n_id, embedding AS n_emb, cid FROM (
+                 ${Vec.sqlNearest("embeddings", "vec_id", "embedding", 1)}) t),
                q AS (SELECT vec_id AS q_id, embedding AS q_emb
                      FROM embeddings WHERE vec_id < 20),
-               probed AS (SELECT q_id, q_emb, cid, prb FROM (
-                   SELECT q.q_id, q.q_emb, c.cid,
-                     row_number() OVER (PARTITION BY q.q_id
-                       ORDER BY list_distance(CAST(q.q_emb AS DOUBLE[]), CAST(c.c_emb AS DOUBLE[])), c.cid) AS prb
-                   FROM q CROSS JOIN cent c) t
-                 WHERE prb <= 3),
+               probed AS (SELECT q_id, q_emb, cid, rn AS prb FROM (
+                 ${Vec.sqlNearest("q", "q_id", "q_emb", 3)}) t),
                cand AS (SELECT np, p.q_id, a.n_id,
                    list_distance(CAST(p.q_emb AS DOUBLE[]), CAST(a.n_emb AS DOUBLE[])) AS d
                  FROM probed p
@@ -1102,20 +1056,14 @@ object Pipeline {
           s.read.parquet(s"$base/codebook"),
           s.read.parquet(s"$base/codes"))
       },
-      Some("""WITH ex AS (SELECT vec_id,
+      Some(s"""WITH ex AS (SELECT vec_id,
                    generate_subscripts(CAST(embedding AS DOUBLE[]), 1) AS i,
                    unnest(CAST(embedding AS DOUBLE[])) AS x
                  FROM embeddings),
                st AS (SELECT i, min(x) AS mn, max(x) AS mx FROM ex GROUP BY i),
-               cent AS (SELECT vec_id AS cid, embedding AS c_emb
-                        FROM embeddings WHERE vec_id < 10),
+               ${ML.sqlKmCent()},
                cells AS (SELECT vec_id, cid FROM (
-                   SELECT e.vec_id, c.cid,
-                     row_number() OVER (PARTITION BY e.vec_id
-                       ORDER BY list_distance(CAST(e.embedding AS DOUBLE[]),
-                                              CAST(c.c_emb AS DOUBLE[])), c.cid) AS rn
-                   FROM embeddings e CROSS JOIN cent c) t
-                 WHERE rn = 1),
+                 ${Vec.sqlNearest("embeddings", "vec_id", "embedding", 1)}) t),
                codes AS (SELECT ex.vec_id, cells.cid, ex.i,
                    CASE WHEN mx > mn
                      THEN CAST(floor((x - mn) / (mx - mn) * 255) AS BIGINT)
@@ -1127,14 +1075,8 @@ object Pipeline {
                      THEN mn + CAST(code AS DOUBLE) * (mx - mn) / 255
                      ELSE mn END AS xr
                  FROM codes JOIN st USING (i)),
-               probes AS (SELECT q_id, cid FROM (
-                   SELECT e.vec_id AS q_id, c.cid,
-                     row_number() OVER (PARTITION BY e.vec_id
-                       ORDER BY list_distance(CAST(e.embedding AS DOUBLE[]),
-                                              CAST(c.c_emb AS DOUBLE[])), c.cid) AS prb
-                   FROM embeddings e CROSS JOIN cent c
-                   WHERE e.vec_id < 10) t
-                 WHERE prb <= 3),
+               probes AS (SELECT vec_id AS q_id, cid FROM (${Vec.sqlNearest(
+                 "(SELECT * FROM embeddings WHERE vec_id < 10)", "vec_id", "embedding", 3)}) t),
                qv AS (SELECT vec_id AS q_id, i, xr AS qx
                       FROM recon WHERE vec_id < 10),
                dd AS (SELECT p.q_id, n.vec_id AS n_id,
@@ -1172,7 +1114,7 @@ object Pipeline {
         val base = s"/tmp/graft_io/vecindex_incr_${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
         val e = T.embeddings(s, dir)
         val (cent, codebook, codes) =
-          ivfSq8IndexFramesOn(s, e.where(col("vec_id") % 10 =!= 7))
+          ivfSq8IndexFramesOn(e.where(col("vec_id") % 10 =!= 7))
         cent.coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$base/centroids")
         codebook.coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$base/codebook")
         codes.coalesce(4).write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$base/codes")
@@ -1181,7 +1123,7 @@ object Pipeline {
         val rCb = s.read.parquet(s"$base/codebook")
         val batch = e.where(col("vec_id") % 10 === 7)
           .transform(T.fanOut(_, col("vec_id")))
-        ivfSq8Encode(s, batch, rCent, rCb)
+        ivfSq8Encode(batch, rCent, rCb)
           .coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
           .parquet(s"$base/codes_b1")
         val merged = s.read.parquet(s"$base/codes")
@@ -1190,25 +1132,19 @@ object Pipeline {
           .selectExpr("q_id", "rn", "n_id", "d2",
             "CAST(CASE WHEN n_id % 10 = 7 THEN 1 ELSE 0 END AS INT) AS is_new")
       },
-      Some("""WITH bse AS (SELECT * FROM embeddings WHERE vec_id % 10 <> 7),
+      Some(s"""WITH bse AS (SELECT * FROM embeddings WHERE vec_id % 10 <> 7),
                ex AS (SELECT vec_id,
                    generate_subscripts(CAST(embedding AS DOUBLE[]), 1) AS i,
                    unnest(CAST(embedding AS DOUBLE[])) AS x
                  FROM bse),
                st AS (SELECT i, min(x) AS mn, max(x) AS mx FROM ex GROUP BY i),
-               cent AS (SELECT vec_id AS cid, embedding AS c_emb
-                        FROM bse WHERE vec_id < 10),
+               ${ML.sqlKmCent("bse")},
                axe AS (SELECT vec_id,
                    generate_subscripts(CAST(embedding AS DOUBLE[]), 1) AS i,
                    unnest(CAST(embedding AS DOUBLE[])) AS x
                  FROM embeddings),
                cells AS (SELECT vec_id, cid FROM (
-                   SELECT e.vec_id, c.cid,
-                     row_number() OVER (PARTITION BY e.vec_id
-                       ORDER BY list_distance(CAST(e.embedding AS DOUBLE[]),
-                                              CAST(c.c_emb AS DOUBLE[])), c.cid) AS rn
-                   FROM embeddings e CROSS JOIN cent c) t
-                 WHERE rn = 1),
+                 ${Vec.sqlNearest("embeddings", "vec_id", "embedding", 1)}) t),
                codes AS (SELECT axe.vec_id, cells.cid, axe.i,
                    CASE WHEN mx > mn
                      THEN CAST(floor((x - mn) / (mx - mn) * 255) AS BIGINT)
@@ -1220,14 +1156,8 @@ object Pipeline {
                      THEN mn + CAST(code AS DOUBLE) * (mx - mn) / 255
                      ELSE mn END AS xr
                  FROM codes JOIN st USING (i)),
-               probes AS (SELECT q_id, cid FROM (
-                   SELECT e.vec_id AS q_id, c.cid,
-                     row_number() OVER (PARTITION BY e.vec_id
-                       ORDER BY list_distance(CAST(e.embedding AS DOUBLE[]),
-                                              CAST(c.c_emb AS DOUBLE[])), c.cid) AS prb
-                   FROM embeddings e CROSS JOIN cent c
-                   WHERE e.vec_id < 10) t
-                 WHERE prb <= 3),
+               probes AS (SELECT vec_id AS q_id, cid FROM (${Vec.sqlNearest(
+                 "(SELECT * FROM embeddings WHERE vec_id < 10)", "vec_id", "embedding", 3)}) t),
                qv AS (SELECT vec_id AS q_id, i, xr AS qx
                       FROM recon WHERE vec_id < 10),
                dd AS (SELECT p.q_id, n.vec_id AS n_id,

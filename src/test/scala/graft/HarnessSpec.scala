@@ -11,7 +11,8 @@ import scala.jdk.CollectionConverters._
   * four the mains document. Also pins [[Twin]] as the one renderer of the
   * shared-text step lists, and [[Tables]] as the one reader of fixture
   * paths, the owner of the one session memo and the one place an exact
-  * sum is spelled. */
+  * sum is spelled, and `Vec.nearest` as the one nearest-centroid
+  * ranking. */
 class HarnessSpec extends SparkSpec {
 
   test("conf: Bench's settings, key by key") {
@@ -123,6 +124,23 @@ class HarnessSpec extends SparkSpec {
     // split searches go through Supervised.splitHist, which bins each row
     // once; only the oracle texts keep the brute-force ×grid definition
     assert(filesWith("crossJoin(broadcast(cands))") === Set.empty[String])
+  }
+
+  test("structure: nearest-centroid ranking goes through Vec.nearest, on one fixed model") {
+    // the map-only helper is the one (d, cid) ranking; the oracle texts
+    // keep the brute-force window through Vec.sqlNearest
+    for (needle <- Seq("orderBy(col(\"d\"), col(\"cid\"))", "orderBy(col(\"qd\"), col(\"cid\"))",
+        "orderBy(col(\"dc\"), col(\"cid\"))", "least(cent"))
+      assert(filesWith(needle) === Set.empty[String], s"$needle is back")
+    // the crossJoins left rank nothing: ml_kmeans_elbow/_knee's prefix-min,
+    // ml_kmeans_transform's distance matrix, ml_kmeans_pp_init's growing
+    // seed set and the flat-cluster memberships
+    val crosses = mainSources.map { case (f, code) =>
+      f -> (code.split(java.util.regex.Pattern.quote("crossJoin(broadcast(cent))"), -1).length - 1)
+    }.filter(_._2 > 0)
+    assert(crosses === Map("graft/ops/ML.scala" -> 4, "graft/ops/Cluster.scala" -> 1))
+    // the fixed vec_id < 10 model frame is built in one place (ML.kmCentFrame)
+    assert(mainSources.values.map("col\\(\"vec_id\"\\)\\.as\\(\"cid\"\\)".r.findAllIn(_).size).sum === 1)
   }
 
   test("structure: the mains read exactly four SPARK_GRAFT_ knobs") {

@@ -441,9 +441,8 @@ class MicroSpec extends SparkSpec {
     // DuckDB oracle separately pins add() ≡ encode-all-in-one-shot.)
     val e = Tables.embeddings(spark, sf)
     val (cent, cb, baseCodes) =
-      ops.Pipeline.ivfSq8IndexFramesOn(spark, e.where(col("vec_id") % 10 =!= 7))
-    val batchCodes = ops.Pipeline.ivfSq8Encode(
-      spark, e.where(col("vec_id") % 10 === 7), cent, cb)
+      ops.Pipeline.ivfSq8IndexFramesOn(e.where(col("vec_id") % 10 =!= 7))
+    val batchCodes = ops.Pipeline.ivfSq8Encode(e.where(col("vec_id") % 10 === 7), cent, cb)
     val inSession = ops.Pipeline.ivfSq8Search(
         spark, sf, cent, cb, baseCodes.unionByName(batchCodes))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),

@@ -227,36 +227,36 @@ class PlanSpec extends SparkSpec {
   }
 
   test("ml_knn_nndescent: bounded candidates — every graph step is an id equi-join") {
-    // The NN-descent scale contract: the ONLY nested-loop is the K=10
-    // centroid fan-out the IVF seed shares with ml_knn_graph; the
-    // neighbor-of-neighbor candidate join and both embedding rescoring
-    // joins must be id-keyed equi-joins (O(n·k²) candidates), never a
-    // pair scan. The registered row serves from the pinned session memo
-    // (r14) whose executed plan is a leaf scan, so the contract is
-    // pinned on the round's own dataflow via the plan probe.
+    // The NN-descent scale contract: no nested loop at all — the IVF
+    // seed's K=10 centroid ranking is map-only (Vec.nearest) and the seed
+    // is a pinned leaf; the neighbor-of-neighbor candidate join and both
+    // embedding rescoring joins must be id-keyed equi-joins (O(n·k²)
+    // candidates), never a pair scan. The registered row serves from the
+    // pinned session memo (r14) whose executed plan is a leaf scan, so
+    // the contract is pinned on the round's own dataflow via the plan
+    // probe.
     val p = ops.Cluster.nnDescentRoundPlanProbe(spark, sf).queryExecution
       .explainString(ExplainMode.fromString("formatted"))
     assert(!p.contains("CartesianProduct"), p)
-    assert("\\(\\d+\\) BroadcastNestedLoopJoin".r.findAllIn(p).size <= 1,
-      "more than the centroid fan-out plans as BNLJ:\n" + p)
+    assert(!p.contains("BroadcastNestedLoopJoin"), "a nested loop in the round:\n" + p)
     assert(p.contains("BroadcastHashJoin") || p.contains("SortMergeJoin") ||
       p.contains("ShuffledHashJoin"),
       "candidate/rescore joins must be equi-joins:\n" + p)
   }
 
   test("ml_knn_graph_search: per-hop id equi-joins, no corpus scan per hop") {
-    // The graph-ANN query contract (r14): the ONLY nested-loop is the
-    // 10-vector entry-point fan-out (the IVF coarse step); every hop's
-    // neighbor expansion, visited anti-join and embedding rescore must be
-    // id-keyed equi-joins — a corpus scan per hop would defeat the whole
-    // point of searching through the graph. The registered row answers
-    // from the pinned session trail (a leaf scan), so the contract is
-    // pinned on the hop's own dataflow via the plan probe.
+    // The graph-ANN query contract (r14): no nested loop in a hop — the
+    // 10-vector entry-point fan-out (the IVF coarse step) is a pinned
+    // leaf; every hop's neighbor expansion, visited anti-join and
+    // embedding rescore must be id-keyed equi-joins — a corpus scan per
+    // hop would defeat the whole point of searching through the graph.
+    // The registered row answers from the pinned session trail (a leaf
+    // scan), so the contract is pinned on the hop's own dataflow via the
+    // plan probe.
     val p = ops.Cluster.graphSearchPlanProbe(spark, sf).queryExecution
       .explainString(ExplainMode.fromString("formatted"))
     assert(!p.contains("CartesianProduct"), p)
-    assert("\\(\\d+\\) BroadcastNestedLoopJoin".r.findAllIn(p).size <= 1,
-      "more than the entry-point fan-out plans as BNLJ:\n" + p)
+    assert(!p.contains("BroadcastNestedLoopJoin"), "a nested loop in the hop:\n" + p)
     assert(p.contains("BroadcastHashJoin") || p.contains("SortMergeJoin") ||
       p.contains("ShuffledHashJoin"),
       "hop/rescore joins must be equi-joins:\n" + p)
@@ -369,6 +369,52 @@ class PlanSpec extends SparkSpec {
     assert(joins.nonEmpty && joins.forall(_.exists(_ eq single.head)),
       s"the grid expansion does not consume the single-partition histogram:\n$p")
     assert(p.collect { case c: CoalesceExec => c }.isEmpty, s"coalesce in the plan:\n$p")
+  }
+
+  /** Every operator from a leaf up to the first aggregate or join above
+    * it, that operator included. */
+  private def rowStage(df: org.apache.spark.sql.DataFrame)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val p = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case other => other
+    }
+    p.collect {
+      case n if n.children.forall(!_.exists {
+        case _: BaseAggregateExec | _: BaseJoinExec => true
+        case _ => false
+      }) => n
+    }
+  }
+
+  test("nearest-centroid assignment is map-only: ml_kmeans_assign, ivfSq8Encode") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    val e = Tables.embeddings(spark, sf)
+    val (cent, cb, _) = ops.Pipeline.ivfSq8IndexFramesOn(e.where(col("vec_id") % 10 =!= 7))
+    // the batch is not fanned out: an exchange here would be the ranking's
+    val batch = e.where(col("vec_id") % 10 === 7)
+    for ((name, df) <- Seq(
+        "ml_kmeans_assign" -> SparkEntry.queries("ml_kmeans_assign")(spark, sf),
+        "ivfSq8Encode" -> ops.Pipeline.ivfSq8Encode(batch, cent, cb))) {
+      val stage = rowStage(df)
+      assert(stage.nonEmpty, name)
+      if (name == "ml_kmeans_assign")
+        assert(stage.exists(_.isInstanceOf[BaseAggregateExec]), s"$name: no aggregate reached")
+      // the one exchange allowed is the query's own fanOut repartition
+      val bad = stage.filter {
+        case _: WindowExec | _: BroadcastNestedLoopJoinExec => true
+        case x: ShuffleExchangeExec => x.shuffleOrigin != REPARTITION_BY_NUM
+        case _ => false
+      }
+      assert(bad.isEmpty, s"$name ranks with ${bad.map(_.nodeName).mkString(", ")}:\n${stage.head}")
+    }
   }
 
   test("whole-stage codegen covers the hot path of filter_pred") {
