@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, KnownNullable}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.graftbridge.GraftBridge
 import org.apache.spark.sql.types._
@@ -306,6 +307,81 @@ object Vec {
           SELECT p.*, c.cid, $d AS d,
             row_number() OVER (PARTITION BY p.$id ORDER BY $d, c.cid) AS rn
           FROM $points p CROSS JOIN $cents c) t
+        WHERE rn <= $k"""
+  }
+
+  /** The brute-force kNN metrics: each pairs a Spark score over
+    * `(q_emb, n_emb)` with its DuckDB twin over two DOUBLE[] lists, and
+    * `desc` says a larger score is nearer. */
+  sealed abstract class Metric(val desc: Boolean) {
+    private[Vec] def sql(q: String, n: String): String
+  }
+  /** graft_vec_l2 ↔ list_distance. */
+  case object L2 extends Metric(false) {
+    private[Vec] def sql(q: String, n: String) = s"list_distance($q, $n)"
+  }
+  /** dot / (√normSq q · √normSq n) ↔ list_cosine_similarity. */
+  case object Cosine extends Metric(true) {
+    private[Vec] def sql(q: String, n: String) = s"list_cosine_similarity($q, $n)"
+  }
+  /** graft_vec_l1 collapsed to FLOAT ↔ the exploded sum collapsed to REAL:
+    * the two engines' double sums can differ in the last ulp, their float
+    * collapses do not. */
+  case object L1 extends Metric(false) {
+    private[Vec] def sql(q: String, n: String) =
+      s"(SELECT CAST(CAST(sum(abs(x - y)) AS REAL) AS DOUBLE) FROM (SELECT unnest($q) AS x, unnest($n) AS y))"
+  }
+
+  /** Each query's `k` nearest corpus rows, itself excluded (the
+    * NearestNeighbors.kneighbors brute force): `queries` has `(q_id,
+    * q_emb, …)`, `corpus` `(n_id, n_emb, …)`, and the result both sides'
+    * other columns plus `score` and `rn` (1 = nearest) — the rows of
+    * `row_number() OVER (PARTITION BY q_id ORDER BY score[ DESC], n_id)
+    * <= k` over the pairs with `q_id <> n_id`. Ties go to the lower n_id;
+    * a null score (null embedding, length mismatch) ranks first
+    * ascending and last descending.
+    *
+    * The small query side is broadcast and the corpus streams once
+    * through `Tables.fanOut` on n_id (a one-row-group fixture file would
+    * otherwise stream single-threaded), so the corpus never shuffles to
+    * the queries: the pair rows meet the per-partition WindowGroupLimit
+    * first, and only each partition's top k per query reaches the q_id
+    * exchange. Cosine norms are computed once per row, before the join. */
+  def knn(queries: DataFrame, corpus: DataFrame, metric: Metric, k: Int): DataFrame = {
+    val keep = queries.columns.filterNot(_ == "q_emb") ++ corpus.columns.filterNot(_ == "n_emb")
+    register(queries.sparkSession)
+    def kernel(f: String, args: String*) = F.call_function(f, args.map(F.col): _*)
+    def normed(df: DataFrame, side: String) =
+      if (metric != Cosine) df
+      else df.withColumn(s"${side}_nrm", F.sqrt(kernel("graft_vec_normsq", s"${side}_emb")))
+    val score = metric match {
+      case L2 => kernel("graft_vec_l2", "q_emb", "n_emb")
+      case L1 => kernel("graft_vec_l1", "q_emb", "n_emb").cast("float")
+      case Cosine => kernel("graft_vec_dot", "q_emb", "n_emb") / (F.col("q_nrm") * F.col("n_nrm"))
+    }
+    val order = if (metric.desc) F.col("score").desc else F.col("score")
+    graft.Tables.fanOut(normed(corpus, "n"), F.col("n_id"))
+      .crossJoin(F.broadcast(normed(queries, "q")))
+      .where(F.col("q_id") =!= F.col("n_id"))
+      .select(keep.map(c => F.col(s"`$c`")) :+ score.as("score"): _*)
+      .withColumn("rn", F.row_number().over(
+        Window.partitionBy(F.col("q_id")).orderBy(order, F.col("n_id"))))
+      .where(F.col("rn") <= k)
+  }
+
+  /** DuckDB oracle twin of [[knn]], kept brute-force so the hash-match
+    * checks the helper independently: the `queries` relation (`q_id`,
+    * `q_emb`, …; a name or a parenthesized query) crossed with
+    * `embeddings`, ranked by `row_number() OVER (PARTITION BY q_id ORDER
+    * BY <metric>, vec_id)`; `q.*` plus n_id, score and rn for rn ≤ k. */
+  def sqlKnn(queries: String, metric: Metric, k: Int): String = {
+    val score = metric.sql("CAST(q.q_emb AS DOUBLE[])", "CAST(e.embedding AS DOUBLE[])")
+    s"""SELECT * FROM (
+          SELECT q.*, e.vec_id AS n_id, $score AS score,
+            row_number() OVER (PARTITION BY q.q_id
+              ORDER BY $score${if (metric.desc) " DESC" else ""}, e.vec_id) AS rn
+          FROM $queries q CROSS JOIN embeddings e
+          WHERE q.q_id <> e.vec_id) t
         WHERE rn <= $k"""
   }
 

@@ -1188,20 +1188,10 @@ object Cluster {
         val g1 = nnG1Pinned(s, dir).select(col("u"), col("w").as("v"))
         val g2 = nnDescentRound(s, dir, g1, undTag = Some("nnUndPinned"))
           .select(col("u"), col("w").as("v"))
-        val e = T.embeddings(s, dir).select(col("vec_id"), col("embedding"))
-        val qs = e.where(col("vec_id") % 40 === 0)
-          .select(col("vec_id").as("u"), col("embedding").as("q_emb"))
-        val xw = Window.partitionBy(col("u")).orderBy(col("d"), col("v"))
-        val exact = T.pin(e
-          .select(col("vec_id").as("v"), col("embedding").as("n_emb"))
-          .transform(T.fanOut(_, col("v")))
-          .crossJoin(broadcast(qs))
-          .where(col("u") =!= col("v"))
-          .select(col("u"), col("v"),
-            graft.functions.Vec.l2(s, "q_emb", "n_emb").as("d"))
-          .withColumn("rn", row_number().over(xw)).where(col("rn") <= 3)
-          .select(col("u"), col("v")))
-        val nq = qs.count()
+        val sample = col("vec_id") % 40 === 0
+        val exact = T.pin(ML.embKnn(s, dir, sample, Vec.L2, 3)
+          .select(col("q_id").as("u"), col("n_id").as("v")))
+        val nq = T.embeddings(s, dir).where(sample).count()
         def recallRow(g: DataFrame, r: Int): DataFrame =
           g.join(exact, Seq("u", "v"))
             .agg(count(lit(1)).as("hits"))
@@ -1236,15 +1226,9 @@ object Cluster {
                       FROM embeddings),
                ${roundCtes("g0", 1)},
                ${roundCtes("g1", 2)},
-               qs AS (SELECT vec_id AS u, CAST(embedding AS DOUBLE[]) AS emb
-                      FROM embeddings WHERE vec_id % 40 = 0),
-               nqs AS (SELECT count(*) AS nq FROM qs),
-               exact AS (SELECT u, v FROM (
-                   SELECT q.u, e.vec_id AS v,
-                     row_number() OVER (PARTITION BY q.u
-                       ORDER BY list_distance(q.emb, e.emb), e.vec_id) AS rn
-                   FROM qs q CROSS JOIN ed e WHERE e.vec_id <> q.u) t
-                 WHERE rn <= 3)
+               nqs AS (SELECT count(*) AS nq FROM embeddings WHERE vec_id % 40 = 0),
+               exact AS (SELECT q_id AS u, n_id AS v FROM (
+                 ${ML.sqlEmbKnn("vec_id % 40 = 0", Vec.L2, 3)}) t)
               SELECT rnd AS round, CAST(nq AS BIGINT) AS n_queries,
                 round(CAST(hits AS DOUBLE) / (3 * nq), 6) AS recall_at_3
               FROM (
@@ -1311,18 +1295,8 @@ object Cluster {
       // all-pairs.
       (s, dir) => {
         val pieces = nnSearchTrail(s, dir)
-        val e = T.embeddings(s, dir).select(col("vec_id"), col("embedding"))
-        val xw = Window.partitionBy(col("q_id")).orderBy(col("d"), col("v"))
-        val exact = T.pin(e
-          .select(col("vec_id").as("v"), col("embedding").as("n_emb"))
-          .transform(T.fanOut(_, col("v")))
-          .crossJoin(broadcast(e.where(col("vec_id") < 20)
-            .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))))
-          .where(col("q_id") =!= col("v"))
-          .select(col("q_id"), col("v"),
-            graft.functions.Vec.l2(s, "q_emb", "n_emb").as("d"))
-          .withColumn("rn", row_number().over(xw)).where(col("rn") <= 5)
-          .select(col("q_id"), col("v")))
+        val exact = T.pin(ML.embKnn(s, dir, col("vec_id") < 20, Vec.L2, 5)
+          .select(col("q_id"), col("n_id").as("v")))
         val nq = exact.select("q_id").distinct().count()
         // ONE ranking pass for all six depths (r15 — was six
         // window+join+agg chains over growing visited unions): the trail
@@ -1368,12 +1342,7 @@ object Cluster {
           s"SELECT $h AS hops, count(*) AS hits FROM hstop$h JOIN exact USING (q_id, v)")
           .mkString("\n           UNION ALL ")
         s"""WITH $sqlGraphSearchCtes,
-           exact AS (SELECT q_id, v FROM (
-               SELECT q.q_id, e.vec_id AS v,
-                 row_number() OVER (PARTITION BY q.q_id
-                   ORDER BY list_distance(q.q_emb, e.emb), e.vec_id) AS rn
-               FROM qs q JOIN ed e ON e.vec_id <> q.q_id) t
-             WHERE rn <= 5),
+           exact AS (SELECT q_id, n_id AS v FROM (${Vec.sqlKnn("qs", Vec.L2, 5)}) t),
            nqs AS (SELECT count(*) AS nq FROM qs),
            $tops,
            hh AS ($rows)
@@ -1437,12 +1406,12 @@ object Cluster {
       // pi() is the same closest-to-π double in both engines.
       (s, dir) => {
         val p = plane(s, dir).transform(T.fanOut(_, col("id")))
-        val q = plane(s, dir).where(col("id") < 20)
+        val qs = plane(s, dir).where(col("id") < 20)
           .select(col("id").as("q_id"), col("x").as("qx"), col("y").as("qy"))
         val n = plane(s, dir).agg(count(lit(1)).as("nn"))
         val kterm = expr(
           "CAST(CAST(exp(-((qx - x) * (qx - x) + (qy - y) * (qy - y)) / 2e-4) AS FLOAT) AS DOUBLE)")
-        p.crossJoin(broadcast(q))
+        p.crossJoin(broadcast(qs))
           .select(col("q_id"), kterm.as("k"))
           .groupBy("q_id")
           .agg(T.xsum(col("k")).as("ks"))
@@ -3825,7 +3794,7 @@ object Cluster {
           .where(col("la") === col("lb"))
           .groupBy(col("la").as("lbl")).agg(count(lit(1)).as("ec"))
         val dc = deg.join(lbl, "u").groupBy("lbl").agg(sum(col("deg")).as("dc"))
-        val q = dc.join(ec, Seq("lbl"), "left").crossJoin(broadcast(m))
+        val qm = dc.join(ec, Seq("lbl"), "left").crossJoin(broadcast(m))
           .selectExpr(
             "CAST(coalesce(ec, 0) AS DOUBLE) / m - (CAST(dc AS DOUBLE) / (2 * m)) * (CAST(dc AS DOUBLE) / (2 * m)) AS t")
           .agg(count(lit(1)).as("n_communities"), T.xsum(col("t")).as("q"))
@@ -3834,7 +3803,7 @@ object Cluster {
           .agg(T.xsum(expr("-t0")).as("q0"))
         val moved = lbl.agg(
           sum(when(col("lbl") =!= col("u"), 1L).otherwise(0L)).as("n_moved"))
-        moved.crossJoin(broadcast(q)).crossJoin(broadcast(q0))
+        moved.crossJoin(broadcast(qm)).crossJoin(broadcast(q0))
           .selectExpr("n_moved", "n_communities",
             "round(q, 6) AS modularity", "round(q0, 6) AS q_singleton",
             "round(q - q0, 6) AS gain")

@@ -17,9 +17,9 @@ import org.apache.spark.sql.functions._
   *   solve on a handful of doubles (the analog of cuML's client-held coef_).
   * - predict = broadcast of those few doubles back into a per-row
   *   expression (the analog of coef broadcast + GEMV).
-  * - kneighbors = broadcast(small query side) × all vectors + per-query
-  *   top-k via window row_number — Spark's native replacement for the
-  *   reference's IPC-gathered FAISS brute force + k-selection.
+  * - kneighbors = `Vec.knn`: broadcast(small query side) × all vectors +
+  *   per-query top-k via window row_number — Spark's native replacement
+  *   for the reference's IPC-gathered FAISS brute force + k-selection.
   *
   * Determinism (SURVEY §7.3): sufficient statistics are exact DECIMAL sums,
   * so the driver-side solve sees bit-identical inputs in Spark and DuckDB;
@@ -1162,21 +1162,8 @@ object ML {
   }
 
   private def knnPredLangCompute(s: SparkSession, dir: String): DataFrame = {
-    val e = T.embeddings(s, dir)
     val labels = T.documents(s, dir).select(col("doc_id"), col("lang"))
-    val q = e.join(labels, e("vec_id") === labels("doc_id"), "left_semi")
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      .orderBy((lit(84589L) * col("q_id") + lit(12345L)) % lit(2147483647L), col("q_id"))
-      .limit(EVAL_N)
-    val cand = e.transform(T.fanOut(_, col("vec_id")))
-      .select(col("vec_id").as("n_id"), col("embedding").as("n_emb"))
-    val dist = graft.functions.Vec.l2(s, "q_emb", "n_emb")
-    val w = Window.partitionBy(col("q_id")).orderBy(col("d"), col("n_id"))
-    val nn = cand.crossJoin(broadcast(q))
-      .where(col("q_id") =!= col("n_id"))
-      .select(col("q_id"), col("n_id"), dist.as("d"))
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") <= 5)
+    val nn = knnEvalNN(s, dir)
     val voted = nn.join(labels, nn("n_id") === labels("doc_id"))
       .groupBy("q_id", "lang").agg(count(lit(1)).as("votes"))
     val pick = Window.partitionBy(col("q_id"))
@@ -1185,26 +1172,18 @@ object ML {
       .select(col("q_id"), col("lang").as("pred_lang"))
   }
 
-  /** The rn-carrying 5-NN table over the shared EVAL_N sample — lets the
-    * model-comparison rows (ml_mcnemar, ml_knn_k_sweep) derive k-prefix
-    * votes for every k ≤ 5 from ONE n·EVAL_N distance pass. Same pick,
-    * same tiebreak as [[knnPredLang]]. */
+  /** The rn-carrying 5-NN table `(q_id, n_id, rn)` over the shared EVAL_N
+    * sample — [[knnPredLang]]'s vote and the model-comparison rows
+    * (ml_mcnemar, ml_knn_k_sweep) derive their k-prefix votes for every
+    * k ≤ 5 from this ONE n·EVAL_N distance pass. */
   private[ops] def knnEvalNN(s: SparkSession, dir: String): DataFrame = {
     val e = T.embeddings(s, dir)
-    val labels = T.documents(s, dir).select(col("doc_id"), col("lang"))
+    val labels = T.documents(s, dir).select(col("doc_id"))
     val q = e.join(labels, e("vec_id") === labels("doc_id"), "left_semi")
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
       .orderBy((lit(84589L) * col("q_id") + lit(12345L)) % lit(2147483647L), col("q_id"))
       .limit(EVAL_N)
-    val cand = e.transform(T.fanOut(_, col("vec_id")))
-      .select(col("vec_id").as("n_id"), col("embedding").as("n_emb"))
-    val dist = graft.functions.Vec.l2(s, "q_emb", "n_emb")
-    val w = Window.partitionBy(col("q_id")).orderBy(col("d"), col("n_id"))
-    cand.crossJoin(broadcast(q))
-      .where(col("q_id") =!= col("n_id"))
-      .select(col("q_id"), col("n_id"), dist.as("d"))
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") <= 5)
+    Vec.knn(q, e.select(col("vec_id").as("n_id"), col("embedding").as("n_emb")), Vec.L2, 5)
       .select("q_id", "n_id", "rn")
   }
 
@@ -1213,34 +1192,35 @@ object ML {
     s"""qs AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings
          WHERE vec_id IN (SELECT doc_id FROM documents)
          ORDER BY (84589 * vec_id + 12345) % 2147483647, vec_id LIMIT $EVAL_N),
-       nnr AS (SELECT q_id, n_id, rn FROM (
-         SELECT q.q_id, e.vec_id AS n_id,
-           row_number() OVER (PARTITION BY q.q_id
-             ORDER BY list_distance(CAST(q.q_emb AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])), e.vec_id) AS rn
-         FROM qs q CROSS JOIN embeddings e
-         WHERE q.q_id <> e.vec_id) t
-       WHERE rn <= 5)"""
+       nnr AS (SELECT q_id, n_id, rn FROM (${Vec.sqlKnn("qs", Vec.L2, 5)}) t)"""
 
-  /** Oracle twin of [[knnPredLang]], ending in `pred(q_id, pred_lang)`. */
+  /** Oracle twin of [[knnPredLang]]: [[sqlKnnNNCtes]] then the vote,
+    * ending in `pred(q_id, pred_lang)`. */
   private[ops] val sqlKnnPredCtes: String =
-    s"""qs AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings
-         WHERE vec_id IN (SELECT doc_id FROM documents)
-         ORDER BY (84589 * vec_id + 12345) % 2147483647, vec_id LIMIT $EVAL_N),
-       nn AS (SELECT q_id, n_id FROM (
-         SELECT q.q_id, e.vec_id AS n_id,
-           row_number() OVER (PARTITION BY q.q_id
-             ORDER BY list_distance(CAST(q.q_emb AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])), e.vec_id) AS rn
-         FROM qs q CROSS JOIN embeddings e
-         WHERE q.q_id <> e.vec_id) t
-       WHERE rn <= 5),
+    s"""$sqlKnnNNCtes,
        voted AS (SELECT q_id, lang, count(*) AS votes
-                 FROM nn JOIN documents ON n_id = doc_id
+                 FROM nnr JOIN documents ON n_id = doc_id
                  GROUP BY q_id, lang),
        pred AS (SELECT q_id, lang AS pred_lang FROM (
            SELECT q_id, lang, votes,
              row_number() OVER (PARTITION BY q_id ORDER BY votes DESC, lang ASC) AS vr
            FROM voted) v
          WHERE vr = 1)"""
+
+  /** [[Vec.knn]] over `embeddings`: the rows where `pick` holds are the
+    * queries, every row is the corpus; `(q_id, n_id, score, rn)`. */
+  private[ops] def embKnn(s: SparkSession, dir: String, pick: Column,
+      metric: Vec.Metric, k: Int): DataFrame = {
+    val e = T.embeddings(s, dir)
+    Vec.knn(e.where(pick).select(col("vec_id").as("q_id"), col("embedding").as("q_emb")),
+      e.select(col("vec_id").as("n_id"), col("embedding").as("n_emb")), metric, k)
+  }
+
+  /** Oracle twin of [[embKnn]], `pick` over `embeddings`' columns;
+    * `(q_id, q_emb, n_id, score, rn)`. */
+  private[ops] def sqlEmbKnn(pick: String, metric: Vec.Metric, k: Int): String =
+    Vec.sqlKnn(s"(SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE $pick)",
+      metric, k)
 
   /** Deterministic 20-step power iterate from e₁, then Rayleigh quotient.
     * Returns the UNROUNDED (eigenvalue, unit vector) — every fold is
@@ -1649,109 +1629,37 @@ object ML {
 
     QueryDef(
       "ml_knn",
-      // dask-cuml NearestNeighbors.kneighbors: brute-force L2 + k-select.
-      // Query side (vec_id < 20) is broadcast — the fact side streams once,
-      // no shuffle of the big table (the 100 TB shape; an IVF/LSH index is
-      // the declared scale-up path, SURVEY §4.2). k-selection = row_number
-      // over (dist, neighbor id) — deterministic tiebreak.
-      (s, dir) => {
-        val e = T.embeddings(s, dir)
-        val q = e.where(col("vec_id") < 20)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-        // repartition: the one-row-group fixture parquet would stream the
-        // broadcast join single-threaded otherwise
-        val cand = e.transform(T.fanOut(_, col("vec_id")))
-          .select(col("vec_id").as("n_id"), col("embedding").as("n_emb"))
-        val dist = graft.functions.Vec.l2(s, "q_emb", "n_emb")
-        val w = Window.partitionBy(col("q_id")).orderBy(col("d"), col("n_id"))
-        cand.crossJoin(broadcast(q))
-          .where(col("q_id") =!= col("n_id"))
-          .select(col("q_id"), col("n_id"), dist.as("d"))
-          .withColumn("rn", row_number().over(w))
-          .where(col("rn") <= 5)
-          .select(col("q_id"), col("rn"), col("n_id"), round(col("d"), 6).as("dist"))
-          .orderBy("q_id", "rn")
-      },
-      Some("""SELECT q_id, rn, n_id, dist FROM (
-                SELECT q.vec_id AS q_id, e.vec_id AS n_id,
-                  round(list_distance(CAST(q.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])), 6) AS dist,
-                  row_number() OVER (PARTITION BY q.vec_id
-                    ORDER BY list_distance(CAST(q.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])), e.vec_id) AS rn
-                FROM embeddings q CROSS JOIN embeddings e
-                WHERE q.vec_id < 20 AND q.vec_id <> e.vec_id) t
-              WHERE rn <= 5 ORDER BY q_id, rn""")),
+      // dask-cuml NearestNeighbors.kneighbors: brute-force L2 top-5 of the
+      // 20 queries vec_id < 20 (Vec.knn; an IVF/LSH index is the declared
+      // scale-up path, SURVEY §4.2).
+      (s, dir) => embKnn(s, dir, col("vec_id") < 20, Vec.L2, 5)
+        .select(col("q_id"), col("rn"), col("n_id"), round(col("score"), 6).as("dist"))
+        .orderBy("q_id", "rn"),
+      Some(s"""SELECT q_id, rn, n_id, round(score, 6) AS dist
+              FROM (${sqlEmbKnn("vec_id < 20", Vec.L2, 5)}) t ORDER BY q_id, rn""")),
 
     QueryDef(
       "ml_knn_cosine",
-      // Cosine metric variant: same broadcast × stream shape, similarity =
-      // dot / (|a|·|b|), top-5 most similar per query.
-      (s, dir) => {
-        val e = T.embeddings(s, dir).select(col("vec_id"), col("embedding"),
-          sqrt(graft.functions.Vec.dot(s, "embedding", "embedding")).as("nrm"))
-        val q = e.where(col("vec_id") < 20)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"), col("nrm").as("q_nrm"))
-        val cand = e.transform(T.fanOut(_, col("vec_id")))
-          .select(col("vec_id").as("n_id"), col("embedding").as("n_emb"), col("nrm").as("n_nrm"))
-        val cos = graft.functions.Vec.dot(s, "q_emb", "n_emb") / (col("q_nrm") * col("n_nrm"))
-        val w = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("n_id"))
-        cand.crossJoin(broadcast(q))
-          .where(col("q_id") =!= col("n_id"))
-          .select(col("q_id"), col("n_id"), cos.as("sim"))
-          .withColumn("rn", row_number().over(w))
-          .where(col("rn") <= 5)
-          .select(col("q_id"), col("rn"), col("n_id"), round(col("sim"), 6).as("sim"))
-          .orderBy("q_id", "rn")
-      },
-      Some("""SELECT q_id, rn, n_id, sim FROM (
-                SELECT q.vec_id AS q_id, e.vec_id AS n_id,
-                  round(list_cosine_similarity(CAST(q.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])), 6) AS sim,
-                  row_number() OVER (PARTITION BY q.vec_id
-                    ORDER BY list_cosine_similarity(CAST(q.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])) DESC, e.vec_id) AS rn
-                FROM embeddings q CROSS JOIN embeddings e
-                WHERE q.vec_id < 20 AND q.vec_id <> e.vec_id) t
-              WHERE rn <= 5 ORDER BY q_id, rn""")),
+      // Cosine metric variant: similarity = dot / (|a|·|b|), top-5 most
+      // similar per query.
+      (s, dir) => embKnn(s, dir, col("vec_id") < 20, Vec.Cosine, 5)
+        .select(col("q_id"), col("rn"), col("n_id"), round(col("score"), 6).as("sim"))
+        .orderBy("q_id", "rn"),
+      Some(s"""SELECT q_id, rn, n_id, round(score, 6) AS sim
+              FROM (${sqlEmbKnn("vec_id < 20", Vec.Cosine, 5)}) t ORDER BY q_id, rn""")),
 
     QueryDef(
       "ml_knn_manhattan",
       // NearestNeighbors metric='manhattan' [R] — the third metric of the
-      // reference's kneighbors family (euclidean/cosine above). Same
-      // broadcast(query) × streamed-candidates shape; the distance is the
-      // codegen'd VecL1Dist loop (functions/VecExpressions.scala), NOT an
-      // interpreted zip_with. Cross-engine: the L1 sum is collapsed to
-      // FLOAT before ranking and output — Spark's sequential loop and
-      // DuckDB's exploded-join sum can differ in the last double ulp, and
-      // the float collapse makes the ranking keys bit-identical (the
-      // k_rbf/lnR discipline applied to a distance).
-      (s, dir) => {
-        val e = T.embeddings(s, dir)
-        val q = e.where(col("vec_id") < 20)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-        val cand = e.transform(T.fanOut(_, col("vec_id")))
-          .select(col("vec_id").as("n_id"), col("embedding").as("n_emb"))
-        val dist = graft.functions.Vec.l1(s, "q_emb", "n_emb").cast("float")
-        val w = Window.partitionBy(col("q_id")).orderBy(col("d"), col("n_id"))
-        cand.crossJoin(broadcast(q))
-          .where(col("q_id") =!= col("n_id"))
-          .select(col("q_id"), col("n_id"), dist.as("d"))
-          .withColumn("rn", row_number().over(w))
-          .where(col("rn") <= 5)
-          .select(col("q_id"), col("rn"), col("n_id"),
-            round(col("d").cast("double"), 6).as("dist"))
-          .orderBy("q_id", "rn")
-      },
-      Some("""WITH ex AS (SELECT vec_id,
-                   generate_subscripts(CAST(embedding AS DOUBLE[]), 1) AS i,
-                   unnest(CAST(embedding AS DOUBLE[])) AS x
-                 FROM embeddings),
-                 d AS (SELECT q.vec_id AS q_id, e.vec_id AS n_id,
-                     CAST(CAST(sum(abs(q.x - e.x)) AS REAL) AS DOUBLE) AS d
-                   FROM ex q JOIN ex e ON q.i = e.i
-                   WHERE q.vec_id < 20 AND q.vec_id <> e.vec_id
-                   GROUP BY q.vec_id, e.vec_id)
-               SELECT q_id, rn, n_id, round(d, 6) AS dist FROM (
-                 SELECT q_id, n_id, d, row_number() OVER (PARTITION BY q_id
-                   ORDER BY d, n_id) AS rn FROM d) t
-               WHERE rn <= 5 ORDER BY q_id, rn""")),
+      // reference's kneighbors family (euclidean/cosine above), on the
+      // codegen'd VecL1Dist loop, NOT an interpreted zip_with. The L1 sum
+      // is collapsed to FLOAT before ranking and output (Vec.L1).
+      (s, dir) => embKnn(s, dir, col("vec_id") < 20, Vec.L1, 5)
+        .select(col("q_id"), col("rn"), col("n_id"),
+          round(col("score").cast("double"), 6).as("dist"))
+        .orderBy("q_id", "rn"),
+      Some(s"""SELECT q_id, rn, n_id, round(score, 6) AS dist
+              FROM (${sqlEmbKnn("vec_id < 20", Vec.L1, 5)}) t ORDER BY q_id, rn""")),
 
     QueryDef(
       "ml_kmeans_assign",
@@ -2305,23 +2213,11 @@ object ML {
       "ml_knn_classify",
       // dask-cuml KNeighborsClassifier: predict = majority label of the 5
       // nearest neighbors, labels joined from documents.lang (doc_id =
-      // vec_id). Same broadcast(query) × streamed-candidates shape as
-      // ml_knn; the vote is a bounded per-query groupBy with a
+      // vec_id); the vote is a bounded per-query groupBy with a
       // deterministic (votes desc, label asc) tie-break window.
       (s, dir) => {
-        val e = T.embeddings(s, dir)
         val labels = T.documents(s, dir).select(col("doc_id"), col("lang"))
-        val q = e.where(col("vec_id") < 20)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-        val cand = e.transform(T.fanOut(_, col("vec_id")))
-          .select(col("vec_id").as("n_id"), col("embedding").as("n_emb"))
-        val dist = graft.functions.Vec.l2(s, "q_emb", "n_emb")
-        val w = Window.partitionBy(col("q_id")).orderBy(col("d"), col("n_id"))
-        val nn = cand.crossJoin(broadcast(q))
-          .where(col("q_id") =!= col("n_id"))
-          .select(col("q_id"), col("n_id"), dist.as("d"))
-          .withColumn("rn", row_number().over(w))
-          .where(col("rn") <= 5)
+        val nn = embKnn(s, dir, col("vec_id") < 20, Vec.L2, 5)
         val voted = nn.join(labels, nn("n_id") === labels("doc_id"))
           .groupBy("q_id", "lang").agg(count(lit(1)).as("votes"))
         val pick = Window.partitionBy(col("q_id"))
@@ -2330,13 +2226,7 @@ object ML {
           .select(col("q_id"), col("lang").as("pred_lang"), col("votes"))
           .orderBy("q_id")
       },
-      Some("""WITH nn AS (SELECT q_id, n_id FROM (
-                  SELECT q.vec_id AS q_id, e.vec_id AS n_id,
-                    row_number() OVER (PARTITION BY q.vec_id
-                      ORDER BY list_distance(CAST(q.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])), e.vec_id) AS rn
-                  FROM embeddings q CROSS JOIN embeddings e
-                  WHERE q.vec_id < 20 AND q.vec_id <> e.vec_id) t
-                WHERE rn <= 5),
+      Some(s"""WITH nn AS (${sqlEmbKnn("vec_id < 20", Vec.L2, 5)}),
                 voted AS (SELECT q_id, lang, count(*) AS votes
                           FROM nn JOIN documents ON n_id = doc_id
                           GROUP BY q_id, lang)
@@ -2350,37 +2240,20 @@ object ML {
       "ml_knn_predict_proba",
       // KNeighborsClassifier.predict_proba [R] (r7): the full per-class
       // vote distribution behind ml_knn_classify's argmax — proba =
-      // votes/k for every (query, language) the 5-NN voted for. Same
-      // broadcast(query) × streamed-candidates shape; the output is the
-      // ≤20×|langs| probability table (k = 5 exactly divides each vote,
-      // so votes/5.0 is an exact binary fraction — identical doubles).
+      // votes/k for every (query, language) the 5-NN voted for; the
+      // output is the ≤20×|langs| probability table (k = 5 exactly
+      // divides each vote, so votes/5.0 is an exact binary fraction —
+      // identical doubles).
       (s, dir) => {
-        val e = T.embeddings(s, dir)
         val labels = T.documents(s, dir).select(col("doc_id"), col("lang"))
-        val q = e.where(col("vec_id") < 20)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-        val cand = e.transform(T.fanOut(_, col("vec_id")))
-          .select(col("vec_id").as("n_id"), col("embedding").as("n_emb"))
-        val dist = graft.functions.Vec.l2(s, "q_emb", "n_emb")
-        val w = Window.partitionBy(col("q_id")).orderBy(col("d"), col("n_id"))
-        val nn = cand.crossJoin(broadcast(q))
-          .where(col("q_id") =!= col("n_id"))
-          .select(col("q_id"), col("n_id"), dist.as("d"))
-          .withColumn("rn", row_number().over(w))
-          .where(col("rn") <= 5)
+        val nn = embKnn(s, dir, col("vec_id") < 20, Vec.L2, 5)
         nn.join(labels, nn("n_id") === labels("doc_id"))
           .groupBy("q_id", "lang").agg(count(lit(1)).as("votes"))
           .select(col("q_id"), col("lang"), col("votes"),
             (col("votes") / lit(5.0)).as("proba"))
           .orderBy("q_id", "lang")
       },
-      Some("""WITH nn AS (SELECT q_id, n_id FROM (
-                  SELECT q.vec_id AS q_id, e.vec_id AS n_id,
-                    row_number() OVER (PARTITION BY q.vec_id
-                      ORDER BY list_distance(CAST(q.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])), e.vec_id) AS rn
-                  FROM embeddings q CROSS JOIN embeddings e
-                  WHERE q.vec_id < 20 AND q.vec_id <> e.vec_id) t
-                WHERE rn <= 5)
+      Some(s"""WITH nn AS (${sqlEmbKnn("vec_id < 20", Vec.L2, 5)})
               SELECT q_id, lang, count(*) AS votes,
                 count(*) / 5.0 AS proba
               FROM nn JOIN documents ON n_id = doc_id
@@ -2391,10 +2264,9 @@ object ML {
       // cuml.metrics confusion_matrix over the kNN language classifier,
       // on the bounded EVAL_N evaluation sample (true label = the doc's
       // own lang; its own embedding is excluded from the vote, so this
-      // is leave-one-out evaluation, not memorization). Broadcast(≤200
-      // queries) × streamed-candidates kNN shape — n·EVAL_N distances,
-      // not n² (VERDICT r6 #4); the matrix itself is one bounded
-      // groupBy (≤ n_langs² rows).
+      // is leave-one-out evaluation, not memorization). n·EVAL_N
+      // distances (knnEvalNN), not n² (VERDICT r6 #4); the matrix itself
+      // is one bounded groupBy (≤ n_langs² rows).
       (s, dir) => {
         val pred = knnPredLang(s, dir)
         val truth = T.documents(s, dir).select(col("doc_id"), col("lang").as("true_lang"))
@@ -2613,31 +2485,14 @@ object ML {
       // the 5 nearest neighbors. Integer targets → exact long sum → one
       // double division per query; deterministic without decimal plumbing.
       (s, dir) => {
-        val e = T.embeddings(s, dir)
         val target = T.documents(s, dir).select(col("doc_id"), col("n_chars"))
-        val q = e.where(col("vec_id") < 20)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-        val cand = e.transform(T.fanOut(_, col("vec_id")))
-          .select(col("vec_id").as("n_id"), col("embedding").as("n_emb"))
-        val dist = graft.functions.Vec.l2(s, "q_emb", "n_emb")
-        val w = Window.partitionBy(col("q_id")).orderBy(col("d"), col("n_id"))
-        cand.crossJoin(broadcast(q))
-          .where(col("q_id") =!= col("n_id"))
-          .select(col("q_id"), col("n_id"), dist.as("d"))
-          .withColumn("rn", row_number().over(w))
-          .where(col("rn") <= 5)
+        embKnn(s, dir, col("vec_id") < 20, Vec.L2, 5)
           .join(target, col("n_id") === col("doc_id"))
           .groupBy("q_id")
           .agg(round(sum(col("n_chars")).cast("double") / count(lit(1)), 6).as("pred_chars"))
           .orderBy("q_id")
       },
-      Some("""WITH nn AS (SELECT q_id, n_id FROM (
-                  SELECT q.vec_id AS q_id, e.vec_id AS n_id,
-                    row_number() OVER (PARTITION BY q.vec_id
-                      ORDER BY list_distance(CAST(q.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])), e.vec_id) AS rn
-                  FROM embeddings q CROSS JOIN embeddings e
-                  WHERE q.vec_id < 20 AND q.vec_id <> e.vec_id) t
-                WHERE rn <= 5)
+      Some(s"""WITH nn AS (${sqlEmbKnn("vec_id < 20", Vec.L2, 5)})
               SELECT q_id,
                 round(CAST(sum(n_chars) AS DOUBLE) / count(*), 6) AS pred_chars
               FROM nn JOIN documents ON n_id = doc_id

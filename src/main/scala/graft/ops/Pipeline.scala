@@ -445,6 +445,23 @@ object Pipeline {
           "chr(31) || w1 || w2 || chr(31))"))
       .drop("w1", "w2")
 
+  /** ml_mrr / ml_ndcg's cosine top-k of the queries vec_id < 10, both
+    * sides' labels carried: `(q_id, q_lbl, n_id, n_lbl, score, rn)`. */
+  private def labelKnn(s: SparkSession, dir: String, k: Int): DataFrame = {
+    val e = T.embeddings(s, dir)
+    Vec.knn(e.where(col("vec_id") < 10).select(col("vec_id").as("q_id"),
+        col("label").as("q_lbl"), col("embedding").as("q_emb")),
+      e.select(col("vec_id").as("n_id"), col("label").as("n_lbl"), col("embedding").as("n_emb")),
+      Vec.Cosine, k)
+  }
+
+  /** Oracle twin of [[labelKnn]]: `(q_id, q_lbl, n_lbl, rn)`. */
+  private def sqlLabelKnn(k: Int): String = {
+    val qs = "(SELECT vec_id AS q_id, label AS q_lbl, embedding AS q_emb FROM embeddings WHERE vec_id < 10)"
+    s"""SELECT k.q_id, k.q_lbl, e.label AS n_lbl, k.rn
+        FROM (${Vec.sqlKnn(qs, Vec.Cosine, k)}) k JOIN embeddings e ON e.vec_id = k.n_id"""
+  }
+
   val entries: Seq[QueryDef] = Seq(
 
     QueryDef(
@@ -829,15 +846,9 @@ object Pipeline {
           .orderBy(col("d"), col("n_id"))
         val ivf5 = cand.withColumn("rn", row_number().over(kw))
           .where(col("rn") <= 5).select("np", "q_id", "n_id")
-        val ew = Window.partitionBy(col("q_id")).orderBy(col("d"), col("n_id"))
-        val exact5 = queries
-          .crossJoin(e.select(col("vec_id").as("n_id"), col("embedding").as("n_emb"))
-            .transform(T.fanOut(_)))
-          .where(col("q_id") =!= col("n_id"))
-          .select(col("q_id"), col("n_id"),
-            graft.functions.Vec.l2(s, "q_emb", "n_emb").as("d"))
-          .withColumn("rn", row_number().over(ew))
-          .where(col("rn") <= 5).select(col("q_id"), col("n_id"), lit(1).as("hit"))
+        val exact5 = Vec.knn(queries,
+            e.select(col("vec_id").as("n_id"), col("embedding").as("n_emb")), Vec.L2, 5)
+          .select(col("q_id"), col("n_id"), lit(1).as("hit"))
         val nq = queries.agg(count(lit(1)).as("nq"))
         val scans = cand.groupBy("np", "q_id").agg(count(lit(1)).as("nc"))
           .crossJoin(broadcast(n))
@@ -874,12 +885,7 @@ object Pipeline {
                    FROM cand) t
                  WHERE rn <= 5),
                exact5 AS (SELECT q_id, n_id, 1 AS hit FROM (
-                   SELECT q.q_id, e.vec_id AS n_id,
-                     row_number() OVER (PARTITION BY q.q_id
-                       ORDER BY list_distance(CAST(q.q_emb AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])), e.vec_id) AS rn
-                   FROM q CROSS JOIN embeddings e
-                   WHERE q.q_id <> e.vec_id) t
-                 WHERE rn <= 5),
+                 ${Vec.sqlKnn("q", Vec.L2, 5)}) t),
                nq AS (SELECT count(*) AS nq FROM q),
                scans AS (SELECT np,
                    round(CAST(sum(CAST((CAST(nc AS DOUBLE) / n_corpus) AS DECIMAL(18,4))) AS DOUBLE) / count(*), 6) AS scan_frac
@@ -983,25 +989,14 @@ object Pipeline {
       // Recall@5 of the SQ8 quantized index against the EXACT kNN — the
       // ANN-quality measurement AS A REGISTERED QUERY (the number an
       // index-tuning run tracks per deploy, not just a test assertion):
-      // both rankings computed in one dataflow — the exact side is the
-      // codegen'd VecL2Dist broadcast×stream pass, the approximate side
-      // the shared sq8Knn chain — joined on (q_id, n_id) membership; each
-      // query's recall is the matched fraction of its top-5. Oracle
-      // recomputes both chains (list_distance ↔ VecL2Dist is the
-      // ml_knn-proven pairing). The overall mean is MicroSpec-pinned
+      // both rankings computed in one dataflow — the exact side is
+      // Vec.knn's L2 top-5, the approximate side the shared sq8Knn chain
+      // — joined on (q_id, n_id) membership; each query's recall is the
+      // matched fraction of its top-5. Oracle recomputes both chains
+      // (Vec.sqlKnn for the exact side). The overall mean is MicroSpec-pinned
       // against the ml_knn_sq8 test's floor.
       (s, dir) => {
-        val e = T.embeddings(s, dir)
-        val q = e.where(col("vec_id") < 10)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-        val cand = e.transform(T.fanOut(_, col("vec_id")))
-          .select(col("vec_id").as("n_id"), col("embedding").as("n_emb"))
-        val w = Window.partitionBy(col("q_id")).orderBy(col("d"), col("n_id"))
-        val exact = cand.crossJoin(broadcast(q))
-          .where(col("q_id") =!= col("n_id"))
-          .select(col("q_id"), col("n_id"),
-            graft.functions.Vec.l2(s, "q_emb", "n_emb").as("d"))
-          .withColumn("rn", row_number().over(w)).where(col("rn") <= 5)
+        val exact = ML.embKnn(s, dir, col("vec_id") < 10, Vec.L2, 5)
           .select(col("q_id"), col("n_id")).withColumn("hit", lit(1L))
         sq8Knn(s, dir).select(col("q_id"), col("n_id"))
           .join(exact, Seq("q_id", "n_id"), "left")
@@ -1011,13 +1006,7 @@ object Pipeline {
           .orderBy("q_id")
       },
       Some(s"""WITH $sqlSq8Ctes,
-                 exact AS (SELECT q_id, n_id FROM (
-                     SELECT q.vec_id AS q_id, e.vec_id AS n_id,
-                       row_number() OVER (PARTITION BY q.vec_id
-                         ORDER BY list_distance(CAST(q.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])), e.vec_id) AS rn
-                     FROM embeddings q CROSS JOIN embeddings e
-                     WHERE q.vec_id < 10 AND q.vec_id <> e.vec_id) t
-                   WHERE rn <= 5),
+                 exact AS (${ML.sqlEmbKnn("vec_id < 10", Vec.L2, 5)}),
                  j AS (SELECT s.q_id,
                      CASE WHEN e.n_id IS NOT NULL THEN 1 ELSE 0 END AS hit
                    FROM sq5 s LEFT JOIN exact e
@@ -1226,21 +1215,7 @@ object Pipeline {
       // reads is part of the oracle-checked result, not a client-side
       // afterthought.
       (s, dir) => {
-        val e = T.embeddings(s, dir).select(col("vec_id"), col("label"),
-          col("embedding"),
-          sqrt(graft.functions.Vec.dot(s, "embedding", "embedding")).as("nrm"))
-        val q = e.where(col("vec_id") < 10)
-          .select(col("vec_id").as("q_id"), col("label").as("q_lbl"),
-            col("embedding").as("q_emb"), col("nrm").as("q_nrm"))
-        val cand = e.transform(T.fanOut(_, col("vec_id")))
-          .select(col("vec_id").as("n_id"), col("label").as("n_lbl"),
-            col("embedding").as("n_emb"), col("nrm").as("n_nrm"))
-        val cos = graft.functions.Vec.dot(s, "q_emb", "n_emb") / (col("q_nrm") * col("n_nrm"))
-        val w = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("n_id"))
-        val perQ = cand.crossJoin(broadcast(q))
-          .where(col("q_id") =!= col("n_id"))
-          .select(col("q_id"), col("q_lbl"), col("n_lbl"), col("n_id"), cos.as("sim"))
-          .withColumn("rn", row_number().over(w)).where(col("rn") <= 20)
+        val perQ = labelKnn(s, dir, 20)
           .groupBy("q_id")
           .agg(min(when(col("n_lbl") === col("q_lbl"), col("rn"))).as("first_hit"))
           .selectExpr("q_id", "first_hit",
@@ -1251,13 +1226,7 @@ object Pipeline {
               "round(s / n, 6) AS rr"))
           .orderBy("q_id")
       },
-      Some(s"""WITH ranked AS (SELECT q_id, q_lbl, n_lbl, rn FROM (
-                   SELECT q.vec_id AS q_id, q.label AS q_lbl, e.label AS n_lbl,
-                     row_number() OVER (PARTITION BY q.vec_id
-                       ORDER BY list_cosine_similarity(CAST(q.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])) DESC, e.vec_id) AS rn
-                   FROM embeddings q CROSS JOIN embeddings e
-                   WHERE q.vec_id < 10 AND q.vec_id <> e.vec_id) t
-                 WHERE rn <= 20),
+      Some(s"""WITH ranked AS (${sqlLabelKnn(20)}),
                  perq AS (SELECT q_id,
                      CAST(min(CASE WHEN n_lbl = q_lbl THEN rn END) AS INT) AS first_hit
                    FROM ranked GROUP BY q_id),
@@ -1282,22 +1251,8 @@ object Pipeline {
       // vectors, so the truncated ideal is exact). Logs are
       // lnR-collapsed; sums ride the exact wire. Output per query:
       // same-label hits in the top-10 + NDCG.
-      (s, dir) => {
-        val e = T.embeddings(s, dir).select(col("vec_id"), col("label"),
-          col("embedding"),
-          sqrt(graft.functions.Vec.dot(s, "embedding", "embedding")).as("nrm"))
-        val q = e.where(col("vec_id") < 10)
-          .select(col("vec_id").as("q_id"), col("label").as("q_lbl"),
-            col("embedding").as("q_emb"), col("nrm").as("q_nrm"))
-        val cand = e.transform(T.fanOut(_, col("vec_id")))
-          .select(col("vec_id").as("n_id"), col("label").as("n_lbl"),
-            col("embedding").as("n_emb"), col("nrm").as("n_nrm"))
-        val cos = graft.functions.Vec.dot(s, "q_emb", "n_emb") / (col("q_nrm") * col("n_nrm"))
-        val w = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("n_id"))
-        cand.crossJoin(broadcast(q))
-          .where(col("q_id") =!= col("n_id"))
-          .select(col("q_id"), col("q_lbl"), col("n_lbl"), col("n_id"), cos.as("sim"))
-          .withColumn("rn", row_number().over(w)).where(col("rn") <= 10)
+      (s, dir) =>
+        labelKnn(s, dir, 10)
           .selectExpr("q_id",
             "CASE WHEN n_lbl = q_lbl THEN 1 ELSE 0 END AS rel",
             "1e0 / (CAST(CAST(ln(CAST(rn + 1 AS DOUBLE)) AS FLOAT) AS DOUBLE) / CAST(CAST(ln(2e0) AS FLOAT) AS DOUBLE)) AS gain")
@@ -1306,16 +1261,10 @@ object Pipeline {
             T.xsum(col("rel") * col("gain")).as("dcg"),
             T.xsum(col("gain")).as("idcg"))
           .selectExpr("q_id", "n_rel_top10", "round(dcg / idcg, 6) AS ndcg_at_10")
-          .orderBy("q_id")
-      },
-      Some("""WITH ranked AS (SELECT q_id, rel, rn FROM (
-                   SELECT q.vec_id AS q_id,
-                     CASE WHEN e.label = q.label THEN 1 ELSE 0 END AS rel,
-                     row_number() OVER (PARTITION BY q.vec_id
-                       ORDER BY list_cosine_similarity(CAST(q.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])) DESC, e.vec_id) AS rn
-                   FROM embeddings q CROSS JOIN embeddings e
-                   WHERE q.vec_id < 10 AND q.vec_id <> e.vec_id) t
-                 WHERE rn <= 10),
+          .orderBy("q_id"),
+      Some(s"""WITH ranked AS (SELECT q_id,
+                     CASE WHEN n_lbl = q_lbl THEN 1 ELSE 0 END AS rel, rn
+                   FROM (${sqlLabelKnn(10)}) k),
                  g AS (SELECT q_id, rel,
                      1e0 / (CAST(CAST(ln(CAST(rn + 1 AS DOUBLE)) AS REAL) AS DOUBLE) / CAST(CAST(ln(2e0) AS REAL) AS DOUBLE)) AS gain
                    FROM ranked)

@@ -681,7 +681,8 @@ object TextSim {
       // integers, so the fused score is two shared-text double terms —
       // no float-sum-order hazard. Top-5 per query, ties on doc_id.
       // Scale: the dense arm here is the brute-force recall reference
-      // (50 queries × corpus); the production swap is ml_knn_ivf /
+      // (Vec.knn: the 1% vec_id % 100 = 0 queries × corpus — 5 queries at
+      // sf0.01, 20 at sf0.1); the production swap is ml_knn_ivf /
       // sim_topk_pairs_lsh, exactly as documented on those rows.
       (s, dir) => {
         val wnd = Window.partitionBy(col("q_id"))
@@ -689,16 +690,8 @@ object TextSim {
         val bm = bm25Scored(s, dir)
           .withColumn("rank", row_number().over(wnd))
           .where(col("rank") <= 20).select("q_id", "doc_id", "rank")
-        val e = T.embeddings(s, dir).select(col("vec_id"), col("embedding"))
-        val qe = e.where(col("vec_id") % 100 === 0)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-        val cos = qe.join(e.withColumnRenamed("vec_id", "doc_id"), col("doc_id") =!= col("q_id"))
-          .select(col("q_id"), col("doc_id"),
-            (graft.functions.Vec.dot(s, "q_emb", "embedding") /
-              (sqrt(graft.functions.Vec.normSq(s, "q_emb")) *
-               sqrt(graft.functions.Vec.normSq(s, "embedding")))).as("score"))
-        val dn = cos.withColumn("rank", row_number().over(wnd))
-          .where(col("rank") <= 20).select("q_id", "doc_id", "rank")
+        val dn = ML.embKnn(s, dir, col("vec_id") % 100 === 0, graft.functions.Vec.Cosine, 20)
+          .select(col("q_id"), col("n_id").as("doc_id"), col("rn").as("rank"))
         bm.withColumnRenamed("rank", "r_bm25")
           .join(dn.withColumnRenamed("rank", "r_dense"), Seq("q_id", "doc_id"), "full_outer")
           .selectExpr("q_id", "doc_id",
@@ -718,16 +711,8 @@ object TextSim {
                        row_number() OVER (PARTITION BY q_id
                          ORDER BY score DESC, doc_id ASC) AS rank
                      FROM bm25sc) b WHERE rank <= 20),
-                 e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-                 cosr AS (SELECT q.vec_id AS q_id, d.vec_id AS doc_id,
-                     list_cosine_similarity(q.emb, d.emb) AS score
-                   FROM e q JOIN e d ON d.vec_id <> q.vec_id
-                   WHERE q.vec_id % 100 = 0),
-                 dn AS (SELECT q_id, doc_id, rank FROM (
-                     SELECT q_id, doc_id,
-                       row_number() OVER (PARTITION BY q_id
-                         ORDER BY score DESC, doc_id ASC) AS rank
-                     FROM cosr) c WHERE rank <= 20),
+                 dn AS (SELECT q_id, n_id AS doc_id, rn AS rank FROM (
+                     ${ML.sqlEmbKnn("vec_id % 100 = 0", graft.functions.Vec.Cosine, 20)}) c),
                  fused AS (SELECT coalesce(bm.q_id, dn.q_id) AS q_id,
                      coalesce(bm.doc_id, dn.doc_id) AS doc_id,
                      coalesce(1e0 / (60 + bm.rank), 0e0)

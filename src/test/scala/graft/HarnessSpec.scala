@@ -11,8 +11,8 @@ import scala.jdk.CollectionConverters._
   * four the mains document. Also pins [[Twin]] as the one renderer of the
   * shared-text step lists, and [[Tables]] as the one reader of fixture
   * paths, the owner of the one session memo and the one place an exact
-  * sum is spelled, and `Vec.nearest` as the one nearest-centroid
-  * ranking. */
+  * sum is spelled, `Vec.nearest` as the one nearest-centroid ranking,
+  * and `Vec.knn` as the one query × corpus kNN ranking. */
 class HarnessSpec extends SparkSpec {
 
   test("conf: Bench's settings, key by key") {
@@ -61,6 +61,11 @@ class HarnessSpec extends SparkSpec {
 
   private def filesWith(needle: String): Set[String] =
     mainSources.collect { case (f, code) if code.contains(needle) => f }.toSet
+
+  /** How often each file that contains `needle` contains it. */
+  private def occurrences(needle: String): Map[String, Int] = mainSources.map { case (f, code) =>
+    f -> (code.split(java.util.regex.Pattern.quote(needle), -1).length - 1)
+  }.filter(_._2 > 0)
 
   test("structure: Harness is the only session builder and task listener") {
     assert(mainSources.size > 20, "scan must see the whole source tree")
@@ -135,12 +140,26 @@ class HarnessSpec extends SparkSpec {
     // the crossJoins left rank nothing: ml_kmeans_elbow/_knee's prefix-min,
     // ml_kmeans_transform's distance matrix, ml_kmeans_pp_init's growing
     // seed set and the flat-cluster memberships
-    val crosses = mainSources.map { case (f, code) =>
-      f -> (code.split(java.util.regex.Pattern.quote("crossJoin(broadcast(cent))"), -1).length - 1)
-    }.filter(_._2 > 0)
-    assert(crosses === Map("graft/ops/ML.scala" -> 4, "graft/ops/Cluster.scala" -> 1))
+    assert(occurrences("crossJoin(broadcast(cent))") ===
+      Map("graft/ops/ML.scala" -> 4, "graft/ops/Cluster.scala" -> 1))
     // the fixed vec_id < 10 model frame is built in one place (ML.kmCentFrame)
     assert(mainSources.values.map("col\\(\"vec_id\"\\)\\.as\\(\"cid\"\\)".r.findAllIn(_).size).sum === 1)
+  }
+
+  test("structure: query × corpus kNN ranking goes through Vec.knn, its oracle through Vec.sqlKnn") {
+    assert(filesWith("crossJoin(broadcast(q))") === Set.empty[String])
+    assert(filesWith("orderBy(col(\"sim\").desc, col(\"n_id\"))") === Set.empty[String])
+    // the (d, n_id) windows left rank index candidates, not the corpus:
+    // Cluster.ivfKnn3 and ml_knn_ivf's probed cells
+    assert(occurrences("partitionBy(col(\"q_id\")).orderBy(col(\"d\"), col(\"n_id\"))") ===
+      Map("graft/ops/Cluster.scala" -> 1, "graft/ops/Pipeline.scala" -> 1))
+    // the oracle ranking is spelled once, from each Vec.Metric's DuckDB twin
+    for (needle <- Seq("ORDER BY list_distance(CAST(q.", "ORDER BY list_cosine_similarity"))
+      assert(filesWith(needle) === Set.empty[String], s"$needle is back")
+    assert(filesWith("PARTITION BY q.") === Set("graft/functions/VecExpressions.scala"))
+    // the EVAL_N sample is drawn in one place per engine
+    assert(occurrences("lit(84589L)") === Map("graft/ops/ML.scala" -> 1))
+    assert(occurrences("(84589 * vec_id + 12345)") === Map("graft/ops/ML.scala" -> 1))
   }
 
   test("structure: the mains read exactly four SPARK_GRAFT_ knobs") {

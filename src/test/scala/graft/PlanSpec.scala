@@ -417,6 +417,67 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  private def physical(name: String): org.apache.spark.sql.execution.SparkPlan = {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case other => other
+    }
+  }
+
+  test("kNN rankings broadcast the queries: text_rrf_fusion, ml_ivf_nprobe_sweep") {
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference}
+    import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.types.{ArrayType, FloatType}
+    def has(out: Seq[Attribute], p: Attribute => Boolean) = out.exists(p)
+    val vec = (a: Attribute) => a.dataType match { case ArrayType(FloatType, _) => true; case _ => false }
+    val qid = (a: Attribute) => a.name == "q_id"
+    val byQ = (w: WindowExec) => w.partitionSpec match {
+      case Seq(a: AttributeReference) => a.name == "q_id"
+      case _ => false
+    }
+    for (name <- Seq("text_rrf_fusion", "ml_ivf_nprobe_sweep")) {
+      val p = physical(name)
+      // the query × corpus pairings below a ranking partitioned by q_id alone
+      val pairings = p.collect {
+        case w: WindowExec if byQ(w) => w.collect {
+          case j: BroadcastNestedLoopJoinExec if has(j.left.output, vec) && has(j.right.output, vec) &&
+              has(j.left.output, qid) != has(j.right.output, qid) => j
+        }
+      }.flatten.distinct
+      assert(pairings.nonEmpty, s"$name: no query × corpus nested-loop join under a q_id ranking:\n$p")
+      for (j <- pairings) {
+        val (build, stream) = j.buildSide match {
+          case BuildRight => (j.right, j.left)
+          case BuildLeft => (j.left, j.right)
+        }
+        assert(build.isInstanceOf[BroadcastExchangeExec] && has(build.output, qid) &&
+          !has(stream.output, qid), s"$name: the corpus is the broadcast side:\n$j")
+        assert(build.collect { case x: ShuffleExchangeExec => x }.isEmpty,
+          s"$name: the broadcast side shuffles first:\n$j")
+      }
+    }
+  }
+
+  test("ml_knn: one partial WindowGroupLimit below the q_id exchange") {
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.window.{Partial, WindowGroupLimitExec}
+    val p = physical("ml_knn")
+    val byQ = p.collect { case x: ShuffleExchangeExec => x }.filter(_.outputPartitioning match {
+      case h: HashPartitioning => h.expressions.collect { case a: AttributeReference => a.name } == Seq("q_id")
+      case _ => false
+    })
+    assert(byQ.size === 1, s"expected one exchange on q_id:\n$p")
+    val partial = p.collect { case w: WindowGroupLimitExec if w.mode == Partial => w }
+    assert(partial.size === 1 && byQ.head.child.exists(_ eq partial.head),
+      s"expected one partial WindowGroupLimit below the q_id exchange:\n$p")
+  }
+
   test("whole-stage codegen covers the hot path of filter_pred") {
     // pre-execution the AQE wrapper hides codegen spans — run the query,
     // then inspect the final adaptive plan
