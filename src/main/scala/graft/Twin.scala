@@ -2,6 +2,7 @@ package graft
 
 import graft.{Tables => T}
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.{broadcast, expr, lit, count => countRows}
 import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
@@ -18,7 +19,10 @@ import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
   *
   * [[gauss]] is the one unrolled elimination; [[Fit]] declares a
   * driver-held iterative fit once, and [[fit]] / [[sqlFit]] run it in
-  * Spark and unroll it for the oracle.
+  * Spark and unroll it for the oracle. [[rounds]] / [[sqlRounds]] do the
+  * same for a fixed-round graph or power loop whose state is a table:
+  * the round count, the oracle's CTE naming and the lineage cut of each
+  * round are written here, not at the loop.
   */
 object Twin {
 
@@ -166,6 +170,53 @@ object Twin {
     }
     (s"${p}0 AS ($p0)" +: blocks).mkString(",\n  ")
   }
+
+  /** A fixed-round loop over a table-valued state: `step(prev, k)` for
+    * k = 1..n, starting from `init` as the caller built it. The lineage
+    * cut follows from the declaration:
+    *  - this form freezes each round ([[Tables.freeze]]): the next round's
+    *    plan starts from a flat leaf and the round is computed lazily, with
+    *    the rest of the query. That is the right cut for flat rounds;
+    *    caching a round every time measured > 6× slower on the min-label
+    *    loop, whose round is its query's largest intermediate.
+    *  - the form with a `normalize` pins each round instead. */
+  def rounds(init: DataFrame, n: Int)(step: (DataFrame, Int) => DataFrame): DataFrame =
+    (1 to n).foldLeft(init)((prev, k) => T.freeze(step(prev, k)))
+
+  /** A fixed-round loop whose rounds end in a driver-read normalizer (a
+    * power iteration): `step(prev, k)` yields the round's raw product,
+    * which is pinned ([[Tables.pin]]) because `normalize` reads it more
+    * than once — it collects its scalars (a mean, a norm) from the product
+    * as driver-held literals and maps the product to the next state. A
+    * literal, unlike an in-plan broadcast of the aggregate, does not
+    * re-run the round's subtree per reference when AQE is off, and it is
+    * bit-neutral: the same exact-wire value feeds the same division.
+    * Round k-1's pin is released once round k's has materialized, so the
+    * loop returns holding one round's pin, not n. */
+  def rounds(init: DataFrame, n: Int, normalize: DataFrame => DataFrame)(
+      step: (DataFrame, Int) => DataFrame): DataFrame = {
+    val (_, last) = (1 to n).foldLeft((Option.empty[DataFrame], init)) {
+      case ((held, prev), k) =>
+        val raw = T.pin(step(prev, k))
+        held.foreach(release)
+        (Some(raw), normalize(raw))
+    }
+    last
+  }
+
+  /** Free a pinned frame's blocks. `Dataset.unpersist` does not reach a
+    * local checkpoint's storage; the checkpointed RDD under its leaf
+    * does. */
+  private def release(pinned: DataFrame): Unit = pinned.queryExecution.logical match {
+    case leaf: LogicalRDD => leaf.rdd.unpersist(blocking = false)
+    case other => throw new IllegalStateException(s"not a pinned frame: ${other.nodeName}")
+  }
+
+  /** The oracle twin of [[rounds]]: the CTEs of rounds 1..n, in order.
+    * Round k reads `<state>{k-1}` and defines `<state>{k}`; the caller
+    * names round 0 and reads the final state from the same `n`. */
+  def sqlRounds(n: Int)(round: Int => String): String =
+    (1 to n).map(round).mkString(",\n  ")
 
   private def sparkSum(s: Sum): Column = s.wire match {
     case XSum => T.xsum(expr(s.text)).as(s.name)

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{QueryDef, Tables => T}
+import graft.{QueryDef, Tables => T, Twin}
 import graft.functions.Vec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -583,52 +583,123 @@ object Cluster {
        core AS (SELECT p.id FROM pts p LEFT JOIN deg ON deg.u = p.id
                 WHERE coalesce(deg.c, 0) + 1 >= $MIN_PTS)"""
 
+  /** The in-horizon eps graph, frozen: the (a < b) pairs `e` and their
+    * symmetric (u, v) list `nbr` — the graph every HORIZON graph query
+    * reads. [[sqlHorizonGraph]] is its oracle twin. */
+  private def horizonGraph(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val e = T.freeze(epsPairs(s, dir, HORIZON))
+    (e, T.freeze(e.select(col("a").as("u"), col("b").as("v"))
+      .unionAll(e.select(col("b").as("u"), col("a").as("v")))))
+  }
+
+  /** The oracle's in-horizon eps graph, brute force: `pts`, `ep` (the
+    * (a < b) pairs) and `nbr`. */
+  private val sqlHorizonGraph =
+    s"""pts AS (SELECT vec_id AS id,
+                   CAST(embedding[1] AS DOUBLE) AS x,
+                   CAST(embedding[2] AS DOUBLE) AS y FROM embeddings),
+                 ep AS MATERIALIZED (SELECT p.id AS a, q.id AS b FROM pts p JOIN pts q
+                   ON p.id < q.id
+                  AND (p.x - q.x) * (p.x - q.x) + (p.y - q.y) * (p.y - q.y)
+                      <= ${HORIZON * HORIZON}),
+                 nbr AS (SELECT a AS u, b AS v FROM ep
+                         UNION ALL SELECT b, a FROM ep)"""
+
+  /** Mutual-reinforcement rounds of graph_hits (two half-rounds each). */
+  private val HITS_ROUNDS = 3
+
+  /** Synchronous peeling rounds graph_kcore's oracle unrolls: at least
+    * the fixtures' observed round count (≤ 4); a round past the fixpoint
+    * is a no-op. */
+  private val KCORE_PEELS = 6
+
+  /** PIC's rounds and its per-vertex power step, shared text. */
+  private val PIC_ROUNDS = 5
+  private val PIC_STEP = "sx / deg"
+
   /** PIC pseudo-eigenvector (Lin & Cohen, ICML 2010) over the eps
     * neighborhood graph — the 5-round power loop shared by
-    * ml_spectral_embed and ml_spectral_cluster. Returns the final (u, x)
-    * frame (a cheap map over the last round's pinned product).
-    *
-    * r12: the per-round mean/norm scalars are COLLECTED as driver-held
-    * literals instead of carried as in-plan broadcast one-row frames.
-    * Re-literalization is bit-neutral (the same exact-wire aggregate
-    * value feeds the same `x - mu` / `xc / nrm` double ops, the kmeans‖
-    * φ discipline), and it removes a real cost: with AQE off (the r12
-    * harness), each BroadcastExchange re-executes its whole subtree —
-    * round k's mean broadcast re-ran rounds 1..k, an O(R²) recompute the
-    * AQE stage cache used to hide. Per-round state is pinned
-    * (localCheckpoint) so the next round starts from a flat leaf; the
-    * (u, x) frame is one row per vertex — tiny at any corpus scale
-    * relative to the edge table the round actually processes. */
+    * ml_spectral_embed and ml_spectral_cluster, one pinned Twin.rounds
+    * round each, normalized by the (mean, norm) scalars collected from
+    * its product. Returns the final (u, x) frame (a cheap map over the
+    * last round's pinned product); [[sqlPic]] is its oracle twin. */
   private def picEmbed(s: SparkSession, dir: String): DataFrame = {
-    val e = T.freeze(epsPairs(s, dir, HORIZON))
-    // pin, not freeze: every power round joins nbr again (5 refs + the
-    // degree pass) — bare freeze re-runs the eps grid join per reference;
-    // localCheckpoint computes it once (the graph_pagerank_personalized
-    // lesson). r13: pinned PRE-PARTITIONED on v, the key every round's
-    // edge×vector join uses — localCheckpoint preserves the output
-    // partitioning, so each round shuffles only the per-vertex x frame
-    // (|V| rows) into the join while the edge table (|E| rows, the bulk)
-    // never moves again. The partitioning-reuse play holds at any scale:
-    // the big side is laid out once, R rounds ride it.
+    val (e, _) = horizonGraph(s, dir)
+    // pinned: every power round joins nbr again (5 refs + the degree
+    // pass) — bare freeze re-runs the eps grid join per reference. r13:
+    // pinned PRE-PARTITIONED on v, the key every round's edge×vector join
+    // uses — localCheckpoint preserves the output partitioning, so each
+    // round shuffles only the per-vertex x frame (|V| rows) into the join
+    // while the edge table (|E| rows, the bulk) never moves again.
     val nbr = T.pin(e.select(col("a").as("u"), col("b").as("v"))
       .unionAll(e.select(col("b").as("u"), col("a").as("v")))
       .repartition(col("v")))
     val deg = T.pin(nbr.groupBy("u").agg(count(lit(1)).as("deg")))
-    var x = deg.selectExpr("u",
+    val init = deg.selectExpr("u",
       s"CAST((u * 48271 + 16807) % ${T.HASH_P} % 1000 AS DOUBLE) / 1e3 AS x")
-    for (_ <- 1 to 5) {
-      val px = T.pin(nbr.join(x.selectExpr("u AS v", "x"), "v")
-        .groupBy("u").agg(T.xsum(col("x")).as("sx"))
-        .join(deg, "u").selectExpr("u", "sx / deg AS x"))
+    val center = (px: DataFrame) => {
       val mu = px.agg((T.xsum(col("x")) / count(lit(1))).as("mu"))
         .collect()(0).getDouble(0)
       val cx = px.select(col("u"), (col("x") - lit(mu)).as("xc"))
       val nrm = cx.agg(sqrt(T.xsum(col("xc") * col("xc"))).as("nrm"))
         .collect()(0).getDouble(0)
-      x = cx.select(col("u"), (col("xc") / lit(nrm)).as("x"))
+      cx.select(col("u"), (col("xc") / lit(nrm)).as("x"))
     }
-    x
+    Twin.rounds(init, PIC_ROUNDS, center) { (x, _) =>
+      nbr.join(x.selectExpr("u AS v", "x"), "v")
+        .groupBy("u").agg(T.xsum(col("x")).as("sx"))
+        .join(deg, "u").selectExpr("u", s"$PIC_STEP AS x")
+    }
   }
+
+  /** The oracle twin of [[picEmbed]]: the eps graph, `deg`, the seed `x0`
+    * and rounds `x1`..`x5`. */
+  private val sqlPic =
+    s"""$sqlHorizonGraph,
+                 deg AS (SELECT u, count(*) AS deg FROM nbr GROUP BY u),
+                 x0 AS (SELECT u,
+                     CAST((u * 48271 + 16807) % ${T.HASH_P} % 1000 AS DOUBLE) / 1e3 AS x
+                   FROM deg),
+                 ${Twin.sqlRounds(PIC_ROUNDS)(k =>
+                   s"""p$k AS (SELECT nbr.u, ${T.sqlXsum("x.x")} AS sx
+                   FROM nbr JOIN x${k - 1} x ON x.u = nbr.v GROUP BY nbr.u),
+                 d$k AS (SELECT p.u, $PIC_STEP AS x
+                   FROM p$k p JOIN deg ON deg.u = p.u),
+                 m$k AS (SELECT ${T.sqlXsum("x")} / count(*) AS mu FROM d$k),
+                 c$k AS (SELECT u, x - mu AS xc FROM d$k, m$k),
+                 n$k AS (SELECT sqrt(${T.sqlXsum("xc * xc")}) AS nrm FROM c$k),
+                 x$k AS MATERIALIZED (SELECT u, xc / nrm AS x FROM c$k, n$k)""")}"""
+
+  private val LPA_ROUNDS = 3
+
+  /** Synchronous label propagation (LPA): from singleton labels, each
+    * round every vertex adopts its neighbors' mode label, ties to the
+    * min label — one vertex-keyed join, one (vertex, label) count and one
+    * per-vertex argmax window per round. Shared by graph_label_prop and
+    * graph_modularity; [[sqlLpa]] is its oracle twin. */
+  private def lpaLabels(nbr: DataFrame): DataFrame = {
+    val win = Window.partitionBy("u").orderBy(col("cnt").desc, col("lbl").asc)
+    Twin.rounds(nbr.select(col("u")).distinct().withColumn("lbl", col("u")), LPA_ROUNDS) {
+      (lbl, _) =>
+        nbr.join(lbl.select(col("u").as("v"), col("lbl")), "v")
+          .groupBy("u", "lbl").agg(count(lit(1)).as("cnt"))
+          .withColumn("rn", row_number().over(win))
+          .where(col("rn") === 1).select("u", "lbl")
+    }
+  }
+
+  /** The eps graph and the LPA labelings `lp0`..`lp3`. */
+  private val sqlLpa =
+    s"""$sqlHorizonGraph,
+                 lp0 AS (SELECT DISTINCT u, u AS lbl FROM nbr),
+                 ${Twin.sqlRounds(LPA_ROUNDS)(k =>
+                   s"""lm$k AS (SELECT n.u, l.lbl, count(*) AS cnt
+                   FROM nbr n JOIN lp${k - 1} l ON l.u = n.v
+                   GROUP BY n.u, l.lbl),
+                 lp$k AS MATERIALIZED (SELECT u, lbl FROM (SELECT u, lbl,
+                     row_number() OVER (PARTITION BY u
+                       ORDER BY cnt DESC, lbl) AS rn FROM lm$k) t
+                   WHERE rn = 1)""")}"""
 
   /** IVF-seeded k=3 directed kNN edges (u, v) — the ml_knn_graph shape,
     * shared by the NN-descent rows (r13 factor-out). Pinned: the round
@@ -1191,41 +1262,42 @@ object Cluster {
         val sample = col("vec_id") % 40 === 0
         val exact = T.pin(ML.embKnn(s, dir, sample, Vec.L2, 3)
           .select(col("q_id").as("u"), col("n_id").as("v")))
-        val nq = T.embeddings(s, dir).where(sample).count()
-        def recallRow(g: DataFrame, r: Int): DataFrame =
+        val nqs = T.embeddings(s, dir).where(sample).agg(count(lit(1)).as("nq"))
+        def hitsRow(g: DataFrame, r: Int): DataFrame =
           g.join(exact, Seq("u", "v"))
             .agg(count(lit(1)).as("hits"))
-            .selectExpr(s"$r AS round", s"CAST($nq AS BIGINT) AS n_queries",
-              s"round(CAST(hits AS DOUBLE) / (3 * $nq), 6) AS recall_at_3")
-        recallRow(g0, 0)
-          .unionAll(recallRow(g1, 1))
-          .unionAll(recallRow(g2, 2))
+            .selectExpr(s"$r AS round", "hits")
+        hitsRow(g0, 0)
+          .unionAll(hitsRow(g1, 1))
+          .unionAll(hitsRow(g2, 2))
+          .crossJoin(nqs)
+          .selectExpr("round", "nq AS n_queries",
+            "round(CAST(hits AS DOUBLE) / (3 * nq), 6) AS recall_at_3")
           .orderBy("round")
       },
       Some {
-        // one NN-descent round as CTEs: und/cand from `gin`, ranked top-3
-        // into `gout`
-        def roundCtes(gin: String, n: Int): String =
-          s"""und$n AS (SELECT DISTINCT u, v FROM (
-                SELECT u, v FROM $gin UNION ALL SELECT v, u FROM $gin) x),
-              cand$n AS (SELECT DISTINCT u, w FROM (
-                SELECT a.u, b.v AS w FROM und$n a JOIN und$n b ON a.v = b.u
-                WHERE a.u <> b.v
-                UNION ALL SELECT u, v FROM $gin) x),
-              g$n AS (SELECT u, w AS v FROM (
-                SELECT c.u, c.w,
-                  row_number() OVER (PARTITION BY c.u
-                    ORDER BY list_distance(eu.emb, ew.emb), c.w) AS rn
-                FROM cand$n c
-                JOIN ed eu ON eu.vec_id = c.u
-                JOIN ed ew ON ew.vec_id = c.w) t
-              WHERE rn <= 3)"""
+        // each NN-descent round: und/cand from g{k-1}, ranked top-3 into g{k}
         s"""WITH $sqlIvfKnn3,
                g0 AS (SELECT q_id AS u, n_id AS v FROM knn3),
                ed AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
                       FROM embeddings),
-               ${roundCtes("g0", 1)},
-               ${roundCtes("g1", 2)},
+               ${Twin.sqlRounds(2) { k =>
+                 val gin = s"g${k - 1}"
+                 s"""und$k AS (SELECT DISTINCT u, v FROM (
+                   SELECT u, v FROM $gin UNION ALL SELECT v, u FROM $gin) x),
+               cand$k AS (SELECT DISTINCT u, w FROM (
+                   SELECT a.u, b.v AS w FROM und$k a JOIN und$k b ON a.v = b.u
+                   WHERE a.u <> b.v
+                   UNION ALL SELECT u, v FROM $gin) x),
+               g$k AS (SELECT u, w AS v FROM (
+                   SELECT c.u, c.w,
+                     row_number() OVER (PARTITION BY c.u
+                       ORDER BY list_distance(eu.emb, ew.emb), c.w) AS rn
+                   FROM cand$k c
+                   JOIN ed eu ON eu.vec_id = c.u
+                   JOIN ed ew ON ew.vec_id = c.w) t
+                 WHERE rn <= 3)"""
+               }},
                nqs AS (SELECT count(*) AS nq FROM embeddings WHERE vec_id % 40 = 0),
                exact AS (SELECT q_id AS u, n_id AS v FROM (
                  ${ML.sqlEmbKnn("vec_id % 40 = 0", Vec.L2, 3)}) t)
@@ -1297,7 +1369,7 @@ object Cluster {
         val pieces = nnSearchTrail(s, dir)
         val exact = T.pin(ML.embKnn(s, dir, col("vec_id") < 20, Vec.L2, 5)
           .select(col("q_id"), col("n_id").as("v")))
-        val nq = exact.select("q_id").distinct().count()
+        val nqs = exact.agg(countDistinct(col("q_id")).as("nq"))
         // ONE ranking pass for all six depths (r15 — was six
         // window+join+agg chains over growing visited unions): the trail
         // pieces are disjoint, so each scored row carries the hop it
@@ -1322,8 +1394,9 @@ object Cluster {
           .groupBy("h").agg(count(lit(1)).as("hits"))
         s.range(0, 6).selectExpr("CAST(id AS INT) AS h")
           .join(hits, Seq("h"), "left")
-          .selectExpr("h AS hops", s"CAST($nq AS BIGINT) AS n_queries",
-            s"round(CAST(coalesce(hits, 0L) AS DOUBLE) / (5 * $nq), 6) AS recall_at_5")
+          .crossJoin(nqs)
+          .selectExpr("h AS hops", "nq AS n_queries",
+            "round(CAST(coalesce(hits, 0L) AS DOUBLE) / (5 * nq), 6) AS recall_at_5")
           .orderBy("hops")
       },
       Some {
@@ -3315,9 +3388,7 @@ object Cluster {
       // |N(a)∩N(b)| / |N(a)∪N(b)| — bit-deterministic across engines.
       // Output: top-20 predicted links by (score, a, b).
       (s, dir) => {
-        val e = T.freeze(epsPairs(s, dir, HORIZON)) // (a < b)
-        val nbr = e.select(col("a").as("u"), col("b").as("v"))
-          .unionAll(e.select(col("b").as("u"), col("a").as("v")))
+        val (e, nbr) = horizonGraph(s, dir) // e: (a < b)
         val cn = nbr.select(col("u").as("w"), col("v").as("a"))
           .join(nbr.select(col("u").as("w"), col("v").as("b")), "w")
           .where(col("a") < col("b"))
@@ -3330,15 +3401,7 @@ object Cluster {
             "round(CAST(cn AS DOUBLE) / (da + db - cn), 6) AS jaccard")
           .orderBy(col("jaccard").desc, col("a"), col("b")).limit(20)
       },
-      Some(s"""WITH pts AS (SELECT vec_id AS id,
-                   CAST(embedding[1] AS DOUBLE) AS x,
-                   CAST(embedding[2] AS DOUBLE) AS y FROM embeddings),
-                 ep AS (SELECT p.id AS a, q.id AS b FROM pts p JOIN pts q
-                   ON p.id < q.id
-                  AND (p.x - q.x) * (p.x - q.x) + (p.y - q.y) * (p.y - q.y)
-                      <= ${HORIZON * HORIZON}),
-                 nbr AS (SELECT a AS u, b AS v FROM ep
-                         UNION ALL SELECT b, a FROM ep),
+      Some(s"""WITH $sqlHorizonGraph,
                  cn AS (SELECT n1.v AS a, n2.v AS b, count(*) AS cn
                    FROM nbr n1 JOIN nbr n2 ON n1.u = n2.u
                    WHERE n1.v < n2.v
@@ -3364,9 +3427,7 @@ object Cluster {
       // implementations differ in the last ulps), and the per-pair sum
       // rides the exact decimal wire. Output: top-20 non-edges by score.
       (s, dir) => {
-        val e = T.freeze(epsPairs(s, dir, HORIZON)) // (a < b)
-        val nbr = e.select(col("a").as("u"), col("b").as("v"))
-          .unionAll(e.select(col("b").as("u"), col("a").as("v")))
+        val (e, nbr) = horizonGraph(s, dir) // e: (a < b)
         val deg = nbr.groupBy(col("u")).agg(count(lit(1)).as("deg"))
         // deg = 1 ⇒ ln(deg) = 0, but a degree-1 vertex has a single edge
         // and can never close a wedge — drop it BEFORE the weight so the
@@ -3383,15 +3444,7 @@ object Cluster {
           .selectExpr("a", "b", "cn", "round(aa, 6) AS adamic_adar")
           .orderBy(col("adamic_adar").desc, col("a"), col("b")).limit(20)
       },
-      Some(s"""WITH pts AS (SELECT vec_id AS id,
-                   CAST(embedding[1] AS DOUBLE) AS x,
-                   CAST(embedding[2] AS DOUBLE) AS y FROM embeddings),
-                 ep AS (SELECT p.id AS a, q.id AS b FROM pts p JOIN pts q
-                   ON p.id < q.id
-                  AND (p.x - q.x) * (p.x - q.x) + (p.y - q.y) * (p.y - q.y)
-                      <= ${HORIZON * HORIZON}),
-                 nbr AS (SELECT a AS u, b AS v FROM ep
-                         UNION ALL SELECT b, a FROM ep),
+      Some(s"""WITH $sqlHorizonGraph,
                  deg AS (SELECT u, count(*) AS deg FROM nbr GROUP BY u),
                  nw AS (SELECT nbr.u AS w, nbr.v,
                      1e0 / CAST(CAST(ln(CAST(deg AS DOUBLE)) AS REAL) AS DOUBLE) AS iw
@@ -3418,16 +3471,14 @@ object Cluster {
       // sqrt-free — positive scores, same fixpoint direction as the L2
       // classic). The distributed shape: scores live as TABLES keyed by
       // the vertex; one half-round = one equi-join + one map-side-combined
-      // groupBy on the edge list (the pagerank discipline), with the norm
-      // carried as a broadcast one-row frame — no driver collect in the
-      // loop. Edges are DISTINCT (user, type) pairs so multiplicity
+      // groupBy on the edge list, then its L1 norm collected as a driver
+      // literal. Edges are DISTINCT (user, type) pairs so multiplicity
       // doesn't double-count endorsement. Sums ride the exact wire;
       // normalization divisions are shared text. Output: every authority
       // (the bounded type side) plus the top-10 hubs, 6-dp-rounded scores
       // ordered (side, score desc, id).
       (s, dir) => {
-        // pin, not freeze (r13 — the graph_pagerank_personalized lesson
-        // applied): the STATIC edge table is referenced 7× (the user
+        // pinned: the STATIC edge table is referenced 7× (the user
         // census + two joins per round); freeze re-derives the
         // events-scan+distinct per reference, pin computes it once
         val edges = T.pin(T.events(s, dir)
@@ -3445,7 +3496,7 @@ object Cluster {
           .crossJoin(broadcast(users.agg(count(lit(1)).as("nu"))))
           .selectExpr("u", "1e0 / nu AS h"))
         var auth: DataFrame = null
-        for (_ <- 1 to 3) {
+        for (_ <- 1 to HITS_ROUNDS) {
           val araw = T.pin(edges.join(hub, "u")
             .groupBy("t").agg(T.xsum(col("h")).as("a")))
           val na = araw.agg(T.xsum(col("a"))).collect()(0).getDouble(0)
@@ -3475,22 +3526,19 @@ object Cluster {
               $out AS (SELECT $key,
                   $sc / (SELECT ${T.sqlXsum(sc)} FROM ${out}r) AS $sc
                 FROM ${out}r)"""
-        val rounds = (1 to 3).map { k =>
-          val hPrev = if (k == 1) "h0" else s"h${k - 1}"
-          half(hPrev, s"a$k", "t", "u", "h", "a") + ",\n" +
-            half(s"a$k", s"h$k", "u", "t", "a", "h")
-        }.mkString(",\n")
         s"""WITH edges AS (SELECT DISTINCT user_id AS u, event_type AS t
                  FROM events),
                h0 AS (SELECT u, 1e0 / (SELECT count(DISTINCT user_id)
                    FROM events) AS h
                  FROM (SELECT DISTINCT u FROM edges)),
-               $rounds,
+               ${Twin.sqlRounds(HITS_ROUNDS)(k =>
+                 half(s"h${k - 1}", s"a$k", "t", "u", "h", "a") + ",\n" +
+                   half(s"a$k", s"h$k", "u", "t", "a", "h"))},
                hh AS (SELECT 'hub' AS side, CAST(u AS VARCHAR) AS id,
                    round(h, 6) AS score
-                 FROM h3 ORDER BY score DESC, id LIMIT 10)
+                 FROM h$HITS_ROUNDS ORDER BY score DESC, id LIMIT 10)
              SELECT side, id, score FROM (
-               SELECT 'auth' AS side, t AS id, round(a, 6) AS score FROM a3
+               SELECT 'auth' AS side, t AS id, round(a, 6) AS score FROM a$HITS_ROUNDS
                UNION ALL SELECT side, id, score FROM hh)
              ORDER BY side, score DESC, id"""
       }),
@@ -3504,17 +3552,14 @@ object Cluster {
       // distributed shape is synchronous peeling: per round ONE degree
       // aggregation over edges restricted to alive endpoints — no
       // all-pairs anywhere, per-round cost O(edges alive) on vertex-keyed
-      // shuffles, rounds frozen flat (the pagerank discipline). The
-      // fixtures peel in ≤ 4 rounds; the cap throws loudly (the Borůvka
-      // contract) rather than emit a non-fixpoint. Oracle unrolls 6
-      // synchronous rounds — peeling is idempotent at the fixpoint, so
+      // shuffles, rounds frozen flat. The fixtures peel in ≤ 4 rounds;
+      // the cap throws loudly (the Borůvka contract) rather than emit a
+      // non-fixpoint. Oracle unrolls 6 synchronous rounds — peeling is idempotent at the fixpoint, so
       // extra unrolled rounds are exact no-ops and the unroll only needs
       // to be ≥ the observed round count. Output: the degree histogram
       // WITHIN the 3-core (degree → vertex count), the bounded shape.
       (s, dir) => {
-        val e = T.freeze(epsPairs(s, dir, HORIZON)) // (a < b)
-        val nbr = T.freeze(e.select(col("a").as("u"), col("b").as("v"))
-          .unionAll(e.select(col("b").as("u"), col("a").as("v"))))
+        val (e, nbr) = horizonGraph(s, dir) // e: (a < b)
         val alive = kcoreAlive(e, nbr, 3)
         nbr.join(alive, "u")
           .join(alive.select(col("u").as("v")), "v")
@@ -3522,35 +3567,21 @@ object Cluster {
           .groupBy("degree").agg(count(lit(1)).as("n_vertices"))
           .orderBy("degree")
       },
-      Some {
-        def peel(i: Int): String = {
-          val prev = if (i == 1) "a0" else s"a${i - 1}"
-          s"""a$i AS (SELECT u FROM (
-                SELECT n.u, count(*) AS d
-                FROM nbr n JOIN $prev x ON x.u = n.u
-                           JOIN $prev y ON y.u = n.v
-                GROUP BY n.u) t
-              WHERE d >= 3)"""
-        }
-        s"""WITH pts AS (SELECT vec_id AS id,
-                   CAST(embedding[1] AS DOUBLE) AS x,
-                   CAST(embedding[2] AS DOUBLE) AS y FROM embeddings),
-                 ep AS (SELECT p.id AS a, q.id AS b FROM pts p JOIN pts q
-                   ON p.id < q.id
-                  AND (p.x - q.x) * (p.x - q.x) + (p.y - q.y) * (p.y - q.y)
-                      <= ${HORIZON * HORIZON}),
-                 nbr AS (SELECT a AS u, b AS v FROM ep
-                         UNION ALL SELECT b, a FROM ep),
+      Some(s"""WITH $sqlHorizonGraph,
                  a0 AS (SELECT DISTINCT u FROM nbr),
-                 ${peel(1)}, ${peel(2)}, ${peel(3)},
-                 ${peel(4)}, ${peel(5)}, ${peel(6)},
+                 ${Twin.sqlRounds(KCORE_PEELS)(k =>
+                   s"""a$k AS (SELECT u FROM (
+                     SELECT n.u, count(*) AS d
+                     FROM nbr n JOIN a${k - 1} x ON x.u = n.u
+                                JOIN a${k - 1} y ON y.u = n.v
+                     GROUP BY n.u) t
+                   WHERE d >= 3)""")},
                  core AS (SELECT n.u, count(*) AS degree
-                   FROM nbr n JOIN a6 x ON x.u = n.u
-                              JOIN a6 y ON y.u = n.v
+                   FROM nbr n JOIN a$KCORE_PEELS x ON x.u = n.u
+                              JOIN a$KCORE_PEELS y ON y.u = n.v
                    GROUP BY n.u)
                SELECT degree, count(*) AS n_vertices
-               FROM core GROUP BY degree ORDER BY degree"""
-      }),
+               FROM core GROUP BY degree ORDER BY degree""")),
 
     QueryDef(
       "graph_clustering_coeff",
@@ -3566,9 +3597,7 @@ object Cluster {
       // the output is bit-deterministic. Output: the 0.1-bucket histogram
       // of c(v) with per-bucket mean — bounded (11 rows) at any scale.
       (s, dir) => {
-        val e = T.freeze(epsPairs(s, dir, HORIZON)) // (a < b)
-        val nbr = e.select(col("a").as("u"), col("b").as("v"))
-          .unionAll(e.select(col("b").as("u"), col("a").as("v")))
+        val (e, nbr) = horizonGraph(s, dir) // e: (a < b)
         val deg = nbr.groupBy("u").agg(count(lit(1)).as("deg"))
         val wedges = nbr.select(col("u").as("w"), col("v").as("a"))
           .join(nbr.select(col("u").as("w"), col("v").as("b")), "w")
@@ -3585,15 +3614,7 @@ object Cluster {
             round(T.xsum(col("c")) / count(lit(1)), 6).as("avg_coeff"))
           .orderBy("coeff_bucket")
       },
-      Some(s"""WITH pts AS (SELECT vec_id AS id,
-                   CAST(embedding[1] AS DOUBLE) AS x,
-                   CAST(embedding[2] AS DOUBLE) AS y FROM embeddings),
-                 ep AS (SELECT p.id AS a, q.id AS b FROM pts p JOIN pts q
-                   ON p.id < q.id
-                  AND (p.x - q.x) * (p.x - q.x) + (p.y - q.y) * (p.y - q.y)
-                      <= ${HORIZON * HORIZON}),
-                 nbr AS (SELECT a AS u, b AS v FROM ep
-                         UNION ALL SELECT b, a FROM ep),
+      Some(s"""WITH $sqlHorizonGraph,
                  deg AS (SELECT u, count(*) AS deg FROM nbr GROUP BY u),
                  tri AS (SELECT w AS u, count(*) AS tri FROM (
                      SELECT n1.u AS w, n1.v AS a, n2.v AS b
@@ -3624,57 +3645,25 @@ object Cluster {
       // (async LPA's order-dependence is exactly what's being avoided).
       // Per round: ONE vertex-keyed join (labels onto edges) + ONE
       // (vertex, label) count + ONE per-vertex argmax window — all O(E)
-      // shuffles, rounds frozen flat (the pagerank discipline). Isolated
-      // vertices stay singleton communities via the final left join.
-      // Output: the community-size histogram — bounded at any scale.
+      // shuffles ([[lpaLabels]]). Isolated vertices stay singleton
+      // communities via the final left join. Output: the community-size
+      // histogram — bounded at any scale.
       (s, dir) => {
-        val e = T.freeze(epsPairs(s, dir, HORIZON)) // (a < b)
-        val nbr = T.freeze(e.select(col("a").as("u"), col("b").as("v"))
-          .unionAll(e.select(col("b").as("u"), col("a").as("v"))))
-        var lbl = nbr.select(col("u")).distinct().withColumn("lbl", col("u"))
-        for (_ <- 1 to 3) {
-          val msg = nbr
-            .join(lbl.select(col("u").as("v"), col("lbl")), "v")
-            .groupBy("u", "lbl").agg(count(lit(1)).as("cnt"))
-          val win = Window.partitionBy("u")
-            .orderBy(col("cnt").desc, col("lbl").asc)
-          lbl = T.freeze(msg.withColumn("rn", row_number().over(win))
-            .where(col("rn") === 1).select("u", "lbl"))
-        }
+        val (_, nbr) = horizonGraph(s, dir)
         plane(s, dir).select(col("id"))
-          .join(lbl.withColumnRenamed("u", "id"), Seq("id"), "left")
+          .join(lpaLabels(nbr).withColumnRenamed("u", "id"), Seq("id"), "left")
           .selectExpr("coalesce(lbl, id) AS community")
           .groupBy("community").agg(count(lit(1)).as("size"))
           .groupBy("size").agg(count(lit(1)).as("n_communities"))
           .orderBy("size")
       },
-      Some {
-        def lpRound(k: Int): String =
-          s"""lm$k AS (SELECT n.u, l.lbl, count(*) AS cnt
-                FROM nbr n JOIN lp${k - 1} l ON l.u = n.v
-                GROUP BY n.u, l.lbl),
-              lp$k AS (SELECT u, lbl FROM (SELECT u, lbl,
-                  row_number() OVER (PARTITION BY u
-                    ORDER BY cnt DESC, lbl) AS rn FROM lm$k) t
-                WHERE rn = 1)"""
-        s"""WITH pts AS (SELECT vec_id AS id,
-                   CAST(embedding[1] AS DOUBLE) AS x,
-                   CAST(embedding[2] AS DOUBLE) AS y FROM embeddings),
-                 ep AS (SELECT p.id AS a, q.id AS b FROM pts p JOIN pts q
-                   ON p.id < q.id
-                  AND (p.x - q.x) * (p.x - q.x) + (p.y - q.y) * (p.y - q.y)
-                      <= ${HORIZON * HORIZON}),
-                 nbr AS (SELECT a AS u, b AS v FROM ep
-                         UNION ALL SELECT b, a FROM ep),
-                 lp0 AS (SELECT DISTINCT u, u AS lbl FROM nbr),
-                 ${lpRound(1)}, ${lpRound(2)}, ${lpRound(3)},
+      Some(s"""WITH $sqlLpa,
                  fin AS (SELECT coalesce(l.lbl, p.id) AS community
-                   FROM pts p LEFT JOIN lp3 l ON l.u = p.id),
+                   FROM pts p LEFT JOIN lp$LPA_ROUNDS l ON l.u = p.id),
                  cs AS (SELECT community, count(*) AS size
                         FROM fin GROUP BY 1)
                SELECT size, count(*) AS n_communities
-               FROM cs GROUP BY 1 ORDER BY size"""
-      }),
+               FROM cs GROUP BY 1 ORDER BY size""")),
 
     QueryDef(
       "graph_modularity",
@@ -3688,19 +3677,8 @@ object Cluster {
       // then xsum'd; the only doubles are the final shared-text ratios.
       // Scale: O(E) joins on vertex keys, community-bounded aggregates.
       (s, dir) => {
-        val e = T.freeze(epsPairs(s, dir, HORIZON)) // (a < b)
-        val nbr = T.freeze(e.select(col("a").as("u"), col("b").as("v"))
-          .unionAll(e.select(col("b").as("u"), col("a").as("v"))))
-        var lbl = nbr.select(col("u")).distinct().withColumn("lbl", col("u"))
-        for (_ <- 1 to 3) {
-          val msg = nbr
-            .join(lbl.select(col("u").as("v"), col("lbl")), "v")
-            .groupBy("u", "lbl").agg(count(lit(1)).as("cnt"))
-          val win = Window.partitionBy("u")
-            .orderBy(col("cnt").desc, col("lbl").asc)
-          lbl = T.freeze(msg.withColumn("rn", row_number().over(win))
-            .where(col("rn") === 1).select("u", "lbl"))
-        }
+        val (e, nbr) = horizonGraph(s, dir) // e: (a < b)
+        val lbl = lpaLabels(nbr)
         val m = e.agg(count(lit(1)).as("m"))
         val deg = nbr.groupBy("u").agg(count(lit(1)).as("deg"))
         val ec = e.join(lbl.select(col("u").as("a"), col("lbl").as("la")), "a")
@@ -3716,49 +3694,22 @@ object Cluster {
           .selectExpr("n_communities", "m AS n_edges",
             "round(q, 6) AS modularity")
       },
-      Some {
-        def lpRound(k: Int): String =
-          s"""lm$k AS (SELECT n.u, l.lbl, count(*) AS cnt
-                FROM nbr n JOIN lp${k - 1} l ON l.u = n.v
-                GROUP BY n.u, l.lbl),
-              lp$k AS (SELECT u, lbl FROM (SELECT u, lbl,
-                  row_number() OVER (PARTITION BY u
-                    ORDER BY cnt DESC, lbl) AS rn FROM lm$k) t
-                WHERE rn = 1)"""
-        s"""WITH pts AS (SELECT vec_id AS id,
-                   CAST(embedding[1] AS DOUBLE) AS x,
-                   CAST(embedding[2] AS DOUBLE) AS y FROM embeddings),
-                 ep AS MATERIALIZED (SELECT p.id AS a, q.id AS b FROM pts p JOIN pts q
-                   ON p.id < q.id
-                  AND (p.x - q.x) * (p.x - q.x) + (p.y - q.y) * (p.y - q.y)
-                      <= ${HORIZON * HORIZON}),
-                 nbr AS (SELECT a AS u, b AS v FROM ep
-                         UNION ALL SELECT b, a FROM ep),
-                 lp0 AS (SELECT DISTINCT u, u AS lbl FROM nbr),
-                 ${lpRound(1)}, ${lpRound(2)},
-                 lm3 AS (SELECT n.u, l.lbl, count(*) AS cnt
-                   FROM nbr n JOIN lp2 l ON l.u = n.v
-                   GROUP BY n.u, l.lbl),
-                 lp3 AS MATERIALIZED (SELECT u, lbl FROM (SELECT u, lbl,
-                     row_number() OVER (PARTITION BY u
-                       ORDER BY cnt DESC, lbl) AS rn FROM lm3) t
-                   WHERE rn = 1),
+      Some(s"""WITH $sqlLpa,
                  m AS (SELECT count(*) AS m FROM ep),
                  deg AS (SELECT u, count(*) AS deg FROM nbr GROUP BY u),
                  ec AS (SELECT la.lbl AS lbl, count(*) AS ec
-                   FROM ep JOIN lp3 la ON la.u = ep.a
-                   JOIN lp3 lb ON lb.u = ep.b
+                   FROM ep JOIN lp$LPA_ROUNDS la ON la.u = ep.a
+                   JOIN lp$LPA_ROUNDS lb ON lb.u = ep.b
                    WHERE la.lbl = lb.lbl GROUP BY la.lbl),
                  dc AS (SELECT l.lbl, CAST(sum(deg) AS BIGINT) AS dc
-                   FROM deg d JOIN lp3 l ON l.u = d.u GROUP BY l.lbl),
+                   FROM deg d JOIN lp$LPA_ROUNDS l ON l.u = d.u GROUP BY l.lbl),
                  tm AS (SELECT
                      CAST(coalesce(ec, 0) AS DOUBLE) / m - (CAST(dc AS DOUBLE) / (2 * m)) * (CAST(dc AS DOUBLE) / (2 * m)) AS t
                    FROM dc LEFT JOIN ec ON dc.lbl = ec.lbl CROSS JOIN m),
                  qq AS (SELECT count(*) AS n_communities, ${T.sqlXsum("t")} AS q
                         FROM tm)
                SELECT n_communities, m AS n_edges, round(q, 6) AS modularity
-               FROM qq CROSS JOIN m"""
-      }),
+               FROM qq CROSS JOIN m""")),
 
     QueryDef(
       "graph_louvain_move",
@@ -3776,9 +3727,7 @@ object Cluster {
       // round 1). Shapes: O(E) vertex-keyed joins, per-vertex bounded
       // window, community-bounded aggregates — the graph_modularity wire.
       (s, dir) => {
-        val e = T.freeze(epsPairs(s, dir, HORIZON)) // (a < b)
-        val nbr = T.freeze(e.select(col("a").as("u"), col("b").as("v"))
-          .unionAll(e.select(col("b").as("u"), col("a").as("v"))))
+        val (e, nbr) = horizonGraph(s, dir) // e: (a < b)
         val m = e.agg(count(lit(1)).as("m"))
         val deg = nbr.groupBy("u").agg(count(lit(1)).as("deg"))
         val win = Window.partitionBy("u").orderBy(col("kv").asc, col("v").asc)
@@ -3808,15 +3757,7 @@ object Cluster {
             "round(q, 6) AS modularity", "round(q0, 6) AS q_singleton",
             "round(q - q0, 6) AS gain")
       },
-      Some(s"""WITH pts AS (SELECT vec_id AS id,
-                   CAST(embedding[1] AS DOUBLE) AS x,
-                   CAST(embedding[2] AS DOUBLE) AS y FROM embeddings),
-                 ep AS (SELECT p.id AS a, q.id AS b FROM pts p JOIN pts q
-                   ON p.id < q.id
-                  AND (p.x - q.x) * (p.x - q.x) + (p.y - q.y) * (p.y - q.y)
-                      <= ${HORIZON * HORIZON}),
-                 nbr AS (SELECT a AS u, b AS v FROM ep
-                         UNION ALL SELECT b, a FROM ep),
+      Some(s"""WITH $sqlHorizonGraph,
                  m AS (SELECT count(*) AS m FROM ep),
                  deg AS (SELECT u, count(*) AS deg FROM nbr GROUP BY u),
                  pick AS (SELECT u, v, kv FROM (
@@ -4092,46 +4033,16 @@ object Cluster {
         .where(col("u") < 20)
         .selectExpr("u AS id", "round(x, 6) AS embed")
         .orderBy("id"),
-      Some {
-        def round(k: Int): String = {
-          val prev = if (k == 1) "x0" else s"x${k - 1}"
-          s"""p$k AS (SELECT nbr.u, ${T.sqlXsum("x.x")} AS sx
-                FROM nbr JOIN $prev x ON x.u = nbr.v GROUP BY nbr.u),
-              d$k AS (SELECT p.u, sx / deg AS x
-                FROM p$k p JOIN deg ON deg.u = p.u),
-              m$k AS (SELECT ${T.sqlXsum("x")} / count(*) AS mu FROM d$k),
-              c$k AS (SELECT u, x - mu AS xc FROM d$k, m$k),
-              n$k AS (SELECT sqrt(${T.sqlXsum("xc * xc")}) AS nrm FROM c$k),
-              x$k AS (SELECT u, xc / nrm AS x FROM c$k, n$k)"""
-        }
-        s"""WITH pts AS (SELECT vec_id AS id,
-                   CAST(embedding[1] AS DOUBLE) AS x,
-                   CAST(embedding[2] AS DOUBLE) AS y FROM embeddings),
-                 ep AS (SELECT p.id AS a, q.id AS b FROM pts p JOIN pts q
-                   ON p.id < q.id
-                  AND (p.x - q.x) * (p.x - q.x) + (p.y - q.y) * (p.y - q.y)
-                      <= ${HORIZON * HORIZON}),
-                 nbr AS (SELECT a AS u, b AS v FROM ep
-                         UNION ALL SELECT b, a FROM ep),
-                 deg AS (SELECT u, count(*) AS deg FROM nbr GROUP BY u),
-                 x0 AS (SELECT u,
-                     CAST((u * 48271 + 16807) % ${T.HASH_P} % 1000 AS DOUBLE) / 1e3 AS x
-                   FROM deg),
-                 ${round(1)},
-                 ${round(2)},
-                 ${round(3)},
-                 ${round(4)},
-                 ${round(5)}
+      Some(s"""WITH $sqlPic
                SELECT u AS id, round(x, 6) AS embed
-               FROM x5 WHERE u < 20 ORDER BY u"""
-      }),
+               FROM x$PIC_ROUNDS WHERE u < 20 ORDER BY u""")),
 
     QueryDef(
       "ml_spectral_cluster",
       // Spectral CLUSTERING — completes ml_spectral_embed the way
       // sklearn.cluster.SpectralClustering completes spectral_embedding:
       // k-means (k = 2) on the PIC pseudo-eigenvector. The embedding loop
-      // is identical (5 frozen power rounds on the eps graph); the 1-D
+      // is identical ([[picEmbed]]'s 5 power rounds); the 1-D
       // Lloyd tail is 2 unrolled rounds with DETERMINISTIC extreme-point
       // init (c1 = min x, c2 = max x — no RNG, both clusters provably
       // non-empty), centroids carried as broadcast one-row frames, means
@@ -4155,40 +4066,11 @@ object Cluster {
             round(T.xsum(col("x")) / count(lit(1)), 6).as("centroid"))
           .orderBy("cl")
       },
-      Some {
-        def round(k: Int): String = {
-          val prev = if (k == 1) "x0" else s"x${k - 1}"
-          s"""p$k AS (SELECT nbr.u, ${T.sqlXsum("x.x")} AS sx
-                FROM nbr JOIN $prev x ON x.u = nbr.v GROUP BY nbr.u),
-              d$k AS (SELECT p.u, sx / deg AS x
-                FROM p$k p JOIN deg ON deg.u = p.u),
-              m$k AS (SELECT ${T.sqlXsum("x")} / count(*) AS mu FROM d$k),
-              c$k AS (SELECT u, x - mu AS xc FROM d$k, m$k),
-              n$k AS (SELECT sqrt(${T.sqlXsum("xc * xc")}) AS nrm FROM c$k),
-              x$k AS MATERIALIZED (SELECT u, xc / nrm AS x FROM c$k, n$k)"""
-        }
-        s"""WITH pts AS (SELECT vec_id AS id,
-                   CAST(embedding[1] AS DOUBLE) AS x,
-                   CAST(embedding[2] AS DOUBLE) AS y FROM embeddings),
-                 ep AS MATERIALIZED (SELECT p.id AS a, q.id AS b FROM pts p JOIN pts q
-                   ON p.id < q.id
-                  AND (p.x - q.x) * (p.x - q.x) + (p.y - q.y) * (p.y - q.y)
-                      <= ${HORIZON * HORIZON}),
-                 nbr AS (SELECT a AS u, b AS v FROM ep
-                         UNION ALL SELECT b, a FROM ep),
-                 deg AS (SELECT u, count(*) AS deg FROM nbr GROUP BY u),
-                 x0 AS (SELECT u,
-                     CAST((u * 48271 + 16807) % ${T.HASH_P} % 1000 AS DOUBLE) / 1e3 AS x
-                   FROM deg),
-                 ${round(1)},
-                 ${round(2)},
-                 ${round(3)},
-                 ${round(4)},
-                 ${round(5)},
-                 cs0 AS (SELECT min(x) AS c1, max(x) AS c2 FROM x5),
+      Some(s"""WITH $sqlPic,
+                 cs0 AS (SELECT min(x) AS c1, max(x) AS c2 FROM x$PIC_ROUNDS),
                  a1 AS MATERIALIZED (SELECT u, x,
                      CASE WHEN abs(x - c1) <= abs(x - c2) THEN 0 ELSE 1 END AS cl
-                   FROM x5, cs0),
+                   FROM x$PIC_ROUNDS, cs0),
                  cs1 AS (SELECT
                      ${T.sqlXsum("CASE WHEN cl = 0 THEN x ELSE 0e0 END")} /
                        sum(CASE WHEN cl = 0 THEN 1 ELSE 0 END) AS c1,
@@ -4197,11 +4079,10 @@ object Cluster {
                    FROM a1),
                  a2 AS (SELECT u, x,
                      CASE WHEN abs(x - c1) <= abs(x - c2) THEN 0 ELSE 1 END AS cl
-                   FROM x5, cs1)
+                   FROM x$PIC_ROUNDS, cs1)
                SELECT cl, count(*) AS n,
                  round(${T.sqlXsum("x")} / count(*), 6) AS centroid
-               FROM a2 GROUP BY cl ORDER BY cl"""
-      }),
+               FROM a2 GROUP BY cl ORDER BY cl""")),
 
     QueryDef(
       "ml_gmm_predict",

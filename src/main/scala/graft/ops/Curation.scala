@@ -35,6 +35,8 @@ object Curation {
   /** BFS seed rule: vertices with id ≡ 0 (mod 10) — a deterministic
     * ~10% multi-source seed set, shared with the SQL text. */
   private val BFS_SEED_MOD = 10
+  /** Hops of the truncated BFS rounds (graph_bfs, graph_harmonic_centrality). */
+  private val BFS_HOPS = 3
 
   // ---- shared per-(cluster, dimension) moment wire ------------------------
 
@@ -597,8 +599,7 @@ object Curation {
       // templates. The distributed shape: the label table is (v, dist);
       // one round = frontier semi-join against the symmetric edge list +
       // a left join back onto labels (both shuffles on vertex keys,
-      // AQE-friendly); each round's label table is frozen so the plan
-      // stays flat (the pagerank discipline). Unrolled-fixed rounds keep
+      // AQE-friendly), one Twin.rounds round. Unrolled-fixed rounds keep
       // the oracle expressible; the at-scale form iterates to frontier
       // exhaustion with the same per-round body. Output: the hop-distance
       // histogram (dist −1 = unreached within 3 hops).
@@ -608,39 +609,33 @@ object Curation {
           .select(col("doc_a").as("src"), col("doc_b").as("dst"))
           .unionAll(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
         val verts = edges.select(col("src").as("v")).distinct()
-        var lab = T.freeze(verts.select(col("v"),
+        val init = T.freeze(verts.select(col("v"),
           when(col("v") % BFS_SEED_MOD === 0, lit(0))
             .otherwise(lit(null).cast("int")).as("dist")))
-        for (k <- 1 to 3) {
+        Twin.rounds(init, BFS_HOPS) { (lab, k) =>
           val frontier = lab.where(col("dist") === k - 1).select(col("v").as("src"))
           val nxt = edges.join(frontier, "src")
             .select(col("dst").as("v")).distinct()
             .withColumn("nd", lit(k))
-          lab = T.freeze(lab.join(nxt, Seq("v"), "left")
-            .select(col("v"), coalesce(col("dist"), col("nd")).as("dist")))
-        }
-        lab.groupBy(coalesce(col("dist"), lit(-1)).as("dist"))
+          lab.join(nxt, Seq("v"), "left")
+            .select(col("v"), coalesce(col("dist"), col("nd")).as("dist"))
+        }.groupBy(coalesce(col("dist"), lit(-1)).as("dist"))
           .agg(count(lit(1)).as("n_vertices"))
           .orderBy("dist")
       },
-      Some {
-        def round(k: Int): String =
-          s"""f$k AS (SELECT DISTINCT e.dst AS v, $k AS nd
-                FROM ed e JOIN l${k - 1} l ON l.v = e.src AND l.dist = ${k - 1}),
-              l$k AS (SELECT l.v, COALESCE(l.dist, f$k.nd) AS dist
-                FROM l${k - 1} l LEFT JOIN f$k ON f$k.v = l.v)"""
-        s"""WITH ${TextSim.sqlMinhashCtes},
+      Some(s"""WITH ${TextSim.sqlMinhashCtes},
                  ed AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
                         UNION ALL SELECT doc_b, doc_a FROM pairs),
                  v0 AS (SELECT DISTINCT src AS v FROM ed),
                  l0 AS (SELECT v, CASE WHEN v % $BFS_SEED_MOD = 0 THEN 0 END AS dist
                         FROM v0),
-                 ${round(1)},
-                 ${round(2)},
-                 ${round(3)}
+                 ${Twin.sqlRounds(BFS_HOPS)(k =>
+                   s"""f$k AS (SELECT DISTINCT e.dst AS v, $k AS nd
+                   FROM ed e JOIN l${k - 1} l ON l.v = e.src AND l.dist = ${k - 1}),
+                 l$k AS (SELECT l.v, COALESCE(l.dist, f$k.nd) AS dist
+                   FROM l${k - 1} l LEFT JOIN f$k ON f$k.v = l.v)""")}
                SELECT COALESCE(dist, -1) AS dist, count(*) AS n_vertices
-               FROM l3 GROUP BY 1 ORDER BY 1"""
-      }),
+               FROM l$BFS_HOPS GROUP BY 1 ORDER BY 1""")),
 
     QueryDef(
       "graph_harmonic_centrality",
@@ -654,8 +649,8 @@ object Curation {
       // dist) label table — only reached pairs exist, so the state is
       // Σ ball sizes, not |V|×seeds; one round = frontier join against
       // the symmetric edge list + anti-join against the labels (all
-      // vertex-keyed shuffles), frozen per round. Output: per probe the
-      // ball profile n1/n2/n3 and the truncated harmonic sum.
+      // vertex-keyed shuffles), one Twin.rounds round. Output: per probe
+      // the ball profile n1/n2/n3 and the truncated harmonic sum.
       (s, dir) => {
         val pairs = T.freeze(TextSim.minhashPairs(s, dir))
         val edges = pairs
@@ -664,18 +659,17 @@ object Curation {
         val seeds = edges.select(col("src").as("v")).distinct()
           .where(col("v") % BFS_SEED_MOD === 0)
           .orderBy("v").limit(3)
-        var lab = T.freeze(seeds
+        val init = T.freeze(seeds
           .select(col("v"), col("v").as("seed"), lit(0).as("dist")))
-        for (k <- 1 to 3) {
+        Twin.rounds(init, BFS_HOPS) { (lab, k) =>
           val frontier = lab.where(col("dist") === k - 1)
             .select(col("v").as("src"), col("seed"))
           val nxt = edges.join(frontier, "src")
             .select(col("dst").as("v"), col("seed")).distinct()
             .join(lab.select("v", "seed"), Seq("v", "seed"), "left_anti")
             .withColumn("dist", lit(k))
-          lab = T.freeze(lab.unionAll(nxt))
-        }
-        lab.where(col("dist") > 0)
+          lab.unionAll(nxt)
+        }.where(col("dist") > 0)
           .groupBy("seed")
           .agg(
             sum(when(col("dist") === 1, 1L).otherwise(0L)).as("n1"),
@@ -685,23 +679,19 @@ object Curation {
             "round(n1 + n2 / 2e0 + n3 / 3e0, 6) AS harmonic")
           .orderBy("seed")
       },
-      Some {
-        def round(k: Int): String =
-          s"""f$k AS (SELECT DISTINCT e.dst AS v, l.seed
-                FROM ed e JOIN l${k - 1} l ON l.v = e.src AND l.dist = ${k - 1}),
-              n$k AS (SELECT f.v, f.seed, $k AS dist FROM f$k f
-                LEFT JOIN l${k - 1} l ON l.v = f.v AND l.seed = f.seed
-                WHERE l.v IS NULL),
-              l$k AS (SELECT * FROM l${k - 1} UNION ALL SELECT * FROM n$k)"""
-        s"""WITH ${TextSim.sqlMinhashCtes},
+      Some(s"""WITH ${TextSim.sqlMinhashCtes},
                  ed AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
                         UNION ALL SELECT doc_b, doc_a FROM pairs),
                  seeds AS (SELECT DISTINCT src AS v FROM ed
                    WHERE src % $BFS_SEED_MOD = 0 ORDER BY v LIMIT 3),
                  l0 AS (SELECT v, v AS seed, 0 AS dist FROM seeds),
-                 ${round(1)},
-                 ${round(2)},
-                 ${round(3)}
+                 ${Twin.sqlRounds(BFS_HOPS)(k =>
+                   s"""f$k AS (SELECT DISTINCT e.dst AS v, l.seed
+                   FROM ed e JOIN l${k - 1} l ON l.v = e.src AND l.dist = ${k - 1}),
+                 n$k AS (SELECT f.v, f.seed, $k AS dist FROM f$k f
+                   LEFT JOIN l${k - 1} l ON l.v = f.v AND l.seed = f.seed
+                   WHERE l.v IS NULL),
+                 l$k AS (SELECT * FROM l${k - 1} UNION ALL SELECT * FROM n$k)""")}
                SELECT seed,
                  CAST(sum(CASE WHEN dist = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
                  CAST(sum(CASE WHEN dist = 2 THEN 1 ELSE 0 END) AS BIGINT) AS n2,
@@ -709,8 +699,7 @@ object Curation {
                  round(sum(CASE WHEN dist = 1 THEN 1 ELSE 0 END)
                    + sum(CASE WHEN dist = 2 THEN 1 ELSE 0 END) / 2e0
                    + sum(CASE WHEN dist = 3 THEN 1 ELSE 0 END) / 3e0, 6) AS harmonic
-               FROM l3 WHERE dist > 0 GROUP BY seed ORDER BY seed"""
-      }),
+               FROM l$BFS_HOPS WHERE dist > 0 GROUP BY seed ORDER BY seed""")),
 
     QueryDef(
       "text_bleu",

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{QueryDef, Tables => T}
+import graft.{QueryDef, Tables => T, Twin}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -274,6 +274,27 @@ object Dedup {
     T.memo("minhashLabels", s, dir) {
       minLabelComponents(TextSim.minhashPairs(s, dir))
     }
+
+  /** The PageRank family's shared texts: the round count, a vertex's
+    * per-edge inflow term and the two damping blends (uniform teleport,
+    * seed-set restart). */
+  private val PAGERANK_ROUNDS = 3
+  private val PAGERANK_INFLOW = "pr / outdeg"
+  private val PAGERANK_BLEND = "(1e0 - 0.85) / n + 0.85 * inflow"
+  private val RESTART_BLEND = "(1e0 - 0.85) * sv + 0.85 * coalesce(inflow, 0e0)"
+
+  /** One rank round's inflow: each vertex's rank spread over its
+    * out-edges and summed per target, as (v, inflow). */
+  private def rankInflow(edges: DataFrame, pr: DataFrame): DataFrame =
+    edges.join(pr.selectExpr("v AS src", "pr", "outdeg"), "src")
+      .groupBy(col("dst").as("v"))
+      .agg(T.xsum(expr(PAGERANK_INFLOW)).as("inflow"))
+
+  /** The oracle twin of [[rankInflow]] for round k, read from `p{k-1}`. */
+  private def sqlRankInflow(k: Int): String =
+    s"""c$k AS (SELECT e.dst AS v, ${T.sqlXsum(PAGERANK_INFLOW)} AS inflow
+                   FROM edges e JOIN p${k - 1} p ON p.v = e.src
+                   GROUP BY e.dst)"""
 
   val entries: Seq[QueryDef] = Seq(
 
@@ -628,54 +649,37 @@ object Dedup {
       // The distributed shape: rank lives as a (v, pr) TABLE; one
       // iteration = join ranks to the symmetric edge list, per-target sum
       // of pr/outdeg contributions, damping blend — two shuffles per
-      // round on vertex keys; the iterate is FROZEN per round (the LSA
-      // discipline) so the plan stays flat. No dangling mass: every
-      // vertex in the pair graph has degree ≥ 1 by construction. Sums
-      // ride the exact wire; 1/n and the damping blend are shared-text
-      // rationals. Output: top-10 (v, pr).
+      // round on vertex keys, one Twin.rounds round. No dangling mass:
+      // every vertex in the pair graph has degree ≥ 1 by construction.
+      // Sums ride the exact wire; 1/n and the damping blend are shared
+      // text. Output: top-10 (v, pr).
       (s, dir) => {
         val pairs = TextSim.minhashPairs(s, dir)
         val edges = T.freeze(pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
           .unionAll(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst"))))
         val deg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
         val nv = deg.agg(count(lit(1)).as("n"))
-        var pr = T.freeze(deg.crossJoin(broadcast(nv))
+        val init = T.freeze(deg.crossJoin(broadcast(nv))
           .selectExpr("src AS v", "1e0 / n AS pr", "outdeg", "n"))
-        for (_ <- 1 to 3) {
-          val contrib = edges.join(pr.selectExpr("v AS src", "pr", "outdeg"), "src")
-            .groupBy(col("dst").as("v"))
-            .agg(T.xsum(expr("pr / outdeg")).as("inflow"))
-          pr = T.freeze(pr.select(col("v"), col("outdeg"), col("n"))
-            .join(contrib, "v")
-            .selectExpr("v", "(1e0 - 0.85) / n + 0.85 * inflow AS pr",
-              "outdeg", "n"))
-        }
-        pr.orderBy(col("pr").desc, col("v")).limit(10)
+        Twin.rounds(init, PAGERANK_ROUNDS) { (pr, _) =>
+          pr.select(col("v"), col("outdeg"), col("n"))
+            .join(rankInflow(edges, pr), "v")
+            .selectExpr("v", s"$PAGERANK_BLEND AS pr", "outdeg", "n")
+        }.orderBy(col("pr").desc, col("v")).limit(10)
           .selectExpr("v", "round(pr, 8) AS pagerank")
       },
-      Some {
-        def round(k: Int): String = {
-          val prev = if (k == 1) "p0" else s"p${k - 1}"
-          s"""c$k AS (SELECT e.dst AS v, ${T.sqlXsum("p.pr / p.outdeg")} AS inflow
-                FROM edges e JOIN $prev p ON p.v = e.src
-                GROUP BY e.dst),
-              p$k AS (SELECT p.v, (1e0 - 0.85) / p.n + 0.85 * c$k.inflow AS pr,
-                  p.outdeg, p.n
-                FROM $prev p JOIN c$k ON c$k.v = p.v)"""
-        }
-        s"""WITH ${TextSim.sqlMinhashCtes},
+      Some(s"""WITH ${TextSim.sqlMinhashCtes},
                  edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
                            UNION ALL SELECT doc_b, doc_a FROM pairs),
                  deg AS (SELECT src, count(*) AS outdeg FROM edges GROUP BY src),
                  nv AS (SELECT count(*) AS n FROM deg),
                  p0 AS (SELECT src AS v, 1e0 / n AS pr, outdeg, n
                         FROM deg CROSS JOIN nv),
-                 ${round(1)},
-                 ${round(2)},
-                 ${round(3)}
+                 ${Twin.sqlRounds(PAGERANK_ROUNDS)(k => s"""${sqlRankInflow(k)},
+                 p$k AS (SELECT p.v, $PAGERANK_BLEND AS pr, p.outdeg, p.n
+                   FROM p${k - 1} p JOIN c$k ON c$k.v = p.v)""")}
                SELECT v, round(pr, 8) AS pagerank
-               FROM p3 ORDER BY pr DESC, v LIMIT 10"""
-      }),
+               FROM p$PAGERANK_ROUNDS ORDER BY pr DESC, v LIMIT 10""")),
 
     QueryDef(
       "graph_pagerank_personalized",
@@ -685,49 +689,34 @@ object Dedup {
       // ranking a curation run uses to expand a blocklist from a few
       // confirmed seeds (the random-walk-with-restart form of label
       // expansion). Same distributed shape as graph_pagerank — rank as a
-      // (v, pr) table, two vertex-keyed shuffles per frozen round — plus
-      // a LEFT join back to vertices each round because non-seed
-      // vertices with zero inflow must still hold their (1−d)·s(v) = 0
-      // floor. Output: top-10 non-seed vertices by personalized rank —
-      // the blocklist-expansion candidates.
+      // (v, pr) table, two vertex-keyed shuffles per round — plus a LEFT
+      // join back to vertices each round because non-seed vertices with
+      // zero inflow must still hold their (1−d)·s(v) = 0 floor. Output:
+      // top-10 non-seed vertices by personalized rank — the
+      // blocklist-expansion candidates.
       (s, dir) => {
         val pairs = TextSim.minhashPairs(s, dir)
-        // pin, not freeze: the edge table is referenced by ALL THREE
-        // rounds' joins plus the degree pass — bare freeze re-derives the
+        // pinned: the edge table is referenced by all three rounds' joins
+        // plus the degree pass — bare freeze re-derives the
         // shingle→signature→banding chain per reference (measured 7.1 s
         // vs graph_pagerank's 2.4 s); localCheckpoint computes it once.
         val edges = T.pin(pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
           .unionAll(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst"))))
         val deg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
         val ns = deg.agg(sum(when(col("src") % 10 === 0, 1L).otherwise(0L)).as("n_seed"))
-        var pr = T.freeze(deg.crossJoin(broadcast(ns))
+        val init = T.freeze(deg.crossJoin(broadcast(ns))
           .selectExpr("src AS v", "outdeg", "n_seed",
             "CASE WHEN src % 10 = 0 THEN 1e0 / n_seed ELSE 0e0 END AS sv")
           .withColumn("pr", col("sv")))
-        for (_ <- 1 to 3) {
-          val contrib = edges.join(pr.selectExpr("v AS src", "pr", "outdeg"), "src")
-            .groupBy(col("dst").as("v"))
-            .agg(T.xsum(expr("pr / outdeg")).as("inflow"))
-          pr = T.freeze(pr.select(col("v"), col("outdeg"), col("n_seed"), col("sv"))
-            .join(contrib, Seq("v"), "left")
-            .selectExpr("v", "outdeg", "n_seed", "sv",
-              "(1e0 - 0.85) * sv + 0.85 * coalesce(inflow, 0e0) AS pr"))
-        }
-        pr.where(col("v") % 10 =!= 0)
+        Twin.rounds(init, PAGERANK_ROUNDS) { (pr, _) =>
+          pr.select(col("v"), col("outdeg"), col("n_seed"), col("sv"))
+            .join(rankInflow(edges, pr), Seq("v"), "left")
+            .selectExpr("v", "outdeg", "n_seed", "sv", s"$RESTART_BLEND AS pr")
+        }.where(col("v") % 10 =!= 0)
           .orderBy(col("pr").desc, col("v")).limit(10)
           .selectExpr("v", "round(pr, 8) AS ppr")
       },
-      Some {
-        def round(k: Int): String = {
-          val prev = if (k == 1) "p0" else s"p${k - 1}"
-          s"""c$k AS (SELECT e.dst AS v, ${T.sqlXsum("p.pr / p.outdeg")} AS inflow
-                FROM edges e JOIN $prev p ON p.v = e.src
-                GROUP BY e.dst),
-              p$k AS (SELECT p.v, p.outdeg, p.n_seed, p.sv,
-                  (1e0 - 0.85) * p.sv + 0.85 * coalesce(c$k.inflow, 0e0) AS pr
-                FROM $prev p LEFT JOIN c$k ON c$k.v = p.v)"""
-        }
-        s"""WITH ${TextSim.sqlMinhashCtes},
+      Some(s"""WITH ${TextSim.sqlMinhashCtes},
                  edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
                            UNION ALL SELECT doc_b, doc_a FROM pairs),
                  deg AS (SELECT src, count(*) AS outdeg FROM edges GROUP BY src),
@@ -737,12 +726,11 @@ object Dedup {
                      CASE WHEN src % 10 = 0 THEN 1e0 / n_seed ELSE 0e0 END AS sv,
                      CASE WHEN src % 10 = 0 THEN 1e0 / n_seed ELSE 0e0 END AS pr
                    FROM deg CROSS JOIN ns),
-                 ${round(1)},
-                 ${round(2)},
-                 ${round(3)}
+                 ${Twin.sqlRounds(PAGERANK_ROUNDS)(k => s"""${sqlRankInflow(k)},
+                 p$k AS (SELECT p.v, p.outdeg, p.n_seed, p.sv, $RESTART_BLEND AS pr
+                   FROM p${k - 1} p LEFT JOIN c$k ON c$k.v = p.v)""")}
                SELECT v, round(pr, 8) AS ppr
-               FROM p3 WHERE v % 10 <> 0 ORDER BY pr DESC, v LIMIT 10"""
-      }),
+               FROM p$PAGERANK_ROUNDS WHERE v % 10 <> 0 ORDER BY pr DESC, v LIMIT 10""")),
 
     QueryDef(
       "dedup_embed_cosine",

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{QueryDef, Tables => T}
+import graft.{QueryDef, Tables => T, Twin}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -47,6 +47,10 @@ object TextSim {
   private[ops] val sqlDocTerms =
     """SELECT doc_id, unnest(string_split(text, ' ')) AS term
        FROM documents"""
+
+  /** Power-iteration rounds of text_lsa_power; update rounds of ml_nmf. */
+  private val LSA_ROUNDS = 3
+  private val NMF_ROUNDS = 2
 
   /** BM25-scored (q_id, doc_id, score) pairs over the trigram inverted
     * index — shared by text_bm25_rank (pure lexical ranking) and
@@ -956,11 +960,12 @@ object TextSim {
       // law makes the vocabulary unbroadcastable at 100 TB — and each
       // power-iteration step A'(A·v) is two sparse-matrix products
       // expressed as equi-join + groupBy (u over docs, v' over terms); no
-      // dense vector, no driver-held state, no gram matrix. A is built
-      // once and FROZEN (Tables.freeze) so the 3 iterations' 6 references
-      // reuse its shuffle files instead of replaying the tf-idf join.
-      // All-ones init; A ≥ 0 keeps the iterate nonnegative (Perron), so
-      // the sign is stable and deterministic. Sums ride the exact decimal
+      // dense vector, no driver-held vector, no gram matrix. A is built
+      // once and pinned, so the 3 iterations' 6 references read it
+      // instead of replaying the tf-idf join; each iteration is one
+      // pinned Twin.rounds round whose norm is collected. All-ones init;
+      // A ≥ 0 keeps the iterate nonnegative (Perron), so the sign is
+      // stable and deterministic. Sums ride the exact decimal
       // wire over REAL-collapsed tf-idf weights. Output: the top-10 topic
       // loadings.
       (s, dir) => {
@@ -968,30 +973,20 @@ object TextSim {
         val ntot = T.documents(s, dir).agg(count(lit(1)).as("n_total"))
         val dfx = dt.groupBy("term").agg(countDistinct(col("doc_id")).as("df"))
         val tf = dt.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-        // pin, not freeze (r13): the 3 iterations reference A 6× — pin
-        // computes the tf-idf join once; freeze replayed parts of it per
-        // reference under the AQE-off harness
         val a = T.pin(tf.join(dfx, "term").crossJoin(broadcast(ntot))
           .selectExpr("doc_id", "term",
             "CAST(CAST(tf * ln(CAST(n_total AS DOUBLE) / df) AS FLOAT) AS DOUBLE) AS w"))
-        var v = a.select(col("term")).distinct().withColumn("v", lit(1.0))
-        for (_ <- 1 to 3) {
+        val init = a.select(col("term")).distinct().withColumn("v", lit(1.0))
+        val l2 = (vp: DataFrame) => {
+          val nrm = vp.agg(sqrt(T.xsum(col("vp") * col("vp")))).collect()(0).getDouble(0)
+          vp.select(col("term"), (col("vp") / lit(nrm)).as("v"))
+        }
+        Twin.rounds(init, LSA_ROUNDS, l2) { (v, _) =>
           val u = a.join(v, "term")
             .groupBy("doc_id").agg(T.xsum(col("w") * col("v")).as("u"))
-          // pin: vp is referenced twice (norm + division) and feeds the
-          // next iteration — without the checkpoint the logical plan
-          // doubles per iteration (measured 64 exchanges at k=3); pinned,
-          // each iteration adds a flat round. The norm is COLLECTED as a
-          // driver literal (r12 picEmbed discipline): as an in-plan
-          // broadcast one-row frame its BroadcastExchange re-executed the
-          // round's subtree under the AQE-off harness; bit-neutral — the
-          // same exact-wire value feeds the same division.
-          val vp = T.pin(a.join(u, "doc_id")
-            .groupBy("term").agg(T.xsum(col("w") * col("u")).as("vp")))
-          val nrm = vp.agg(sqrt(T.xsum(col("vp") * col("vp")))).collect()(0).getDouble(0)
-          v = vp.select(col("term"), (col("vp") / lit(nrm)).as("v"))
-        }
-        v.orderBy(col("v").desc, col("term")).limit(10)
+          a.join(u, "doc_id")
+            .groupBy("term").agg(T.xsum(col("w") * col("u")).as("vp"))
+        }.orderBy(col("v").desc, col("term")).limit(10)
           .select(col("term"), round(col("v"), 6).as("loading"))
       },
       Some(s"""WITH dt0 AS ($sqlDocTerms),
@@ -1003,16 +998,15 @@ object TextSim {
                      CAST(CAST(tf * ln(CAST(n_total AS DOUBLE) / df) AS REAL) AS DOUBLE) AS w
                    FROM tf JOIN dfx USING (term) CROSS JOIN ntot),
                  v0 AS (SELECT DISTINCT term, 1e0 AS v FROM a),
-                 ${(1 to 3).map { k =>
+                 ${Twin.sqlRounds(LSA_ROUNDS)(k =>
                    s"""u$k AS (SELECT doc_id, ${T.sqlXsum("w * v")} AS u
                         FROM a JOIN v${k - 1} USING (term) GROUP BY doc_id),
                  vp$k AS (SELECT term, ${T.sqlXsum("w * u")} AS vp
                         FROM a JOIN u$k USING (doc_id) GROUP BY term),
                  n$k AS (SELECT sqrt(${T.sqlXsum("vp * vp")}) AS nrm FROM vp$k),
-                 v$k AS (SELECT term, vp / nrm AS v FROM vp$k, n$k)"""
-                 }.mkString(",\n                 ")}
+                 v$k AS (SELECT term, vp / nrm AS v FROM vp$k, n$k)""")}
                SELECT term, round(v, 6) AS loading
-               FROM v3 ORDER BY v DESC, term LIMIT 10""")),
+               FROM v$LSA_ROUNDS ORDER BY v DESC, term LIMIT 10""")),
 
     QueryDef(
       "ml_nmf",
@@ -1060,7 +1054,7 @@ object TextSim {
           "CAST(1 + (r * 13) % 5 AS DOUBLE) AS h0",
           "CAST(1 + (r * 13 + 11) % 5 AS DOUBLE) AS h1")
         def D(x: Double) = java.lang.Double.toString(x)
-        for (_ <- 1 to 2) {
+        for (_ <- 1 to NMF_ROUNDS) {
           val ww = w.agg(T.xsum(col("w0") * col("w0")),
             T.xsum(col("w0") * col("w1")),
             T.xsum(col("w1") * col("w1"))).collect()(0)
@@ -1089,31 +1083,7 @@ object TextSim {
             "round(h0, 6) AS topic0", "round(h1, 6) AS topic1")
           .orderBy("r")
       },
-      Some {
-        def round(k: Int): String = {
-          val (pw, ph) = (s"w${k - 1}", s"h${k - 1}")
-          s"""ww$k AS (SELECT ${T.sqlXsum("w0 * w0")} AS s00,
-                  ${T.sqlXsum("w0 * w1")} AS s01,
-                  ${T.sqlXsum("w1 * w1")} AS s11 FROM $pw),
-              wv$k AS (SELECT r, ${T.sqlXsum("w0 * v")} AS wv0,
-                  ${T.sqlXsum("w1 * v")} AS wv1
-                FROM v JOIN $pw USING (doc_id) GROUP BY r),
-              h$k AS (SELECT h.r,
-                  h.h0 * wv0 / (s00 * h.h0 + s01 * h.h1 + 1e-9) AS h0,
-                  h.h1 * wv1 / (s01 * h.h0 + s11 * h.h1 + 1e-9) AS h1
-                FROM $ph h JOIN wv$k USING (r) CROSS JOIN ww$k),
-              hh$k AS (SELECT ${T.sqlXsum("h0 * h0")} AS t00,
-                  ${T.sqlXsum("h0 * h1")} AS t01,
-                  ${T.sqlXsum("h1 * h1")} AS t11 FROM h$k),
-              vh$k AS (SELECT doc_id, ${T.sqlXsum("v * h0")} AS vh0,
-                  ${T.sqlXsum("v * h1")} AS vh1
-                FROM v JOIN h$k USING (r) GROUP BY doc_id),
-              w$k AS (SELECT w.doc_id,
-                  w.w0 * vh0 / (w.w0 * t00 + w.w1 * t01 + 1e-9) AS w0,
-                  w.w1 * vh1 / (w.w0 * t01 + w.w1 * t11 + 1e-9) AS w1
-                FROM $pw w JOIN vh$k USING (doc_id) CROSS JOIN hh$k)"""
-        }
-        s"""WITH dt0 AS ($sqlDocTerms),
+      Some(s"""WITH dt0 AS ($sqlDocTerms),
                  dt AS (SELECT doc_id, term FROM dt0 WHERE term <> ''),
                  vt AS (SELECT term, row_number() OVER (ORDER BY cnt DESC, term) AS r
                    FROM (SELECT term, count(*) AS cnt FROM dt GROUP BY term
@@ -1128,11 +1098,31 @@ object TextSim {
                      CAST(1 + (r * 13) % 5 AS DOUBLE) AS h0,
                      CAST(1 + (r * 13 + 11) % 5 AS DOUBLE) AS h1
                    FROM vt),
-                 ${round(1)},
-                 ${round(2)}
+                 ${Twin.sqlRounds(NMF_ROUNDS) { k =>
+                   val (pw, ph) = (s"w${k - 1}", s"h${k - 1}")
+                   s"""ww$k AS (SELECT ${T.sqlXsum("w0 * w0")} AS s00,
+                     ${T.sqlXsum("w0 * w1")} AS s01,
+                     ${T.sqlXsum("w1 * w1")} AS s11 FROM $pw),
+                 wv$k AS (SELECT r, ${T.sqlXsum("w0 * v")} AS wv0,
+                     ${T.sqlXsum("w1 * v")} AS wv1
+                   FROM v JOIN $pw USING (doc_id) GROUP BY r),
+                 h$k AS (SELECT h.r,
+                     h.h0 * wv0 / (s00 * h.h0 + s01 * h.h1 + 1e-9) AS h0,
+                     h.h1 * wv1 / (s01 * h.h0 + s11 * h.h1 + 1e-9) AS h1
+                   FROM $ph h JOIN wv$k USING (r) CROSS JOIN ww$k),
+                 hh$k AS (SELECT ${T.sqlXsum("h0 * h0")} AS t00,
+                     ${T.sqlXsum("h0 * h1")} AS t01,
+                     ${T.sqlXsum("h1 * h1")} AS t11 FROM h$k),
+                 vh$k AS (SELECT doc_id, ${T.sqlXsum("v * h0")} AS vh0,
+                     ${T.sqlXsum("v * h1")} AS vh1
+                   FROM v JOIN h$k USING (r) GROUP BY doc_id),
+                 w$k AS (SELECT w.doc_id,
+                     w.w0 * vh0 / (w.w0 * t00 + w.w1 * t01 + 1e-9) AS w0,
+                     w.w1 * vh1 / (w.w0 * t01 + w.w1 * t11 + 1e-9) AS w1
+                   FROM $pw w JOIN vh$k USING (doc_id) CROSS JOIN hh$k)"""
+                 }}
                SELECT r, term, round(h0, 6) AS topic0, round(h1, 6) AS topic1
-               FROM h2 JOIN vt USING (r) ORDER BY r"""
-      }),
+               FROM h$NMF_ROUNDS JOIN vt USING (r) ORDER BY r""")),
 
     QueryDef(
       "dedup_minhash_accuracy",

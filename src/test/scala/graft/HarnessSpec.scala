@@ -12,7 +12,8 @@ import scala.jdk.CollectionConverters._
   * shared-text step lists, and [[Tables]] as the one reader of fixture
   * paths, the owner of the one session memo and the one place an exact
   * sum is spelled, `Vec.nearest` as the one nearest-centroid ranking,
-  * and `Vec.knn` as the one query × corpus kNN ranking. */
+  * `Vec.knn` as the one query × corpus kNN ranking, and `Twin.rounds` /
+  * `Twin.sqlRounds` as the one fixed-round loop and unroll. */
 class HarnessSpec extends SparkSpec {
 
   test("conf: Bench's settings, key by key") {
@@ -160,6 +161,23 @@ class HarnessSpec extends SparkSpec {
     // the EVAL_N sample is drawn in one place per engine
     assert(occurrences("lit(84589L)") === Map("graft/ops/ML.scala" -> 1))
     assert(occurrences("(84589 * vec_id + 12345)") === Map("graft/ops/ML.scala" -> 1))
+  }
+
+  test("structure: fixed-round loops run on Twin.rounds, their oracles on Twin.sqlRounds") {
+    val inScope = Set("graft/ops/Dedup.scala", "graft/ops/Curation.scala",
+      "graft/ops/Cluster.scala", "graft/ops/TextSim.scala")
+    assert(inScope subsetOf mainSources.keySet)
+    // a hand-written round generator or a hand-listed unroll
+    for (needle <- Seq("def round(", "def lpRound(", "def peel(", "roundCtes(", "${round(1)}"))
+      assert((occurrences(needle).keySet intersect inScope) === Set.empty[String],
+        s"$needle is back")
+    // the HORIZON eps graph is built once per engine
+    assert(occurrences("T.freeze(epsPairs(s, dir, HORIZON))") === Map("graft/ops/Cluster.scala" -> 1))
+    val horizonEp = ("q\\.id AS b FROM pts p JOIN pts q\\s+ON p\\.id < q\\.id\\s+AND " +
+      "\\(p\\.x - q\\.x\\) \\* \\(p\\.x - q\\.x\\) \\+ \\(p\\.y - q\\.y\\) \\* \\(p\\.y - q\\.y\\)" +
+      "\\s+<= \\$\\{HORIZON \\* HORIZON\\}").r
+    assert(mainSources.map { case (f, code) => f -> horizonEp.findAllIn(code).size }
+      .filter(_._2 > 0) === Map("graft/ops/Cluster.scala" -> 1))
   }
 
   test("structure: the mains read exactly four SPARK_GRAFT_ knobs") {

@@ -165,6 +165,16 @@ class PlanSpec extends SparkSpec {
       s"table read, denseIds construction or explain launched ${jobs.size} job(s)")
   }
 
+  test("the recall sweeps count their queries in the plan, not while they are built") {
+    // a build may run a memo's pin or a fit's collect, never an action
+    // whose only use is to print its result into the query as a literal
+    for (q <- Seq("ml_nndescent_converge", "ml_graph_search_hops_sweep")) {
+      val actions = actionsLaunchedBy { SparkEntry.queries(q)(spark, sf) }
+      assert(!actions.exists(_.startsWith("count at ")),
+        s"$q launched a count while it was built: ${actions.mkString(", ")}")
+    }
+  }
+
   test("no persisted blocks outlive a query (VERDICT r3 #3/#4)") {
     // queries that use caches internally must release them before
     // returning; snapshot-diff guards against leaks without racing other

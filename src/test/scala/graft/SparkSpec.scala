@@ -22,32 +22,57 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     * event of `body` has already been delivered — waiting for the barrier
     * SPECIFICALLY (not just any first event) is what makes a zero count
     * sound. */
-  def jobsLaunchedBy(body: => Unit): Seq[Int] = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+  def jobsLaunchedBy(body: => Unit): Seq[Int] = jobStartsOf(body).map(_._1.jobId)
+
+  /** What launched each job `body` launches, under the same barrier as
+    * [[jobsLaunchedBy]]: the call site of the job's SQL execution
+    * (`count at Cluster.scala:1194`), or, for a job outside one (a pin's
+    * checkpoint), its stage names. Spark 4 runs a query's jobs on a
+    * pool thread, so their stage names carry the pool's call site, not
+    * the action's; the execution start event carries the action's. */
+  def actionsLaunchedBy(body: => Unit): Seq[String] = jobStartsOf(body).map {
+    case (_, Some(callSite)) => callSite
+    case (j, None) => j.stageInfos.map(_.name).mkString("; ")
+  }
+
+  private def jobStartsOf(body: => Unit)
+      : Seq[(org.apache.spark.scheduler.SparkListenerJobStart, Option[String])] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
     import scala.jdk.CollectionConverters._
     val watchGroup = s"jobs-probe-${System.nanoTime()}"
     val barrierGroup = s"$watchGroup-barrier"
-    val watched = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val watched = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]()
+    val executions = new java.util.concurrent.ConcurrentHashMap[String, String]()
     val barrierSeen = new java.util.concurrent.atomic.AtomicBoolean(false)
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = {
         val g = if (j.properties == null) null
                 else j.properties.getProperty("spark.jobGroup.id")
-        if (watchGroup == g) watched.add(j.jobId)
+        if (watchGroup == g) watched.add(j)
         if (barrierGroup == g) barrierSeen.set(true)
+      }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart => executions.put(x.executionId.toString, x.description)
+        case _ =>
       }
     }
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
     try {
-      sc.setJobGroup(watchGroup, "job-count probe")
+      // the group id only: a job description would replace every SQL
+      // execution's call site in its start event
+      sc.setLocalProperty("spark.jobGroup.id", watchGroup)
       body
-      sc.setJobGroup(barrierGroup, "job-count probe barrier")
+      sc.setLocalProperty("spark.jobGroup.id", barrierGroup)
       sc.parallelize(Seq(1)).count()
       var waited = 0
       while (!barrierSeen.get() && waited < 100) { Thread.sleep(100); waited += 1 }
       assert(barrierSeen.get(), "barrier job event never delivered")
-      watched.asScala.toSeq
+      watched.asScala.toSeq.map { j =>
+        val exec = Option(j.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+        j -> exec.flatMap(id => Option(executions.get(id)))
+      }
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)

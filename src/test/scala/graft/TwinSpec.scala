@@ -9,7 +9,10 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
   * elimination is bit-equal to the same op sequence in Scala, the CTE
   * renderer chains each step from the previous one, and the driver-held
   * fit loop reproduces the hand-written 2×2 logistic Newton loop it
-  * replaced bit for bit — including what happens on a singular Hessian. */
+  * replaced bit for bit — including what happens on a singular Hessian.
+  * The round loop equals the hand-written loop, its pinned form returns
+  * holding one round's pin, and the oracle unroll names round k from
+  * round k-1. */
 class TwinSpec extends SparkSpec {
 
   private def bits(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)
@@ -176,5 +179,59 @@ class TwinSpec extends SparkSpec {
     val e = intercept[Exception](Twin.fit(d, newton.copy(iters = 1)))
     val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
     assert(msgs.exists(m => m != null && m.contains("DIVIDE_BY_ZERO")), e.toString)
+  }
+
+  /** A synthetic round over (k, x): a shuffle (the self-join on k) and a
+    * per-row update that depends on the round. */
+  private def synthStep(prev: DataFrame, r: Int): DataFrame =
+    prev.join(prev.select(col("k"), (col("x") * 2).as("x2")), "k")
+      .selectExpr("k", s"x + x2 / 3e0 + $r AS x")
+
+  private def synthInit: DataFrame =
+    spark.range(0, 40).selectExpr("id AS k", "CAST(id % 7 AS DOUBLE) AS x")
+
+  private def sorted(df: DataFrame): Seq[(Long, Long)] =
+    df.collect().map(r => (r.getLong(0), bits(r.getDouble(1)))).toSeq.sorted
+
+  test("rounds: k frozen rounds equal the hand-written loop row for row") {
+    var hand = synthInit
+    for (r <- 1 to 4) hand = T.freeze(synthStep(hand, r))
+    val twin = Twin.rounds(synthInit, 4)(synthStep)
+    assert(sorted(twin) === sorted(hand))
+    assert(sorted(Twin.rounds(synthInit, 0)(synthStep)) === sorted(synthInit))
+  }
+
+  /** Divides the round's product by its max, collected on the driver. */
+  private def byMax(raw: DataFrame): DataFrame = {
+    val m = raw.agg(max(col("x"))).collect()(0).getDouble(0)
+    raw.select(col("k"), (col("x") / lit(m)).as("x"))
+  }
+
+  test("rounds: the pinned form returns holding one round's pin, and its result collects") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val twin = Twin.rounds(synthInit, 4, byMax)(synthStep)
+    val added = sc.getPersistentRDDs.keySet -- before
+    assert(added.size === 1, s"pins held after 4 rounds: $added")
+    var hand = synthInit
+    for (r <- 1 to 4) hand = byMax(T.pin(synthStep(hand, r)))
+    assert(sorted(twin) === sorted(hand))
+    assert(twin.count() === 40)
+  }
+
+  test("sqlRounds: round k reads k-1, rounds joined in order") {
+    assert(Twin.sqlRounds(3)(k => s"s$k AS (SELECT x + 1 AS x FROM s${k - 1})") ===
+      "s1 AS (SELECT x + 1 AS x FROM s0),\n  s2 AS (SELECT x + 1 AS x FROM s1),\n  " +
+        "s3 AS (SELECT x + 1 AS x FROM s2)")
+    assert(Twin.sqlRounds(0)(k => s"s$k") === "")
+  }
+
+  test("ml_spectral_embed holds at most nbr, deg and its last round's pin") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val rows = SparkEntry.queries("ml_spectral_embed")(spark, sf).collect()
+    val added = sc.getPersistentRDDs.keySet -- before
+    assert(rows.nonEmpty)
+    assert(added.size <= 3, s"ml_spectral_embed left ${added.size} persisted RDDs: $added")
   }
 }
