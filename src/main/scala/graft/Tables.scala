@@ -305,6 +305,11 @@ object Tables {
   //    ARITHMETIC_OVERFLOW in every shape, as a grouped sum does;
   //  - NaN and ±∞ cast to null and are skipped, as by the cast-and-sum.
   // There is no row-count bound: the buffer is a checked 128-bit integer.
+  // A weighted sum (`xsum(c, n)`, `sumE12(c, n)`: a cell histogram's rows,
+  // each standing for n rows) adds each row's addend times n as one
+  // checked product. The product must itself stay inside the sum's
+  // ±10^(P−s) range, or the sum raises ARITHMETIC_OVERFLOW, as the n-row
+  // partial sum it stands for does; a null weight skips the row.
 
   val money: DecimalType = DecimalType(18, 4)
 
@@ -326,6 +331,9 @@ object Tables {
     * per-row |x| < 10¹⁸, sum |Σ| < 10²⁶ (the bounds above). */
   val exact: DecimalType = DecimalType(30, 12)
   def xsum(c: Column): Column = xsumD(c).cast(DoubleType)
+
+  /** [[xsum]] with each row counted `n` times (a cell count). */
+  def xsum(c: Column, n: Column): Column = Fixed.sum(c, exact, n).cast(DoubleType)
   def sqlXsum(e: String): String = s"CAST(sum(CAST(($e) AS DECIMAL(30,12))) AS DOUBLE)"
 
   /** Exact sum kept as DECIMAL (no double cast): for outputs compared
@@ -348,6 +356,9 @@ object Tables {
     * bits cannot differ. Addends below 10⁻¹² truncate identically on
     * both sides. */
   def sumE12(c: Column): Column = Fixed.sum(c * lit(1.0e12), DecimalType(38, 0))
+
+  /** [[sumE12]] with each row counted `n` times (a cell count). */
+  def sumE12(c: Column, n: Column): Column = Fixed.sum(c * lit(1.0e12), DecimalType(38, 0), n)
 
   /** selectExpr fragment converting a [[sumE12]] column to DOUBLE (Spark
     * spelling: `div` on DECIMAL(38,0) is integral division). */

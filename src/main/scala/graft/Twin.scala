@@ -3,8 +3,8 @@ package graft
 import graft.{Tables => T}
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.functions.{broadcast, expr, lit, count => countRows}
-import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+import org.apache.spark.sql.functions.{broadcast, coalesce, col, expr, lit, sum, when, count => countRows}
+import org.apache.spark.sql.types.{DoubleType, FloatType, StructField, StructType}
 
 /** The shared-text discipline, written once. graft fits follow the
   * dask-cuml execution model: one distributed aggregation produces a few
@@ -19,7 +19,8 @@ import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
   *
   * [[gauss]] is the one unrolled elimination; [[Fit]] declares a
   * driver-held iterative fit once, and [[fit]] / [[sqlFit]] run it in
-  * Spark and unroll it for the oracle. [[rounds]] / [[sqlRounds]] do the
+  * Spark, over the frame's cell histogram, and unroll it for the oracle,
+  * over the rows. [[rounds]] / [[sqlRounds]] do the
   * same for a fixed-round graph or power loop whose state is a table:
   * the round count, the oracle's CTE naming and the lineage cut of each
   * round are written here, not at the loop.
@@ -122,21 +123,35 @@ object Twin {
       next.zip(names).map { case (ex, nm) => s"$ex AS $nm" }
   }
 
-  /** Run `f` over `frame` in Spark. Each step crosses the frame with the
-    * parameters as a broadcast one-row table (column references, not
-    * literals, so the generated code is the same every step and the
-    * codegen cache hits), aggregates the sums, applies the update through
-    * [[chain]] on the one-row result and collects once. Returns the
-    * parameters after each step. */
+  /** Run `f` over `frame` in Spark. The frame is first reduced to its
+    * cell histogram, one row per distinct tuple of ALL its columns plus
+    * the tuple's row count, in one aggregation, and the cells are pinned
+    * ([[Tables.pin]]) for the fit's duration: so a caller projects only
+    * what the fit reads, and a frame whose columns take few values (the
+    * TPC-H domains) is read once, not once per step. Each step crosses the
+    * cells with the parameters as a broadcast one-row table (column
+    * references, not literals, so the generated code is the same every
+    * step and the codegen cache hits), evaluates the row steps and `where`
+    * once per cell, sums every addend times the cell's count on the exact
+    * weighted wires, applies the update through [[chain]] on the one-row
+    * result and collects once. That is exact: a row's addends depend only
+    * on its tuple and the parameters, and Σ_rows CAST(f AS DECIMAL) =
+    * Σ_cells n·CAST(f AS DECIMAL) in integer arithmetic, so every step is
+    * bit-identical to the row-level loop [[sqlFit]] renders. Returns the
+    * parameters after each step; the cells' pin is released on return,
+    * and when a step throws. */
   def fit(frame: DataFrame, f: Fit): Seq[Array[Double]] = {
     val spark = frame.sparkSession
     val schema = StructType(f.names.map(StructField(_, DoubleType, nullable = false)))
+    require(!(frame.columns ++ f.names ++ f.rows.map(_._1)).contains(CellN),
+      s"$CellN is the cell count's name")
     val aggs = f.sums.map(sparkSum)
     val decoded = f.names ++ f.sums.map(s => decode(s, T.bitsE12))
-    (1 to f.iters).scanLeft(f.params.map(_._2).toArray) { (p, _) =>
+    val cells = T.pin(histogram(frame))
+    try (1 to f.iters).scanLeft(f.params.map(_._2).toArray) { (p, _) =>
       val pt = broadcast(spark.createDataFrame(
         java.util.Arrays.asList(Row.fromSeq(p.toSeq)), schema))
-      val crossed = frame.crossJoin(pt)
+      val crossed = cells.crossJoin(pt)
       val rows = chain(f.where.fold(crossed)(w => crossed.where(expr(w))), f.rows)
       val r = chain(rows.agg(aggs.head, aggs.tail: _*).crossJoin(pt)
           .selectExpr(decoded: _*), f.update)
@@ -144,6 +159,32 @@ object Twin {
         .collect()(0)
       Array.tabulate(f.names.size)(r.getDouble)
     }.tail
+    finally release(cells)
+  }
+
+  /** The name of a cell's row count in [[fit]]'s cells. */
+  private val CellN = "cell_n"
+
+  /** `frame`'s distinct tuples with their row counts in [[CellN]]. Spark
+    * normalizes -0.0 to 0.0 in a grouping key, and a step can tell them
+    * apart (a string cast, a division), so each float column is keyed
+    * with its sign of zero as well and -0.0 is restored in its own cell. */
+  private def histogram(frame: DataFrame): DataFrame = {
+    val cols = frame.schema.fields.toSeq
+    val zeros = cols.zipWithIndex.collect {
+      case (c, i) if c.dataType == DoubleType || c.dataType == FloatType => (c, s"${CellN}_z$i")
+    }
+    val keyed = frame.select(cols.map(c => col(c.name)) ++ zeros.map { case (c, z) =>
+      (col(c.name) === 0 && col(c.name).cast("string").startsWith("-")).as(z)
+    }: _*)
+    val restored = cols.map { c =>
+      zeros.collectFirst { case (`c`, z) =>
+        when(col(z), lit(-0.0).cast(c.dataType)).otherwise(col(c.name)).as(c.name)
+      }.getOrElse(col(c.name))
+    }
+    keyed.groupBy(keyed.columns.toSeq.map(col): _*)
+      .agg(countRows(lit(1)).as(CellN))
+      .select(restored :+ col(CellN): _*)
   }
 
   /** The oracle twin of [[fit]]: `${p}0` holds the initial parameters
@@ -218,10 +259,11 @@ object Twin {
   def sqlRounds(n: Int)(round: Int => String): String =
     (1 to n).map(round).mkString(",\n  ")
 
+  /** A sum over [[fit]]'s cells: each cell's addend counted n times. */
   private def sparkSum(s: Sum): Column = s.wire match {
-    case XSum => T.xsum(expr(s.text)).as(s.name)
-    case E12 => T.sumE12(expr(s.text)).as(s"s_${s.name}")
-    case Count => countRows(lit(1)).cast(DoubleType).as(s.name)
+    case XSum => T.xsum(expr(s.text), col(CellN)).as(s.name)
+    case E12 => T.sumE12(expr(s.text), col(CellN)).as(s"s_${s.name}")
+    case Count => coalesce(sum(col(CellN)), lit(0L)).cast(DoubleType).as(s.name)
   }
 
   private def sqlSum(s: Sum): String = s.wire match {

@@ -3,6 +3,7 @@ package graft.functions
 import java.math.{BigInteger, RoundingMode}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateFunction, DeclarativeAggregate, Sum}
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
@@ -150,6 +151,40 @@ object Fixed {
       }
     }
 
+  /** The hi lane after adding `n` copies of the row value `d` as one
+    * product: [[Overflow]] when the product leaves the DECIMAL(rp, s)
+    * range, as the n-row partial sum it stands for does, or when the sum
+    * does. */
+  def addHiN(hi: Long, lo: Long, d: Double, n: Long, p: Int, s: Int, ansi: Boolean,
+      rp: Int): Long =
+    if (hi == Overflow) Overflow
+    else {
+      val v = fast(d, s)
+      if (v != Slow) times(hi, lo, Math.multiplyHigh(v, n), v * n, rp)
+      else {
+        val l = slow(d, p, s, ansi)
+        if (!l.present) hi
+        else {
+          val u = BigInteger.valueOf(l.hi).shiftLeft(64)
+            .add(BigInteger.valueOf(l.lo).and(Mask64)).multiply(BigInteger.valueOf(n))
+          if (u.bitLength > 127) Overflow
+          else times(hi, lo, u.shiftRight(64).longValue, u.longValue, rp)
+        }
+      }
+    }
+
+  /** The lo lane after adding `n` copies of the row value `d`: the
+    * product's low 64 bits are the addend's lo lane times n. */
+  def addLoN(lo: Long, d: Double, n: Long, p: Int, s: Int, ansi: Boolean): Long = {
+    val v = fast(d, s)
+    if (v != Slow) lo + v * n else lo + slow(d, p, s, ansi).lo * n
+  }
+
+  /** hi of (hi, lo) + the product (ph, pl), once the product alone is in
+    * range. */
+  private def times(hi: Long, lo: Long, ph: Long, pl: Long, rp: Int): Long =
+    if (carry(0L, 0L, ph, pl, rp) == Overflow) Overflow else carry(hi, lo, ph, pl, rp)
+
   /** Whether the row value `d` takes part in the sum. */
   def present(d: Double, p: Int, s: Int, ansi: Boolean): Boolean =
     fast(d, s) != Slow || slow(d, p, s, ansi).present
@@ -191,6 +226,16 @@ object Fixed {
     * with a DOUBLE `x` summed by [[FixedSum]]. */
   def sum(x: Column, t: DecimalType): Column =
     GraftBridge.column(ExactSum(GraftBridge.expression(x), t).toAggregateExpression())
+
+  /** [[sum]] with each row counted `n` times (a LONG count, as a cell
+    * histogram holds it): the value, type and error conditions of
+    * `sum(x.cast(t))` over every row repeated n times. Only a DOUBLE `x`
+    * has this form; any other input fails analysis. */
+  def sum(x: Column, t: DecimalType, n: Column): Column = {
+    require(t.scale <= 18, s"no weighted exact sum at scale ${t.scale}")
+    GraftBridge.column(FixedSum(GraftBridge.expression(x), t.precision, t.scale,
+      SQLConf.get.ansiEnabled, Some(GraftBridge.expression(n))).toAggregateExpression())
+  }
 }
 
 /** `sum(CAST(child AS t))`, typed and named like Spark's, with the cast and
@@ -222,9 +267,16 @@ case class ExactSum(child: Expression, t: DecimalType, ansi: Boolean = SQLConf.g
   * Spark's sum-overflow error (null outside ANSI mode), as a grouped sum
   * does. An all-null or empty input gives null. Outside ANSI mode (`ansi`
   * false) a row whose cast overflows is skipped and an overflowing sum
-  * gives null, as with the cast-and-sum. */
-case class FixedSum(child: Expression, p: Int, s: Int, ansi: Boolean)
-    extends DeclarativeAggregate with UnaryLike[Expression] {
+  * gives null, as with the cast-and-sum.
+  *
+  * With a `weight` (a LONG child, [[Fixed.sum]]'s `n`) each row adds its
+  * addend times n as one checked product, so the result is the sum over
+  * each row repeated n times: a product outside the result's range
+  * overflows as the n-row partial sum would. The weight is a count
+  * (n ≥ 1); a row whose value or weight is null is skipped. Without a
+  * weight the update is the unweighted kernel's, unchanged. */
+case class FixedSum(child: Expression, p: Int, s: Int, ansi: Boolean,
+    weight: Option[Expression] = None) extends DeclarativeAggregate {
   private lazy val resultType = DecimalType(math.min(p + 10, DecimalType.MAX_PRECISION), s)
   override def dataType: DataType = resultType
   override def nullable: Boolean = true
@@ -242,15 +294,32 @@ case class FixedSum(child: Expression, p: Int, s: Int, ansi: Boolean)
     StaticInvoke(Fixed.getClass, t, fn, args, propagateNull = false,
       returnNullable = fn == "value")
 
+  override def children: Seq[Expression] = child +: weight.toSeq
+
+  override def checkInputDataTypes(): TypeCheckResult = weight match {
+    case Some(w) if child.dataType != DoubleType || w.dataType != LongType =>
+      TypeCheckResult.TypeCheckFailure(
+        s"a weighted exact sum needs a DOUBLE value and a BIGINT weight, " +
+          s"not ${child.dataType.sql} and ${w.dataType.sql}")
+    case _ => TypeCheckResult.TypeCheckSuccess
+  }
+
   override lazy val updateExpressions: Seq[Expression] = {
     val x = KnownNotNull(child)
+    val nulls = children.filter(_.nullable).map(IsNull(_): Expression)
     def skipNull(keep: Expression, add: Expression) =
-      if (child.nullable) If(IsNull(child), keep, add) else add
+      if (nulls.isEmpty) add else If(nulls.reduce(Or), keep, add)
     val (pe, se, mode, rp) =
       (Literal(p), Literal(s), Literal(ansi), Literal(resultType.precision))
+    val (addHi, addLo) = weight.map(KnownNotNull(_)) match {
+      case None => (call(LongType, "addHi", hi, lo, x, pe, se, mode, rp),
+        call(LongType, "addLo", lo, x, pe, se, mode))
+      case Some(n) => (call(LongType, "addHiN", hi, lo, x, n, pe, se, mode, rp),
+        call(LongType, "addLoN", lo, x, n, pe, se, mode))
+    }
     Seq(
-      skipNull(hi, call(LongType, "addHi", hi, lo, x, pe, se, mode, rp)),
-      skipNull(lo, call(LongType, "addLo", lo, x, pe, se, mode)),
+      skipNull(hi, addHi),
+      skipNull(lo, addLo),
       skipNull(seen, Or(seen, call(BooleanType, "present", x, pe, se, mode))))
   }
 
@@ -264,5 +333,6 @@ case class FixedSum(child: Expression, p: Int, s: Int, ansi: Boolean)
       resultType, !ansi, null),
     Literal.create(null, resultType))
 
-  override protected def withNewChildInternal(c: Expression): FixedSum = copy(child = c)
+  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): FixedSum =
+    copy(child = cs.head, weight = weight.map(_ => cs(1)))
 }

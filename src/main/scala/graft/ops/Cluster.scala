@@ -4051,7 +4051,9 @@ object Cluster {
       // iteration. Output: per-cluster size + centroid on the spectral
       // axis.
       (s, dir) => {
-        val x = T.pin(picEmbed(s, dir)) // the tail references it 3×
+        // picEmbed ends in a projection of its last round's pin, so the
+        // tail's 3 references read pinned blocks
+        val x = picEmbed(s, dir)
         val asgText = "CASE WHEN abs(x - c1) <= abs(x - c2) THEN 0 ELSE 1 END AS cl"
         val cs0 = x.agg(min(col("x")).as("c1"), max(col("x")).as("c2"))
         val a1 = x.crossJoin(broadcast(cs0)).selectExpr("u", "x", asgText)

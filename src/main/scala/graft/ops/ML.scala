@@ -785,13 +785,12 @@ object ML {
     s"CAST(CAST(1e0 / (1e0 + exp(-($eta))) AS FLOAT) AS DOUBLE)"
 
   /** The 1-feature logistic fits' rows: x = quantity, y = (returnflag = R).
-    * The sf0.1 lineitem parquet plans only 3 scan tasks and each fit
-    * re-scans it once per step, so fan out once. */
+    * Only fits read it, and [[Twin.fit]] reads it once into its cells, so
+    * it is not fanned out. */
   private def logitRows(s: SparkSession, dir: String): DataFrame =
     T.lineitem(s, dir).select(
       col("l_quantity").cast("double").as("x"),
       when(col("l_returnflag") === "R", 1.0).otherwise(0.0).as("y"))
-      .transform(T.fanOut(_))
 
   private lazy val sqlLogitRows =
     """d AS (SELECT CAST(l_quantity AS DOUBLE) AS x,
@@ -935,20 +934,11 @@ object ML {
 
   private def irlsMultiBeta(s: SparkSession, dir: String): Array[Double] =
     T.memo("irlsMultiBeta", s, dir) {
-      // persist the projected corpus across the 3 IRLS passes (the
-      // ml_kmeans_converge discipline, r11): without it every round re-runs
-      // the scan + fanOut shuffle — measured 10.6 → ~6 s at sf0.1. The
-      // 4-column double frame is the smallest possible cache footprint;
-      // unpersisted before return so no blocks outlive the fit.
-      val d = T.lineitem(s, dir).select(
+      Twin.fit(T.lineitem(s, dir).select(
         col("l_quantity").cast("double").as("q"),
         col("l_discount").cast("double").as("dd"),
         col("l_tax").cast("double").as("tt"),
-        when(col("l_returnflag") === "R", 1.0).otherwise(0.0).as("y"))
-        .transform(T.fanOut(_))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try Twin.fit(d, irlsMultiFit).last
-      finally d.unpersist(blocking = false)
+        when(col("l_returnflag") === "R", 1.0).otherwise(0.0).as("y")), irlsMultiFit).last
     }
 
   /** Oracle twin of [[irlsMultiBeta]] with its rows CTE `d`, ending in
@@ -2738,26 +2728,29 @@ object ML {
       // rows through one global sort partition). Determinism: μ collapses
       // to REAL per row (absorbs cross-engine exp() ulps — the
       // ml_logreg_fit trick); float→double widening is exact, so bucket
-      // and sums agree bit-for-bit.
+      // and sums agree bit-for-bit. μ depends only on x, so the pass scores
+      // the (x, y) cells once each, with every sum weighted by the cell's
+      // row count `cnt` — the same integers as the per-row sums.
       (s, dir) => {
         val spark = s
         import spark.implicits._
         val (a, b) = irlsBeta(s, dir)
-        val d = T.lineitem(s, dir).select(
+        val cells = T.lineitem(s, dir).select(
           col("l_quantity").cast("double").as("x"),
           when(col("l_returnflag") === "R", 1).otherwise(0).as("y"))
-          .transform(T.fanOut(_))
+          .groupBy("x", "y").agg(count(lit(1)).as("cnt"))
         val ab = Seq((a, b)).toDF("ca", "cb") // broadcast params, as in irlsBeta
         val mu = (lit(1.0) / (lit(1.0) + exp(-(col("ca") + col("cb") * col("x")))))
           .cast("float")
-        d.crossJoin(broadcast(ab))
-          .select(col("y"), mu.cast("double").as("mu"))
-          .select(col("y"), col("mu"),
+        val n = coalesce(sum(col("cnt")), lit(0L))
+        cells.crossJoin(broadcast(ab))
+          .select(col("y"), col("cnt"), mu.cast("double").as("mu"))
+          .select(col("y"), col("cnt"), col("mu"),
             least(floor(col("mu") * 10).cast("int"), lit(9)).as("decile"))
           .groupBy("decile")
-          .agg(count(lit(1)).as("n"),
-            round(T.xsum(col("mu")) / count(lit(1)), 6).as("avg_pred"),
-            round(sum(col("y")).cast("double") / count(lit(1)), 6).as("actual_rate"))
+          .agg(n.as("n"),
+            round(T.xsum(col("mu"), col("cnt")) / n, 6).as("avg_pred"),
+            round(sum(col("y") * col("cnt")).cast("double") / n, 6).as("actual_rate"))
           .orderBy("decile")
       },
       Some(s"""WITH $sqlIrlsChain,
@@ -5701,7 +5694,6 @@ object ML {
       (col("l_orderkey") % 3).as("cb3"),
       (col("l_quantity").cast("double") / 50).as("cx"),
       when(col("l_returnflag") === "R", 1.0).otherwise(-1.0).as("cy"))
-      .transform(T.fanOut(_))
 
   /** The hinge subgradient step shared by the linear SVM fits over rows
     * (x, y = ±1): with margin m = y·(a + b·x), g0 = Σ_{m<1} y and
@@ -5740,7 +5732,6 @@ object ML {
     T.lineitem(s, dir).select(
       (col("l_quantity").cast("double") / 50).as("cx"),
       (col("l_extendedprice").cast("double") / 50000).as("cy"))
-      .transform(T.fanOut(_))
 
   /** 3 driver-held ε-insensitive subgradient steps (lr = 0.1, λ = 0.01,
     * ε = 0.1), T.memo'd: the hinge update with g0 = Σ_{|r|>ε} sign(r),
@@ -5768,7 +5759,6 @@ object ML {
     T.lineitem(s, dir).select(
       (col("l_quantity").cast("double") / 50).as("cx"),
       when(col("l_returnflag") === "R", 1.0).otherwise(-1.0).as("cy"))
-      .transform(T.fanOut(_))
 
   /** 3 driver-held hinge subgradient steps, T.memo'd. */
   private lazy val svmFit: Twin.Fit =
@@ -5817,7 +5807,8 @@ object ML {
     * label y = ±1 on the landmark-0-vs-1 Voronoi side (balanced by construction, and genuinely separable in the landmark feature space: y = sign(f1 − f2) up to the kernel's monotone map — so the fit's accuracy measures real convergence, not a degenerate prior). Kernel features are
     * REAL-collapsed (the k_rbf discipline) so both engines train on
     * bit-identical inputs; the landmark rows ride three broadcast
-    * single-row joins. */
+    * single-row joins. y is DOUBLE (the oracle's `1.0` is DECIMAL, the
+    * same ±1): a fit's weighted exact sums take only DOUBLE addends. */
   private def svcRows(s: SparkSession, dir: String): DataFrame = {
     val e = T.embeddings(s, dir).transform(T.fanOut(_, col("vec_id")))
     def lm(id: Int, nm: String) = broadcast(
@@ -5830,7 +5821,7 @@ object ML {
         graft.functions.Vec.l2(s, "embedding", "le1").as("d2"),
         graft.functions.Vec.l2(s, "embedding", "le2").as("d3"))
       .selectExpr(
-        "CASE WHEN d1 < d2 THEN 1.0 ELSE -1.0 END AS y",
+        "CASE WHEN d1 < d2 THEN 1e0 ELSE -1e0 END AS y",
         "CAST(CAST(exp(-(d1 * d1)) AS FLOAT) AS DOUBLE) AS f1",
         "CAST(CAST(exp(-(d2 * d2)) AS FLOAT) AS DOUBLE) AS f2",
         "CAST(CAST(exp(-(d3 * d3)) AS FLOAT) AS DOUBLE) AS f3")
@@ -5966,8 +5957,7 @@ object ML {
       Twin.fit(T.lineitem(s, dir).select(
         col("l_quantity").cast("double").as("q"),
         when(col("l_returnflag") === "N", 1.0).otherwise(0.0).as("yn"),
-        when(col("l_returnflag") === "R", 1.0).otherwise(0.0).as("yr"))
-        .transform(T.fanOut(_)), softmaxFit).last
+        when(col("l_returnflag") === "R", 1.0).otherwise(0.0).as("yr")), softmaxFit).last
     }
 
   /** Oracle twin of [[softmaxBeta]] over a CTE `d(q, yn, yr, ...)`,

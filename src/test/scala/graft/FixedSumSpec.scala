@@ -326,4 +326,128 @@ class FixedSumSpec extends SparkSpec {
       }
     } finally spark.conf.set("spark.sql.ansi.enabled", prev)
   }
+
+  // ---- the weighted form: each row counted n times ----------------------
+
+  private val wSchema = StructType(Seq(StructField("g", IntegerType, nullable = false),
+    StructField("i", IntegerType, nullable = false), StructField("x", DoubleType),
+    StructField("n", LongType)))
+
+  /** Values on both sides of the fast path at scale 0 and 12: |d| ≥ 2¹³
+    * (slow at 12 dp), near-ties, NaN, ±∞, null and ±0.0. */
+  private val wValues: Seq[java.lang.Double] = Seq(1.5, -2.25, 0.1, 8192.5, -12345.678901,
+    3.0e13, -7.5e13, 5.0000000000005e-3, -2.5000000000005e-1, 0.5, 2.5, -3.5,
+    Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity, null, 0.0, -0.0, 1e-13)
+
+  /** `rows` random (x, n) rows in 40 groups, n drawn from `ns`. */
+  private def weighted(rows: Int, ns: Seq[Long], seed: Long): DataFrame = {
+    val r = new scala.util.Random(seed)
+    val data = (0 until rows).map { i =>
+      Row(r.nextInt(40), i, wValues(r.nextInt(wValues.size)), Long.box(ns(r.nextInt(ns.size))))
+    }
+    spark.createDataFrame(java.util.Arrays.asList(data: _*), wSchema)
+  }
+
+  private def wShapes(df: DataFrame, agg: Column => Column): Seq[(String, DataFrame)] = Seq(
+    "global" -> df.agg(agg(col("x")).as("v")).select(col("v"), col("v").cast("double").as("d")),
+    "grouped" -> df.groupBy("g").agg(agg(col("x")).as("v"))
+      .select(col("g"), col("v"), col("v").cast("double").as("d")))
+
+  test("weighted: equals the sum over each row repeated n times, n in {1, 2, 3}, scales 0 and 12") {
+    for (t <- Seq(DecimalType(30, 12), DecimalType(38, 0)); width <- Seq(1, 8)) {
+      val df = weighted(600, Seq(1L, 2L, 3L), 5L).repartition(width)
+      val rows = df.selectExpr("g", "i", "x", "explode(sequence(1L, n)) AS copy")
+      assert(rows.count() === df.agg(sum("n")).collect()(0).getLong(0))
+      val got = wShapes(df, Fixed.sum(_, t, col("n")))
+      for ((want, what) <- Seq(wShapes(rows, fixed(_, t)) -> "kernel",
+          wShapes(rows, plain(_, t)) -> "cast-and-sum");
+          ((shape, g), (_, w)) <- got.zip(want)) {
+        assert(g.schema.map(_.dataType) === w.schema.map(_.dataType), s"$shape vs $what")
+        assert(sorted(g) === sorted(w), s"$shape at $t, width $width, vs the $what")
+      }
+    }
+  }
+
+  test("weighted: n = 2^31 - 1 equals n times each row's cast, scales 0 and 12") {
+    val big = Int.MaxValue.toLong
+    for (t <- Seq(DecimalType(30, 12), DecimalType(38, 0))) {
+      val df = weighted(300, Seq(1L, 3L, big), 9L).repartition(8)
+      // each row's own cast, from the cast-and-sum of that row alone
+      val perRow = df.groupBy("g", "i", "n").agg(plain(col("x"), t).as("v")).collect()
+      val want = perRow.groupBy(_.getInt(0)).map { case (g, rs) =>
+        val vs = rs.filter(!_.isNullAt(3))
+        g -> (if (vs.isEmpty) null
+              else vs.map(r => r.getDecimal(3).multiply(JBD.valueOf(r.getLong(2))))
+                .reduce(_ add _).setScale(t.scale))
+      }
+      val got = df.groupBy("g").agg(Fixed.sum(col("x"), t, col("n")).as("v")).collect()
+        .map(r => r.getInt(0) -> r.getDecimal(1)).toMap
+      assert(got === want, s"at $t")
+      assert(got.values.exists(v => v != null && v.abs.compareTo(JBD.valueOf(1e15)) > 0),
+        "the fixture reaches past the fast path's 2^53")
+    }
+  }
+
+  /** The weighted aggregate's error condition on (x, n) rows, global and
+    * grouped, at widths 1 and 8; both shapes agree. */
+  private def wOutcome(t: DecimalType, xn: Seq[(Double, Long)]): Option[String] = {
+    val rows = xn.zipWithIndex.map { case ((x, n), i) => Row(0, i, Double.box(x), Long.box(n)) }
+    val base = spark.createDataFrame(java.util.Arrays.asList(rows: _*), wSchema)
+    val outs = for (width <- Seq(1, 8);
+        (_, df) <- wShapes(base.repartition(width), Fixed.sum(_, t, col("n"))))
+      yield condition(sorted(df))
+    assert(outs.distinct.size === 1, s"$outs on $xn")
+    outs.head
+  }
+
+  test("weighted bounds: a total or a product past the range raises ARITHMETIC_OVERFLOW") {
+    val x12 = DecimalType(30, 12) // result DECIMAL(38, 12): |Σ| < 10^26
+    assert(wOutcome(x12, Seq(9e17 -> 100000000L)) === None)
+    // two in-range products whose total passes 10^26
+    assert(wOutcome(x12, Seq(9e17 -> 100000000L, 9e17 -> 100000000L)) === Some("ARITHMETIC_OVERFLOW"))
+    // one product past 10^26 (the slow path's BigInteger product)
+    assert(wOutcome(x12, Seq(9e17 -> Int.MaxValue.toLong)) === Some("ARITHMETIC_OVERFLOW"))
+    // the fast path's product past DECIMAL(28, 4)'s 10^24
+    assert(wOutcome(DecimalType(18, 4), Seq(1e9 -> 1000000000000000L)) === Some("ARITHMETIC_OVERFLOW"))
+    assert(wOutcome(DecimalType(18, 4), Seq(1e9 -> 10000000000000L)) === None)
+    // a product past 128 bits
+    val e0 = DecimalType(38, 0)
+    assert(wOutcome(e0, Seq(9e37 -> Long.MaxValue)) === Some("ARITHMETIC_OVERFLOW"))
+    // as the row sum does: 2 × 5e37 and 4e37 × 2 + 4e37 leave DECIMAL(38, 0)
+    for (xn <- Seq(Seq(5e37 -> 2L), Seq(4e37 -> 2L, 4e37 -> 1L))) {
+      assert(wOutcome(e0, xn) === Some("ARITHMETIC_OVERFLOW"))
+      sumOverflow(e0, xn.flatMap { case (x, n) => Seq.fill(n.toInt)(x) })
+    }
+    assert(wOutcome(e0, Seq(4e37 -> 2L)) === None)
+  }
+
+  test("weighted bounds: outside ANSI mode an overflowing sum is null") {
+    val prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try {
+      for ((t, xn) <- Seq(DecimalType(30, 12) -> Seq(9e17 -> 100000000L, 9e17 -> 100000000L),
+          DecimalType(30, 12) -> Seq(9e17 -> Int.MaxValue.toLong),
+          DecimalType(38, 0) -> Seq(9e37 -> Long.MaxValue))) {
+        val rows = xn.zipWithIndex.map { case ((x, n), i) => Row(0, i, Double.box(x), Long.box(n)) }
+        val df = spark.createDataFrame(java.util.Arrays.asList(rows: _*), wSchema)
+        assert(df.agg(Fixed.sum(col("x"), t, col("n"))).collect() === Array(Row(null)), s"$t on $xn")
+      }
+    } finally spark.conf.set("spark.sql.ansi.enabled", prev)
+  }
+
+  test("weighted: a non-DOUBLE value or non-BIGINT weight fails analysis; the unweighted update is unchanged") {
+    val df = spark.range(5).select(col("id"), (col("id") / 3).as("x"), lit(2L).as("n"))
+    val t = DecimalType(30, 12)
+    for (bad <- Seq(Fixed.sum(col("id"), t, col("n")), Fixed.sum(col("x").cast("float"), t, col("n")),
+        Fixed.sum(col("x"), t, col("n").cast("int"))))
+      intercept[org.apache.spark.sql.AnalysisException](df.agg(bad))
+    intercept[IllegalArgumentException](Fixed.sum(col("x"), DecimalType(38, 20), col("n")))
+    val lanes = (e: FixedSum) => e.updateExpressions.flatMap(_.collect {
+      case i: org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke => i.functionName
+    }).toSet
+    val x = BoundReference(0, DoubleType, nullable = true)
+    assert(lanes(FixedSum(x, 30, 12, ansi = true)) === Set("addHi", "addLo", "present"))
+    assert(lanes(FixedSum(x, 30, 12, ansi = true, Some(BoundReference(1, LongType, nullable = false)))) ===
+      Set("addHiN", "addLoN", "present"))
+  }
 }

@@ -175,6 +175,22 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("ml_poisson_glm: its fit reads the frame in one execution, its 3 steps read only the pinned cells") {
+    // the shared lineitemFit pin is paid by whichever query builds first
+    Tables.lineitemFit(spark, sf)
+    val plans = plansLaunchedBy { SparkEntry.queries("ml_poisson_glm")(spark, sf) }
+    // the fit frame is (l_discount, l_quantity) over the lineitemFit leaf
+    val readsFrame = plans.filter(_._2.contains("l_discount"))
+    assert(readsFrame.size === 1, readsFrame.map(_._1).mkString(", "))
+    val steps = plans.filter(_._1.startsWith("collect at "))
+    assert(steps.size === 3, plans.map(_._1).mkString(", "))
+    for ((site, p) <- steps) {
+      assert(!p.contains("l_discount") && !p.contains("l_quantity"), s"$site reads the frame:\n$p")
+      assert(!p.toLowerCase.contains("parquet"), s"$site scans parquet:\n$p")
+      assert(p.contains("ExistingRDD"), s"$site does not read the pinned cells:\n$p")
+    }
+  }
+
   test("no persisted blocks outlive a query (VERDICT r3 #3/#4)") {
     // queries that use caches internally must release them before
     // returning; snapshot-diff guards against leaks without racing other

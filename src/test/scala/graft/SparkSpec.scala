@@ -31,19 +31,26 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     * pool thread, so their stage names carry the pool's call site, not
     * the action's; the execution start event carries the action's. */
   def actionsLaunchedBy(body: => Unit): Seq[String] = jobStartsOf(body).map {
-    case (_, Some(callSite)) => callSite
+    case (_, Some((callSite, _, _))) => callSite
     case (j, None) => j.stageInfos.map(_.name).mkString("; ")
   }
 
+  /** The (call site, physical plan) of each SQL execution `body` runs a
+    * job in, once per execution, under the same barrier as
+    * [[jobsLaunchedBy]]. */
+  def plansLaunchedBy(body: => Unit): Seq[(String, String)] =
+    jobStartsOf(body).flatMap(_._2).distinct.map { case (site, plan, _) => (site, plan) }
+
   private def jobStartsOf(body: => Unit)
-      : Seq[(org.apache.spark.scheduler.SparkListenerJobStart, Option[String])] = {
+      : Seq[(org.apache.spark.scheduler.SparkListenerJobStart, Option[(String, String, String)])] = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
     import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
     import scala.jdk.CollectionConverters._
     val watchGroup = s"jobs-probe-${System.nanoTime()}"
     val barrierGroup = s"$watchGroup-barrier"
     val watched = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]()
-    val executions = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    // per execution id: its call site, its physical plan and the id
+    val executions = new java.util.concurrent.ConcurrentHashMap[String, (String, String, String)]()
     val barrierSeen = new java.util.concurrent.atomic.AtomicBoolean(false)
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = {
@@ -53,7 +60,9 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
         if (barrierGroup == g) barrierSeen.set(true)
       }
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case x: SparkListenerSQLExecutionStart => executions.put(x.executionId.toString, x.description)
+        case x: SparkListenerSQLExecutionStart =>
+          executions.put(x.executionId.toString,
+            (x.description, x.physicalPlanDescription, x.executionId.toString))
         case _ =>
       }
     }

@@ -1,15 +1,17 @@
 package graft
 
 import graft.{Tables => T}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 /** Pins [[Twin]], the one owner of the shared-text discipline: the unrolled
   * elimination is bit-equal to the same op sequence in Scala, the CTE
   * renderer chains each step from the previous one, and the driver-held
   * fit loop reproduces the hand-written 2×2 logistic Newton loop it
-  * replaced bit for bit — including what happens on a singular Hessian.
+  * replaced bit for bit — including what happens on a singular Hessian —
+  * and its cell histogram reproduces the row-level loop on every wire.
   * The round loop equals the hand-written loop, its pinned form returns
   * holding one round's pin, and the oracle unroll names round k from
   * round k-1. */
@@ -181,6 +183,96 @@ class TwinSpec extends SparkSpec {
     assert(msgs.exists(m => m != null && m.contains("DIVIDE_BY_ZERO")), e.toString)
   }
 
+  /** The row-level loop [[Twin.fit]] ran before it read cells: each step
+    * crosses the rows with the parameters and sums over every row on the
+    * unweighted wires. */
+  private def rowFit(frame: DataFrame, f: Twin.Fit): Seq[Array[Double]] = {
+    val names = f.params.map(_._1)
+    val schema = StructType(names.map(StructField(_, DoubleType, nullable = false)))
+    val aggs = f.sums.map {
+      case Twin.Sum(nm, Twin.XSum, t) => T.xsum(expr(t)).as(nm)
+      case Twin.Sum(nm, Twin.E12, t) => T.sumE12(expr(t)).as(s"s_$nm")
+      case Twin.Sum(nm, Twin.Count, _) => count(lit(1)).cast(DoubleType).as(nm)
+    }
+    val decoded = names ++ f.sums.map {
+      case Twin.Sum(nm, Twin.E12, _) => s"${T.bitsE12(s"s_$nm")} AS $nm"
+      case sm => sm.name
+    }
+    (1 to f.iters).scanLeft(f.params.map(_._2).toArray) { (p, _) =>
+      val pt = broadcast(spark.createDataFrame(
+        java.util.Arrays.asList(Row.fromSeq(p.toSeq)), schema))
+      var rows = frame.crossJoin(pt)
+      for (w <- f.where) rows = rows.where(expr(w))
+      for ((nm, ex) <- f.rows) rows = rows.selectExpr("*", s"$ex AS $nm")
+      var out = rows.agg(aggs.head, aggs.tail: _*).crossJoin(pt).selectExpr(decoded: _*)
+      for ((nm, ex) <- f.update) out = out.selectExpr("*", s"$ex AS $nm")
+      val r = out.selectExpr(f.next.zip(names).map { case (ex, nm) => s"$ex AS $nm" }: _*)
+        .collect()(0)
+      Array.tabulate(names.size)(r.getDouble)
+    }.tail
+  }
+
+  /** One fit over every wire: XSum, E12 and Count, with a `where` over the
+    * parameter `k` and row steps that tell -0.0 from 0.0 (the string cast)
+    * or not (`atan2`, which Spark evaluates on x + 0.0). */
+  private val wires = Twin.Fit(
+    Seq("a" -> 0.5, "b" -> -0.25, "k" -> 0.0),
+    Seq("t" -> "atan2(x, -1e0)", "z" -> "CASE WHEN CAST(x AS STRING) = '-0.0' THEN 1e0 ELSE 0e0 END",
+      "m" -> "CAST(CAST(1e0 / (1e0 + exp(-(a + b * x))) AS FLOAT) AS DOUBLE)"),
+    Seq(Twin.count("n"), Twin.xsum("s1", "t * y + z * 1e3"), Twin.xsum("s2", "(y - m) * x"),
+      Twin.e12("s3", "m * (1e0 + z) - y"), Twin.e12("s4", "x * 1e-3")),
+    Seq("u" -> "coalesce(s1, 0e0) / greatest(n, 1e0)"),
+    Seq("a + 1e-1 * u + 1e-2 * coalesce(s2, 0e0)", "b - 1e-3 * coalesce(s3, 0e0) + coalesce(s4, 0e0)",
+      "k + 1e0"), 3, where = Some("g IS NULL OR g >= k"))
+
+  private val cellSchema = StructType(Seq(StructField("g", IntegerType),
+    StructField("x", DoubleType), StructField("y", DoubleType, nullable = false)))
+
+  /** `n` rows drawn from a pool of 12 tuples: NaN, ±0.0, a null, a value
+    * whose 12-dp cast takes the slow path (|x| ≥ 2¹³) and a near-tie. */
+  private def dupRows(n: Int, seed: Long): DataFrame = {
+    val xs = Seq[java.lang.Double](Double.NaN, 0.0, -0.0, null, 1.5, -2.25, 12345.678,
+      0.1, 5.0000000000005e-3, -0.0, 0.0, 3.0)
+    val r = new scala.util.Random(seed)
+    val rows = Seq.fill(n) {
+      Row(if (r.nextInt(7) == 0) null else Int.box(r.nextInt(3)), xs(r.nextInt(xs.size)),
+        (r.nextInt(2)).toDouble)
+    }
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), cellSchema).repartition(3)
+  }
+
+  private def sameTrail(got: Seq[Array[Double]], want: Seq[Array[Double]], what: String): Unit = {
+    assert(got.size === want.size, what)
+    for ((g, w) <- got.zip(want); i <- g.indices)
+      assert(bits(g(i)) === bits(w(i)), s"$what: param $i ${g(i)} vs ${w(i)}")
+  }
+
+  test("fit: the cell histogram reproduces the row-level loop bit for bit on every wire") {
+    val one = spark.createDataFrame(
+      java.util.Arrays.asList(Row(Int.box(1), Double.box(-0.0), 1.0)), cellSchema)
+    for ((what, d) <- Seq("duplicate-heavy" -> dupRows(400, 7L),
+        "duplicate-heavy, second draw" -> dupRows(150, 11L),
+        "one row" -> one, "empty" -> dupRows(20, 3L).where(lit(false)))) {
+      val got = Twin.fit(d, wires)
+      sameTrail(got, rowFit(d, wires), what)
+      assert(got.forall(_.forall(p => !p.isNaN)), s"$what: ${got.map(_.toSeq)}")
+    }
+    // the fixture exercises the -0.0 cells: merged into 0.0 the z sums move
+    val d = dupRows(400, 7L)
+    val merged = d.selectExpr("g", "x + 0e0 AS x", "y")
+    assert(rowFit(merged, wires).last(0) !== rowFit(d, wires).last(0))
+  }
+
+  test("fit: no pin outlives the fit, whether it returns or a step throws") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    Twin.fit(dupRows(100, 5L), wires)
+    assert(sc.getPersistentRDDs.keySet === before)
+    val singular = frame(Seq.fill(8)(2.0), Seq(1.0, 0.0, 1.0, 1.0, 0.0, 0.0, 1.0, 0.0))
+    intercept[Exception](Twin.fit(singular, newton.copy(iters = 1)))
+    assert(sc.getPersistentRDDs.keySet === before)
+  }
+
   /** A synthetic round over (k, x): a shuffle (the self-join on k) and a
     * per-row update that depends on the round. */
   private def synthStep(prev: DataFrame, r: Int): DataFrame =
@@ -226,12 +318,22 @@ class TwinSpec extends SparkSpec {
     assert(Twin.sqlRounds(0)(k => s"s$k") === "")
   }
 
-  test("ml_spectral_embed holds at most nbr, deg and its last round's pin") {
+  /** The persisted RDDs building and collecting query `q` adds. */
+  private def pinsAddedBy(q: String): Set[Int] = {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
-    val rows = SparkEntry.queries("ml_spectral_embed")(spark, sf).collect()
-    val added = sc.getPersistentRDDs.keySet -- before
+    val rows = SparkEntry.queries(q)(spark, sf).collect()
     assert(rows.nonEmpty)
+    (sc.getPersistentRDDs.keySet -- before).toSet
+  }
+
+  test("ml_spectral_embed holds at most nbr, deg and its last round's pin") {
+    val added = pinsAddedBy("ml_spectral_embed")
     assert(added.size <= 3, s"ml_spectral_embed left ${added.size} persisted RDDs: $added")
+  }
+
+  test("ml_spectral_cluster reads picEmbed's pins without pinning the embedding again") {
+    val added = pinsAddedBy("ml_spectral_cluster")
+    assert(added.size <= 3, s"ml_spectral_cluster left ${added.size} persisted RDDs: $added")
   }
 }
