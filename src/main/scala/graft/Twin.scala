@@ -124,11 +124,11 @@ object Twin {
   }
 
   /** Run `f` over `frame` in Spark. The frame is first reduced to its
-    * cell histogram, one row per distinct tuple of ALL its columns plus
-    * the tuple's row count, in one aggregation, and the cells are pinned
-    * ([[Tables.pin]]) for the fit's duration: so a caller projects only
-    * what the fit reads, and a frame whose columns take few values (the
-    * TPC-H domains) is read once, not once per step. Each step crosses the
+    * [[cells]], one row per distinct tuple of ALL its columns plus the
+    * tuple's row count, and the cells are pinned ([[Tables.pin]]) for the
+    * fit's duration: so a caller projects only what the fit reads, and a
+    * frame whose columns take few values (the TPC-H domains) is read
+    * once, not once per step. Each step crosses the
     * cells with the parameters as a broadcast one-row table (column
     * references, not literals, so the generated code is the same every
     * step and the codegen cache hits), evaluates the row steps and `where`
@@ -147,11 +147,11 @@ object Twin {
       s"$CellN is the cell count's name")
     val aggs = f.sums.map(sparkSum)
     val decoded = f.names ++ f.sums.map(s => decode(s, T.bitsE12))
-    val cells = T.pin(histogram(frame))
+    val pinned = T.pin(cells(frame))
     try (1 to f.iters).scanLeft(f.params.map(_._2).toArray) { (p, _) =>
       val pt = broadcast(spark.createDataFrame(
         java.util.Arrays.asList(Row.fromSeq(p.toSeq)), schema))
-      val crossed = cells.crossJoin(pt)
+      val crossed = pinned.crossJoin(pt)
       val rows = chain(f.where.fold(crossed)(w => crossed.where(expr(w))), f.rows)
       val r = chain(rows.agg(aggs.head, aggs.tail: _*).crossJoin(pt)
           .selectExpr(decoded: _*), f.update)
@@ -159,17 +159,20 @@ object Twin {
         .collect()(0)
       Array.tabulate(f.names.size)(r.getDouble)
     }.tail
-    finally release(cells)
+    finally release(pinned)
   }
 
-  /** The name of a cell's row count in [[fit]]'s cells. */
-  private val CellN = "cell_n"
+  /** The name of a cell's row count in [[cells]]. */
+  val CellN = "cell_n"
 
-  /** `frame`'s distinct tuples with their row counts in [[CellN]]. Spark
+  /** `frame`'s cell histogram: its distinct tuples of all columns, with
+    * their row counts in a non-null LONG [[CellN]], from one aggregation.
+    * A pass whose every addend depends only on the tuple reads the cells
+    * in place of the rows and weights each sum by [[CellN]]. Spark
     * normalizes -0.0 to 0.0 in a grouping key, and a step can tell them
     * apart (a string cast, a division), so each float column is keyed
     * with its sign of zero as well and -0.0 is restored in its own cell. */
-  private def histogram(frame: DataFrame): DataFrame = {
+  def cells(frame: DataFrame): DataFrame = {
     val cols = frame.schema.fields.toSeq
     val zeros = cols.zipWithIndex.collect {
       case (c, i) if c.dataType == DoubleType || c.dataType == FloatType => (c, s"${CellN}_z$i")
@@ -259,7 +262,7 @@ object Twin {
   def sqlRounds(n: Int)(round: Int => String): String =
     (1 to n).map(round).mkString(",\n  ")
 
-  /** A sum over [[fit]]'s cells: each cell's addend counted n times. */
+  /** A sum over [[cells]]: each cell's addend counted n times. */
   private def sparkSum(s: Sum): Column = s.wire match {
     case XSum => T.xsum(expr(s.text), col(CellN)).as(s.name)
     case E12 => T.sumE12(expr(s.text), col(CellN)).as(s"s_${s.name}")

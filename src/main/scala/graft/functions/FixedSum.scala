@@ -132,30 +132,11 @@ object Fixed {
     l
   }
 
-  /** The lo lane after adding the row value `d`. */
-  def addLo(lo: Long, d: Double, p: Int, s: Int, ansi: Boolean): Long = {
-    val v = fast(d, s)
-    if (v != Slow) lo + v else lo + slow(d, p, s, ansi).lo
-  }
-
-  /** The hi lane after adding the row value `d` to (hi, lo), or
-    * [[Overflow]] once the sum leaves the DECIMAL(rp, s) range. */
-  def addHi(hi: Long, lo: Long, d: Double, p: Int, s: Int, ansi: Boolean, rp: Int): Long =
-    if (hi == Overflow) Overflow
-    else {
-      val v = fast(d, s)
-      if (v != Slow) carry(hi, lo, v >> 63, v, rp)
-      else {
-        val l = slow(d, p, s, ansi)
-        if (l.present) carry(hi, lo, l.hi, l.lo, rp) else hi
-      }
-    }
-
-  /** The hi lane after adding `n` copies of the row value `d` as one
-    * product: [[Overflow]] when the product leaves the DECIMAL(rp, s)
-    * range, as the n-row partial sum it stands for does, or when the sum
-    * does. */
-  def addHiN(hi: Long, lo: Long, d: Double, n: Long, p: Int, s: Int, ansi: Boolean,
+  /** The hi lane after adding `n` copies of the row value `d` to (hi, lo)
+    * as one product (n = 1 for a row sum): [[Overflow]] when the product
+    * leaves the DECIMAL(rp, s) range, as the n-row partial sum it stands
+    * for does, or when the sum does. */
+  def addHi(hi: Long, lo: Long, d: Double, n: Long, p: Int, s: Int, ansi: Boolean,
       rp: Int): Long =
     if (hi == Overflow) Overflow
     else {
@@ -175,7 +156,7 @@ object Fixed {
 
   /** The lo lane after adding `n` copies of the row value `d`: the
     * product's low 64 bits are the addend's lo lane times n. */
-  def addLoN(lo: Long, d: Double, n: Long, p: Int, s: Int, ansi: Boolean): Long = {
+  def addLo(lo: Long, d: Double, n: Long, p: Int, s: Int, ansi: Boolean): Long = {
     val v = fast(d, s)
     if (v != Slow) lo + v * n else lo + slow(d, p, s, ansi).lo * n
   }
@@ -274,7 +255,7 @@ case class ExactSum(child: Expression, t: DecimalType, ansi: Boolean = SQLConf.g
   * each row repeated n times: a product outside the result's range
   * overflows as the n-row partial sum would. The weight is a count
   * (n ≥ 1); a row whose value or weight is null is skipped. Without a
-  * weight the update is the unweighted kernel's, unchanged. */
+  * weight every row counts once: the same lanes with n = 1. */
 case class FixedSum(child: Expression, p: Int, s: Int, ansi: Boolean,
     weight: Option[Expression] = None) extends DeclarativeAggregate {
   private lazy val resultType = DecimalType(math.min(p + 10, DecimalType.MAX_PRECISION), s)
@@ -311,15 +292,10 @@ case class FixedSum(child: Expression, p: Int, s: Int, ansi: Boolean,
       if (nulls.isEmpty) add else If(nulls.reduce(Or), keep, add)
     val (pe, se, mode, rp) =
       (Literal(p), Literal(s), Literal(ansi), Literal(resultType.precision))
-    val (addHi, addLo) = weight.map(KnownNotNull(_)) match {
-      case None => (call(LongType, "addHi", hi, lo, x, pe, se, mode, rp),
-        call(LongType, "addLo", lo, x, pe, se, mode))
-      case Some(n) => (call(LongType, "addHiN", hi, lo, x, n, pe, se, mode, rp),
-        call(LongType, "addLoN", lo, x, n, pe, se, mode))
-    }
+    val n = weight.fold[Expression](Literal(1L))(KnownNotNull(_))
     Seq(
-      skipNull(hi, addHi),
-      skipNull(lo, addLo),
+      skipNull(hi, call(LongType, "addHi", hi, lo, x, n, pe, se, mode, rp)),
+      skipNull(lo, call(LongType, "addLo", lo, x, n, pe, se, mode)),
       skipNull(seen, Or(seen, call(BooleanType, "present", x, pe, se, mode))))
   }
 

@@ -161,6 +161,22 @@ object Curation {
       Seq("h02", "h12", "h22")), Seq("g0", "g1", "g2"), "n"),
     Seq("a + nx0", "b1 + nx1", "b2 + nx2"), 3)
 
+  /** ml_quality_classifier's rows: the two map-only text features (x1 the
+    * stopword ratio, x2 the mean token length) and y = (lang = 'en'). */
+  private def qualityRows(s: SparkSession, dir: String): DataFrame =
+    T.documents(s, dir).transform(T.fanOut(_, col("doc_id")))
+      .selectExpr("filter(split(text, ' '), t -> t <> '') AS ts", "n_chars", "lang")
+      .selectExpr(
+        "CAST(size(filter(ts, t -> array_contains(array('the','a','data','row','value'), t))) AS DOUBLE) / size(ts) AS x1",
+        "CAST(n_chars AS DOUBLE) / size(ts) AS x2",
+        "CASE WHEN lang = 'en' THEN 1e0 ELSE 0e0 END AS y")
+
+  /** [[qualityFit]]'s (a, b1, b2) over [[qualityRows]], T.memo'd: the
+    * features are near-unique per document, so the fit's cells are about
+    * as many as the rows and a repeat would pay the grouping again. */
+  private def qualityBeta(s: SparkSession, dir: String): Array[Double] =
+    T.memo("qualityBeta", s, dir) { Twin.fit(qualityRows(s, dir), qualityFit).last }
+
   /** Clipped-overlap sums for order n against the pair table `pr`:
     * (ca, re, num = Σ min(c_cand, c_ref), den_c = Σ c_cand). The join is
     * gram-keyed per pair — inverted-index shaped, never all-pairs. */
@@ -867,14 +883,8 @@ object Curation {
       (s, dir) => {
         val spark = s
         import spark.implicits._
-        val d = T.documents(s, dir).transform(T.fanOut(_, col("doc_id")))
-          .selectExpr("filter(split(text, ' '), t -> t <> '') AS ts",
-            "n_chars", "lang")
-          .selectExpr(
-            "CAST(size(filter(ts, t -> array_contains(array('the','a','data','row','value'), t))) AS DOUBLE) / size(ts) AS x1",
-            "CAST(n_chars AS DOUBLE) / size(ts) AS x2",
-            "CASE WHEN lang = 'en' THEN 1e0 ELSE 0e0 END AS y")
-        val Array(a, b1, b2) = Twin.fit(d, qualityFit).last
+        val d = qualityRows(s, dir)
+        val Array(a, b1, b2) = qualityBeta(s, dir)
         val co = Seq((a, b1, b2)).toDF("ca", "cb1", "cb2")
         val mu = (lit(1.0) / (lit(1.0) +
           exp(-(col("ca") + col("cb1") * col("x1") + col("cb2") * col("x2")))))

@@ -2729,28 +2729,28 @@ object ML {
       // to REAL per row (absorbs cross-engine exp() ulps — the
       // ml_logreg_fit trick); float→double widening is exact, so bucket
       // and sums agree bit-for-bit. μ depends only on x, so the pass scores
-      // the (x, y) cells once each, with every sum weighted by the cell's
-      // row count `cnt` — the same integers as the per-row sums.
+      // the (x, y) [[Twin.cells]] once each, with every sum weighted by the
+      // cell's row count — the same integers as the per-row sums.
       (s, dir) => {
         val spark = s
         import spark.implicits._
         val (a, b) = irlsBeta(s, dir)
-        val cells = T.lineitem(s, dir).select(
+        val cells = Twin.cells(T.lineitem(s, dir).select(
           col("l_quantity").cast("double").as("x"),
-          when(col("l_returnflag") === "R", 1).otherwise(0).as("y"))
-          .groupBy("x", "y").agg(count(lit(1)).as("cnt"))
+          when(col("l_returnflag") === "R", 1).otherwise(0).as("y")))
         val ab = Seq((a, b)).toDF("ca", "cb") // broadcast params, as in irlsBeta
         val mu = (lit(1.0) / (lit(1.0) + exp(-(col("ca") + col("cb") * col("x")))))
           .cast("float")
-        val n = coalesce(sum(col("cnt")), lit(0L))
+        val cnt = col(Twin.CellN)
+        val n = coalesce(sum(cnt), lit(0L))
         cells.crossJoin(broadcast(ab))
-          .select(col("y"), col("cnt"), mu.cast("double").as("mu"))
-          .select(col("y"), col("cnt"), col("mu"),
+          .select(col("y"), cnt, mu.cast("double").as("mu"))
+          .select(col("y"), cnt, col("mu"),
             least(floor(col("mu") * 10).cast("int"), lit(9)).as("decile"))
           .groupBy("decile")
           .agg(n.as("n"),
-            round(T.xsum(col("mu"), col("cnt")) / n, 6).as("avg_pred"),
-            round(sum(col("y") * col("cnt")).cast("double") / n, 6).as("actual_rate"))
+            round(T.xsum(col("mu"), cnt) / n, 6).as("avg_pred"),
+            round(sum(col("y") * cnt).cast("double") / n, 6).as("actual_rate"))
           .orderBy("decile")
       },
       Some(s"""WITH $sqlIrlsChain,
