@@ -16,6 +16,8 @@ import java.util.concurrent.atomic.AtomicLong
   *     runs each query 3 times in one warmed session and prints wall,
   *     process CPU and task totals per rep. The cold−warm gap is one-shot
   *     driver work (analysis + Janino codegen); the warm floor is execution.
+  *     `pinned=` is how many persisted RDDs the rep left behind and their
+  *     bytes: a loop that never releases its rounds' pins shows up here.
   *   sbt "runMain graft.Harness plans <sfDir> <outDir> <tag> <query>..."
   *     writes each query's `explain("formatted")` to
   *     `<outDir>/<query>_<tag>.txt`, the plans the bench executes.
@@ -138,15 +140,20 @@ object Harness {
 
   private def profile(sfDir: String, names: Seq[String]): Unit = {
     val spark = session(cpus, sfDir)
-    val tt = TaskTotals.attach(spark.sparkContext)
+    val sc = spark.sparkContext
+    val tt = TaskTotals.attach(sc)
     for (name <- names; r <- 1 to 3) {
       val t0 = System.nanoTime(); val c0 = procCpu()
       val k0 = tt.tasks.get(); val tc0 = tt.cpuNs.get(); val tr0 = tt.runMs.get()
+      val pins0 = sc.getPersistentRDDs.keys.toSet
       SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count()
       val w = (System.nanoTime() - t0) / 1e9
+      val pins = sc.getPersistentRDDs.keys.toSet -- pins0
+      val pinned = sc.getRDDStorageInfo.filter(i => pins(i.id)).map(i => i.memSize + i.diskSize).sum
       println(f"[profile] $name%-28s rep$r wall=$w%7.2f cpu=${procCpu() - c0}%7.1f " +
         f"tasks=${tt.tasks.get() - k0}%6d taskCpu=${(tt.cpuNs.get() - tc0) / 1e9}%7.1f " +
-        f"taskRun=${(tt.runMs.get() - tr0) / 1e3}%7.1f")
+        f"taskRun=${(tt.runMs.get() - tr0) / 1e3}%7.1f " +
+        f"pinned=+${pins.size}%d/${pinned / 1048576.0}%.1fMiB")
     }
     spark.stop()
   }

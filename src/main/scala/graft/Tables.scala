@@ -204,6 +204,14 @@ object Tables {
     * later actions); keep freeze for flat single-loop rounds. */
   def pin(df: DataFrame): DataFrame = df.localCheckpoint(eager = true)
 
+  /** The third cut, for a frame bounded by the schema or the model (a
+    * 20-term factor, 5 event types, a 30-point layout): collect it and
+    * re-enter it as a literal relation with the same schema. It holds no
+    * executor blocks, so nothing outlives the query, and the doubles
+    * cross the driver unchanged. */
+  def local(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+
   /** The one session memo (VERDICT r6 #7 — "batch the three logreg
     * queries' shared fit"). The estimator queries follow the stateless
     * contract (every query re-derives its model from the tables), so a

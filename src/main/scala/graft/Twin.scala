@@ -228,22 +228,26 @@ object Twin {
     (1 to n).foldLeft(init)((prev, k) => T.freeze(step(prev, k)))
 
   /** A fixed-round loop whose rounds end in a driver-read normalizer (a
-    * power iteration): `step(prev, k)` yields the round's raw product,
-    * which is pinned ([[Tables.pin]]) because `normalize` reads it more
-    * than once — it collects its scalars (a mean, a norm) from the product
-    * as driver-held literals and maps the product to the next state. A
-    * literal, unlike an in-plan broadcast of the aggregate, does not
-    * re-run the round's subtree per reference when AQE is off, and it is
-    * bit-neutral: the same exact-wire value feeds the same division.
-    * Round k-1's pin is released once round k's has materialized, so the
-    * loop returns holding one round's pin, not n. */
+    * power iteration): `step(prev, k, pin)` yields the round's raw
+    * product, which is pinned ([[Tables.pin]]) because `normalize` reads
+    * it more than once — it collects its scalars (a mean, a norm) from the
+    * product as driver-held literals and maps the product to the next
+    * state. A literal, unlike an in-plan broadcast of the aggregate, does
+    * not re-run the round's subtree per reference when AQE is off, and it
+    * is bit-neutral: the same exact-wire value feeds the same division.
+    * A step that reads one of its own intermediates twice pins it through
+    * the round's `pin`, never [[Tables.pin]]: it belongs to the round.
+    * Round k-1's pins are released once round k's product has
+    * materialized, so the loop returns holding one round's pins, not n. */
   def rounds(init: DataFrame, n: Int, normalize: DataFrame => DataFrame)(
-      step: (DataFrame, Int) => DataFrame): DataFrame = {
-    val (_, last) = (1 to n).foldLeft((Option.empty[DataFrame], init)) {
+      step: (DataFrame, Int, DataFrame => DataFrame) => DataFrame): DataFrame = {
+    val (_, last) = (1 to n).foldLeft((Seq.empty[DataFrame], init)) {
       case ((held, prev), k) =>
-        val raw = T.pin(step(prev, k))
+        val pins = Seq.newBuilder[DataFrame]
+        val pin = (df: DataFrame) => { val p = T.pin(df); pins += p; p }
+        val raw = pin(step(prev, k, pin))
         held.foreach(release)
-        (Some(raw), normalize(raw))
+        (pins.result(), normalize(raw))
     }
     last
   }

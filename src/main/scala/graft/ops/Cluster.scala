@@ -2,9 +2,10 @@ package graft.ops
 
 import graft.{QueryDef, Tables => T, Twin}
 import graft.functions.Vec
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 /** Density clustering + neighborhood-graph construction (r6, second half) —
   * the two cuML surfaces still missing next to k-means/kNN/PCA: DBSCAN
@@ -88,6 +89,35 @@ object Cluster {
       .select(col("vec_id").as("id"),
         element_at(col("embedding"), 1).cast("double").as("x"),
         element_at(col("embedding"), 2).cast("double").as("y"))
+
+  /** The driver side of the distributed manifold trails
+    * (ml_umap_distributed, ml_tsne_distributed): 3 pinned [[Twin.rounds]]
+    * rounds over the coordinate table, starting from `pts0` (id, x, y)
+    * pinned. `step(pts, it, pin)` returns the round's raw (id, x, y, x1,
+    * y1) product and the one-row edge aggregate it collected from the
+    * pair table it pinned through `pin`; the normalizer collects the
+    * round's (np, ss) step scalars from the product. The trail comes back
+    * as a literal frame (iter, <edge aggregate>, np, ss), so no trail row
+    * reaches back into a released round. */
+  private def manifoldTrail(pts0: DataFrame)(
+      step: (DataFrame, Int, DataFrame => DataFrame) => (DataFrame, Row)): DataFrame = {
+    val (edge, st) = (Seq.newBuilder[Row], Seq.newBuilder[Row])
+    Twin.rounds(T.pin(pts0), 3, raw => {
+      st += raw.agg(count(lit(1)).as("np"), T.xsum(expr(
+        "sqrt((x1 - x) * (x1 - x) + (y1 - y) * (y1 - y))")).as("ss")).collect()(0)
+      raw.selectExpr("id", "x1 AS x", "y1 AS y")
+    }) { (pts, it, pin) =>
+      val (raw, e) = step(pts, it, pin)
+      edge += e
+      raw
+    }
+    val rows = edge.result().zip(st.result())
+    pts0.sparkSession.createDataFrame(
+      java.util.Arrays.asList(rows.zipWithIndex.map { case ((e, t), i) =>
+        Row.fromSeq((i + 1) +: (e.toSeq ++ t.toSeq)) }: _*),
+      StructType(StructField("iter", IntegerType, nullable = false) +:
+        (rows.head._1.schema.fields ++ rows.head._2.schema.fields)))
+  }
 
   /** The fuzzy-simplicial-set dataflow shared by ml_umap_graph (which
     * emits it) and ml_umap_layout (which descends on it): k = 3 directed
@@ -350,8 +380,7 @@ object Cluster {
     * collect is bounded by construction, never corpus-sized. */
   private[graft] def boruvkaMst(
       s: SparkSession, mr: DataFrame, localFinish: Long = 1024L): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+    import org.apache.spark.sql.types.{DoubleType, LongType}
     var ce = T.pin(mr.selectExpr("a AS cu", "b AS cv", "a", "b", "w"))
     var mst: DataFrame = null
     var rounds = 0
@@ -364,23 +393,9 @@ object Cluster {
           .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
             r.getDouble(4)))
           .sortBy { case (_, _, a, b, w) => (w, a, b) }
-        val parent = scala.collection.mutable.Map[Long, Long]()
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.getOrElse(r, r) != r) r = parent(r)
-          var c = x
-          while (parent.getOrElse(c, c) != c) {
-            val nx = parent(c); parent(c) = r; c = nx
-          }
-          r
-        }
+        val uf = new Dedup.MinUnionFind
         val picked = rows.flatMap { case (cu, cv, a, b, w) =>
-          val ru = find(cu); val rv = find(cv)
-          if (ru == rv) None
-          else {
-            parent(math.max(ru, rv)) = math.min(ru, rv)
-            Some(Row(a, b, w))
-          }
+          if (uf.union(cu, cv)) Some(Row(a, b, w)) else None
         }
         val local = s.createDataFrame(
           java.util.Arrays.asList(picked.toIndexedSeq: _*),
@@ -645,7 +660,7 @@ object Cluster {
         .collect()(0).getDouble(0)
       cx.select(col("u"), (col("xc") / lit(nrm)).as("x"))
     }
-    Twin.rounds(init, PIC_ROUNDS, center) { (x, _) =>
+    Twin.rounds(init, PIC_ROUNDS, center) { (x, _, _) =>
       nbr.join(x.selectExpr("u AS v", "x"), "v")
         .groupBy("u").agg(T.xsum(col("x")).as("sx"))
         .join(deg, "u").selectExpr("u", s"$PIC_STEP AS x")
@@ -2294,7 +2309,7 @@ object Cluster {
       // pair iterates a driver-held 30-point literal layout; this query
       // proves the distributed form those comments promise). The
       // coordinate table covers EVERY embedding and never reaches the
-      // driver: per round it is T.pin'd (freeze-with-checkpoint), the
+      // driver: each round is one pinned Twin.rounds round, the
       // attraction edges come from the eps-grid neighbor graph (uniform
       // weight — the calibrated membership weights are ml_umap_graph's
       // layer; this row proves the descent PLUMBING) and join the
@@ -2319,10 +2334,8 @@ object Cluster {
         val ed = ep.selectExpr("a AS i", "b AS j")
           .unionAll(ep.selectExpr("b AS i", "a AS j"))
         val negC = broadcast(Seq(1, 2).toDF("c"))
-        var pts = T.pin(pts0)
-        val trail = scala.collection.mutable.ArrayBuffer[DataFrame]()
-        for (it <- 1 to 3) {
-          val jdF = T.pin(ed
+        manifoldTrail(pts0) { (pts, it, pin) =>
+          val jdF = pin(ed
             .join(pts.selectExpr("id AS i", "x AS xi", "y AS yi"), "i")
             .join(pts.selectExpr("id AS j", "x AS xj", "y AS yj"), "j")
             .selectExpr("i", "xi", "yi", "xj", "yj",
@@ -2346,22 +2359,17 @@ object Cluster {
             .groupBy("i")
             .agg(count(lit(1)).as("nk"),
               T.xsum(col("rx")).as("rx"), T.xsum(col("ry")).as("ry"))
-          val nxt = T.pin(pts
+          val ce = jdF.agg(T.xsum(
+            expr("CAST(CAST(ln(1e0 + d2) AS FLOAT) AS DOUBLE)")).as("cea")).collect()(0)
+          (pts
             .join(att.withColumnRenamed("i", "id"), Seq("id"), "left")
             .join(rep.withColumnRenamed("i", "id"), Seq("id"), "left")
             .selectExpr("id", "x", "y",
               "x + 1e-1 * (coalesce(ax, 0e0) + coalesce(rx / nk, 0e0)) AS x1",
-              "y + 1e-1 * (coalesce(ay, 0e0) + coalesce(ry / nk, 0e0)) AS y1"))
-          val ce = jdF.agg(T.xsum(
-            expr("CAST(CAST(ln(1e0 + d2) AS FLOAT) AS DOUBLE)")).as("cea"))
-          val st = nxt.agg(count(lit(1)).as("np"),
-            T.xsum(expr(
-              "sqrt((x1 - x) * (x1 - x) + (y1 - y) * (y1 - y))")).as("ss"))
-          trail += ce.crossJoin(st).selectExpr(s"$it AS iter", "np AS n_pts",
-            "round(cea, 6) AS ce_att", "round(ss / np, 6) AS mean_step")
-          pts = nxt.selectExpr("id", "x1 AS x", "y1 AS y")
-        }
-        trail.reduce(_ unionAll _).orderBy("iter")
+              "y + 1e-1 * (coalesce(ay, 0e0) + coalesce(ry / nk, 0e0)) AS y1"), ce)
+        }.selectExpr("iter", "np AS n_pts",
+          "round(cea, 6) AS ce_att", "round(ss / np, 6) AS mean_step")
+          .orderBy("iter")
       },
       Some {
         def stepCtes(k: Int): String = {
@@ -2428,7 +2436,8 @@ object Cluster {
       // t-SNE sibling of ml_umap_distributed (r10 — completes the
       // distributed manifold PAIR): the KL gradient 4Σ(p−q)·w·(y_i−y_j)
       // with the Student-t kernel w = 1/(1+d²), run over EVERY embedding
-      // with the coordinate table pinned per round and never collected.
+      // with the coordinate table pinned per round ([[manifoldTrail]])
+      // and never collected.
       // p is uniform 1/m over the directed eps-graph edges (the
       // perplexity-calibrated P is ml_tsne_affinity's layer); q = w/W
       // needs the GLOBAL normalizer W = Σ_{k≠l} w_kl — the quantity
@@ -2449,10 +2458,8 @@ object Cluster {
           .unionAll(ep.selectExpr("b AS i", "a AS j"))
         val m = ed.count()
         val negC = broadcast(Seq(1, 2).toDF("c"))
-        var pts = T.pin(pts0)
-        val trail = scala.collection.mutable.ArrayBuffer[DataFrame]()
-        for (it <- 1 to 3) {
-          val jdF = T.pin(ed
+        manifoldTrail(pts0) { (pts, it, pin) =>
+          val jdF = pin(ed
             .join(pts.selectExpr("id AS i", "x AS xi", "y AS yi"), "i")
             .join(pts.selectExpr("id AS j", "x AS xj", "y AS yj"), "j")
             .selectExpr("i", "xi", "yi", "xj", "yj",
@@ -2462,7 +2469,7 @@ object Cluster {
               s"(w / ${m}e0) * (yj - yi) AS ay")
             .groupBy("i")
             .agg(T.xsum(col("ax")).as("ax"), T.xsum(col("ay")).as("ay"))
-          val rpF = T.pin(pts.selectExpr("id AS i", "x AS xi", "y AS yi")
+          val rpF = pin(pts.selectExpr("id AS i", "x AS xi", "y AS yi")
             .crossJoin(negC)
             .selectExpr("i", "xi", "yi",
               s"(i * 48271 + c * 16807 + $it) % ${T.HASH_P} % ${n}L AS k")
@@ -2479,22 +2486,16 @@ object Cluster {
             .groupBy("i")
             .agg(count(lit(1)).as("nk"),
               T.xsum(col("rx")).as("rx"), T.xsum(col("ry")).as("ry"))
-          val nxt = T.pin(pts
+          val cw = jdF.agg(T.xsum(col("w")).as("sw")).collect()(0)
+          (pts
             .join(att.withColumnRenamed("i", "id"), Seq("id"), "left")
             .join(rep.withColumnRenamed("i", "id"), Seq("id"), "left")
             .selectExpr("id", "x", "y",
               "x + 8e1 * (coalesce(ax, 0e0) + coalesce(rx / nk, 0e0)) AS x1",
-              "y + 8e1 * (coalesce(ay, 0e0) + coalesce(ry / nk, 0e0)) AS y1"))
-          val cw = jdF.agg(T.xsum(col("w")).as("sw"))
-          val st = nxt.agg(count(lit(1)).as("np"),
-            T.xsum(expr(
-              "sqrt((x1 - x) * (x1 - x) + (y1 - y) * (y1 - y))")).as("ss"))
-          trail += cw.crossJoin(st).selectExpr(s"$it AS iter", "np AS n_pts",
-            s"round(sw / ${m}e0, 6) AS mean_edge_w",
-            "round(ss / np, 6) AS mean_step")
-          pts = nxt.selectExpr("id", "x1 AS x", "y1 AS y")
-        }
-        trail.reduce(_ unionAll _).orderBy("iter")
+              "y + 8e1 * (coalesce(ay, 0e0) + coalesce(ry / nk, 0e0)) AS y1"), cw)
+        }.selectExpr("iter", "np AS n_pts",
+          s"round(sw / ${m}e0, 6) AS mean_edge_w", "round(ss / np, 6) AS mean_step")
+          .orderBy("iter")
       },
       Some {
         def stepCtes(k: Int): String = {
@@ -2723,13 +2724,11 @@ object Cluster {
       // rounds, the dedup_cluster discipline) with sampled negatives; the
       // bounded-sample form is the oracle-checkable reference.
       (s, dir) => {
-        def lit2(df: DataFrame): DataFrame =
-          s.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
-        val ew = lit2(umapGraph(s, dir)
+        val ew = T.local(umapGraph(s, dir)
           .selectExpr("a", "b", "uab + uba - uab * uba AS w"))
         val ed = ew.selectExpr("a AS i", "b AS j", "w")
           .unionAll(ew.selectExpr("b AS i", "a AS j", "w"))
-        var pts = lit2(plane(s, dir).where(col("id") < 30).select("id", "x", "y"))
+        var pts = T.local(plane(s, dir).where(col("id") < 30).select("id", "x", "y"))
         val trail = scala.collection.mutable.ArrayBuffer[DataFrame]()
         for (it <- 1 to 5) {
           def jd = ed
@@ -2753,7 +2752,7 @@ object Cluster {
             .groupBy("i")
             .agg(count(lit(1)).as("nk"),
               T.xsum(col("rx")).as("rx"), T.xsum(col("ry")).as("ry"))
-          val nxt = lit2(pts
+          val nxt = T.local(pts
             .join(att.withColumnRenamed("i", "id"), Seq("id"), "left")
             .join(rep.withColumnRenamed("i", "id"), Seq("id"))
             .selectExpr("id", "x", "y",
@@ -2847,13 +2846,11 @@ object Cluster {
       // standard t-SNE would add momentum + gains, out of scope for the
       // reference form).
       (s, dir) => {
-        def lit2(df: DataFrame): DataFrame =
-          s.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
-        val ew = lit2(tsneAffinity(s, dir)
+        val ew = T.local(tsneAffinity(s, dir)
           .selectExpr("a", "b", "(uab + uba) / 60e0 AS p"))
         val ed = ew.selectExpr("a AS i", "b AS j", "p")
           .unionAll(ew.selectExpr("b AS i", "a AS j", "p"))
-        var pts = lit2(plane(s, dir).where(col("id") < 30).select("id", "x", "y"))
+        var pts = T.local(plane(s, dir).where(col("id") < 30).select("id", "x", "y"))
         val wt = Window.partitionBy()
         val trail = scala.collection.mutable.ArrayBuffer[DataFrame]()
         for (it <- 1 to 5) {
@@ -2870,7 +2867,7 @@ object Cluster {
               "4e0 * (p - w / bigw) * w * (yi - yj) AS gy")
             .groupBy("i")
             .agg(T.xsum(col("gx")).as("gx"), T.xsum(col("gy")).as("gy"))
-          val nxt = lit2(pts.join(g.withColumnRenamed("i", "id"), Seq("id"))
+          val nxt = T.local(pts.join(g.withColumnRenamed("i", "id"), Seq("id"))
             .selectExpr("id", "x", "y",
               "x - 20e0 * gx AS x1", "y - 20e0 * gy AS y1"))
           val kl = jd.agg(T.xsum(expr(
@@ -3485,26 +3482,26 @@ object Cluster {
           .select(col("user_id").as("u"), col("event_type").as("t"))
           .distinct())
         val users = edges.select(col("u")).distinct()
-        // per-half-round L1 norms are COLLECTED as driver literals (r13 —
-        // the r12 picEmbed discipline): carried as in-plan broadcast
-        // one-row frames, each norm's BroadcastExchange re-executed the
-        // half-round's join+aggregate subtree under the AQE-off harness;
-        // the collect is bit-neutral (the same exact-wire aggregate value
-        // feeds the same division) and each half-round is pinned so the
-        // next starts from a flat leaf
-        var hub = T.pin(users
-          .crossJoin(broadcast(users.agg(count(lit(1)).as("nu"))))
-          .selectExpr("u", "1e0 / nu AS h"))
+        // one pinned Twin.rounds round per mutual-reinforcement round, with
+        // the hub table as its state. Each half-round's L1 norm is
+        // collected as a driver literal (the picEmbed discipline:
+        // bit-neutral, the same exact-wire value feeds the same division).
+        // The authority side is bounded by the schema (5 event types at
+        // every scale), so it crosses the driver whole as a literal frame
+        // and the round's one pin is the raw hub product.
         var auth: DataFrame = null
-        for (_ <- 1 to HITS_ROUNDS) {
-          val araw = T.pin(edges.join(hub, "u")
+        val init = users.crossJoin(broadcast(users.agg(count(lit(1)).as("nu"))))
+          .selectExpr("u", "1e0 / nu AS h")
+        val l1 = (hraw: DataFrame) => {
+          val nh = hraw.agg(T.xsum(col("h"))).collect()(0).getDouble(0)
+          hraw.select(col("u"), (col("h") / lit(nh)).as("h"))
+        }
+        val hub = Twin.rounds(init, HITS_ROUNDS, l1) { (prev, _, _) =>
+          val araw = T.local(edges.join(prev, "u")
             .groupBy("t").agg(T.xsum(col("h")).as("a")))
           val na = araw.agg(T.xsum(col("a"))).collect()(0).getDouble(0)
           auth = araw.select(col("t"), (col("a") / lit(na)).as("a"))
-          val hraw = T.pin(edges.join(auth, "t")
-            .groupBy("u").agg(T.xsum(col("a")).as("h")))
-          val nh = hraw.agg(T.xsum(col("h"))).collect()(0).getDouble(0)
-          hub = hraw.select(col("u"), (col("h") / lit(nh)).as("h"))
+          edges.join(auth, "t").groupBy("u").agg(T.xsum(col("a")).as("h"))
         }
         val authOut = auth.selectExpr("'auth' AS side", "t AS id",
           "round(a, 6) AS score")

@@ -148,6 +148,27 @@ object Dedup {
       .orderBy("doc_a", "doc_b")
   }
 
+  /** Min-label union-find over driver-held vertices, path-compressing:
+    * every set's root is its smallest member. The local finish of
+    * [[minLabelComponents]] and of [[Cluster.boruvkaMst]]'s Kruskal. */
+  private[ops] final class MinUnionFind {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent(r)
+      var c = x
+      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    /** Joins the sets of `a` and `b`; false when they were one set already. */
+    def union(a: Long, b: Long): Boolean = {
+      parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      ra != rb
+    }
+  }
+
   /** Min-label connected components over an undirected pair list
     * (doc_a, doc_b) → (v, lbl = component min), shared by dedup_cluster,
     * dedup_pipeline, ml_dbscan, and ml_hdbscan_reach (r6 review: the loop
@@ -192,22 +213,11 @@ object Dedup {
     // unchanged.
     if (p2.count() <= localFinish) {
       val es = p2.collect().map(r => (r.getLong(0), r.getLong(1)))
-      val parent = scala.collection.mutable.Map.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent(r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      for ((a, b) <- es) {
-        parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-      }
+      val uf = new MinUnionFind
+      for ((a, b) <- es) uf.union(a, b)
       val spark = p2.sparkSession
       import spark.implicits._
-      val lblDf = parent.keys.toSeq.map(v => (v, find(v))).toDF("v", "lbl")
+      val lblDf = uf.parent.keys.toSeq.map(v => (v, uf.find(v))).toDF("v", "lbl")
       return vertices match {
         case Some(vs) => vs.toDF("v")
           .join(broadcast(lblDf), Seq("v"), "left")

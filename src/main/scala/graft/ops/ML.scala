@@ -2774,29 +2774,31 @@ object ML {
       // the fixed-width μ-decile of ml_logreg_predict collapses to ONE
       // bucket on this weak-signal fit (measured; and with an intercept,
       // Σμ = Σy over the whole sample makes single-bucket ECE exactly 0
-      // — the score equation, not calibration). One scoring pass + one
-      // bounded aggregate; gaps are deterministic ratios on the exact
-      // wire.
+      // — the score equation, not calibration). One scoring pass over the
+      // (x, y) [[Twin.cells]], every sum weighted by the cell's row count
+      // (the ml_logreg_predict pass), + one bounded aggregate; gaps are
+      // deterministic ratios on the exact wire.
       (s, dir) => {
         val spark = s
         import spark.implicits._
         val (a, b) = irlsBeta(s, dir)
-        val d = T.lineitem(s, dir).select(
+        val cells = Twin.cells(T.lineitem(s, dir).select(
           col("l_quantity").cast("double").as("x"),
-          when(col("l_returnflag") === "R", 1).otherwise(0).as("y"))
-          .transform(T.fanOut(_))
+          when(col("l_returnflag") === "R", 1).otherwise(0).as("y")))
         val ab = Seq((a, b)).toDF("ca", "cb")
         val mu = (lit(1.0) / (lit(1.0) + exp(-(col("ca") + col("cb") * col("x")))))
           .cast("float")
+        val cnt = col(Twin.CellN)
+        val nb = coalesce(sum(cnt), lit(0L))
         val wg = Window.partitionBy()
-        d.crossJoin(broadcast(ab))
-          .select(col("y"), col("x"), mu.cast("double").as("mu"))
-          .select(col("y"), col("mu"),
+        cells.crossJoin(broadcast(ab))
+          .select(col("y"), col("x"), cnt, mu.cast("double").as("mu"))
+          .select(col("y"), cnt, col("mu"),
             least(floor(col("x") / 5).cast("int"), lit(9)).as("decile"))
           .groupBy("decile")
-          .agg(count(lit(1)).as("nb"),
-            (T.xsum(col("mu")) / count(lit(1))).as("avg_pred"),
-            (sum(col("y")).cast("double") / count(lit(1))).as("actual"))
+          .agg(nb.as("nb"),
+            (T.xsum(col("mu"), cnt) / nb).as("avg_pred"),
+            (sum(col("y") * cnt).cast("double") / nb).as("actual"))
           .select(col("nb"), col("avg_pred"), col("actual"),
             sum(col("nb")).over(wg).as("n"))
           .selectExpr(

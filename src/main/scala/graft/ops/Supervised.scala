@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{QueryDef, Tables => T}
+import graft.{QueryDef, Tables => T, Twin}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1811,81 +1811,36 @@ object Supervised {
       // so round 1 from the zero vector updates on every row. Emits the
       // per-round PRE-UPDATE error rate and post-update weights — the
       // descent trace a training log shows. Gradient sums ride the exact
-      // wire; margin and update texts are shared verbatim.
+      // wire; margin and update texts are shared verbatim. The rounds are
+      // one Twin.Fit ([[pcFit]]) over the (y, q, dc) cells; the error rate
+      // rides as a parameter whose next value is the step's nmis / n.
       (s, dir) => {
-        val base = T.lineitemFit(s, dir).select(
+        val spark = s
+        import spark.implicits._
+        Twin.fit(T.lineitemFit(s, dir).select(
           expr("CASE WHEN l_extendedprice > 20000 THEN 1e0 ELSE -1e0 END").as("y"),
           (col("l_quantity").cast("double") * lit(0.1)).as("q"),
-          (col("l_discount").cast("double") * lit(10.0)).as("dc"))
-        var w = s.sql("SELECT 0e0 AS wi, 0e0 AS wq, 0e0 AS wd")
-        def d2s(x: Double) = java.lang.Double.toString(x)
-        val rounds = (1 to 3).map { k =>
-          // pin the 1-row gradient: round k's aggregate is referenced by
-          // BOTH the weight update and the output arm, and round k+1's
-          // margin chains through it — without the pin the 3 union arms
-          // re-run 6 corpus scans instead of 3
-          val g = T.pin(base.crossJoin(broadcast(w))
-            .selectExpr("y", "q", "dc",
-              s"CASE WHEN $pcMargin <= 0e0 THEN 1e0 ELSE 0e0 END AS mis")
-            .agg(count(lit(1)).cast("double").as("n"),
-              T.xsum(col("mis")).as("nmis"),
-              T.xsum(col("mis") * col("y")).as("gi"),
-              T.xsum(col("mis") * col("y") * col("q")).as("gq"),
-              T.xsum(col("mis") * col("y") * col("dc")).as("gd")))
-          // the updated weights are RE-LITERALIZED as a driver-held local
-          // relation (r13 — the picEmbed discipline): the old chained
-          // g.crossJoin(broadcast(w_prev)) carried every prior round in
-          // the broadcast subtree, which re-executes under the AQE-off
-          // harness. Bit-neutral: the update runs in the SAME Spark
-          // double ops over the pinned aggregate, and Double.toString →
-          // CAST(... AS DOUBLE) round-trips the IEEE value exactly.
-          val wrow = g.crossJoin(w).selectExpr(
-            s"wi + $PC_ETA * (gi / n) AS wi",
-            s"wq + $PC_ETA * (gq / n) AS wq",
-            s"wd + $PC_ETA * (gd / n) AS wd").collect()(0)
-          w = s.sql(s"SELECT CAST('${d2s(wrow.getDouble(0))}' AS DOUBLE) AS wi, " +
-            s"CAST('${d2s(wrow.getDouble(1))}' AS DOUBLE) AS wq, " +
-            s"CAST('${d2s(wrow.getDouble(2))}' AS DOUBLE) AS wd")
-          g.crossJoin(w).selectExpr(s"$k AS step",
-            "round(nmis / n, 6) AS err_rate",
-            "round(wi, 6) AS w_intercept", "round(wq, 6) AS w_quantity",
-            "round(wd, 6) AS w_discount")
-        }
-        rounds.reduce(_ unionAll _).orderBy("step")
+          (col("l_discount").cast("double") * lit(10.0)).as("dc")), pcFit)
+          .zipWithIndex.map { case (Array(wi, wq, wd, err), i) =>
+            // the weights round as literals and fold to non-null columns;
+            // the error rate rounds from a column of a local relation,
+            // which range(1) keeps from being evaluated into one, so it
+            // stays nullable: the row-level loop's schema
+            Seq(err).toDF("err").crossJoin(s.range(1)).select(lit(i + 1).as("step"),
+              round(col("err"), 6).as("err_rate"), round(lit(wi), 6).as("w_intercept"),
+              round(lit(wq), 6).as("w_quantity"), round(lit(wd), 6).as("w_discount"))
+          }.reduce(_ unionAll _).orderBy("step")
       },
-      Some {
-        def round(k: Int): String = {
-          val prev = if (k == 1) "w0" else s"w${k - 1}"
-          s"""g$k AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-                ${T.sqlXsum("mis")} AS nmis,
-                ${T.sqlXsum("mis * y")} AS gi,
-                ${T.sqlXsum("mis * y * q")} AS gq,
-                ${T.sqlXsum("mis * y * dc")} AS gd
-              FROM (SELECT y, q, dc,
-                      CASE WHEN $pcMargin <= 0e0 THEN 1e0 ELSE 0e0 END AS mis
-                    FROM base, $prev) z),
-              w$k AS (SELECT wi + $PC_ETA * (gi / n) AS wi,
-                  wq + $PC_ETA * (gq / n) AS wq,
-                  wd + $PC_ETA * (gd / n) AS wd
-                FROM g$k, $prev)"""
-        }
-        s"""WITH base AS (SELECT
+      Some(s"""WITH base AS (SELECT
                CASE WHEN l_extendedprice > 20000 THEN 1e0 ELSE -1e0 END AS y,
                CAST(l_quantity AS DOUBLE) * 0.1 AS q,
                CAST(l_discount AS DOUBLE) * 10.0 AS dc
              FROM lineitem),
-             w0 AS (SELECT 0e0 AS wi, 0e0 AS wq, 0e0 AS wd),
-             ${(1 to 3).map(round).mkString(",\n             ")}
-           SELECT 1 AS step, round(nmis / n, 6) AS err_rate,
+             ${Twin.sqlFit(pcFit, "base", "w")}
+           ${(1 to pcFit.iters).map(k => s"""SELECT $k AS step, round(err, 6) AS err_rate,
                round(wi, 6) AS w_intercept, round(wq, 6) AS w_quantity,
-               round(wd, 6) AS w_discount
-             FROM g1, w1
-           UNION ALL SELECT 2, round(nmis / n, 6), round(wi, 6),
-               round(wq, 6), round(wd, 6) FROM g2, w2
-           UNION ALL SELECT 3, round(nmis / n, 6), round(wi, 6),
-               round(wq, 6), round(wd, 6) FROM g3, w3
-           ORDER BY step"""
-      })
+               round(wd, 6) AS w_discount FROM w$k""").mkString("\n           UNION ALL ")}
+           ORDER BY step"""))
   )
 
   /** Perceptron margin/update shared texts: the margin reads the PREVIOUS
@@ -1893,6 +1848,18 @@ object Supervised {
     * the mean-gradient update. */
   private lazy val pcMargin = "y * (wi + wq * q + wd * dc)"
   private lazy val PC_ETA = "1e0"
+
+  /** The batch perceptron, 3 rounds from w = 0: `err` is each round's
+    * pre-update error rate, riding along as a parameter. */
+  private lazy val pcFit: Twin.Fit = Twin.Fit(
+    Seq("wi" -> 0.0, "wq" -> 0.0, "wd" -> 0.0, "err" -> 0.0),
+    Seq("mis" -> s"CASE WHEN $pcMargin <= 0e0 THEN 1e0 ELSE 0e0 END"),
+    Seq(Twin.count("n"), Twin.xsum("nmis", "mis"), Twin.xsum("gi", "mis * y"),
+      Twin.xsum("gq", "mis * y * q"), Twin.xsum("gd", "mis * y * dc")),
+    Nil,
+    Seq(s"wi + $PC_ETA * (gi / n)", s"wq + $PC_ETA * (gq / n)",
+      s"wd + $PC_ETA * (gd / n)", "nmis / n"),
+    3)
 
   /** Column-name-safe suffix for a split-candidate value (10.0 → 10_0,
     * 0.02 → 0_02) — shared by the Spark aggregate aliases and the oracle

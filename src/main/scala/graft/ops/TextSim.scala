@@ -981,7 +981,7 @@ object TextSim {
           val nrm = vp.agg(sqrt(T.xsum(col("vp") * col("vp")))).collect()(0).getDouble(0)
           vp.select(col("term"), (col("vp") / lit(nrm)).as("v"))
         }
-        Twin.rounds(init, LSA_ROUNDS, l2) { (v, _) =>
+        Twin.rounds(init, LSA_ROUNDS, l2) { (v, _, _) =>
           val u = a.join(v, "term")
             .groupBy("doc_id").agg(T.xsum(col("w") * col("v")).as("u"))
           a.join(u, "doc_id")
@@ -1020,23 +1020,23 @@ object TextSim {
       // (doc_id, r, count). Each update round is the four standard
       // aggregates — WᵀW (2×2, one-row frame), WᵀV (vocab-keyed join +
       // groupBy), HHᵀ, VHᵀ (doc-keyed groupBy) — so a round costs two
-      // sparse-matmul shuffles exactly like one LSA power step; rounds
-      // are frozen flat. Every sum rides the exact decimal wire and the
+      // sparse-matmul shuffles exactly like one LSA power step. Every
+      // sum rides the exact decimal wire and the
       // update ratio h·(WᵀV)/(WᵀWH + ε) is shared text, so the factor
       // entries are bit-identical cross-engine. Vocabulary bounded to the
       // top-20 terms (count desc, term asc — deterministic ranks); init
       // is an affine-hash positive matrix, not an RNG. Output: H after
       // round 2 — the 20-term topic loading table.
       (s, dir) => {
-        // r14 (VERDICT r13 #1c — the pinned-frame discipline): the sparse
-        // V is referenced by FOUR matmuls (wv/vh × 2 rounds) and W by
-        // three — pin them (freeze replayed subtrees per reference under
-        // the AQE-off harness, the text_lsa_power lesson); the 2×2 Gram
-        // matrices are COLLECTED and re-enter as exact Double.toString
-        // literals (the picEmbed discipline — an in-plan broadcast of an
-        // unmaterialized aggregate re-executed the factor's whole subtree
-        // per reference). Bit-neutral: the same exact-wire values feed
-        // the same shared-text update ratio.
+        // the sparse V is referenced by FOUR matmuls (wv/vh × 2 rounds),
+        // so it is pinned before the loop. Each update round is one pinned
+        // Twin.rounds round with the doc-keyed W as its state; the 2×2
+        // Gram matrices are COLLECTED and re-enter as exact
+        // Double.toString literals, and the 20-row H crosses the driver
+        // whole as a literal frame (the picEmbed discipline — an in-plan
+        // broadcast of an unmaterialized aggregate re-executed the
+        // factor's whole subtree per reference). Bit-neutral: the same
+        // exact-wire values feed the same shared-text update ratio.
         val dt = docTermsPinned(s, dir)
         val vt = T.pin(dt.groupBy("term").agg(count(lit(1)).as("cnt"))
           .orderBy(col("cnt").desc, col("term")).limit(20)
@@ -1046,15 +1046,15 @@ object TextSim {
         val v = T.pin(dt.join(broadcast(vt), "term")
           .groupBy("doc_id", "r")
           .agg(count(lit(1)).cast("double").as("v")))
-        var w = T.pin(v.select("doc_id").distinct()
+        val init = v.select("doc_id").distinct()
           .selectExpr("doc_id",
             "CAST(1 + (doc_id * 31) % 7 AS DOUBLE) AS w0",
-            "CAST(1 + (doc_id * 31 + 17) % 7 AS DOUBLE) AS w1"))
+            "CAST(1 + (doc_id * 31 + 17) % 7 AS DOUBLE) AS w1")
         var h = vt.selectExpr("r",
           "CAST(1 + (r * 13) % 5 AS DOUBLE) AS h0",
           "CAST(1 + (r * 13 + 11) % 5 AS DOUBLE) AS h1")
         def D(x: Double) = java.lang.Double.toString(x)
-        for (_ <- 1 to NMF_ROUNDS) {
+        Twin.rounds(init, NMF_ROUNDS, identity) { (w, _, _) =>
           val ww = w.agg(T.xsum(col("w0") * col("w0")),
             T.xsum(col("w0") * col("w1")),
             T.xsum(col("w1") * col("w1"))).collect()(0)
@@ -1062,7 +1062,7 @@ object TextSim {
           val wv = v.join(w, "doc_id").groupBy("r")
             .agg(T.xsum(col("w0") * col("v")).as("wv0"),
               T.xsum(col("w1") * col("v")).as("wv1"))
-          h = T.pin(h.join(wv, "r")
+          h = T.local(h.join(wv, "r")
             .selectExpr("r",
               s"h0 * wv0 / ($s00 * h0 + $s01 * h1 + 1e-9) AS h0",
               s"h1 * wv1 / ($s01 * h0 + $s11 * h1 + 1e-9) AS h1"))
@@ -1073,10 +1073,10 @@ object TextSim {
           val vh = v.join(broadcast(h), "r").groupBy("doc_id")
             .agg(T.xsum(col("v") * col("h0")).as("vh0"),
               T.xsum(col("v") * col("h1")).as("vh1"))
-          w = T.pin(w.join(vh, "doc_id")
+          w.join(vh, "doc_id")
             .selectExpr("doc_id",
               s"w0 * vh0 / (w0 * $t00 + w1 * $t01 + 1e-9) AS w0",
-              s"w1 * vh1 / (w0 * $t01 + w1 * $t11 + 1e-9) AS w1"))
+              s"w1 * vh1 / (w0 * $t01 + w1 * $t11 + 1e-9) AS w1")
         }
         h.join(broadcast(vt), "r")
           .selectExpr("r", "term",

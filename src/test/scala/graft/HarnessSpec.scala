@@ -165,7 +165,7 @@ class HarnessSpec extends SparkSpec {
 
   test("structure: fixed-round loops run on Twin.rounds, their oracles on Twin.sqlRounds") {
     val inScope = Set("graft/ops/Dedup.scala", "graft/ops/Curation.scala",
-      "graft/ops/Cluster.scala", "graft/ops/TextSim.scala")
+      "graft/ops/Cluster.scala", "graft/ops/TextSim.scala", "graft/ops/Supervised.scala")
     assert(inScope subsetOf mainSources.keySet)
     // a hand-written round generator or a hand-listed unroll
     for (needle <- Seq("def round(", "def lpRound(", "def peel(", "roundCtes(", "${round(1)}"))

@@ -13,8 +13,8 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
   * replaced bit for bit — including what happens on a singular Hessian —
   * and its cell histogram reproduces the row-level loop on every wire.
   * The round loop equals the hand-written loop, its pinned form returns
-  * holding one round's pin, and the oracle unroll names round k from
-  * round k-1. */
+  * holding one round's pins, every query on that form holds a bounded
+  * number of pins, and the oracle unroll names round k from round k-1. */
 class TwinSpec extends SparkSpec {
 
   private def bits(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)
@@ -302,13 +302,25 @@ class TwinSpec extends SparkSpec {
   test("rounds: the pinned form returns holding one round's pin, and its result collects") {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
-    val twin = Twin.rounds(synthInit, 4, byMax)(synthStep)
+    val twin = Twin.rounds(synthInit, 4, byMax)((prev, r, _) => synthStep(prev, r))
     val added = sc.getPersistentRDDs.keySet -- before
     assert(added.size === 1, s"pins held after 4 rounds: $added")
     var hand = synthInit
     for (r <- 1 to 4) hand = byMax(T.pin(synthStep(hand, r)))
     assert(sorted(twin) === sorted(hand))
     assert(twin.count() === 40)
+    // a frame the step pins through the round's pin is released with the
+    // round: 4 rounds that each pin a second frame hold 2 pins, not 8
+    val mid = sc.getPersistentRDDs.keySet
+    val twice = Twin.rounds(synthInit, 4, byMax) { (prev, r, pin) =>
+      val half = pin(prev.selectExpr("k", "x / 2e0 AS x"))
+      synthStep(half.join(half.selectExpr("k"), "k"), r)
+    }
+    val held = sc.getPersistentRDDs.keySet -- mid
+    assert(held.size === 2, s"pins held after 4 rounds with a step pin: $held")
+    hand = synthInit
+    for (r <- 1 to 4) hand = byMax(T.pin(synthStep(hand.selectExpr("k", "x / 2e0 AS x"), r)))
+    assert(sorted(twice) === sorted(hand))
   }
 
   test("sqlRounds: round k reads k-1, rounds joined in order") {
@@ -327,10 +339,21 @@ class TwinSpec extends SparkSpec {
     (sc.getPersistentRDDs.keySet -- before).toSet
   }
 
-  test("ml_spectral_embed holds at most nbr, deg and its last round's pin") {
-    val added = pinsAddedBy("ml_spectral_embed")
-    assert(added.size <= 3, s"ml_spectral_embed left ${added.size} persisted RDDs: $added")
-  }
+  // A query on a pinned loop holds the pins it makes before its loop plus
+  // one round's; a loop that pins every round by hand holds one set per
+  // round.
+  for ((q, bound, what) <- Seq(
+      ("ml_spectral_embed", 3, "nbr, deg and its last round's pin"),
+      ("graph_hits", 2, "edges and its last round's hub product"),
+      ("ml_nmf", 4, "the doc-terms memo, vt, v and its last round's W"),
+      ("ml_umap_distributed", 4, "ep, the initial points and its last round's product and pairs"),
+      ("ml_tsne_distributed", 5,
+        "ep, the initial points and its last round's product, pairs and negatives"),
+      ("ml_perceptron", 1, "the lineitem fit memo; the fit releases its cells")))
+    test(s"$q holds at most $what") {
+      val added = pinsAddedBy(q)
+      assert(added.size <= bound, s"$q left ${added.size} persisted RDDs: $added")
+    }
 
   test("ml_spectral_cluster reads picEmbed's pins without pinning the embedding again") {
     val added = pinsAddedBy("ml_spectral_cluster")
