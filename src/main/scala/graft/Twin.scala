@@ -3,7 +3,8 @@ package graft
 import graft.{Tables => T}
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.functions.{broadcast, coalesce, col, expr, lit, sum, when, count => countRows}
+import org.apache.spark.sql.functions.{array, broadcast, coalesce, col, concat, explode, expr, lit,
+  struct, sum, when, count => countRows}
 import org.apache.spark.sql.types.{DoubleType, FloatType, StructField, StructType}
 
 /** The shared-text discipline, written once. graft fits follow the
@@ -17,10 +18,11 @@ import org.apache.spark.sql.types.{DoubleType, FloatType, StructField, StructTyp
   * verbatim on both sides (DuckDB's FLOAT is an alias of REAL, so a
   * `CAST(… AS FLOAT)` collapse reads the same in both).
   *
-  * [[gauss]] is the one unrolled elimination; [[Fit]] declares a
-  * driver-held iterative fit once, and [[fit]] / [[sqlFit]] run it in
-  * Spark, over the frame's cell histogram, and unroll it for the oracle,
-  * over the rows. [[rounds]] / [[sqlRounds]] do the
+  * [[gauss]] is the one unrolled elimination; [[Fit]] declares an
+  * iterative fit once, and [[fit]] / [[sqlFit]] run it in Spark, over the
+  * frame's cell histogram, and unroll it for the oracle, over the rows;
+  * [[trail]] is [[sqlFit]]'s Spark twin, the same unroll over the rows in
+  * one plan. [[rounds]] / [[sqlRounds]] do the
   * same for a fixed-round graph or power loop whose state is a table:
   * the round count, the oracle's CTE naming and the lineage cut of each
   * round are written here, not at the loop.
@@ -99,8 +101,10 @@ object Twin {
   def e12(name: String, text: String): Sum = Sum(name, E12, text)
   def count(name: String): Sum = Sum(name, Count, "")
 
-  /** A driver-held iterative fit, declared once for both engines.
-    *  - `params`: the driver-held parameters and their initial values.
+  /** An iterative fit, declared once for both engines: driver-held on
+    * [[fit]], carried in-plan on [[trail]].
+    *  - `params`: the parameters and their initial values ([[trail]]
+    *    takes its start from a frame instead).
     *    A parameter whose `next` is its own name is a fixed fit input
     *    that rides along (a penalty, another fit's coefficients).
     *  - `rows`: per-row steps over the frame × the parameters.
@@ -118,7 +122,7 @@ object Twin {
       iters: Int,
       where: Option[String] = None) {
     require(next.size == params.size, "one next-value text per parameter")
-    private[Twin] def names: Seq[String] = params.map(_._1)
+    def names: Seq[String] = params.map(_._1)
     private[Twin] def nextCols: Seq[String] =
       next.zip(names).map { case (ex, nm) => s"$ex AS $nm" }
   }
@@ -145,21 +149,65 @@ object Twin {
     val schema = StructType(f.names.map(StructField(_, DoubleType, nullable = false)))
     require(!(frame.columns ++ f.names ++ f.rows.map(_._1)).contains(CellN),
       s"$CellN is the cell count's name")
-    val aggs = f.sums.map(sparkSum)
-    val decoded = f.names ++ f.sums.map(s => decode(s, T.bitsE12))
+    val aggs = f.sums.map(cellSum)
     val pinned = T.pin(cells(frame))
     try (1 to f.iters).scanLeft(f.params.map(_._2).toArray) { (p, _) =>
       val pt = broadcast(spark.createDataFrame(
         java.util.Arrays.asList(Row.fromSeq(p.toSeq)), schema))
-      val crossed = pinned.crossJoin(pt)
-      val rows = chain(f.where.fold(crossed)(w => crossed.where(expr(w))), f.rows)
-      val r = chain(rows.agg(aggs.head, aggs.tail: _*).crossJoin(pt)
-          .selectExpr(decoded: _*), f.update)
-        .selectExpr(f.nextCols: _*)
-        .collect()(0)
+      val r = step(pinned.crossJoin(pt), f, aggs, _.crossJoin(pt)).collect()(0)
       Array.tabulate(f.names.size)(r.getDouble)
     }.tail
     finally release(pinned)
+  }
+
+  /** The Spark twin of [[sqlFit]]: `f` unrolled over the rows of `frame`
+    * in one plan, for a frame whose rows are nearly all distinct, where
+    * [[fit]]'s grouping buys nothing. The parameters are a one-row frame
+    * carried in-plan from `init` (round 0; its columns are `f`'s parameter
+    * names, and `f`'s own initial values are unused) through `f.iters`
+    * steps. Each step is [[fit]]'s, over the rows on the unweighted wires
+    * and with the previous step as its broadcast parameter table: no
+    * cells, no pin, no collect. Returns `(round, params…)`, one row per
+    * round 0..iters.
+    *
+    * A step reads the previous one twice (crossed with the rows, and with
+    * the sums), and Spark runs it once only when both reads plan the same
+    * subtree. Each read would be pruned to the parameters it uses, so a
+    * step's parameters, after every earlier round's, travel as one DOUBLE
+    * array that both reads take whole; a fit whose rows read no parameter
+    * would escape that and re-run the previous step. */
+  def trail(frame: DataFrame, f: Fit, init: DataFrame): DataFrame = {
+    require(!(frame.columns ++ f.names ++ f.rows.map(_._1)).contains(Held),
+      s"$Held is the trail's own column")
+    val aggs = f.sums.map(rowSum)
+    def round(k: Int) =
+      f.names.zipWithIndex.map { case (n, i) => s"$Held[${k * f.names.size + i}] AS $n" }
+    val last = (1 to f.iters).foldLeft(init.select(array(f.names.map(col): _*).as(Held))) { (p, k) =>
+      val pt = broadcast(p)
+      def cross(df: DataFrame, keep: String*) =
+        df.crossJoin(pt).selectExpr(df.columns.toSeq.map(c => s"`$c`") ++ round(k - 1) ++ keep: _*)
+      step(cross(frame), f, aggs, cross(_, Held), Seq(Held))
+        .select(concat(col(Held), array(f.names.map(col): _*)).as(Held))
+    }
+    last.select(explode(array((0 to f.iters).map(k =>
+        struct(lit(k).as("round") +: round(k).map(expr): _*)): _*)).as(Held))
+      .select(s"$Held.*")
+  }
+
+  /** [[trail]]'s parameter array: every round's parameters so far. */
+  private val Held = "twin_trail"
+
+  /** One step of `f`, shared by [[fit]] and [[trail]]: `where` and the row
+    * steps over `crossed` (the rows × the parameters), the sums `aggs`,
+    * `params` (which joins the parameters to the one-row sums), the
+    * decode, the update and the next values; the columns `keep` ride
+    * along. */
+  private def step(crossed: DataFrame, f: Fit, aggs: Seq[Column],
+      params: DataFrame => DataFrame, keep: Seq[String] = Nil): DataFrame = {
+    val rows = chain(f.where.fold(crossed)(w => crossed.where(expr(w))), f.rows)
+    chain(params(rows.agg(aggs.head, aggs.tail: _*))
+        .selectExpr(f.names ++ f.sums.map(s => decode(s, T.bitsE12)) ++ keep: _*), f.update)
+      .selectExpr(f.nextCols ++ keep: _*)
   }
 
   /** The name of a cell's row count in [[cells]]. */
@@ -190,8 +238,8 @@ object Twin {
       .select(restored :+ col(CellN): _*)
   }
 
-  /** The oracle twin of [[fit]]: `${p}0` holds the initial parameters
-    * (`init`, a SELECT, when they come from another CTE) and block k
+  /** The oracle twin of [[fit]] and [[trail]]: `${p}0` holds the initial
+    * parameters (`init`, a SELECT, when they come from another CTE) and block k
     * unrolls step k over the rows CTE `rows`, ending in the parameter CTE
     * `$p$k` — `$p${f.iters}` is the fitted model. Returns the CTE text. */
   def sqlFit(f: Fit, rows: String, p: String, init: Option[String] = None): String = {
@@ -214,6 +262,13 @@ object Twin {
     }
     (s"${p}0 AS ($p0)" +: blocks).mkString(",\n  ")
   }
+
+  /** The oracle twin of [[trail]]'s result over [[sqlFit]]'s CTEs named
+    * `p`: `(round, params…)` from `${p}0` .. `$p${f.iters}`, as one
+    * `UNION ALL` query. */
+  def sqlTrail(f: Fit, p: String): String =
+    (0 to f.iters).map(k => s"SELECT $k AS round, ${f.names.mkString(", ")} FROM $p$k")
+      .mkString("\n    UNION ALL ")
 
   /** A fixed-round loop over a table-valued state: `step(prev, k)` for
     * k = 1..n, starting from `init` as the caller built it. The lineage
@@ -267,10 +322,17 @@ object Twin {
     (1 to n).map(round).mkString(",\n  ")
 
   /** A sum over [[cells]]: each cell's addend counted n times. */
-  private def sparkSum(s: Sum): Column = s.wire match {
+  private def cellSum(s: Sum): Column = s.wire match {
     case XSum => T.xsum(expr(s.text), col(CellN)).as(s.name)
     case E12 => T.sumE12(expr(s.text), col(CellN)).as(s"s_${s.name}")
     case Count => coalesce(sum(col(CellN)), lit(0L)).cast(DoubleType).as(s.name)
+  }
+
+  /** A sum over rows, each counted once. */
+  private def rowSum(s: Sum): Column = s.wire match {
+    case XSum => T.xsum(expr(s.text)).as(s.name)
+    case E12 => T.sumE12(expr(s.text)).as(s"s_${s.name}")
+    case Count => countRows(lit(1)).cast(DoubleType).as(s.name)
   }
 
   private def sqlSum(s: Sum): String = s.wire match {

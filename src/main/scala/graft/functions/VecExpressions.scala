@@ -299,13 +299,15 @@ object Vec {
     * hash-match checks the helper independently: every `points` row
     * (aliased `p`, keyed `id`) crossed with the `cents(cid, c_emb)`
     * relation, ranked by `row_number() OVER (PARTITION BY id ORDER BY
-    * list_distance, cid)`; `p.*` plus cid, d and rn for rn ≤ k. */
+    * list_distance NULLS FIRST, cid)`; `p.*` plus cid, d and rn for
+    * rn ≤ k. A null or length-mismatched embedding scores null, as
+    * graft_vec_l2 does. */
   def sqlNearest(points: String, id: String, emb: String, k: Int,
       cents: String = "cent"): String = {
-    val d = s"list_distance(CAST(p.$emb AS DOUBLE[]), CAST(c.c_emb AS DOUBLE[]))"
+    val d = sqlGuard(L2, s"CAST(p.$emb AS DOUBLE[])", "CAST(c.c_emb AS DOUBLE[])")
     s"""SELECT * FROM (
           SELECT p.*, c.cid, $d AS d,
-            row_number() OVER (PARTITION BY p.$id ORDER BY $d, c.cid) AS rn
+            row_number() OVER (PARTITION BY p.$id ORDER BY $d NULLS FIRST, c.cid) AS rn
           FROM $points p CROSS JOIN $cents c) t
         WHERE rn <= $k"""
   }
@@ -373,17 +375,25 @@ object Vec {
     * checks the helper independently: the `queries` relation (`q_id`,
     * `q_emb`, …; a name or a parenthesized query) crossed with
     * `embeddings`, ranked by `row_number() OVER (PARTITION BY q_id ORDER
-    * BY <metric>, vec_id)`; `q.*` plus n_id, score and rn for rn ≤ k. */
+    * BY <metric>, vec_id)`; `q.*` plus n_id, score and rn for rn ≤ k. A
+    * null score ranks as in Spark: first ascending (spelled `NULLS
+    * FIRST`, DuckDB's default is last), last descending. */
   def sqlKnn(queries: String, metric: Metric, k: Int): String = {
-    val score = metric.sql("CAST(q.q_emb AS DOUBLE[])", "CAST(e.embedding AS DOUBLE[])")
+    val score = sqlGuard(metric, "CAST(q.q_emb AS DOUBLE[])", "CAST(e.embedding AS DOUBLE[])")
     s"""SELECT * FROM (
           SELECT q.*, e.vec_id AS n_id, $score AS score,
             row_number() OVER (PARTITION BY q.q_id
-              ORDER BY $score${if (metric.desc) " DESC" else ""}, e.vec_id) AS rn
+              ORDER BY $score${if (metric.desc) " DESC" else " NULLS FIRST"}, e.vec_id) AS rn
           FROM $queries q CROSS JOIN embeddings e
           WHERE q.q_id <> e.vec_id) t
         WHERE rn <= $k"""
   }
+
+  /** `metric`'s DuckDB twin, null where the Spark kernels give null: on a
+    * null list or a length mismatch, where DuckDB's list functions raise
+    * (or, for the exploded L1 sum, pad the shorter list). */
+  private def sqlGuard(metric: Metric, q: String, n: String): String =
+    s"CASE WHEN len($q) = len($n) THEN ${metric.sql(q, n)} END"
 
   def l1(s: SparkSession, a: String, b: String): Column = {
     register(s); expr(s"graft_vec_l1($a, $b)")

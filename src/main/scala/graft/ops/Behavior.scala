@@ -362,11 +362,7 @@ object Behavior {
         // (rx/rc)²) — per-d terms are identical doubles from exact ints;
         // the Σ_d rides the decimal wire.
         val c1 = risk0.where(col("m") > 0)
-          .select(
-            expr(s"CAST(($coxU0) AS DECIMAL(30,12))").as("ud"),
-            expr(s"CAST(($coxI0) AS DECIMAL(30,12))").as("id"))
-          .agg(sum(col("ud")).cast("double").as("u"),
-            sum(col("id")).cast("double").as("i"))
+          .agg(T.xsum(expr(coxU0)).as("u"), T.xsum(expr(coxI0)).as("i"))
           .selectExpr("u / i AS beta1")
         // step 2 at β₁: per-user weight w = REAL(exp(β₁·x)); risk sums of
         // (w, w·x, w·x²) are per-duration decimal sums cumulated by the
@@ -374,21 +370,17 @@ object Behavior {
         val wtd = dur.crossJoin(broadcast(c1))
           .withColumn("w", expr("CAST(CAST(exp(beta1 * x) AS REAL) AS DOUBLE)"))
         val byd2 = wtd.groupBy("d", "beta1").agg(
-          sum(expr("CAST(w AS DECIMAL(30,12))")).as("sw"),
-          sum(expr("CAST(w * x AS DECIMAL(30,12))")).as("swx"),
-          sum(expr("CAST(w * x * x AS DECIMAL(30,12))")).as("swxx"),
+          T.xsumD(col("w")).as("sw"),
+          T.xsumD(col("w") * col("x")).as("swx"),
+          T.xsumD(col("w") * col("x") * col("x")).as("swxx"),
           sum(col("e")).as("m"), sum(col("e") * col("x")).as("sex"))
         val risk1 = byd2
           .withColumn("rw", sum(col("sw")).over(wDesc).cast("double"))
           .withColumn("rwx", sum(col("swx")).over(wDesc).cast("double"))
           .withColumn("rwxx", sum(col("swxx")).over(wDesc).cast("double"))
         risk1.where(col("m") > 0)
-          .select(col("beta1"),
-            expr(s"CAST(($coxU1) AS DECIMAL(30,12))").as("ud"),
-            expr(s"CAST(($coxI1) AS DECIMAL(30,12))").as("id"))
           .groupBy("beta1")
-          .agg(sum(col("ud")).cast("double").as("u"),
-            sum(col("id")).cast("double").as("i"))
+          .agg(T.xsum(expr(coxU1)).as("u"), T.xsum(expr(coxI1)).as("i"))
           .selectExpr("round(beta1, 6) AS beta_step1",
             "round(beta1 + u / i, 6) AS beta_step2",
             "round(CAST(CAST(exp(beta1 + u / i) AS REAL) AS DOUBLE), 6) AS hazard_ratio")

@@ -76,11 +76,10 @@ object Cluster {
   }
 
   /** Average-BST path-length correction c(m) = 2(ln(m−1) + γ) − 2(m−1)/m
-    * (Liu et al. 2008 eq. 1) as shared text; `fl` = FLOAT (Spark) / REAL
-    * (DuckDB) for the ln collapse. */
-  private def ifoC(m: String, fl: String): String =
+    * (Liu et al. 2008 eq. 1) as shared text, ln FLOAT-collapsed. */
+  private def ifoC(m: String): String =
     s"(CASE WHEN $m <= 1 THEN 0e0 WHEN $m = 2 THEN 1e0 ELSE " +
-      s"2e0 * (CAST(CAST(ln(CAST($m AS DOUBLE) - 1e0) AS $fl) AS DOUBLE) + 5.772156649015329e-1) " +
+      s"2e0 * (CAST(CAST(ln(CAST($m AS DOUBLE) - 1e0) AS FLOAT) AS DOUBLE) + 5.772156649015329e-1) " +
       s"- 2e0 * (CAST($m AS DOUBLE) - 1e0) / CAST($m AS DOUBLE) END)"
 
   private def plane(s: SparkSession, dir: String): DataFrame =
@@ -2947,10 +2946,10 @@ object Cluster {
           .select(col("l_quantity").cast("double").as("x"))
           .transform(T.fanOut(_))
         d.crossJoin(broadcast(pars))
-          .selectExpr("*", s"${gmmPhi("m1", "v1", spark = true)} AS f1",
-            s"${gmmPhi("m2", "v2", spark = true)} AS f2")
+          .selectExpr("*", s"${gmmPhi("m1", "v1")} AS f1",
+            s"${gmmPhi("m2", "v2")} AS f2")
           .agg(count(lit(1)).cast("double").as("nd"),
-            T.xsum(expr(s"${gmmLnMix(spark = true)}")).as("sll"),
+            T.xsum(expr(gmmLnMix)).as("sll"),
             first(col("p1")).as("p1"), first(col("m1")).as("m1"),
             first(col("v1")).as("v1"), first(col("m2")).as("m2"),
             first(col("v2")).as("v2"))
@@ -2961,12 +2960,12 @@ object Cluster {
       },
       Some(s"""WITH d AS (SELECT CAST(l_quantity AS DOUBLE) AS x FROM lineitem),
                  $sqlGmmChain,
-                 sc AS (SELECT x, ${gmmPhi("m1", "v1", spark = false)} AS f1,
-                     ${gmmPhi("m2", "v2", spark = false)} AS f2,
+                 sc AS (SELECT x, ${gmmPhi("m1", "v1")} AS f1,
+                     ${gmmPhi("m2", "v2")} AS f2,
                      p1, m1, v1, m2, v2
                    FROM d, g2),
                  fin AS (SELECT CAST(count(*) AS DOUBLE) AS nd,
-                     ${T.sqlXsum(gmmLnMix(spark = false))} AS sll,
+                     ${T.sqlXsum(gmmLnMix)} AS sll,
                      any_value(p1) AS p1, any_value(m1) AS m1,
                      any_value(v1) AS v1, any_value(m2) AS m2,
                      any_value(v2) AS v2
@@ -3287,9 +3286,8 @@ object Cluster {
           .selectExpr("v", "flat", "c", "wgt / wsum AS m")
         val ow = Window.partitionBy(col("v")).orderBy(col("m").desc, col("c"))
         mm.withColumn("rn", row_number().over(ow))
-          .withColumn("ent", sum(
-            expr("CAST(-m * CAST(CAST(ln(m) AS FLOAT) AS DOUBLE) AS DECIMAL(30,12))"))
-          .over(wv).cast("double"))
+          .withColumn("ent",
+            T.xsumD(expr("-m * CAST(CAST(ln(m) AS FLOAT) AS DOUBLE)")).over(wv).cast("double"))
           .where(col("rn") === 1)
           .selectExpr("v", "flat", "c AS top_cluster",
             "round(m, 6) AS m_top", "round(ent, 6) AS entropy")
@@ -3928,10 +3926,10 @@ object Cluster {
           "stack(4, 0, l0, 1, l1, 2, l2, 3, l3) AS (tree, leaf)")
         val cnt = tl.groupBy("tree", "leaf").agg(count(lit(1)).as("c"))
         val h = tl.join(broadcast(cnt), Seq("tree", "leaf"))
-          .selectExpr("id", "n", s"3e0 + ${ifoC("c", "FLOAT")} AS h")
+          .selectExpr("id", "n", s"3e0 + ${ifoC("c")} AS h")
         val eh = h.groupBy("id", "n").agg((T.xsum(col("h")) / lit(4.0)).as("eh"))
         eh.selectExpr("id", "eh",
-            s"CAST(CAST(exp(-(eh / ${ifoC("n", "FLOAT")}) * 6.931471805599453e-1) AS FLOAT) AS DOUBLE) AS score")
+            s"CAST(CAST(exp(-(eh / ${ifoC("n")}) * 6.931471805599453e-1) AS FLOAT) AS DOUBLE) AS score")
           .orderBy(col("score").desc, col("id")).limit(20)
           .selectExpr("id", "round(eh, 6) AS path_len", "round(score, 6) AS iforest")
       },
@@ -3948,13 +3946,13 @@ object Cluster {
                    .mkString("\n                   UNION ALL ")}),
                  cnt AS (SELECT tree, leaf, count(*) AS c FROM tl
                    GROUP BY tree, leaf),
-                 h AS (SELECT id, n, 3e0 + ${ifoC("c", "REAL")} AS h
+                 h AS (SELECT id, n, 3e0 + ${ifoC("c")} AS h
                    FROM tl JOIN cnt USING (tree, leaf)),
                  eh AS (SELECT id, n, ${T.sqlXsum("h")} / 4e0 AS eh
                    FROM h GROUP BY id, n)
                SELECT id, round(eh, 6) AS path_len, round(score, 6) AS iforest
                FROM (SELECT id, eh,
-                   CAST(CAST(exp(-(eh / ${ifoC("n", "REAL")}) * 6.931471805599453e-1) AS REAL) AS DOUBLE) AS score
+                   CAST(CAST(exp(-(eh / ${ifoC("n")}) * 6.931471805599453e-1) AS REAL) AS DOUBLE) AS score
                  FROM eh) t
                ORDER BY score DESC, id LIMIT 20""")),
 
@@ -4102,8 +4100,8 @@ object Cluster {
           .transform(T.fanOut(_))
         d.crossJoin(broadcast(pars))
           .selectExpr("x", "p1",
-            s"${gmmPhi("m1", "v1", spark = true)} AS f1",
-            s"${gmmPhi("m2", "v2", spark = true)} AS f2")
+            s"${gmmPhi("m1", "v1")} AS f1",
+            s"${gmmPhi("m2", "v2")} AS f2")
           .selectExpr("x", "p1 * f1 / (p1 * f1 + (1e0 - p1) * f2) AS r1")
           .selectExpr("x", "r1", "CASE WHEN r1 >= 5e-1 THEN 1 ELSE 2 END AS comp")
           .groupBy("comp")
@@ -4114,8 +4112,8 @@ object Cluster {
       },
       Some(s"""WITH d AS (SELECT CAST(l_quantity AS DOUBLE) AS x FROM lineitem),
                  $sqlGmmChain,
-                 sc AS (SELECT x, p1, ${gmmPhi("m1", "v1", spark = false)} AS f1,
-                     ${gmmPhi("m2", "v2", spark = false)} AS f2
+                 sc AS (SELECT x, p1, ${gmmPhi("m1", "v1")} AS f1,
+                     ${gmmPhi("m2", "v2")} AS f2
                    FROM d, g2),
                  rr AS (SELECT x, p1 * f1 / (p1 * f1 + (1e0 - p1) * f2) AS r1
                         FROM sc),
@@ -4148,10 +4146,10 @@ object Cluster {
           .select(col("l_quantity").cast("double").as("x"))
           .transform(T.fanOut(_))
         d.crossJoin(broadcast(pars))
-          .selectExpr("*", s"${gmmPhi("m1", "v1", spark = true)} AS f1",
-            s"${gmmPhi("m2", "v2", spark = true)} AS f2")
+          .selectExpr("*", s"${gmmPhi("m1", "v1")} AS f1",
+            s"${gmmPhi("m2", "v2")} AS f2")
           .agg(count(lit(1)).cast("double").as("nd"),
-            T.xsum(expr(s"${gmmLnMix(spark = true)}")).as("llmix"),
+            T.xsum(expr(gmmLnMix)).as("llmix"),
             T.xsum(col("x")).as("sx"),
             T.xsum(col("x") * col("x")).as("sxx"))
           .selectExpr("nd", "llmix",
@@ -4168,11 +4166,11 @@ object Cluster {
       },
       Some(s"""WITH d AS (SELECT CAST(l_quantity AS DOUBLE) AS x FROM lineitem),
                  $sqlGmmChain,
-                 sc AS (SELECT x, ${gmmPhi("m1", "v1", spark = false)} AS f1,
-                     ${gmmPhi("m2", "v2", spark = false)} AS f2, p1
+                 sc AS (SELECT x, ${gmmPhi("m1", "v1")} AS f1,
+                     ${gmmPhi("m2", "v2")} AS f2, p1
                    FROM d, g2),
                  ag AS (SELECT CAST(count(*) AS DOUBLE) AS nd,
-                     ${T.sqlXsum(gmmLnMix(spark = false))} AS llmix,
+                     ${T.sqlXsum(gmmLnMix)} AS llmix,
                      ${T.sqlXsum("x")} AS sx, ${T.sqlXsum("x * x")} AS sxx
                    FROM sc),
                  v AS (SELECT nd, llmix,
@@ -4193,74 +4191,35 @@ object Cluster {
     * (exp is the non-IEEE-pinned op; the collapse absorbs last-ulp engine
     * differences exactly as the IRLS sigmoid). References columns x, and
     * the named mean/variance. */
-  private def gmmPhi(m: String, v: String, spark: Boolean): String = {
-    val t = if (spark) "FLOAT" else "REAL"
-    s"CAST(CAST(exp(-(x - $m) * (x - $m) / (2e0 * $v)) / sqrt(2e0 * 3.141592653589793e0 * $v) AS $t) AS DOUBLE)"
-  }
+  private def gmmPhi(m: String, v: String): String =
+    s"CAST(CAST(exp(-(x - $m) * (x - $m) / (2e0 * $v)) / sqrt(2e0 * 3.141592653589793e0 * $v) AS FLOAT) AS DOUBLE)"
 
   /** Shared-text mixture log-likelihood term ln(π1·f1 + (1−π1)·f2),
     * REAL-collapsed (the lnR discipline). */
-  private def gmmLnMix(spark: Boolean): String = {
-    val t = if (spark) "FLOAT" else "REAL"
-    s"CAST(CAST(ln(p1 * f1 + (1e0 - p1) * f2) AS $t) AS DOUBLE)"
-  }
+  private lazy val gmmLnMix = "CAST(CAST(ln(p1 * f1 + (1e0 - p1) * f2) AS FLOAT) AS DOUBLE)"
 
-  /** Driver-held 2-step EM loop (see ml_gmm_em). Mirrors [[sqlGmmChain]]
-    * step for step; each pass is one weighted-moment aggregation on the
-    * exact decimal wire. */
+  /** The 2-step EM of ml_gmm_em from the fixed literal init: the E-step's
+    * responsibility r per row, ONE weighted-moment pass on the exact
+    * wire, and both components' updates (component 2's sums are the
+    * totals minus component 1's). */
+  private lazy val gmmFit: Twin.Fit = Twin.Fit(
+    Seq("p1" -> 0.5, "m1" -> 10.0, "v1" -> 100.0, "m2" -> 40.0, "v2" -> 100.0),
+    Seq("f1" -> gmmPhi("m1", "v1"), "f2" -> gmmPhi("m2", "v2"),
+      "r" -> "p1 * f1 / (p1 * f1 + (1e0 - p1) * f2)"),
+    Seq(Twin.count("nd"), Twin.xsum("sr", "r"), Twin.xsum("srx", "r * x"),
+      Twin.xsum("srxx", "r * x * x"), Twin.xsum("sx", "x"), Twin.xsum("sxx", "x * x")),
+    Seq("nm1" -> "srx / sr", "nm2" -> "(sx - srx) / (nd - sr)"),
+    Seq("sr / nd", "nm1", "srxx / sr - nm1 * nm1", "nm2", "(sxx - srxx) / (nd - sr) - nm2 * nm2"), 2)
+
+  /** The fitted (p1, m1, v1, m2, v2), on the l_quantity cells. */
   private def gmmEm(s: SparkSession, dir: String): (Double, Double, Double, Double, Double) =
     T.memo("gmmEm", s, dir) {
-      val spark = s
-      import spark.implicits._
-      val d = T.lineitem(s, dir)
-        .select(col("l_quantity").cast("double").as("x"))
-        .transform(T.fanOut(_))
-      var (p1, m1, v1, m2, v2) = (0.5, 10.0, 100.0, 40.0, 100.0)
-      for (_ <- 1 to 2) {
-        val pars = Seq((p1, m1, v1, m2, v2)).toDF("p1", "m1", "v1", "m2", "v2")
-        val r = d.crossJoin(broadcast(pars))
-          .selectExpr("*", s"${gmmPhi("m1", "v1", spark = true)} AS f1",
-            s"${gmmPhi("m2", "v2", spark = true)} AS f2")
-          .selectExpr("x", "p1 * f1 / (p1 * f1 + (1e0 - p1) * f2) AS r")
-          .agg(count(lit(1)).cast("double").as("nd"),
-            T.xsum(col("r")).as("sr"),
-            T.xsum(col("r") * col("x")).as("srx"),
-            T.xsum(col("r") * col("x") * col("x")).as("srxx"),
-            T.xsum(col("x")).as("sx"),
-            T.xsum(col("x") * col("x")).as("sxx"))
-          .collect()(0)
-        val nd = r.getDouble(0); val sr = r.getDouble(1)
-        val srx = r.getDouble(2); val srxx = r.getDouble(3)
-        val sx = r.getDouble(4); val sxx = r.getDouble(5)
-        p1 = sr / nd
-        m1 = srx / sr
-        v1 = srxx / sr - m1 * m1
-        m2 = (sx - srx) / (nd - sr)
-        v2 = (sxx - srxx) / (nd - sr) - m2 * m2
-      }
+      val Array(p1, m1, v1, m2, v2) =
+        Twin.fit(T.lineitem(s, dir).select(col("l_quantity").cast("double").as("x")), gmmFit).last
       (p1, m1, v1, m2, v2)
     }
 
-  /** Oracle twin of [[gmmEm]]: the same 2 E/M steps as a CTE chain from
-    * the literal init, sharing the φ and update texts verbatim. */
-  private lazy val sqlGmmChain: String = {
-    def step(src: String, out: String) =
-      s"""${out}e AS (SELECT x,
-            p1 * ${gmmPhi("m1", "v1", spark = false)} /
-              (p1 * ${gmmPhi("m1", "v1", spark = false)} + (1e0 - p1) * ${gmmPhi("m2", "v2", spark = false)}) AS r
-          FROM d, $src),
-          ${out}m AS (SELECT CAST(count(*) AS DOUBLE) AS nd,
-              ${T.sqlXsum("r")} AS sr, ${T.sqlXsum("r * x")} AS srx,
-              ${T.sqlXsum("r * x * x")} AS srxx,
-              ${T.sqlXsum("x")} AS sx, ${T.sqlXsum("x * x")} AS sxx
-            FROM ${out}e),
-          $out AS (SELECT sr / nd AS p1, srx / sr AS m1,
-              srxx / sr - (srx / sr) * (srx / sr) AS v1,
-              (sx - srx) / (nd - sr) AS m2,
-              (sxx - srxx) / (nd - sr) - ((sx - srx) / (nd - sr)) * ((sx - srx) / (nd - sr)) AS v2
-            FROM ${out}m)"""
-    s"""g0 AS (SELECT 5e-1 AS p1, 1e1 AS m1, 1e2 AS v1, 4e1 AS m2, 1e2 AS v2),
-       ${step("g0", "g1")},
-       ${step("g1", "g2")}"""
-  }
+  /** Oracle twin of [[gmmEm]] over the rows CTE `d`, ending in
+    * `g2(p1, m1, v1, m2, v2)`. */
+  private lazy val sqlGmmChain: String = Twin.sqlFit(gmmFit, "d", "g")
 }

@@ -5442,86 +5442,14 @@ object ML {
       // efficiency constant; held fixed across rounds — the standard
       // simplification), then 2 IRLS rounds with the Huber weight
       // w = min(1, δ/|r|). Every round is ONE weighted-moment pass (the
-      // ml_weighted_linreg aggregation) with (a, b, δ) carried IN-PLAN as
-      // a broadcast one-row frame — no driver round trip inside the loop.
-      // Addends are price-scale, so the moments ride the xsum decimal
-      // wire; weights/residuals are identical double chains from those
-      // sums. Output: the 3-row coefficient trail (round 0 = OLS) — a
+      // ml_weighted_linreg aggregation) with (a, b, δ) carried IN-PLAN
+      // by Twin.trail — no driver round trip inside the loop. Addends are
+      // price-scale, so the moments ride the xsum decimal wire;
+      // weights/residuals are identical double chains from those sums.
+      // Output: the 3-row coefficient trail (round 0 = OLS) — a
       // fat-tailed target shows the slope walking away from OLS.
-      (s, dir) => {
-        val d = T.lineitemFit(s, dir)
-          .select(col("l_quantity").cast("double").as("x"),
-            col("l_extendedprice").cast("double").as("y"))
-        val m0 = d.agg(count(lit(1)).cast("double").as("n"),
-          T.xsum(col("x")).as("sx"), T.xsum(col("y")).as("sy"),
-          T.xsum(col("x") * col("x")).as("sxx"),
-          T.xsum(col("x") * col("y")).as("sxy"),
-          T.xsum(col("y") * col("y")).as("syy"))
-        var c = m0
-          .selectExpr("*", "(n * sxy - sx * sy) / (n * sxx - sx * sx) AS b")
-          .selectExpr("*", "(sy - b * sx) / n AS a")
-          .selectExpr("a", "b",
-            "1.345e0 * sqrt((syy - 2*a*sy - 2*b*sxy + n*a*a + 2*a*b*sx + b*b*sxx) / n) AS delta")
-        val trail = Seq.newBuilder[DataFrame]
-        trail += c.selectExpr("0 AS round", "a", "b")
-        for (k <- 1 to 2) {
-          val w = d.crossJoin(broadcast(c))
-            .selectExpr("x", "y", "delta",
-              "CASE WHEN abs(y - a - b * x) <= delta THEN 1e0 " +
-                "ELSE delta / abs(y - a - b * x) END AS w")
-          c = w.groupBy("delta")
-            .agg(T.xsum(col("w")).as("sw"),
-              T.xsum(col("w") * col("x")).as("swx"),
-              T.xsum(col("w") * col("y")).as("swy"),
-              T.xsum(col("w") * col("x") * col("x")).as("swxx"),
-              T.xsum(col("w") * col("x") * col("y")).as("swxy"))
-            .selectExpr("delta",
-              "(sw * swxy - swx * swy) / (sw * swxx - swx * swx) AS b", "sw", "swx", "swy")
-            .selectExpr("delta", "b", "(swy - b * swx) / sw AS a")
-            .selectExpr("a", "b", "delta")
-          trail += c.selectExpr(s"$k AS round", "a", "b")
-        }
-        trail.result().reduce(_ unionAll _)
-          .selectExpr("round", "round(a, 6) AS intercept", "round(b, 6) AS slope")
-          .orderBy("round")
-      },
-      Some {
-        def roundCte(k: Int): String =
-          s"""w$k AS (SELECT x, y, delta,
-                  CASE WHEN abs(y - a - b * x) <= delta THEN 1e0
-                       ELSE delta / abs(y - a - b * x) END AS w
-                FROM d CROSS JOIN c${k - 1}),
-              m$k AS (SELECT delta, ${T.sqlXsum("w")} AS sw,
-                  ${T.sqlXsum("w * x")} AS swx, ${T.sqlXsum("w * y")} AS swy,
-                  ${T.sqlXsum("w * x * x")} AS swxx,
-                  ${T.sqlXsum("w * x * y")} AS swxy
-                FROM w$k GROUP BY delta),
-              mb$k AS (SELECT delta, sw, swx, swy,
-                  (sw * swxy - swx * swy) / (sw * swxx - swx * swx) AS b
-                FROM m$k),
-              c$k AS (SELECT (swy - b * swx) / sw AS a, b, delta FROM mb$k)"""
-        s"""WITH d AS (SELECT CAST(l_quantity AS DOUBLE) AS x,
-                   CAST(l_extendedprice AS DOUBLE) AS y FROM lineitem),
-                 m0 AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-                     ${T.sqlXsum("x")} AS sx, ${T.sqlXsum("y")} AS sy,
-                     ${T.sqlXsum("x * x")} AS sxx, ${T.sqlXsum("x * y")} AS sxy,
-                     ${T.sqlXsum("y * y")} AS syy
-                   FROM d),
-                 mb0 AS (SELECT *,
-                     (n * sxy - sx * sy) / (n * sxx - sx * sx) AS b
-                   FROM m0),
-                 ma0 AS (SELECT *, (sy - b * sx) / n AS a FROM mb0),
-                 c0 AS (SELECT a, b,
-                     1.345e0 * sqrt((syy - 2*a*sy - 2*b*sxy + n*a*a + 2*a*b*sx + b*b*sxx) / n) AS delta
-                   FROM ma0),
-                 ${roundCte(1)},
-                 ${roundCte(2)}
-               SELECT round, round(a, 6) AS intercept, round(b, 6) AS slope
-               FROM (SELECT 0 AS round, a, b FROM c0
-                     UNION ALL SELECT 1, a, b FROM c1
-                     UNION ALL SELECT 2, a, b FROM c2) u
-               ORDER BY round"""
-      }),
+      (s, dir) => robustTrail(s, dir, huberFit, huberStart),
+      Some(sqlRobustTrail(huberFit, huberStart, "c"))),
 
     QueryDef(
       "ml_quantile_regression",
@@ -5533,90 +5461,13 @@ object ML {
       // from the OLS residual scale (σ̂/20, the ml_huber_regression
       // delta discipline; a fixture-constant floor measured unstable —
       // ε ≪ σ makes the weighted fit degenerate to the near-line band
-      // and the slope saw-tooths). Structure is the huber wire verbatim:
-      // one weighted xsum moment pass per round, coefficients carried
-      // IN-PLAN as a broadcast one-row frame, 4-row coefficient trail
-      // out. The q = 0.9 fit climbs ABOVE the OLS line — the intercept
-      // trail is strictly increasing (MicroSpec pin).
-      (s, dir) => {
-        val d = T.lineitemFit(s, dir)
-          .select(col("l_quantity").cast("double").as("x"),
-            col("l_extendedprice").cast("double").as("y"))
-        val m0 = d.agg(count(lit(1)).cast("double").as("n"),
-          T.xsum(col("x")).as("sx"), T.xsum(col("y")).as("sy"),
-          T.xsum(col("x") * col("x")).as("sxx"),
-          T.xsum(col("x") * col("y")).as("sxy"),
-          T.xsum(col("y") * col("y")).as("syy"))
-        var c = m0
-          .selectExpr("*", "(n * sxy - sx * sy) / (n * sxx - sx * sx) AS b")
-          .selectExpr("*", "(sy - b * sx) / n AS a")
-          .selectExpr("a", "b",
-            "sqrt((syy - 2*a*sy - 2*b*sxy + n*a*a + 2*a*b*sx + b*b*sxx) / n) / 20e0 AS eps")
-        val trail = Seq.newBuilder[DataFrame]
-        trail += c.selectExpr("0 AS round", "a", "b")
-        for (k <- 1 to 3) {
-          val w = d.crossJoin(broadcast(c))
-            .selectExpr("x", "y", "eps",
-              "CASE WHEN y - a - b * x >= 0e0 " +
-                "THEN 0.9e0 / greatest(y - a - b * x, eps) " +
-                "ELSE 0.1e0 / greatest(a + b * x - y, eps) END AS w")
-          c = w.groupBy("eps")
-            .agg(T.xsum(col("w")).as("sw"),
-              T.xsum(col("w") * col("x")).as("swx"),
-              T.xsum(col("w") * col("y")).as("swy"),
-              T.xsum(col("w") * col("x") * col("x")).as("swxx"),
-              T.xsum(col("w") * col("x") * col("y")).as("swxy"))
-            .selectExpr("eps",
-              "(sw * swxy - swx * swy) / (sw * swxx - swx * swx) AS b",
-              "sw", "swx", "swy")
-            .selectExpr("eps", "b", "(swy - b * swx) / sw AS a")
-            .selectExpr("a", "b", "eps")
-          trail += c.selectExpr(s"$k AS round", "a", "b")
-        }
-        trail.result().reduce(_ unionAll _)
-          .selectExpr("round", "round(a, 6) AS intercept", "round(b, 6) AS slope")
-          .orderBy("round")
-      },
-      Some {
-        def roundCte(k: Int): String =
-          s"""qw$k AS (SELECT x, y, eps,
-                  CASE WHEN y - a - b * x >= 0e0
-                       THEN 0.9e0 / greatest(y - a - b * x, eps)
-                       ELSE 0.1e0 / greatest(a + b * x - y, eps) END AS w
-                FROM qd CROSS JOIN qc${k - 1}),
-              qm$k AS (SELECT eps, ${T.sqlXsum("w")} AS sw,
-                  ${T.sqlXsum("w * x")} AS swx, ${T.sqlXsum("w * y")} AS swy,
-                  ${T.sqlXsum("w * x * x")} AS swxx,
-                  ${T.sqlXsum("w * x * y")} AS swxy
-                FROM qw$k GROUP BY eps),
-              qb$k AS (SELECT eps, sw, swx, swy,
-                  (sw * swxy - swx * swy) / (sw * swxx - swx * swx) AS b
-                FROM qm$k),
-              qc$k AS (SELECT (swy - b * swx) / sw AS a, b, eps FROM qb$k)"""
-        s"""WITH qd AS (SELECT CAST(l_quantity AS DOUBLE) AS x,
-                   CAST(l_extendedprice AS DOUBLE) AS y FROM lineitem),
-                 qm0 AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-                     ${T.sqlXsum("x")} AS sx, ${T.sqlXsum("y")} AS sy,
-                     ${T.sqlXsum("x * x")} AS sxx, ${T.sqlXsum("x * y")} AS sxy,
-                     ${T.sqlXsum("y * y")} AS syy
-                   FROM qd),
-                 qb0 AS (SELECT *,
-                     (n * sxy - sx * sy) / (n * sxx - sx * sx) AS b
-                   FROM qm0),
-                 qa0 AS (SELECT *, (sy - b * sx) / n AS a FROM qb0),
-                 qc0 AS (SELECT a, b,
-                     sqrt((syy - 2*a*sy - 2*b*sxy + n*a*a + 2*a*b*sx + b*b*sxx) / n) / 20e0 AS eps
-                   FROM qa0),
-                 ${roundCte(1)},
-                 ${roundCte(2)},
-                 ${roundCte(3)}
-               SELECT round, round(a, 6) AS intercept, round(b, 6) AS slope
-               FROM (SELECT 0 AS round, a, b FROM qc0
-                     UNION ALL SELECT 1, a, b FROM qc1
-                     UNION ALL SELECT 2, a, b FROM qc2
-                     UNION ALL SELECT 3, a, b FROM qc3) u
-               ORDER BY round"""
-      }),
+      // and the slope saw-tooths). Structure is the huber trail with
+      // another weight: one weighted xsum moment pass per round,
+      // coefficients carried IN-PLAN, 4-row coefficient trail out. The
+      // q = 0.9 fit climbs ABOVE the OLS line — the intercept trail is
+      // strictly increasing (MicroSpec pin).
+      (s, dir) => robustTrail(s, dir, quantileFit, quantileStart),
+      Some(sqlRobustTrail(quantileFit, quantileStart, "q"))),
 
     QueryDef(
       "ml_gamma_glm",
@@ -5626,69 +5477,108 @@ object ML {
       // quantity. For gamma+log the IRLS weights are identically 1, so
       // each step is an UNWEIGHTED OLS of the working response z = η +
       // y/μ − 1 on x — one xsum moment pass per step, coefficients
-      // carried in-plan. Warm start a₀ = ln(ȳ) (the null model), b₀ = 0.
-      // μ = exp(η) and ln(ȳ) are REAL-collapsed (the one non-IEEE-pinned
-      // op, the ml_poisson_glm discipline). Output: the 3-row (a, b)
-      // trail, round 0 = the null model.
+      // carried in-plan by Twin.trail. Warm start a₀ = ln(ȳ) (the null
+      // model), b₀ = 0. μ = exp(η) and ln(ȳ) are REAL-collapsed (the one
+      // non-IEEE-pinned op, the ml_poisson_glm discipline). Output: the
+      // 3-row (a, b) trail, round 0 = the null model.
       (s, dir) => {
         val d = T.lineitemFit(s, dir)
           .select(col("l_quantity").cast("double").as("x"),
             (col("l_extendedprice").cast("double") / 1000).as("y"))
-        var c = d.agg(count(lit(1)).cast("double").as("n"), T.xsum(col("y")).as("sy"))
-          .selectExpr(
-            "CAST(CAST(ln(sy / n) AS FLOAT) AS DOUBLE) AS a", "0e0 AS b")
-        val trail = Seq.newBuilder[DataFrame]
-        trail += c.selectExpr("0 AS round", "a", "b")
-        for (k <- 1 to 2) {
-          val z = d.crossJoin(broadcast(c))
-            .selectExpr("x",
-              "a + b * x + y / CAST(CAST(exp(a + b * x) AS FLOAT) AS DOUBLE) - 1e0 AS z")
-          c = z
-            .agg(count(lit(1)).cast("double").as("n"),
-              T.xsum(col("x")).as("sx"), T.xsum(col("z")).as("sz"),
-              T.xsum(col("x") * col("x")).as("sxx"),
-              T.xsum(col("x") * col("z")).as("sxz"))
-            .selectExpr("n", "sx", "sz",
-              "(n * sxz - sx * sz) / (n * sxx - sx * sx) AS b")
-            .selectExpr("b", "(sz - b * sx) / n AS a")
-            .selectExpr("a", "b")
-          trail += c.selectExpr(s"$k AS round", "a", "b")
-        }
-        trail.result().reduce(_ unionAll _)
-          .selectExpr("round", "round(a, 6) AS intercept", "round(b, 6) AS slope",
-            "round(CAST(CAST(exp(a) AS FLOAT) AS DOUBLE), 6) AS mu_at_zero")
+        Twin.trail(d, gammaFit, d.agg(count(lit(1)).cast("double").as("n"),
+            T.xsum(col("y")).as("sy")).selectExpr(gammaStart: _*))
+          .selectExpr(gammaOut: _*)
           .orderBy("round")
       },
-      Some {
-        def stepCte(k: Int): String =
-          s"""gz$k AS (SELECT x,
-                  a + b * x + y / CAST(CAST(exp(a + b * x) AS REAL) AS DOUBLE)
-                    - 1e0 AS z
-                FROM gd CROSS JOIN gc${k - 1}),
-              gm$k AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-                  ${T.sqlXsum("x")} AS sx, ${T.sqlXsum("z")} AS sz,
-                  ${T.sqlXsum("x * x")} AS sxx, ${T.sqlXsum("x * z")} AS sxz
-                FROM gz$k),
-              gb$k AS (SELECT n, sx, sz,
-                  (n * sxz - sx * sz) / (n * sxx - sx * sx) AS b
-                FROM gm$k),
-              gc$k AS (SELECT (sz - b * sx) / n AS a, b FROM gb$k)"""
-        s"""WITH gd AS (SELECT CAST(l_quantity AS DOUBLE) AS x,
+      Some(s"""WITH gd AS (SELECT CAST(l_quantity AS DOUBLE) AS x,
                    CAST(l_extendedprice AS DOUBLE) / 1000 AS y FROM lineitem),
-                 gc0 AS (SELECT CAST(CAST(ln(${T.sqlXsum("y")}
-                       / CAST(count(*) AS DOUBLE)) AS REAL) AS DOUBLE) AS a,
-                     0e0 AS b
-                   FROM gd),
-                 ${stepCte(1)},
-                 ${stepCte(2)}
-               SELECT round, round(a, 6) AS intercept, round(b, 6) AS slope,
-                 round(CAST(CAST(exp(a) AS REAL) AS DOUBLE), 6) AS mu_at_zero
-               FROM (SELECT 0 AS round, a, b FROM gc0
-                     UNION ALL SELECT 1, a, b FROM gc1
-                     UNION ALL SELECT 2, a, b FROM gc2) u
-               ORDER BY round"""
-      })
+                 ${Twin.sqlFit(gammaFit, "gd", "gc", Some(s"""SELECT ${gammaStart.mkString(", ")}
+                   FROM (SELECT CAST(count(*) AS DOUBLE) AS n, ${T.sqlXsum("y")} AS sy
+                     FROM gd) m"""))}
+               SELECT ${gammaOut.mkString(", ")}
+               FROM (${Twin.sqlTrail(gammaFit, "gc")}) u
+               ORDER BY round"""))
   )
+
+  /** One IRLS round of the robust trails: the weighted least squares of y
+    * on x with row weight `w` over (x, y) and the parameters (a, b,
+    * `scale`), b then a in closed form from the weighted moments on the
+    * exact wire; the residual scale `scale` rides along. Its start is
+    * the OLS fit ([[olsStart]]), so the initial values are unused. */
+  private def irlsFit(scale: String, w: String, iters: Int): Twin.Fit = Twin.Fit(
+    Seq("a" -> 0.0, "b" -> 0.0, scale -> 0.0), Seq("w" -> w),
+    Seq(Twin.xsum("sw", "w"), Twin.xsum("swx", "w * x"), Twin.xsum("swy", "w * y"),
+      Twin.xsum("swxx", "w * x * x"), Twin.xsum("swxy", "w * x * y")),
+    Seq("nb" -> "(sw * swxy - swx * swy) / (sw * swxx - swx * swx)",
+      "na" -> "(swy - nb * swx) / sw"),
+    Seq("na", "nb", scale), iters)
+
+  private lazy val huberFit = irlsFit("delta",
+    "CASE WHEN abs(y - a - b * x) <= delta THEN 1e0 ELSE delta / abs(y - a - b * x) END", 2)
+  private lazy val huberStart = olsStart("delta" -> "1.345e0 * rse")
+
+  private lazy val quantileFit = irlsFit("eps",
+    "CASE WHEN y - a - b * x >= 0e0 THEN 0.9e0 / greatest(y - a - b * x, eps) " +
+      "ELSE 0.1e0 / greatest(a + b * x - y, eps) END", 3)
+  private lazy val quantileStart = olsStart("eps" -> "rse / 20e0")
+
+  /** The robust trails' start over the OLS moments (n, sx, sy, sxx, sxy,
+    * syy): the OLS b and a, the residual scale rse = √(RSS / n) by the
+    * residual expansion (no second pass), and the fixed parameter
+    * `scale` over it. */
+  private def olsStart(scale: (String, String)): Twin.Steps = Seq(
+    "b" -> "(n * sxy - sx * sy) / (n * sxx - sx * sx)", "a" -> "(sy - b * sx) / n",
+    "rse" -> "sqrt((syy - 2*a*sy - 2*b*sxy + n*a*a + 2*a*b*sx + b*b*sxx) / n)", scale)
+
+  private lazy val robustOut = Seq("round", "round(a, 6) AS intercept", "round(b, 6) AS slope")
+
+  /** A robust trail: `f` run by [[Twin.trail]] over x = quantity, y =
+    * price, from `start` over the OLS moments. */
+  private def robustTrail(s: SparkSession, dir: String, f: Twin.Fit,
+      start: Twin.Steps): DataFrame = {
+    val d = T.lineitemFit(s, dir).select(col("l_quantity").cast("double").as("x"),
+      col("l_extendedprice").cast("double").as("y"))
+    val m = d.agg(count(lit(1)).cast("double").as("n"),
+      T.xsum(col("x")).as("sx"), T.xsum(col("y")).as("sy"),
+      T.xsum(col("x") * col("x")).as("sxx"),
+      T.xsum(col("x") * col("y")).as("sxy"),
+      T.xsum(col("y") * col("y")).as("syy"))
+    Twin.trail(d, f, Twin.chain(m, start)).selectExpr(robustOut: _*).orderBy("round")
+  }
+
+  /** Oracle twin of [[robustTrail]], its CTEs named `p`. */
+  private def sqlRobustTrail(f: Twin.Fit, start: Twin.Steps, p: String): String = {
+    val (startCtes, startFin) = Twin.ctes(start, s"${p}m", s"${p}o")
+    s"""WITH ${p}d AS (SELECT CAST(l_quantity AS DOUBLE) AS x,
+               CAST(l_extendedprice AS DOUBLE) AS y FROM lineitem),
+             ${p}m AS (SELECT CAST(count(*) AS DOUBLE) AS n,
+                 ${T.sqlXsum("x")} AS sx, ${T.sqlXsum("y")} AS sy,
+                 ${T.sqlXsum("x * x")} AS sxx, ${T.sqlXsum("x * y")} AS sxy,
+                 ${T.sqlXsum("y * y")} AS syy
+               FROM ${p}d),
+             $startCtes,
+             ${Twin.sqlFit(f, s"${p}d", p, Some(s"SELECT ${f.names.mkString(", ")} FROM $startFin"))}
+           SELECT ${robustOut.mkString(", ")}
+           FROM (${Twin.sqlTrail(f, p)}) u
+           ORDER BY round"""
+  }
+
+  /** ml_gamma_glm's IRLS step: the unweighted OLS of the working response
+    * z = η + y/μ − 1 on x, μ = exp(η) FLOAT-collapsed. Its start is the
+    * null model ([[gammaStart]]), so the initial values are unused. */
+  private lazy val gammaFit = Twin.Fit(
+    Seq("a" -> 0.0, "b" -> 0.0),
+    Seq("z" -> "a + b * x + y / CAST(CAST(exp(a + b * x) AS FLOAT) AS DOUBLE) - 1e0"),
+    Seq(Twin.count("n"), Twin.xsum("sx", "x"), Twin.xsum("sz", "z"),
+      Twin.xsum("sxx", "x * x"), Twin.xsum("sxz", "x * z")),
+    Seq("nb" -> "(n * sxz - sx * sz) / (n * sxx - sx * sx)"),
+    Seq("(sz - nb * sx) / n", "nb"), 2)
+
+  /** The null model a₀ = ln(ȳ), b₀ = 0 over (n, sy). */
+  private lazy val gammaStart = Seq("CAST(CAST(ln(sy / n) AS FLOAT) AS DOUBLE) AS a", "0e0 AS b")
+
+  private lazy val gammaOut = Seq("round", "round(a, 6) AS intercept", "round(b, 6) AS slope",
+    "round(CAST(CAST(exp(a) AS FLOAT) AS DOUBLE), 6) AS mu_at_zero")
 
   /** svmRows with the minibatch id (l_orderkey mod 3) retained. */
   private def svmRows2(s: SparkSession, dir: String): DataFrame =

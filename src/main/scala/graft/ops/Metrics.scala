@@ -63,9 +63,7 @@ object Metrics {
 
   /** REAL-collapsed ln for entropy/MI terms (libm last-ulp differences
     * vanish at float precision; the sum runs on the exact decimal wire). */
-  private def lnR(arg: String, spark: Boolean): String =
-    if (spark) s"CAST(CAST(ln($arg) AS FLOAT) AS DOUBLE)"
-    else s"CAST(CAST(ln($arg) AS REAL) AS DOUBLE)"
+  private def lnR(arg: String): String = s"CAST(CAST(ln($arg) AS FLOAT) AS DOUBLE)"
 
   // ---- sparse-random-projection internals ---------------------------------
 
@@ -124,12 +122,11 @@ object Metrics {
     * two independent two-round LCG streams → Box-Muller (the make_blobs
     * generator discipline); ln/cos REAL-collapsed so both engines emit the
     * identical double entry. */
-  private def gaussEntry(spark: Boolean): String = {
-    val f = if (spark) "FLOAT" else "REAL"
+  private lazy val gaussEntry: String = {
     val flat = "((CAST(i AS BIGINT) * 4) + j)"
     val u1 = s"(CAST((($flat * 48271 + 11) * 69621 + 7) % 2147483647 AS DOUBLE) + 1e0) / 2147483648e0"
     val u2 = s"(CAST((($flat * 16807 + 3) * 48271 + 19) % 2147483647 AS DOUBLE) + 1e0) / 2147483648e0"
-    s"5e-1 * sqrt(-2e0 * CAST(CAST(ln($u1) AS $f) AS DOUBLE)) * CAST(CAST(cos(6.283185307179586e0 * $u2) AS $f) AS DOUBLE)"
+    s"5e-1 * sqrt(-2e0 * CAST(CAST(ln($u1) AS FLOAT) AS DOUBLE)) * CAST(CAST(cos(6.283185307179586e0 * $u2) AS FLOAT) AS DOUBLE)"
   }
 
   /** ml_rbf_sampler phase offset b_j = 2π·u(j): a dedicated two-round LCG
@@ -147,7 +144,7 @@ object Metrics {
     e.select(col("vec_id"), posexplode(col("embedding")).as(Seq("i", "x")))
       .crossJoin(broadcast(Seq(0, 1, 2, 3).toDF("j")))
       .select(col("vec_id"), col("j"),
-        expr(s"CAST(x AS DOUBLE) * ${gaussEntry(spark = true)}").as("addend"))
+        expr(s"CAST(x AS DOUBLE) * $gaussEntry").as("addend"))
       .groupBy("vec_id", "j").agg(T.xsumD(col("addend")).as("zd"))
       .groupBy("vec_id").agg(
         max(when(col("j") === 0, col("zd"))).as("z0"),
@@ -163,7 +160,7 @@ object Metrics {
          exz AS (SELECT vec_id, generate_subscripts(emb, 1) - 1 AS i, unnest(emb) AS x
                  FROM s),
          pj AS (SELECT vec_id, j,
-             ${T.sqlXsumD(s"CAST(x AS DOUBLE) * ${gaussEntry(spark = false)}")} AS zd
+             ${T.sqlXsumD(s"CAST(x AS DOUBLE) * $gaussEntry")} AS zd
            FROM exz CROSS JOIN (VALUES (0), (1), (2), (3)) jj(j)
            GROUP BY vec_id, j),
          z AS (SELECT vec_id,
@@ -380,15 +377,15 @@ object Metrics {
         val mi = ct.join(broadcast(ra), "cid").join(broadcast(cb), "label")
           .crossJoin(broadcast(tot))
           .select((col("nij").cast("double") / col("n") *
-            expr(lnR("CAST(n * nij AS DOUBLE) / (ai * bj)", spark = true))).as("term"))
+            expr(lnR("CAST(n * nij AS DOUBLE) / (ai * bj)"))).as("term"))
           .agg(T.xsum(col("term")).as("mi"))
         val hp = ra.crossJoin(broadcast(tot))
           .select((col("ai").cast("double") / col("n") * lit(-1.0) *
-            expr(lnR("CAST(ai AS DOUBLE) / n", spark = true))).as("term"))
+            expr(lnR("CAST(ai AS DOUBLE) / n"))).as("term"))
           .agg(T.xsum(col("term")).as("h_pred"))
         val ht = cb.crossJoin(broadcast(tot))
           .select((col("bj").cast("double") / col("n") * lit(-1.0) *
-            expr(lnR("CAST(bj AS DOUBLE) / n", spark = true))).as("term"))
+            expr(lnR("CAST(bj AS DOUBLE) / n"))).as("term"))
           .agg(T.xsum(col("term")).as("h_true"))
         mi.crossJoin(hp).crossJoin(ht)
           .selectExpr("round(mi, 6) AS mi",
@@ -400,13 +397,13 @@ object Metrics {
                  cb AS (SELECT label, CAST(sum(nij) AS BIGINT) AS bj FROM ct GROUP BY label),
                  tot AS (SELECT CAST(sum(nij) AS BIGINT) AS n FROM ct),
                  mi AS (SELECT ${T.sqlXsum(
-                     s"CAST(nij AS DOUBLE) / n * ${lnR("CAST(n * nij AS DOUBLE) / (ai * bj)", spark = false)}")} AS mi
+                     s"CAST(nij AS DOUBLE) / n * ${lnR("CAST(n * nij AS DOUBLE) / (ai * bj)")}")} AS mi
                         FROM ct JOIN ra USING (cid) JOIN cb USING (label) CROSS JOIN tot),
                  hp AS (SELECT ${T.sqlXsum(
-                     s"CAST(ai AS DOUBLE) / n * (-1.0) * ${lnR("CAST(ai AS DOUBLE) / n", spark = false)}")} AS h_pred
+                     s"CAST(ai AS DOUBLE) / n * (-1.0) * ${lnR("CAST(ai AS DOUBLE) / n")}")} AS h_pred
                         FROM ra CROSS JOIN tot),
                  ht AS (SELECT ${T.sqlXsum(
-                     s"CAST(bj AS DOUBLE) / n * (-1.0) * ${lnR("CAST(bj AS DOUBLE) / n", spark = false)}")} AS h_true
+                     s"CAST(bj AS DOUBLE) / n * (-1.0) * ${lnR("CAST(bj AS DOUBLE) / n")}")} AS h_true
                         FROM cb CROSS JOIN tot)
                SELECT round(mi, 6) AS mi, round(h_true, 6) AS h_true,
                  round(h_pred, 6) AS h_pred,
@@ -430,15 +427,15 @@ object Metrics {
         val mi = ct.join(broadcast(ra), "cid").join(broadcast(cb), "label")
           .crossJoin(broadcast(tot))
           .select((col("nij").cast("double") / col("n") *
-            expr(lnR("CAST(n * nij AS DOUBLE) / (ai * bj)", spark = true))).as("term"))
+            expr(lnR("CAST(n * nij AS DOUBLE) / (ai * bj)"))).as("term"))
           .agg(T.xsum(col("term")).as("mi"))
         val hp = ra.crossJoin(broadcast(tot))
           .select((col("ai").cast("double") / col("n") * lit(-1.0) *
-            expr(lnR("CAST(ai AS DOUBLE) / n", spark = true))).as("term"))
+            expr(lnR("CAST(ai AS DOUBLE) / n"))).as("term"))
           .agg(T.xsum(col("term")).as("h_pred"))
         val ht = cb.crossJoin(broadcast(tot))
           .select((col("bj").cast("double") / col("n") * lit(-1.0) *
-            expr(lnR("CAST(bj AS DOUBLE) / n", spark = true))).as("term"))
+            expr(lnR("CAST(bj AS DOUBLE) / n"))).as("term"))
           .agg(T.xsum(col("term")).as("h_true"))
         mi.crossJoin(hp).crossJoin(ht)
           .selectExpr("round(mi / h_true, 6) AS homogeneity",
@@ -450,13 +447,13 @@ object Metrics {
                  cb AS (SELECT label, CAST(sum(nij) AS BIGINT) AS bj FROM ct GROUP BY label),
                  tot AS (SELECT CAST(sum(nij) AS BIGINT) AS n FROM ct),
                  mi AS (SELECT ${T.sqlXsum(
-                     s"CAST(nij AS DOUBLE) / n * ${lnR("CAST(n * nij AS DOUBLE) / (ai * bj)", spark = false)}")} AS mi
+                     s"CAST(nij AS DOUBLE) / n * ${lnR("CAST(n * nij AS DOUBLE) / (ai * bj)")}")} AS mi
                         FROM ct JOIN ra USING (cid) JOIN cb USING (label) CROSS JOIN tot),
                  hp AS (SELECT ${T.sqlXsum(
-                     s"CAST(ai AS DOUBLE) / n * (-1.0) * ${lnR("CAST(ai AS DOUBLE) / n", spark = false)}")} AS h_pred
+                     s"CAST(ai AS DOUBLE) / n * (-1.0) * ${lnR("CAST(ai AS DOUBLE) / n")}")} AS h_pred
                         FROM ra CROSS JOIN tot),
                  ht AS (SELECT ${T.sqlXsum(
-                     s"CAST(bj AS DOUBLE) / n * (-1.0) * ${lnR("CAST(bj AS DOUBLE) / n", spark = false)}")} AS h_true
+                     s"CAST(bj AS DOUBLE) / n * (-1.0) * ${lnR("CAST(bj AS DOUBLE) / n")}")} AS h_true
                         FROM cb CROSS JOIN tot)
                SELECT round(mi / h_true, 6) AS homogeneity,
                  round(mi / h_pred, 6) AS completeness,
@@ -637,9 +634,9 @@ object Metrics {
           .select(
             col("tp"), col("tq"),
             ((col("np").cast("double") / col("tp")) *
-              expr(lnR("(CAST(np AS DOUBLE) / tp) / (CAST(nq AS DOUBLE) / tq)", spark = true))).as("t_pq"),
+              expr(lnR("(CAST(np AS DOUBLE) / tp) / (CAST(nq AS DOUBLE) / tq)"))).as("t_pq"),
             ((col("nq").cast("double") / col("tq")) *
-              expr(lnR("(CAST(nq AS DOUBLE) / tq) / (CAST(np AS DOUBLE) / tp)", spark = true))).as("t_qp"))
+              expr(lnR("(CAST(nq AS DOUBLE) / tq) / (CAST(np AS DOUBLE) / tp)"))).as("t_qp"))
           .groupBy("tp", "tq")
           .agg(T.xsum(col("t_pq")).as("kl_pq"), T.xsum(col("t_qp")).as("kl_qp"))
           .selectExpr("tp AS n_p", "tq AS n_q",
@@ -653,9 +650,9 @@ object Metrics {
                                 CAST(sum(nq) AS BIGINT) AS tq FROM c),
                  t AS (SELECT tp, tq,
                      (CAST(np AS DOUBLE) / tp) *
-                       ${lnR("(CAST(np AS DOUBLE) / tp) / (CAST(nq AS DOUBLE) / tq)", spark = false)} AS t_pq,
+                       ${lnR("(CAST(np AS DOUBLE) / tp) / (CAST(nq AS DOUBLE) / tq)")} AS t_pq,
                      (CAST(nq AS DOUBLE) / tq) *
-                       ${lnR("(CAST(nq AS DOUBLE) / tq) / (CAST(np AS DOUBLE) / tp)", spark = false)} AS t_qp
+                       ${lnR("(CAST(nq AS DOUBLE) / tq) / (CAST(np AS DOUBLE) / tp)")} AS t_qp
                    FROM c CROSS JOIN tot)
                SELECT tp AS n_p, tq AS n_q,
                  round(${T.sqlXsum("t_pq")}, 6) AS kl_pq,
@@ -900,8 +897,8 @@ object Metrics {
           .transform(T.fanOut(_))
         l.crossJoin(broadcast(coefs))
           .select(
-            expr(s"${lnR("1e0 + y", spark = true)} - ${lnR(
-                "1e0 + greatest(0e0, x0 + x1 * q + x2 * d + x3 * t)", spark = true)}")
+            expr(s"${lnR("1e0 + y")} - ${lnR(
+                "1e0 + greatest(0e0, x0 + x1 * q + x2 * d + x3 * t)")}")
               .as("le"))
           .agg(count(lit(1)).cast("double").as("n"),
             T.xsum(col("le") * col("le")).as("sle"))
@@ -917,11 +914,9 @@ object Metrics {
                        FROM lineitem),
                  sc AS (SELECT CAST(count(*) AS DOUBLE) AS n,
                      ${T.sqlXsum(
-                       s"""(${lnR("1e0 + y", spark = false)} - ${lnR(
-                         "1e0 + greatest(0e0, x0 + x1 * q + x2 * d + x3 * t)",
-                         spark = false)}) * (${lnR("1e0 + y", spark = false)} - ${lnR(
-                         "1e0 + greatest(0e0, x0 + x1 * q + x2 * d + x3 * t)",
-                         spark = false)})""")} AS sle
+                       s"""(${lnR("1e0 + y")} - ${lnR(
+                         "1e0 + greatest(0e0, x0 + x1 * q + x2 * d + x3 * t)")}) * (${lnR("1e0 + y")} - ${lnR(
+                         "1e0 + greatest(0e0, x0 + x1 * q + x2 * d + x3 * t)")})""")} AS sle
                    FROM l, ${ML.sqlGaussFinal})
                SELECT CAST(n AS BIGINT) AS n,
                  round(sle / n, 6) AS msle,

@@ -2463,7 +2463,7 @@ object Pipeline {
           .withColumn("tt", sum(col("n_tokens")).over(w))
           .withColumn("p", expr("CAST(n_tokens AS DOUBLE) / tt"))
           .withColumn("sq", expr("sqrt(p)"))
-          .withColumn("ws", sum(expr("CAST(sq AS DECIMAL(30,12))")).over(w))
+          .withColumn("ws", T.xsumD(col("sq")).over(w))
           .selectExpr("source", "n_docs", "n_tokens",
             "round(p, 6) AS token_share",
             "round(sq / CAST(ws AS DOUBLE), 6) AS mix_weight")

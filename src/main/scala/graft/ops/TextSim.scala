@@ -1028,17 +1028,19 @@ object TextSim {
       // is an affine-hash positive matrix, not an RNG. Output: H after
       // round 2 — the 20-term topic loading table.
       (s, dir) => {
-        // the sparse V is referenced by FOUR matmuls (wv/vh × 2 rounds),
-        // so it is pinned before the loop. Each update round is one pinned
-        // Twin.rounds round with the doc-keyed W as its state; the 2×2
-        // Gram matrices are COLLECTED and re-enter as exact
-        // Double.toString literals, and the 20-row H crosses the driver
-        // whole as a literal frame (the picEmbed discipline — an in-plan
-        // broadcast of an unmaterialized aggregate re-executed the
-        // factor's whole subtree per reference). Bit-neutral: the same
-        // exact-wire values feed the same shared-text update ratio.
+        // the sparse V is referenced by three matmuls (wv × 2 rounds, vh
+        // × 1), so it is pinned before the loop. Each update round but the
+        // last is one pinned Twin.rounds round with the doc-keyed W as its
+        // state; the last updates H only, as the output never reads its W.
+        // The 2×2 Gram matrices are COLLECTED and re-enter as exact
+        // Double.toString literals, and the 20-term vocabulary and the
+        // 20-row H cross the driver whole as literal frames (the picEmbed
+        // discipline — an in-plan broadcast of an unmaterialized aggregate
+        // re-executed the factor's whole subtree per reference).
+        // Bit-neutral: the same exact-wire values feed the same
+        // shared-text update ratio.
         val dt = docTermsPinned(s, dir)
-        val vt = T.pin(dt.groupBy("term").agg(count(lit(1)).as("cnt"))
+        val vt = T.local(dt.groupBy("term").agg(count(lit(1)).as("cnt"))
           .orderBy(col("cnt").desc, col("term")).limit(20)
           .withColumn("r", row_number().over(
             Window.orderBy(col("cnt").desc, col("term"))))
@@ -1054,7 +1056,9 @@ object TextSim {
           "CAST(1 + (r * 13) % 5 AS DOUBLE) AS h0",
           "CAST(1 + (r * 13 + 11) % 5 AS DOUBLE) AS h1")
         def D(x: Double) = java.lang.Double.toString(x)
-        Twin.rounds(init, NMF_ROUNDS, identity) { (w, _, _) =>
+        // a round's H half: H from W. The last round stops after it, as
+        // the output reads H only.
+        def updateH(w: DataFrame): Unit = {
           val ww = w.agg(T.xsum(col("w0") * col("w0")),
             T.xsum(col("w0") * col("w1")),
             T.xsum(col("w1") * col("w1"))).collect()(0)
@@ -1066,6 +1070,9 @@ object TextSim {
             .selectExpr("r",
               s"h0 * wv0 / ($s00 * h0 + $s01 * h1 + 1e-9) AS h0",
               s"h1 * wv1 / ($s01 * h0 + $s11 * h1 + 1e-9) AS h1"))
+        }
+        updateH(Twin.rounds(init, NMF_ROUNDS - 1, identity) { (w, _, _) =>
+          updateH(w)
           val hh = h.agg(T.xsum(col("h0") * col("h0")),
             T.xsum(col("h0") * col("h1")),
             T.xsum(col("h1") * col("h1"))).collect()(0)
@@ -1077,7 +1084,7 @@ object TextSim {
             .selectExpr("doc_id",
               s"w0 * vh0 / (w0 * $t00 + w1 * $t01 + 1e-9) AS w0",
               s"w1 * vh1 / (w0 * $t01 + w1 * $t11 + 1e-9) AS w1")
-        }
+        })
         h.join(broadcast(vt), "r")
           .selectExpr("r", "term",
             "round(h0, 6) AS topic0", "round(h1, 6) AS topic1")

@@ -118,12 +118,34 @@ class HarnessSpec extends SparkSpec {
         }
     }
 
+  /** A Spark `expr` that casts to an exact-sum type in SQL spelling:
+    * group 1 is its alias, when it has one. */
+  private val exactCastExpr =
+    ("""expr\(s?"CAST\([^"]*AS DECIMAL\((?:30,12|18,4)\)\)"\)""" +
+      """(?:\s*\.as\("(\w+)"\))?""").r
+
+  /** Whether `code` sums such an `expr` inline: directly, as
+    * `sum(expr("CAST(… AS DECIMAL(30,12))"))`, or through its alias, as
+    * `sum(col("<alias>"))`. */
+  private def sumsExactCastInSql(code: String): Boolean =
+    exactCastExpr.findAllMatchIn(code).exists { m =>
+      code.substring(math.max(0, m.start - 40), m.start).trim.endsWith("sum(") ||
+        Option(m.group(1)).exists(a => code.contains(s"""sum(col("$a"))"""))
+    }
+
   test("structure: every Spark-side exact sum goes through a Tables helper") {
     assert(sumsExactCastInline("""sum((col("d") - col("rho")).cast(T.exact)).over(rw)"""))
     assert(sumsExactCastInline("sum(c.cast(money)).cast(DoubleType)"))
     assert(!sumsExactCastInline("""col("c_acctbal").cast(T.money).cast("double")"""))
-    assert(mainSources.collect { case (f, code) if sumsExactCastInline(code) => f }.toSet
-      subsetOf Set("graft/Tables.scala"))
+    assert(sumsExactCastInSql("""sum(expr("CAST(sq AS DECIMAL(30,12))")).over(w)"""))
+    assert(sumsExactCastInSql("sum(\n  expr(\"CAST(-m * x AS DECIMAL(30,12))\"))"))
+    assert(sumsExactCastInSql("""expr(s"CAST(($u) AS DECIMAL(30,12))").as("ud")).agg(sum(col("ud")))"""))
+    assert(!sumsExactCastInSql("""expr("CAST(ln(p) AS DECIMAL(30,12))").as("lpri")"""))
+    assert(!sumsExactCastInSql("""s"SELECT sum(CAST(x AS DECIMAL(30,12))) FROM t""""))
+    val inline = mainSources.collect {
+      case (f, code) if sumsExactCastInline(code) || sumsExactCastInSql(code) => f
+    }.toSet
+    assert(inline subsetOf Set("graft/Tables.scala"), inline)
   }
 
   test("structure: no split search crosses its rows with the candidate grid") {
@@ -178,6 +200,15 @@ class HarnessSpec extends SparkSpec {
       "\\s+<= \\$\\{HORIZON \\* HORIZON\\}").r
     assert(mainSources.map { case (f, code) => f -> horizonEp.findAllIn(code).size }
       .filter(_._2 > 0) === Map("graft/ops/Cluster.scala" -> 1))
+  }
+
+  test("structure: the iterative fits are Twin.Fits, with no hand loop or unroll left") {
+    // the in-plan trails' hand rounds (ml_huber_regression,
+    // ml_quantile_regression, ml_gamma_glm) and gmmEm's driver loop
+    for (needle <- Seq("crossJoin(broadcast(c))", "def stepCte(", "var (p1, m1"))
+      assert(filesWith(needle) === Set.empty[String], s"$needle is back")
+    // the one roundCte left is ml_gbm_fit's boosting round, a tree search
+    assert(filesWith("def roundCte(") === Set("graft/ops/Boost.scala"))
   }
 
   test("structure: the mains read exactly four SPARK_GRAFT_ knobs") {

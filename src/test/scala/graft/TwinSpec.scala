@@ -2,6 +2,7 @@ package graft
 
 import graft.{Tables => T}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
 import org.scalacheck.{Gen, Prop, Test => SCTest}
@@ -183,6 +184,27 @@ class TwinSpec extends SparkSpec {
     assert(msgs.exists(m => m != null && m.contains("DIVIDE_BY_ZERO")), e.toString)
   }
 
+  test("trail: a singular 2×2 Hessian fails loudly in-plan, as fit does") {
+    val d = frame(Seq.fill(8)(2.0), Seq(1.0, 0.0, 1.0, 1.0, 0.0, 0.0, 1.0, 0.0))
+    val one = newton.copy(iters = 1)
+    val e = intercept[Exception](Twin.trail(d, one, paramFrame(one)).collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+    assert(msgs.exists(m => m != null && m.contains("DIVIDE_BY_ZERO")), e.toString)
+  }
+
+  test("sqlFit with init and sqlTrail: round 0 is the start, the trail unions every round") {
+    val text = Twin.sqlFit(newton, "d", "b", Some("SELECT a0 AS a, b0 AS b FROM st"))
+    assert(text.startsWith(
+      "b0 AS (SELECT a0 AS a, b0 AS b FROM st),\n  b1x AS (SELECT * FROM d, b0),"))
+    assert(text.contains("b3 AS (SELECT a + d0 AS a, b + d1 AS b FROM b3u3)"))
+    assert(!text.contains("CAST('0.0' AS DOUBLE)") && !text.contains("b4"))
+    assert(Twin.sqlTrail(newton, "b") ===
+      """SELECT 0 AS round, a, b FROM b0
+        |    UNION ALL SELECT 1 AS round, a, b FROM b1
+        |    UNION ALL SELECT 2 AS round, a, b FROM b2
+        |    UNION ALL SELECT 3 AS round, a, b FROM b3""".stripMargin)
+  }
+
   /** The row-level loop [[Twin.fit]] ran before it read cells: each step
     * crosses the rows with the parameters and sums over every row on the
     * unweighted wires. */
@@ -247,12 +269,17 @@ class TwinSpec extends SparkSpec {
       assert(bits(g(i)) === bits(w(i)), s"$what: param $i ${g(i)} vs ${w(i)}")
   }
 
+  /** The frames both fit paths are pinned on: duplicate-heavy draws, one
+    * row (a -0.0) and none. */
+  private def draws: Seq[(String, DataFrame)] = Seq(
+    "duplicate-heavy" -> dupRows(400, 7L),
+    "duplicate-heavy, second draw" -> dupRows(150, 11L),
+    "one row" -> spark.createDataFrame(
+      java.util.Arrays.asList(Row(Int.box(1), Double.box(-0.0), 1.0)), cellSchema),
+    "empty" -> dupRows(20, 3L).where(lit(false)))
+
   test("fit: the cell histogram reproduces the row-level loop bit for bit on every wire") {
-    val one = spark.createDataFrame(
-      java.util.Arrays.asList(Row(Int.box(1), Double.box(-0.0), 1.0)), cellSchema)
-    for ((what, d) <- Seq("duplicate-heavy" -> dupRows(400, 7L),
-        "duplicate-heavy, second draw" -> dupRows(150, 11L),
-        "one row" -> one, "empty" -> dupRows(20, 3L).where(lit(false)))) {
+    for ((what, d) <- draws) {
       val got = Twin.fit(d, wires)
       sameTrail(got, rowFit(d, wires), what)
       assert(got.forall(_.forall(p => !p.isNaN)), s"$what: ${got.map(_.toSeq)}")
@@ -271,6 +298,55 @@ class TwinSpec extends SparkSpec {
     val singular = frame(Seq.fill(8)(2.0), Seq(1.0, 0.0, 1.0, 1.0, 0.0, 0.0, 1.0, 0.0))
     intercept[Exception](Twin.fit(singular, newton.copy(iters = 1)))
     assert(sc.getPersistentRDDs.keySet === before)
+  }
+
+  /** `f`'s initial parameters as a one-row frame. */
+  private def paramFrame(f: Twin.Fit): DataFrame = spark.createDataFrame(
+    java.util.Arrays.asList(Row.fromSeq(f.params.map(_._2))),
+    StructType(f.params.map(p => StructField(p._1, DoubleType, nullable = false))))
+
+  /** [[Twin.trail]]'s rounds 0..iters, in order, as parameter arrays. */
+  private def trailRounds(d: DataFrame, f: Twin.Fit, init: DataFrame): Seq[Array[Double]] = {
+    val rows = Twin.trail(d, f, init).collect().sortBy(_.getInt(0)).toSeq
+    assert(rows.map(_.getInt(0)) === (0 to f.iters))
+    rows.map(r => Array.tabulate(f.params.size)(i => r.getDouble(i + 1)))
+  }
+
+  test("trail: the in-plan unroll reproduces the row-level loop bit for bit on every wire") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    for ((what, d) <- draws) {
+      val got = trailRounds(d, wires, paramFrame(wires))
+      sameTrail(got.take(1), Seq(wires.params.map(_._2).toArray), s"$what, round 0")
+      sameTrail(got.tail, rowFit(d, wires), what)
+    }
+    // a start computed from the rows, as the OLS and null-model starts are
+    val d = dupRows(400, 7L)
+    val init = d.agg(T.xsum(col("y")).as("a"), (count(lit(1)).cast("double") * -1e-3).as("b"))
+      .withColumn("k", lit(0.0))
+    val p0 = init.collect()(0)
+    val from = wires.copy(params = Seq("a" -> p0.getDouble(0), "b" -> p0.getDouble(1), "k" -> 0.0))
+    assert(from.params.map(_._2) !== wires.params.map(_._2))
+    sameTrail(trailRounds(d, wires, init), from.params.map(_._2).toArray +: rowFit(d, from),
+      "init from a frame")
+    assert(Twin.trail(d, wires, init).columns.toSeq === Seq("round", "a", "b", "k"))
+    assert(sc.getPersistentRDDs.keySet === before, "a trail pins nothing")
+  }
+
+  test("trail: each step is one pass over the rows, however its parameters are read") {
+    // `a` feeds the rows but not the next values, so the two reads of a
+    // step would each keep other columns if the parameters were columns
+    val f = wires.copy(next = Seq("1e-1 * u", "b - 1e-3 * coalesce(s3, 0e0)", "k + 1e0"))
+    val aqe = "spark.sql.adaptive.enabled"
+    val was = spark.conf.get(aqe)
+    spark.conf.set(aqe, "false")
+    try {
+      val plan = Twin.trail(dupRows(100, 5L), f, paramFrame(f)).queryExecution.executedPlan
+      val passes = plan.collect {
+        case e: ShuffleExchangeExec if e.outputPartitioning.numPartitions == 1 => e
+      }
+      assert(passes.size === f.iters, plan)
+    } finally spark.conf.set(aqe, was)
   }
 
   /** A synthetic round over (k, x): a shuffle (the self-join on k) and a
@@ -345,7 +421,7 @@ class TwinSpec extends SparkSpec {
   for ((q, bound, what) <- Seq(
       ("ml_spectral_embed", 3, "nbr, deg and its last round's pin"),
       ("graph_hits", 2, "edges and its last round's hub product"),
-      ("ml_nmf", 4, "the doc-terms memo, vt, v and its last round's W"),
+      ("ml_nmf", 3, "the doc-terms memo, v and the W its last H update reads"),
       ("ml_umap_distributed", 4, "ep, the initial points and its last round's product and pairs"),
       ("ml_tsne_distributed", 5,
         "ep, the initial points and its last round's product, pairs and negatives"),
